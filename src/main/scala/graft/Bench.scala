@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.ExplainMode
 
 /** Shared local[N] benchmark session: Bench and BenchOne MUST use the
   * same configuration or BenchOne's focused timings stop being
@@ -143,28 +144,51 @@ object Bench {
   }
 }
 
-/** Focused per-query timing for regression bisection: runs the named
-  * SparkEntry queries N times each (default 5) on SPARK_GRAFT_SF_DIR
-  * and prints per-run seconds — used to separate a real plan regression
-  * from the host's ~1.2-3x throughput windows (BENCH.md methodology).
+/** Focused per-query tool for regression bisection on SPARK_GRAFT_SF_DIR:
+  *
+  *   BenchOne [count|noop|explain <dir>] <query>...
+  *
+  *  - `count` (default): runs each named SparkEntry query N times
+  *    (SPARK_GRAFT_REPS, default 5) through `count()` and prints per-run
+  *    seconds — separates a real plan regression from the host's
+  *    ~1.2-3x throughput windows (BENCH.md methodology);
+  *  - `noop`: the same timing through the noop sink, which computes
+  *    every column (`count()` lets the optimizer prune unused ones);
+  *  - `explain <dir>`: writes each query's `.explain("formatted")` to
+  *    `<dir>/<query>.txt`.
   */
 object BenchOne {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "5").toInt
-    val spark = BenchSession.open(cpus)
-    for (name <- args) {
-      val fn = SparkEntry.queries(name)
+    def fmt(p: String, v: Double) =
+      String.format(java.util.Locale.ROOT, p, java.lang.Double.valueOf(v))
+    def timed(label: String)(action: DataFrame => Unit)(name: String, df: () => DataFrame): Unit = {
       val times = (1 to reps).map { _ =>
         val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
+        action(df())
         (System.nanoTime() - t0) / 1e9
       }
-      def fmt(p: String, v: Double) =
-        String.format(java.util.Locale.ROOT, p, java.lang.Double.valueOf(v))
-      println(s"BENCHONE $name min=${fmt("%.3f", times.min)} " +
+      println(s"$label $name min=${fmt("%.3f", times.min)} " +
         times.map(t => fmt("%.2f", t)).mkString("[", ",", "]"))
+    }
+    def explainTo(dir: String)(name: String, df: () => DataFrame): Unit = {
+      val plan = df().queryExecution.explainString(ExplainMode.fromString("formatted"))
+      val file = new java.io.File(dir, s"$name.txt")
+      java.nio.file.Files.writeString(file.toPath, plan + "\n")
+      println(s"EXPLAIN $name -> $file (${plan.length} chars)")
+    }
+    val (run, names) = args.toList match {
+      case "explain" :: dir :: qs => new java.io.File(dir).mkdirs(); (explainTo(dir) _, qs)
+      case "noop" :: qs => (timed("NOOP")(_.write.format("noop").mode("overwrite").save()) _, qs)
+      case "count" :: qs => (timed("BENCHONE")(_.count()) _, qs)
+      case qs => (timed("BENCHONE")(_.count()) _, qs)
+    }
+    val spark = BenchSession.open(cpus)
+    for (name <- names) {
+      val fn = SparkEntry.queries(name)
+      run(name, () => fn(spark, sfDir))
     }
     spark.stop()
   }
@@ -369,42 +393,6 @@ object ScalingBench {
             s""""localN_turns_per_sec":${thr1.round},"local4N_turns_per_sec":${thr4.round},""" +
             s""""speedup":${(thr4 / thr1 * 1000).round / 1000.0},"efficiency":${(efficiency * 1000).round / 1000.0}}""")
     }
-  }
-}
-
-/** A/B micro-bench for the int8 quantization kernel (BENCH.md round 5):
-  * codegen [[graft.functions.QuantizeInt8Codes]] vs the interpreted-HOF
-  * reference formulation, on a cached synthetic embedding table so only
-  * the quantize stage is timed. Prints per-variant best-of seconds.
-  */
-object QuantBench {
-  def main(args: Array[String]): Unit = {
-    import org.apache.spark.sql.functions._
-    val n = args.headOption.map(_.toLong).getOrElse(2000000L)
-    val dim = args.lift(1).map(_.toInt).getOrElse(64)
-    val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "5").toInt
-    val spark = BenchSession.open(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-    val df = spark.range(n).select(col("id").as("vec_id"),
-      array((0 until dim).map(i =>
-        ((xxhash64(col("id"), lit(i)) % 1000).cast("float") / lit(100.0f)).cast("float")): _*)
-        .as("embedding")).cache()
-    df.count()
-    def time(f: => Long): Double = { val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9 }
-    def fmt(v: Double) = String.format(java.util.Locale.ROOT, "%.3f", java.lang.Double.valueOf(v))
-    // element_at forces the whole q array to be computed; the filter
-    // count materializes every row without collecting data
-    def drive(q: org.apache.spark.sql.DataFrame): Long =
-      q.filter(element_at(col("q"), 1) =!= 126 || col("scale") > -1f).count()
-    val variants = Seq(
-      "codegen" -> (() => drive(graft.pipeline.Ann.quantizeInt8(df))),
-      "hof" -> (() => drive(graft.pipeline.Ann.quantizeInt8Hof(df))))
-    variants.foreach { case (name, f) => f() } // warm both plans
-    val results = variants.map { case (name, f) =>
-      name -> (1 to reps).map(_ => time(f())).min
-    }
-    val Seq(cg, hof) = results.map(_._2)
-    println(s"""QUANTBENCH {"rows":$n,"dim":$dim,"codegen_sec":${fmt(cg)},"hof_sec":${fmt(hof)},"speedup":${fmt(hof / cg)}}""")
-    spark.stop()
   }
 }
 

@@ -1,6 +1,5 @@
 package graft.cli
 
-import org.apache.spark.sql.SparkSession
 import graft.stats.SchemaInfer
 import graft.compile.TableSchemaCompiler
 
@@ -32,15 +31,7 @@ object InferSchemaMain {
   }
 
   private def run(inputDir: String, outPath: Option[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]"))
-      .appName("graft-infer-schema")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = CliSession.open("graft-infer-schema")
     try {
       val df = spark.read.parquet(inputDir)
       val json = SchemaInfer.inferSchemaJson(df)

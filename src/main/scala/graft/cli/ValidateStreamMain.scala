@@ -121,14 +121,7 @@ object ValidateStreamMain {
       val schema = TableSchemaCompiler
         .compileString(java.nio.file.Files.readString(java.nio.file.Paths.get(schemaPath)))
         .fold(e => { System.err.println(s"invalid schema at $schemaPath: $e"); sys.exit(1) }, identity)
-      val spark = SparkSession.builder()
-        .master(sys.env.getOrElse("SPARK_MASTER", s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]"))
-        .appName("graft-validate-stream")
-        .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = CliSession.open("graft-validate-stream")
       try {
         // file streams need an explicit schema; the FIRST invocation
         // pins it from the files present then, and every later one

@@ -1,6 +1,5 @@
 package graft.cli
 
-import org.apache.spark.sql.SparkSession
 import graft.compile.TableSchemaCompiler
 import graft.checkpoint.Checkpoint
 import graft.stats.Stats
@@ -26,16 +25,7 @@ object ValidateTableMain {
         .compileString(java.nio.file.Files.readString(java.nio.file.Paths.get(schemaPath)))
         .fold(e => { System.err.println(s"invalid schema at $schemaPath: $e"); sys.exit(1) }, identity)
 
-      val spark = SparkSession.builder()
-        .master(sys.env.getOrElse("SPARK_MASTER", s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]"))
-        .appName("graft-validate")
-        .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      spark.sparkContext.setLogLevel("WARN")
+      val spark = CliSession.open("graft-validate")
       try {
         // the diagnostic bind view BEFORE the run: one line per schema/
         // physical column mismatch (a compile failure inside the run
@@ -89,12 +79,7 @@ object GenTranscriptsMain {
     val turns = args(2).toInt
     val dirty = args.length > 3 && args(3) == "dirty"
     val files = if (args.length > 4) args(4).toInt else 8
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = CliSession.open("graft-gen-transcripts")
     val defects = if (dirty) graft.sources.TranscriptGen.all else graft.sources.TranscriptGen.clean
     graft.sources.TranscriptGen.generate(spark, numConvs, turns, defects)
       .repartition(files).write.mode("overwrite").parquet(outDir)

@@ -1,14 +1,16 @@
 package graft.integrity
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Table-level integrity checks (north_rule): uniqueness of
   * `(conv_id, turn_idx)` and referential integrity of `conv_id` across
   * turn groups. These are the engine's only shuffling operators —
-  * everything else is a single scan — so skew handling is explicit here
-  * (SURVEY.md §2b rows "uniqueness lifted to table level" /
-  * "referential integrity").
+  * everything else is a single scan. Skew is left to the runtime:
+  * map-side partial aggregation collapses hot keys before the exchange,
+  * and AQE's skew-join splits skewed sort-merge partitions (SURVEY.md
+  * §2b rows "uniqueness lifted to table level" / "referential
+  * integrity").
   *
   * The parse-time analogue in the reference is the strict-set decoder
   * (`Decoders.scala:71-82`, duplicates rejected) and `$ref`-target
@@ -32,26 +34,6 @@ object Integrity {
       .agg(count(lit(1)).as("dup_count"))
       .filter(col("dup_count") > 1)
 
-  /** Explicitly salted two-phase duplicate count: phase 1 aggregates on
-    * (key, salt) — a deterministic salt derived from a per-row
-    * discriminator spreads one hot key over `salt` reducers — phase 2
-    * re-aggregates on the key alone. Equivalent to [[duplicateKeys]] for
-    * any salt (tested on the Zipf fixture); use when a single composite
-    * key carries so many rows that even one post-combine row per input
-    * partition overloads its reducer (the north_rule's explicit-salting
-    * requirement for 10^12-turn conv_id skew).
-    */
-  def saltedDuplicateKeys(df: DataFrame, keyCols: Seq[String],
-                          discriminator: Column, salt: Int = 16): DataFrame = {
-    require(salt > 0)
-    df.withColumn("__salt", pmod(hash(discriminator), lit(salt)))
-      .groupBy((keyCols :+ "__salt").map(col): _*)
-      .agg(count(lit(1)).as("__partial"))
-      .groupBy(keyCols.map(col): _*)
-      .agg(sum("__partial").as("dup_count"))
-      .filter(col("dup_count") > 1)
-  }
-
   /** Uniqueness violations as violation rows (pointer to the key). */
   def uniquenessViolations(df: DataFrame, keyCols: Seq[String]): DataFrame = {
     val pointer = graft.exprs.ConstraintCompiler.pointerCol(keyCols.dropRight(1), keyCols.last)
@@ -64,29 +46,13 @@ object Integrity {
 
   /** Orphan rows: left anti join of `df.keyCol` against the registry of
     * valid keys. Spark picks sort-merge or broadcast by stats; for a
-    * small registry, broadcast eliminates the shuffle entirely.
+    * small registry, broadcast eliminates the shuffle entirely, and a
+    * skewed sort-merge side is split by AQE's skew-join.
     */
   def orphans(df: DataFrame, registry: DataFrame, keyCol: String,
               broadcastRegistry: Boolean = false): DataFrame = {
     val reg = registry.select(col(keyCol)).distinct()
     df.join(if (broadcastRegistry) broadcast(reg) else reg, Seq(keyCol), "left_anti")
-  }
-
-  /** Explicitly salted left-anti join for skewed left keys (north_rule
-    * demands explicit skew handling, beyond AQE's skewJoin):
-    * the right side is replicated `salt` times, the left side picks a
-    * deterministic salt from a high-cardinality discriminator column, so
-    * one hot key spreads over `salt` shuffle partitions. Equivalent to
-    * the plain anti join for any salt (tested on a Zipf fixture).
-    */
-  def saltedOrphans(df: DataFrame, registry: DataFrame, keyCol: String,
-                    discriminator: Column, salt: Int = 16): DataFrame = {
-    require(salt > 0)
-    val reg = registry.select(col(keyCol)).distinct()
-      .withColumn("__salt", explode(array((0 until salt).map(lit): _*)))
-    df.withColumn("__salt", pmod(hash(discriminator), lit(salt)))
-      .join(reg, Seq(keyCol, "__salt"), "left_anti")
-      .drop("__salt")
   }
 
   /** Both integrity checks from ONE full-data shuffle (the 100-TB
@@ -96,8 +62,8 @@ object Integrity {
     * set (whose shuffles are bounded by #distinct keys, not #rows).
     * Row-level orphan emission joins the (small) offending-conversation
     * set back via broadcast.
-    */
-  /** Both report members derive from one persisted reduced keyspace;
+    *
+    * Both report members derive from one persisted reduced keyspace;
     * call [[IntegrityReport.unpersist]] once both have been
     * materialized, or the cached blocks live for the session.
     */

@@ -1,6 +1,7 @@
 package graft.stats
 
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
+import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -85,11 +86,16 @@ object Stats {
     val perCol = columns.flatMap { name =>
       val f = df.schema(name)
       val c = col(name)
+      // min/max/distinct need an ordering (maps have none): such a
+      // column keeps its count and nulls, the rest stays null
+      val orderable = RowOrdering.isOrderable(f.dataType)
+      def ifOrderable(agg: => Column, nullType: String) =
+        if (orderable) agg else lit(null).cast(nullType)
       val base = Seq(
         sum(c.isNull.cast("long")).as(s"${name}__nulls"),
-        min(c).cast("string").as(s"${name}__min"),
-        max(c).cast("string").as(s"${name}__max"),
-        approx_count_distinct(c).as(s"${name}__distinct"))
+        ifOrderable(min(c).cast("string"), "string").as(s"${name}__min"),
+        ifOrderable(max(c).cast("string"), "string").as(s"${name}__max"),
+        ifOrderable(approx_count_distinct(c), "long").as(s"${name}__distinct"))
       val q = f.dataType match {
         case _: NumericType if withQuantiles =>
           Seq(quantileAgg(c, defaultProbs).as(s"${name}__quantiles"))

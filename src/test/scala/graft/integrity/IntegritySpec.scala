@@ -2,13 +2,13 @@ package graft.integrity
 
 import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.desc
 import graft.SparkTestBase
 import graft.sources.TranscriptGen
 
 /** Uniqueness + referential fixtures with planted duplicates/orphans and
-  * a skewed conv_id (FIXTURES.md §4 skew-50k): the salted anti join must
-  * produce identical results to the unsalted one.
+  * a skewed conv_id (FIXTURES.md §4 skew-50k): the CLI's integrity path
+  * must find exactly the planted sets.
   */
 class IntegritySpec extends AnyFlatSpec with Matchers {
 
@@ -46,30 +46,36 @@ class IntegritySpec extends AnyFlatSpec with Matchers {
     all(orphanRows.map(_.getAs[String]("conv_id").drop(1).toLong)) should be >= 100L
   }
 
-  it should "produce identical orphans salted vs unsalted under skew" in {
+  it should "find exactly the planted duplicates and orphans on the CLI path under skew" in {
+    // the ValidateTableMain path: one keyspace groupBy for both checks,
+    // broadcast join-back for orphan rows; conv c0 carries ~20% of rows
     val df = TranscriptGen.generate(spark, 1000, 50,
-      TranscriptGen.Defects(orphans = true), skewTopConvFraction = 0.2).cache()
+      TranscriptGen.Defects(duplicates = true, orphans = true), skewTopConvFraction = 0.2).cache()
     try {
-      val reg = Integrity.conversationRegistry(df)
-      val plain = Integrity.orphans(df, reg, "conv_id")
-        .select("conv_id", "turn_idx").collect().map(_.toString).sorted
-      val salted = Integrity.saltedOrphans(df, reg, "conv_id", col("turn_idx"), salt = 16)
-        .select("conv_id", "turn_idx").collect().map(_.toString).sorted
-      salted shouldBe plain
-      plain.length should be > 0
-    } finally df.unpersist()
-  }
+      // the expected sets, counted in plain Scala from the collected keys
+      val keys = df.select("conv_id", "turn_idx").collect()
+        .map(r => (r.getString(0), r.getInt(1))).toSeq
+      val expectedDups = keys.groupBy(identity).collect {
+        case (k, occ) if occ.size > 1 => (k._1, k._2, occ.size.toLong)
+      }.toSet
+      val roots = keys.collect { case (c, 0) => c }.toSet
+      val expectedOrphans = keys.filterNot { case (c, _) => roots(c) }.sorted
+      // skew collapses conv 0 onto itself (every turn duplicated); the
+      // crc32 rule plants the rest, the ghost convs c1000..c1019 the orphans
+      expectedDups.map(_._1) should contain("c0")
+      expectedDups.exists(_._1 != "c0") shouldBe true
+      expectedOrphans.map(_._1).distinct shouldBe (1000 until 1020).map(i => s"c$i").sorted
 
-  it should "produce identical duplicate counts salted vs unsalted under skew" in {
-    val df = TranscriptGen.generate(spark, 500, 20,
-      TranscriptGen.Defects(duplicates = true), skewTopConvFraction = 0.2).cache()
-    try {
-      val plain = Integrity.duplicateKeys(df, Seq("conv_id", "turn_idx"))
-        .collect().map(_.toString).sorted
-      val salted = Integrity.saltedDuplicateKeys(df, Seq("conv_id", "turn_idx"),
-        col("text"), salt = 16).collect().map(_.toString).sorted
-      salted shouldBe plain
-      plain.length should be > 0
+      val report = Integrity.integrityReport(df)
+      try {
+        val dups = report.duplicateKeys.collect()
+          .map(r => (r.getString(0), r.getInt(1), r.getLong(2))).toSet
+        val orphans = Integrity.orphanRows(df, report.orphanConvs)
+          .select("conv_id", "turn_idx").collect()
+          .map(r => (r.getString(0), r.getInt(1))).toSeq.sorted
+        dups shouldBe expectedDups
+        orphans shouldBe expectedOrphans
+      } finally report.unpersist()
     } finally df.unpersist()
   }
 

@@ -28,6 +28,25 @@ class StatsSpec extends AnyFlatSpec with Matchers {
     rows("tool").getAs[Long]("null_count") should be > 50L
   }
 
+  it should "profile a map column by count and nulls, leaving min/max/distinct null" in {
+    import spark.implicits._
+    val df = Seq((1, Option(Map("a" -> "x"))), (2, None), (3, Option(Map("b" -> "y"))))
+      .toDF("id", "attrs")
+    val rows = Stats.profileLong(df, df.columns.toSeq)
+      .collect().map(r => r.getAs[String]("column") -> r).toMap
+    rows.keySet shouldBe Set("id", "attrs")
+    val m = rows("attrs")
+    m.getAs[Long]("cnt") shouldBe 3L
+    m.getAs[Long]("null_count") shouldBe 1L
+    m.isNullAt(m.fieldIndex("min_value")) shouldBe true
+    m.isNullAt(m.fieldIndex("max_value")) shouldBe true
+    m.isNullAt(m.fieldIndex("approx_distinct")) shouldBe true
+    // the orderable neighbour is profiled as before
+    rows("id").getAs[String]("min_value") shouldBe "1"
+    rows("id").getAs[String]("max_value") shouldBe "3"
+    rows("id").getAs[Long]("approx_distinct") shouldBe 3L
+  }
+
   it should "compute t-digest quantiles within tolerance in one agg" in {
     import spark.implicits._
     val df = spark.range(1, 10001).select(col("id").cast("double").as("v"))
