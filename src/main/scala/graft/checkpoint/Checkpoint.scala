@@ -1,8 +1,15 @@
 package graft.checkpoint
 
+import java.net.URI
 import java.nio.file.{Files, Paths, StandardOpenOption}
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.SparkSession
+import scala.util.matching.Regex
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Encoder, Encoders, Observation, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import graft.compile.TableSchema
 import graft.exprs.Validator
@@ -40,7 +47,25 @@ object Checkpoint {
       batchSize: Int = 1,
       nullCounts: Map[String, Long] = Map.empty)
 
-  private def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
+  // JSON string escaping per RFC 8259: `"`, `\` and every control
+  // character U+0000–U+001F. A raw newline in a unit path or a column
+  // name would otherwise split one manifest record across two lines.
+  private val shortEscapes = Map('b' -> '\b', 't' -> '\t', 'n' -> '\n', 'f' -> '\f', 'r' -> '\r')
+
+  private def esc(s: String): String = s.flatMap {
+    case c @ ('"' | '\\') => s"\\$c"
+    case c if c < ' ' =>
+      shortEscapes.collectFirst { case (k, `c`) => s"\\$k" }.getOrElse(f"\\u${c.toInt}%04x")
+    case c => c.toString
+  }
+
+  private val escape = """\\(u[0-9a-fA-F]{4}|.)""".r
+
+  private def unesc(s: String): String = escape.replaceAllIn(s, m => Regex.quoteReplacement {
+    val e = m.group(1)
+    if (e.length == 5) Integer.parseInt(e.tail, 16).toChar.toString
+    else shortEscapes.getOrElse(e.head, e.head).toString
+  })
 
   def toJson(r: UnitResult): String = {
     val nulls =
@@ -56,7 +81,7 @@ object Checkpoint {
   def parseLine(line: String): Option[String] = {
     // minimal parse: extract the unit field (manifest is engine-written)
     val m = """"unit":"((?:[^"\\]|\\.)*)"""".r
-    m.findFirstMatchIn(line).map(_.group(1).replace("\\\"", "\"").replace("\\\\", "\\"))
+    m.findFirstMatchIn(line).map(g => unesc(g.group(1)))
   }
 
   // a unit counts as completed only if its manifest line parsed FULLY
@@ -107,179 +132,202 @@ object Checkpoint {
   /** Stable directory name for a unit. */
   def unitDirName(unit: String): String = s"unit=${unitKey(unit)}"
 
-  /** List the parquet data files of a table directory (the unit set).
-    * Recursive: a Hive-partitioned layout (date=.../part-0.parquet)
-    * previously yielded ZERO units, so the run validated nothing and
-    * printed "valid table". Zero units is now a hard error for the same
-    * reason — an empty unit set must never read as a clean verdict.
-    */
-  def listUnits(spark: SparkSession, inputDir: String): Seq[String] = {
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory)
-        Option(f.listFiles()).map(_.toSeq).getOrElse(Nil)
-          .filterNot(c => c.getName.startsWith("_") || c.getName.startsWith("."))
-          .flatMap(walk)
-      else Seq(f)
-    val d = new java.io.File(inputDir)
-    val files =
-      if (d.isDirectory)
-        walk(d).filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath)
-      else Seq(inputDir)
-    require(files.nonEmpty,
-      s"no parquet units found under $inputDir — refusing to treat an empty unit set as a valid table")
-    files.sorted
-  }
-
-  /** Per-unit (rows, per-column null counts) from parquet FOOTERS — a
-    * metadata-only read, no data pages decoded (the same stats an
-    * Iceberg manifest carries). Runs as one small distributed job over
-    * the batch's paths so the driver never loops over files. Returns
-    * None when any file lacks complete column statistics (then the
-    * caller falls back to a grouped scan).
-    */
-  private def footerMetrics(spark: SparkSession, files: Seq[String],
-                            statCols: Seq[String]): Option[Map[String, (Long, Map[String, Long])]] = {
-    val collected =
-      spark.sparkContext.parallelize(files, math.min(files.size, 32)).map { f =>
-        val conf = new org.apache.hadoop.conf.Configuration()
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(new org.apache.hadoop.fs.Path(f), conf)
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try {
-          var rows = 0L
-          val nulls = scala.collection.mutable.Map.empty[String, Long]
-          var ok = true
-          reader.getFooter.getBlocks.forEach { b =>
-            rows += b.getRowCount
-            b.getColumns.forEach { c =>
-              val name = c.getPath.toDotString
-              val st = c.getStatistics
-              if (st == null || !st.isNumNullsSet) ok = false
-              else nulls(name) = nulls.getOrElse(name, 0L) + st.getNumNulls
-            }
-          }
-          (f, rows, nulls.toMap, ok)
-        } finally reader.close()
-      }.collect()
-    val complete = collected.forall { case (_, _, nulls, ok) =>
-      ok && statCols.forall(nulls.contains)
-    }
-    if (complete)
-      Some(collected.map { case (f, rows, nulls, _) =>
-        f -> (rows, statCols.map(c => c -> nulls(c)).toMap)
-      }.toMap)
-    else None
-  }
-
-  /** Run validation over all pending units in BATCHES of `batchSize`
-    * files per Spark job (a sequential one-job-per-unit loop is
-    * driver-bound at 100k+ lake files: each submission costs scheduler
-    * round-trips regardless of data volume). Per batch:
+  /** An input table opened once per run: one file listing and one schema
+    * inference, shared by every batch of the run and by the steps after
+    * it (integrity, stats).
     *
-    *  1. one validation job over all the batch's files, lineage via
-    *     `input_file_name()`, violations written partitioned by the
-    *     stable `unit` key (same `unit=<key>/` layout as per-unit
-    *     writes; dynamic partition overwrite keeps a re-run of a
-    *     half-finished batch idempotent);
-    *  2. one grouped metrics job for per-unit (rows, per-column null
-    *     counts) — the manifest's per-partition metrics; violation
-    *     counts come from the freshly-written (tiny) violations output.
+    * `files` holds the table's data files in ONE path form, the one
+    * Spark reports as `_metadata.file_path` (see [[filePathForm]]); the
+    * unit list, each batch's file filter and its lineage map are all
+    * derived from it. `dataColumns` are the columns stored in the files
+    * (partition-directory columns are not part of a unit's metrics).
+    */
+  final case class Table(df: DataFrame, files: Seq[String], dataColumns: Seq[String])
+
+  /** Open a parquet table directory (any Hadoop URI or local path). A
+    * Hive-partitioned layout lists recursively; zero data files is a
+    * hard error — an empty unit set must never read as a clean verdict.
+    */
+  def openTable(spark: SparkSession, inputDir: String): Table = {
+    def noUnits = s"no parquet units found under $inputDir — refusing to treat an empty unit set as a valid table"
+    val df =
+      try spark.read.parquet(inputDir)
+      catch {
+        case e: AnalysisException if e.getCondition == "UNABLE_TO_INFER_SCHEMA" =>
+          throw new IllegalArgumentException(noUnits, e)
+      }
+    val relation = df.queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.relation }
+      .collect { case r: HadoopFsRelation => r }
+      .getOrElse(throw new IllegalStateException(s"$inputDir did not open as a file relation"))
+    val files = relation.location.inputFiles.toSeq
+      .map(f => filePathForm(new URI(f))).sortBy(unitName)
+    require(files.nonEmpty, noUnits)
+    Table(df, files, relation.dataSchema.fieldNames.toSeq)
+  }
+
+  /** The table's units, as the manifest names them. */
+  def listUnits(spark: SparkSession, inputDir: String): Seq[String] =
+    openTable(spark, inputDir).files.map(unitName)
+
+  /** `_metadata.file_path`'s form of a file URI: rebuilt from its
+    * components, so an empty authority is dropped (a `file:///x` table
+    * root lists its files as `file:///x/…`, but the scan reports
+    * `file:/x/…`; a filter built from the listing as-is prunes every
+    * file).
+    */
+  private def filePathForm(u: URI): String =
+    new URI(u.getScheme, u.getAuthority, u.getPath, null, null).toString
+
+  /** The manifest's name for a unit: the local path for `file:` URIs
+    * (what manifests have always recorded, so they still resume), the
+    * URI itself for any other file system.
+    */
+  private def unitName(filePath: String): String = {
+    val u = new URI(filePath)
+    if (u.getScheme == "file") u.getPath else filePath
+  }
+
+  private def column(name: String): Column = col("`" + name.replace("`", "``") + "`")
+
+  private type Counts = mutable.HashMap[String, Array[Long]]
+
+  /** Per-unit counts as one typed aggregate over (unit key, flags):
+    * unit key -> [rows, rows with flag 0 set, rows with flag 1 set, …].
+    */
+  private object UnitCounts extends Aggregator[(String, Array[Boolean]), Counts, Map[String, Array[Long]]] {
+    override def zero: Counts = mutable.HashMap.empty
+    override def reduce(b: Counts, a: (String, Array[Boolean])): Counts = {
+      val (unit, flags) = a
+      val c = b.getOrElseUpdate(unit, new Array[Long](flags.length + 1))
+      c(0) += 1
+      var i = 0
+      while (i < flags.length) { if (flags(i)) c(i + 1) += 1; i += 1 }
+      b
+    }
+    override def merge(b1: Counts, b2: Counts): Counts = {
+      b2.foreach { case (unit, c2) =>
+        b1.get(unit) match {
+          case Some(c1) => c1.indices.foreach(i => c1(i) += c2(i))
+          case None => b1(unit) = c2
+        }
+      }
+      b1
+    }
+    override def finish(b: Counts): Map[String, Array[Long]] = b.toMap
+    override def bufferEncoder: Encoder[Counts] = Encoders.kryo[Counts]
+    override def outputEncoder: Encoder[Map[String, Array[Long]]] =
+      ExpressionEncoder[Map[String, Array[Long]]]()
+  }
+
+  private val unitCounts = udaf(UnitCounts)
+
+  /** Observe per-unit counts of `df` (keyed by its `unit` column)
+    * inside whatever action later runs it.
+    */
+  private def observeUnits(df: DataFrame, obs: Observation, flags: Seq[Column]): DataFrame =
+    df.observe(obs, unitCounts(col("unit"), array(flags: _*).cast("array<boolean>")).as("m"))
+
+  /** An observation's per-unit counts, or None when Catalyst removed
+    * the observed node because its plan was provably empty.
+    */
+  private def countsOf(obs: Observation): Option[collection.Map[String, collection.Seq[Long]]] =
+    obs.get.get("m").map(_.asInstanceOf[collection.Map[String, collection.Seq[Long]]])
+
+  private def footerRows(spark: SparkSession, filePath: String): Long = {
+    val in = org.apache.parquet.hadoop.util.HadoopInputFile
+      .fromPath(new Path(new URI(filePath)), spark.sparkContext.hadoopConfiguration)
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+    try reader.getRecordCount finally reader.close()
+  }
+
+  val DefaultBatchSize = 64
+
+  def runValidation(spark: SparkSession, inputDir: String, schema: TableSchema,
+                    outDir: String, manifestPath: String,
+                    snapshotId: Option[Long] = None,
+                    batchSize: Int = DefaultBatchSize): Seq[UnitResult] =
+    runValidation(openTable(spark, inputDir), schema, outDir, manifestPath, snapshotId, batchSize)
+
+  /** Run validation over all pending units of an opened table in
+    * BATCHES of `batchSize` files per Spark job (a sequential
+    * one-job-per-unit loop is driver-bound at 100k+ lake files: each
+    * submission costs scheduler round-trips regardless of data volume).
+    * Per batch ONE job, the violations write:
+    *
+    *  1. the batch is the table's relation filtered on
+    *     `_metadata.file_path`, which Spark prunes at file listing — no
+    *     per-batch listing or schema inference; lineage is the same
+    *     column, mapped to the stable `unit` key, and violations are
+    *     written partitioned by it (`unit=<key>/`; dynamic partition
+    *     overwrite keeps a re-run of a half-finished batch idempotent);
+    *  2. the manifest's per-unit metrics are observed inside that write:
+    *     rows and per-column null counts on the input, violation counts
+    *     on the emitted rows — nothing is read back. A unit the input
+    *     observation never saw must have an empty footer, or the run
+    *     fails: a path-form mismatch would otherwise record a full file
+    *     as 0 rows and 0 violations.
     *
     * Manifest entries are appended only after the batch's write
     * completes, so a kill mid-batch redoes exactly that batch and the
     * final outputs are identical to an uninterrupted run. Returns
     * results for units processed in THIS run.
     */
-  def runValidation(spark: SparkSession, inputDir: String, schema: TableSchema,
-                    outDir: String, manifestPath: String,
-                    snapshotId: Option[Long] = None,
-                    batchSize: Int = 64): Seq[UnitResult] = {
+  def runValidation(table: Table, schema: TableSchema, outDir: String, manifestPath: String,
+                    snapshotId: Option[Long], batchSize: Int): Seq[UnitResult] = {
+    val spark = table.df.sparkSession
     val done = completedUnits(manifestPath)
-    val pending = listUnits(spark, inputDir).filterNot(done)
+    val pending = table.files.filterNot(f => done(unitName(f)))
+    val filePath = table.df.metadataColumn("_metadata").getField("file_path")
+    val nullFlags = table.dataColumns.map(c => column(c).isNull)
     pending.grouped(batchSize).flatMap { batch =>
       val t0 = System.nanoTime()
-      // normalize file:// URIs back to the local paths listUnits produced.
-      // input_file_name() URI-encodes special characters (spaces etc.), so
-      // the broadcast lookup map carries BOTH the raw path and its
-      // percent-encoded form per unit (url_decode on the column would
-      // apply form-urlencoding semantics and corrupt a literal '+' in a
-      // filename into a space). The O(1) map lookup replaces a
-      // batch-deep nested `when` chain (O(batch) expression depth per
-      // row, hostile to codegen at large batch sizes) — and FAILS LOUDLY
-      // on any path that matches no unit: a silent null here would
-      // record rows=0/violations=0 and flip a dirty table's verdict to
-      // valid.
-      val unitCol = regexp_replace(input_file_name(), "^file:(//)?", "")
-      val keyEntries = batch.flatMap { unit =>
-        val k = unitKey(unit)
-        val encoded = new java.net.URI(null, null, unit, null).getRawPath
-        Seq(unit -> k, encoded -> k)
-      }
-      // one unit's encoded form colliding with another unit's raw path
-      // (e.g. 'a b.parquet' vs 'a%20b.parquet' in one batch) would let
-      // toMap silently overwrite an entry and misroute lineage — refuse
-      // loudly instead of flipping a dirty unit's verdict
-      val ambiguous = keyEntries.groupBy(_._1).filter(_._2.map(_._2).distinct.size > 1).keys
-      require(ambiguous.isEmpty,
-        s"ambiguous unit paths in batch (raw vs percent-encoded collision): ${ambiguous.take(3).mkString(", ")}")
-      val keyByPath: Map[String, String] = keyEntries.toMap
+      val keyByFile = batch.map(f => f -> unitKey(unitName(f))).toMap
+      require(keyByFile.values.toSet.size == batch.size,
+        s"unit keys collide in batch: ${batch.take(3).map(unitName).mkString(", ")}")
+      // one map lookup per row; a path that matches no unit FAILS
+      // LOUDLY (a silent null would record rows=0/violations=0)
       val keyExpr = coalesce(
-        try_element_at(typedLit(keyByPath), unitCol),
-        raise_error(concat(lit("file not in batch lineage: "), unitCol)).cast("string"))
-      val df = spark.read.parquet(batch: _*).withColumn("unit", keyExpr)
-      val checks = graft.exprs.ConstraintCompiler.compile(schema, df.schema)
+        try_element_at(typedLit(keyByFile), filePath),
+        raise_error(concat(lit("file not in batch lineage: "), filePath)).cast("string"))
+      val input = table.df.filter(filePath.isin(batch: _*))
+        .select(table.dataColumns.map(column) :+ keyExpr.as("unit"): _*)
+      val checks = graft.exprs.ConstraintCompiler.compile(schema, input.schema)
         .fold(e => throw new IllegalArgumentException(e), identity)
-      Validator.violationsForChecks(df, checks, Seq("conv_id", "turn_idx"), carryCols = Seq("unit"))
+      val (inObs, vioObs) = (Observation(), Observation())
+      val violations = Validator.violationsForChecks(observeUnits(input, inObs, nullFlags), checks,
+          Seq("conv_id", "turn_idx"), carryCols = Seq("unit"))
         .select(col("conv_id"), col("turn_idx").cast("int").as("turn_idx"),
           col("pointer"), col("constraint"), col("actual"), col("unit"))
+      observeUnits(violations, vioObs, Nil)
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("unit")
         .parquet(outDir)
 
-      // per-unit metrics (rows + per-column null counts — the manifest's
-      // per-partition metrics): from parquet footers when complete
-      // statistics exist (metadata only, no second decode of the data
-      // the validation job just scanned), else one grouped fallback scan
-      val statCols = df.drop("unit").columns.toSeq
-      val (rowsByUnit, nullsByUnit) = footerMetrics(spark, batch, statCols) match {
-        case Some(m) =>
-          (m.map { case (u, (r, _)) => u -> r },
-           m.map { case (u, (_, n)) => u -> n })
-        case None =>
-          // group by the SAME fail-loud lineage key as the validation job
-          // (raise_error fires here too if a scanned file is unknown)
-          val unitByKey = batch.map(u => unitKey(u) -> u).toMap
-          val metricsRows = spark.read.parquet(batch: _*)
-            .groupBy(keyExpr.as("unit_key"))
-            .agg(count(lit(1)).as("rows"),
-              statCols.map(c => sum(col(c).isNull.cast("long")).as(s"__nulls_$c")): _*)
-            .collect()
-          (metricsRows.map(r => unitByKey(r.getString(0)) -> r.getAs[Long]("rows")).toMap,
-           metricsRows.map { r =>
-             unitByKey(r.getString(0)) -> statCols.map(c => c -> r.getAs[Long](s"__nulls_$c")).toMap
-           }.toMap)
+      val seen = countsOf(inObs).getOrElse {
+        // no checks (or checks that fold to true): the validator plan is
+        // provably empty and Catalyst pruned the observed scan with it
+        val obs = Observation()
+        observeUnits(input, obs, nullFlags).write.format("noop").mode("overwrite").save()
+        countsOf(obs).getOrElse(throw new IllegalStateException("batch metrics were not observed"))
       }
-      // all-clean units write no partition dir at all — count only what
-      // exists. Existence goes through the Hadoop FileSystem of outDir's
-      // scheme: java.io.File was false for every hdfs://-or-s3a:// path,
-      // which silently zeroed violations and passed dirty tables
-      val outFs = new org.apache.hadoop.fs.Path(outDir)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val writtenDirs = batch.map(u => s"$outDir/${unitDirName(u)}")
-        .filter(p => outFs.exists(new org.apache.hadoop.fs.Path(p)))
-      val viosByKey =
-        if (writtenDirs.isEmpty) Map.empty[String, Long]
-        else spark.read.parquet(writtenDirs: _*)
-          .withColumn("unit", regexp_extract(input_file_name(), "unit=([^/]+)/", 1))
-          .groupBy("unit").agg(count(lit(1)).as("violations"))
-          .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      val vios = countsOf(vioObs)
+        .getOrElse(throw new IllegalStateException("batch violation counts were not observed"))
+      val metrics = batch.map { f =>
+        val unit = unitName(f)
+        seen.get(keyByFile(f)) match {
+          case Some(c) => (unit, c.head, table.dataColumns.zip(c.tail).toMap)
+          case None =>
+            val n = footerRows(spark, f)
+            if (n != 0) throw new IllegalStateException(
+              s"unit $unit has $n rows but the batch scan saw none of them (file path form mismatch?)")
+            (unit, 0L, table.dataColumns.map(_ -> 0L).toMap)
+        }
+      }
       val batchWallMs = (System.nanoTime() - t0) / 1000000
-      batch.map { unit =>
-        val rows = rowsByUnit.getOrElse(unit, 0L)
-        val nVios = viosByKey.getOrElse(unitKey(unit), 0L)
-        val r = UnitResult(unit, snapshotId, rows, nVios, nVios == 0,
-          batchWallMs, batch.size, nullsByUnit.getOrElse(unit, Map.empty))
+      metrics.map { case (unit, rows, nulls) =>
+        val nVios = vios.get(unitKey(unit)).fold(0L)(_.head)
+        val r = UnitResult(unit, snapshotId, rows, nVios, nVios == 0, batchWallMs, batch.size, nulls)
         appendResult(manifestPath, r)
         r
       }

@@ -1,6 +1,8 @@
 package graft.cli
 
-import graft.compile.TableSchemaCompiler
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
+import graft.compile.{TableSchema, TableSchemaCompiler}
 import graft.checkpoint.Checkpoint
 import graft.stats.Stats
 import graft.integrity.Integrity
@@ -19,6 +21,57 @@ import graft.integrity.Integrity
   */
 object ValidateTableMain {
 
+  /** A run's verdict: units validated by this run and in the whole
+    * manifest, and the violation counts the verdict sums.
+    */
+  final case class Verdict(pendingUnits: Int, manifestUnits: Int,
+                           rowViolations: Long, duplicateKeys: Long, orphanRows: Long) {
+    def total: Long = rowViolations + duplicateKeys + orphanRows
+  }
+
+  /** One run over `inputDir`: the table is opened (listed, schema
+    * inferred) once and that relation feeds the bind report, the
+    * checkpointed validation, the integrity checks and the stats. No
+    * output is read back: the verdict's counts are observed inside the
+    * writes that produce them.
+    */
+  def run(spark: SparkSession, schema: TableSchema, inputDir: String, outDir: String): Verdict = {
+    val table = Checkpoint.openTable(spark, inputDir)
+    val df = table.df
+    // the diagnostic bind view BEFORE the run: one line per schema/
+    // physical column mismatch (a compile failure inside the run
+    // reports only the first problem; this shows all of them)
+    graft.exprs.ConstraintCompiler
+      .bindReport(schema, df.schema)
+      .filterNot(_.status == "ok")
+      .foreach(b => System.err.println(s"schema bind: ${b.column} ${b.status} (${b.detail})"))
+    val results = Checkpoint.runValidation(table, schema, s"$outDir/violations",
+      s"$outDir/manifest.jsonl", snapshotId = None, batchSize = Checkpoint.DefaultBatchSize)
+    // both integrity checks from ONE full-data shuffle; row-level
+    // orphan emission via broadcast join-back of the offending set
+    val report = Integrity.integrityReport(df)
+    val nDups = writeCounted(report.duplicateKeys, s"$outDir/uniqueness_violations")
+    val nOrph = writeCounted(Integrity.orphanRows(df, report.orphanConvs), s"$outDir/referential_violations")
+    report.unpersist() // both members materialized above
+    Stats.profileLong(df, df.columns.toSeq)
+      .write.mode("overwrite").parquet(s"$outDir/stats")
+
+    // row violations sum over the FULL manifest (resume-safe): a re-run
+    // or resumed run must still see violations found by earlier runs
+    val all = Checkpoint.completedMetrics(s"$outDir/manifest.jsonl")
+    Verdict(results.size, all.size, all.map(_._3).sum, nDups, nOrph)
+  }
+
+  /** Overwrite `path` with `df` and return its row count, observed in
+    * the write job itself.
+    */
+  private def writeCounted(df: DataFrame, path: String): Long = {
+    val obs = Observation()
+    df.observe(obs, count(lit(1)).as("n")).write.mode("overwrite").parquet(path)
+    obs.get.getOrElse("n", throw new IllegalStateException(s"row count of $path was not observed"))
+      .asInstanceOf[Long]
+  }
+
   def main(args: Array[String]): Unit = args match {
     case Array(schemaPath, inputDir, outDir) =>
       val schema = TableSchemaCompiler
@@ -27,39 +80,13 @@ object ValidateTableMain {
 
       val spark = CliSession.open("graft-validate")
       try {
-        // the diagnostic bind view BEFORE the run: one line per schema/
-        // physical column mismatch (a compile failure inside the run
-        // reports only the first problem; this shows all of them)
-        graft.exprs.ConstraintCompiler
-          .bindReport(schema, spark.read.parquet(inputDir).schema)
-          .filterNot(_.status == "ok")
-          .foreach(b => System.err.println(s"schema bind: ${b.column} ${b.status} (${b.detail})"))
-        val results = Checkpoint.runValidation(
-          spark, inputDir, schema, s"$outDir/violations", s"$outDir/manifest.jsonl")
-        val df = spark.read.parquet(inputDir)
-        // both integrity checks from ONE full-data shuffle; row-level
-        // orphan emission via broadcast join-back of the offending set
-        val report = Integrity.integrityReport(df)
-        report.duplicateKeys.write.mode("overwrite").parquet(s"$outDir/uniqueness_violations")
-        Integrity.orphanRows(df, report.orphanConvs)
-          .write.mode("overwrite").parquet(s"$outDir/referential_violations")
-        report.unpersist() // both members materialized above
-        Stats.profileLong(df, df.columns.toSeq)
-          .write.mode("overwrite").parquet(s"$outDir/stats")
-
-        // verdict sums over the FULL manifest (resume-safe): a re-run or
-        // resumed run must still see violations found by earlier runs
-        val all = Checkpoint.completedMetrics(s"$outDir/manifest.jsonl")
-        val rowVios = all.map(_._3).sum
-        val nDups = spark.read.parquet(s"$outDir/uniqueness_violations").count()
-        val nOrph = spark.read.parquet(s"$outDir/referential_violations").count()
-        val total = rowVios + nDups + nOrph
-        println(s"processed ${results.size} pending units (${all.size} total in manifest)")
-        if (total == 0) {
+        val v = run(spark, schema, inputDir, outDir)
+        println(s"processed ${v.pendingUnits} pending units (${v.manifestUnits} total in manifest)")
+        if (v.total == 0) {
           println(s"valid table at $inputDir")
         } else {
-          System.err.println(
-            s"invalid table at $inputDir: $rowVios row violations, $nDups duplicate keys, $nOrph orphan rows")
+          System.err.println(s"invalid table at $inputDir: ${v.rowViolations} row violations, " +
+            s"${v.duplicateKeys} duplicate keys, ${v.orphanRows} orphan rows")
           sys.exit(2)
         }
       } finally spark.stop()

@@ -7,6 +7,7 @@ import org.scalatest.matchers.should.Matchers
 import graft.SparkTestBase
 import graft.compile.TableSchemaCompiler
 import graft.sources.TranscriptGen
+import org.apache.spark.sql.functions._
 
 /** FIXTURES.md §4 "resume": run with manifest, drop completed entries,
   * re-run -> identical outputs; manifest records lineage + metrics.
@@ -27,6 +28,26 @@ class CheckpointSpec extends AnyFlatSpec with Matchers {
   private def readAllViolations(outDir: String): Seq[String] =
     spark.read.parquet(s"$outDir/*")
       .collect().map(_.toString).sorted.toSeq
+
+  /** The table's data files, as absolute local paths. */
+  private def dataFiles(dir: String): Seq[String] =
+    Files.walk(Paths.get(dir)).iterator().asScala.toSeq
+      .filter(p => p.getFileName.toString.endsWith(".parquet") && !p.getFileName.toString.startsWith("."))
+      .map(_.toAbsolutePath.toString).sorted
+
+  /** Rows and per-column null counts of every data file, counted in
+    * plain Scala over the rows of that file alone.
+    */
+  private def perFileCounts(dir: String): Map[String, (Long, Map[String, Long])] =
+    dataFiles(dir).map { f =>
+      val df = spark.read.parquet(f)
+      val rows = df.collect()
+      f -> (rows.length.toLong,
+        df.columns.zipWithIndex.map { case (c, i) => c -> rows.count(_.isNullAt(i)).toLong }.toMap)
+    }.toMap
+
+  private def metricsOf(rs: Seq[Checkpoint.UnitResult]): Map[String, (Long, Map[String, Long])] =
+    rs.map(r => r.unit -> (r.rows, r.nullCounts)).toMap
 
   "Checkpoint.listUnits" should "discover units recursively and refuse an empty unit set" in {
     // Hive-partitioned layout: parquet files live in subdirectories —
@@ -130,20 +151,20 @@ class CheckpointSpec extends AnyFlatSpec with Matchers {
     rs.map(_.rows).sum shouldBe 400L
   }
 
-  it should "refuse a batch where one unit's encoded path collides with another's raw path" in {
-    // 'a b.parquet' percent-encodes to 'a%20b.parquet'; if BOTH exist as
-    // files, lineage would be ambiguous — must fail loudly, not misroute
+  it should "keep lineage apart for file names with space, '+' and '%' in one batch" in {
+    // 'a b.parquet' and 'a%20b.parquet' are two units: the listing, the
+    // file filter and the lineage map share one path form, so neither
+    // can be taken for the other
     val in = tmp() + "/in"
     writeInput(in)
-    val first = new java.io.File(in).listFiles()
-      .filter(_.getName.endsWith(".parquet")).head
-    Files.copy(first.toPath, Paths.get(in, "a b.parquet"))
-    Files.copy(first.toPath, Paths.get(in, "a%20b.parquet"))
+    dataFiles(in).zip(Seq("a b.parquet", "a+b.parquet", "a%20b.parquet", "c%d.parquet"))
+      .foreach { case (f, name) => Files.move(Paths.get(f), Paths.get(in, name)) }
     val out = tmp()
-    val ex = intercept[IllegalArgumentException] {
-      Checkpoint.runValidation(spark, in, schema, s"$out/v", s"$out/manifest.jsonl")
-    }
-    ex.getMessage should include("ambiguous unit paths")
+    val rs = Checkpoint.runValidation(spark, in, schema, s"$out/v", s"$out/manifest.jsonl")
+    rs.map(r => new java.io.File(r.unit).getName).toSet shouldBe
+      Set("a b.parquet", "a+b.parquet", "a%20b.parquet", "c%d.parquet")
+    metricsOf(rs) shouldBe perFileCounts(in)
+    rs.map(_.violations).sum should be > 0L
   }
 
   it should "handle a batch size far above the unit count (lookup map stays O(1))" in {
@@ -192,4 +213,87 @@ class CheckpointSpec extends AnyFlatSpec with Matchers {
       .map { case (u, r, v) => (u.substring(u.lastIndexOf('/')), r, v) }.sorted
     partMetrics shouldBe fullMetrics
   }
+
+  it should "count rows and nulls of a table with a struct column" in {
+    val in = tmp() + "/in"
+    TranscriptGen.generate(spark, 30, 6, TranscriptGen.Defects(nullRole = true))
+      .withColumn("meta", when(col("turn_idx") % 3 === 0, lit(null))
+        .otherwise(struct(col("role").as("r"), col("turn_idx").as("i"))))
+      .repartition(3).write.parquet(in)
+    val out = tmp()
+    val rs = Checkpoint.runValidation(spark, in, schema, s"$out/v", s"$out/manifest.jsonl")
+    metricsOf(rs) shouldBe perFileCounts(in)
+    rs.map(_.nullCounts("meta")).sum should be > 0L
+  }
+
+  it should "record a 0-row unit file as 0 rows with zero null counts" in {
+    val in = tmp() + "/in"
+    writeInput(in)
+    val empty = tmp() + "/empty"
+    spark.read.parquet(in).limit(0).coalesce(1).write.parquet(empty)
+    Files.copy(Paths.get(dataFiles(empty).head), Paths.get(in, "empty.parquet"))
+    val out = tmp()
+    val rs = Checkpoint.runValidation(spark, in, schema, s"$out/v", s"$out/manifest.jsonl")
+    rs.size shouldBe 5
+    val counts = perFileCounts(in)
+    counts(s"$in/empty.parquet")._1 shouldBe 0L
+    all(counts(s"$in/empty.parquet")._2.values) shouldBe 0L
+    metricsOf(rs) shouldBe counts
+  }
+
+  it should "count rows and nulls under a schema that compiles to zero checks" in {
+    val in = tmp() + "/in"
+    writeInput(in)
+    val permissive = TableSchemaCompiler
+      .compileString("""{"type":"object","properties":{"text":{}}}""").toOption.get
+    val out = tmp()
+    val rs = Checkpoint.runValidation(spark, in, permissive, s"$out/v", s"$out/manifest.jsonl")
+    metricsOf(rs) shouldBe perFileCounts(in)
+    all(rs.map(_.violations)) shouldBe 0L
+  }
+
+  it should "validate a table given as a file: URI with the same unit names" in {
+    val in = tmp() + "/in"
+    writeInput(in)
+    val out = tmp()
+    val rs = Checkpoint.runValidation(spark, s"file://$in", schema, s"$out/v", s"$out/manifest.jsonl")
+    rs.map(_.unit) shouldBe Checkpoint.listUnits(spark, in)
+    rs.map(_.unit) shouldBe dataFiles(in)
+    metricsOf(rs) shouldBe perFileCounts(in)
+    rs.map(_.violations).sum should be > 0L
+  }
+
+  it should "fail loudly, writing no manifest line, when the scan misses a non-empty unit" in {
+    // a file list in a path form the scan does not report prunes every
+    // file: the run must fail, never record the units as 0 rows
+    val in = tmp() + "/in"
+    writeInput(in)
+    val table = Checkpoint.openTable(spark, in)
+    val mismatched = table.copy(files = table.files.map(_.replaceFirst("^file:/", "file:///")))
+    val out = tmp()
+    val ex = intercept[IllegalStateException] {
+      Checkpoint.runValidation(mismatched, schema, s"$out/v", s"$out/manifest.jsonl",
+        snapshotId = None, batchSize = Checkpoint.DefaultBatchSize)
+    }
+    ex.getMessage should include("the batch scan saw none of them")
+    Checkpoint.completedMetrics(s"$out/manifest.jsonl") shouldBe empty
+  }
+
+  "Checkpoint.toJson" should "escape control characters so each record stays one JSON line" in {
+    val m = tmp() + "/manifest.jsonl"
+    val units = Seq("/t/a\nb.parquet", "/t/tab\there \"q\" back\\slash\u0001.parquet")
+    units.zipWithIndex.foreach { case (u, i) =>
+      Checkpoint.appendResult(m, Checkpoint.UnitResult(u, None, 10L + i, i.toLong, i == 0,
+        batchWallMs = 5, batchSize = 2, nullCounts = Map("col\nname" -> 1L, "plain" -> 0L)))
+    }
+    val lines = Files.readAllLines(Paths.get(m)).asScala.toSeq
+    lines.size shouldBe 2
+    lines.head should include("a\\nb.parquet")
+    lines(1) should include("\\u0001")
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    lines.map(l => json.readTree(l).get("unit").asText()) shouldBe units
+    json.readTree(lines.head).get("null_counts").get("col\nname").asLong() shouldBe 1L
+    Checkpoint.completedMetrics(m) shouldBe Seq((units(0), 10L, 0L), (units(1), 11L, 1L))
+  }
 }
+
