@@ -7,7 +7,7 @@ import graft.exprs.Validator
 import graft.integrity.Integrity
 import graft.pipeline.{Ann, AsOf, Conversations, Dedup, Multimodal, Packing, Sampling, TextOps}
 import graft.sources.{DirtyDerive, TranscriptDerive}
-import graft.stats.Stats
+import graft.stats.{Drift, Stats}
 
 /** Driver contract: one entry per implemented operator (SURVEY.md §2),
   * each with an equivalent DuckDB oracle (the transcripts table is
@@ -79,62 +79,15 @@ object SparkEntry {
       |       GROUP BY 1, 2, 3, 4),
       |pairs AS (SELECT id_a, id_b, CAST(inter AS DOUBLE) / (na + nb - inter) AS j FROM co)""".stripMargin
 
-  /** KL/PSI drift between the even/odd conversation halves over any
-    * bucket expression, in ONE scan, provably: both halves' histograms
-    * in a single conditional agg, then the tiny histogram collapses to
-    * one row via collect_list and KL/PSI run as array-aggregate HOFs
-    * over it — no second scan branch, no join, no single-partition
-    * window. array_sort makes the float summation order deterministic.
+  /** Both conversation halves' histograms over `bucket` in ONE scan
+    * ([[graft.stats.Drift.histogram]]): even order keys are the current
+    * side, odd ones the reference.
     */
-  /** Shared half-vs-half histogram for the drift gates: ONE scan builds
-    * both halves' bucket counts, packed sorted with totals alongside.
-    */
-  private def halvesHistogram(s: SparkSession, dir: String,
-                              bucket: org.apache.spark.sql.Column): DataFrame = {
-    val t = TranscriptDerive.fromLineitem(s, dir)
-      .withColumn("okey", substring(col("conv_id"), 2, 30).cast("long"))
-    val hist = t.groupBy(bucket.as("bucket"))
-      .agg(
-        sum(when(col("okey") % 2 === 0, 1L).otherwise(0L)).as("pc"),
-        sum(when(col("okey") % 2 === 1, 1L).otherwise(0L)).as("qc"))
-    val packed = hist.agg(array_sort(
-      collect_list(struct(col("bucket"), col("pc"), col("qc")))).as("h"))
-    packed.select(col("h"),
-      aggregate(col("h"), lit(0L), (a, x) => a + x.getField("pc")).as("pt"),
-      aggregate(col("h"), lit(0L), (a, x) => a + x.getField("qc")).as("qt"))
-  }
-
-  private def smoothedP(x: org.apache.spark.sql.Column) =
-    greatest(x.getField("pc").cast("double") / col("pt"), lit(1e-9))
-  private def smoothedQ(x: org.apache.spark.sql.Column) =
-    greatest(x.getField("qc").cast("double") / col("qt"), lit(1e-9))
-
-  private def klPsiBetweenHalves(s: SparkSession, dir: String,
-                                 bucket: org.apache.spark.sql.Column): DataFrame =
-    halvesHistogram(s, dir, bucket).select(
-      round(aggregate(col("h"), lit(0.0d),
-        (a, x) => a + smoothedP(x) * log(smoothedP(x) / smoothedQ(x))), 6).as("kl"),
-      round(aggregate(col("h"), lit(0.0d),
-        (a, x) => a + (smoothedP(x) - smoothedQ(x)) * log(smoothedP(x) / smoothedQ(x))), 6)
-        .as("psi"))
-
-  /** Jensen-Shannon divergence between the halves — base-2, symmetric,
-    * bounded [0,1]: the report-friendly companion to KL/PSI (same
-    * single-scan histogram, same smoothing).
-    */
-  private def jsdBetweenHalves(s: SparkSession, dir: String,
-                               bucket: org.apache.spark.sql.Column): DataFrame = {
-    // nats accumulated, ONE divide by ln 2 at the end: both engines'
-    // libms round ln(2) to the same double, while a native log2 kernel
-    // (DuckDB std::log2 vs Spark's ln/ln2) could diverge past 1 ulp
-    def term(x: org.apache.spark.sql.Column) = {
-      val m = (smoothedP(x) + smoothedQ(x)) / lit(2.0)
-      lit(0.5) * smoothedP(x) * log(smoothedP(x) / m) +
-        lit(0.5) * smoothedQ(x) * log(smoothedQ(x) / m)
-    }
-    halvesHistogram(s, dir, bucket).select(
-      round(aggregate(col("h"), lit(0.0d), (a, x) => a + term(x))
-        / lit(math.log(2.0)), 6).as("jsd"))
+  private def halvesDrift(s: SparkSession, dir: String,
+                          bucket: org.apache.spark.sql.Column): DataFrame = {
+    val half = substring(col("conv_id"), 2, 30).cast("long") % 2
+    Drift.histogram(TranscriptDerive.fromLineitem(s, dir), bucket,
+      when(half === 0, true).when(half === 1, false))
   }
 
   /** Connected components of the >= 0.5 Jaccard pair graph as a
@@ -398,19 +351,20 @@ object SparkEntry {
     }),
 
     "drift_role_klpsi" -> ((s, dir) =>
-      klPsiBetweenHalves(s, dir, coalesce(col("role"), lit("<null>")))),
+      halvesDrift(s, dir, Drift.categoricalBucket(col("role")))
+        .select(round(Drift.kl, 6).as("kl"), round(Drift.psi, 6).as("psi"))),
 
     // symmetric bounded drift (Jensen-Shannon, bits) over the same
     // single-scan half-vs-half histogram
     "drift_role_jsd" -> ((s, dir) =>
-      jsdBetweenHalves(s, dir, coalesce(col("role"), lit("<null>")))),
+      halvesDrift(s, dir, Drift.categoricalBucket(col("role")))
+        .select(round(Drift.jsd, 6).as("jsd"))),
 
     // numeric-drift path (banded text-length histogram) — same
     // single-scan shape, bucket = least(floor(len/16), 63)
     "drift_textlen_klpsi" -> ((s, dir) =>
-      klPsiBetweenHalves(s, dir,
-        least(floor(length(coalesce(col("text"), lit(""))) / 16), lit(63L))
-          .cast("long"))),
+      halvesDrift(s, dir, Drift.textLengthBucket(col("text")))
+        .select(round(Drift.kl, 6).as("kl"), round(Drift.psi, 6).as("psi"))),
 
     // conversation structure: 30-day-gap sessionization + role
     // alternation quality. Conversation-partitioned windows; the
@@ -1156,14 +1110,9 @@ object SparkEntry {
         .select(col("doc_id"), col("n_hits").cast("long").as("n_hits"))
     }),
 
-    // the large-benchmark scale path: codegen Bloom prune before the
-    // exact join — output must be IDENTICAL to plain contamination
-    // (false positives removed by the verify join), so: same oracle
-    "contamination_bloom" -> ((s, dir) => {
-      val d = docsBalanced(s, dir)
-      TextOps.contaminationHitsBloom(d, d.filter(col("doc_id") % 13 === 1), n = 8)
-        .select(col("doc_id"), col("n_hits").cast("long").as("n_hits"))
-    }),
+    // the contamination operator under a second, pinned gate key (same
+    // oracle SQL as `contamination`)
+    "contamination_bloom" -> ((s, dir) => queries("contamination")(s, dir)),
 
     // sequence packing (concat-and-chunk): global token offsets via the
     // scalable prefix sum — range repartition + partitioned window +

@@ -63,10 +63,8 @@ object ConstraintCompiler {
       .otherwise(c)
 
   /** Count of "present" properties of a struct value: non-null fields
-    * (a struct physically carries every field; null == absent). Shared
-    * by min/maxProperties validation and the stats profile
-    * ([[FusedRun]]) so the two can never diverge on what "present"
-    * means.
+    * (a struct physically carries every field; null == absent), as
+    * min/maxProperties validation counts them.
     */
   def structPresentCount(c: Column, st: StructType): Column =
     st.fieldNames.toSeq.map(f => when(c.getField(f).isNotNull, 1).otherwise(0))

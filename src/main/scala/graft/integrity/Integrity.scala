@@ -16,6 +16,17 @@ import org.apache.spark.sql.functions._
   * (`Decoders.scala:71-82`, duplicates rejected) and `$ref`-target
   * existence (`ReferenceResolver.scala:44`); here both lift to
   * dataset-level operators.
+  *
+  * NULL keys in the referential check follow one rule, the embedded-
+  * constraint view ("Entity Integrity, Referential Integrity, and Query
+  * Optimization with Embedded Uniqueness Constraints", ICDE 2019): a
+  * constraint binds only non-null key parts. A NULL `conv_id` is an
+  * absent reference, reported by `required` when the schema demands
+  * one, never an orphan; a NULL `turn_idx` is no root, so its row is an
+  * orphan when its conversation has no `turn_idx = 0` row. The CLI
+  * ([[integrityReport]]) and the gates ([[referentialViolations]])
+  * derive their orphan conversations from the same `orphanConvsOf`.
+  * Duplicate-key counting still groups NULL key parts as equal.
   */
 object Integrity {
 
@@ -34,20 +45,12 @@ object Integrity {
       .agg(count(lit(1)).as("dup_count"))
       .filter(col("dup_count") > 1)
 
-  /** Uniqueness violations as violation rows (pointer to the key). */
-  def uniquenessViolations(df: DataFrame, keyCols: Seq[String]): DataFrame = {
-    val pointer = graft.exprs.ConstraintCompiler.pointerCol(keyCols.dropRight(1), keyCols.last)
-    duplicateKeys(df, keyCols).select(
-      keyCols.map(col) :+
-        pointer.as("pointer") :+
-        lit("uniqueItems").as("constraint") :+
-        concat(lit("count="), col("dup_count").cast("string")).as("actual"): _*)
-  }
-
   /** Orphan rows: left anti join of `df.keyCol` against the registry of
-    * valid keys. Spark picks sort-merge or broadcast by stats; for a
-    * small registry, broadcast eliminates the shuffle entirely, and a
-    * skewed sort-merge side is split by AQE's skew-join.
+    * valid keys. A NULL `keyCol` never matches, so callers filter it out
+    * first where it means an absent reference. Spark picks sort-merge or
+    * broadcast by stats; for a small registry, broadcast eliminates the
+    * shuffle entirely, and a skewed sort-merge side is split by AQE's
+    * skew-join.
     */
   def orphans(df: DataFrame, registry: DataFrame, keyCol: String,
               broadcastRegistry: Boolean = false): DataFrame = {
@@ -77,26 +80,29 @@ object Integrity {
     // and separate downstream ACTIONS would otherwise re-plan — and
     // re-run — the full-table scan+shuffle once each (Spark does not
     // reuse shuffle stages across separately submitted jobs)
-    val keyCounts = df.groupBy(col("conv_id"), col("turn_idx"))
-      .agg(count(lit(1)).as("dup_count"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val dups = keyCounts.filter(col("dup_count") > 1)
-    val convs = keyCounts.groupBy("conv_id")
-      .agg(max(when(col("turn_idx") === 0, 1).otherwise(0)).as("has_root"))
-    val orphanConvs = convs.filter(col("has_root") === 0).select("conv_id")
-    IntegrityReport(dups, orphanConvs, keyCounts)
+    val keyCounts = keyspace(df).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    IntegrityReport(keyCounts.filter(col("dup_count") > 1), orphanConvsOf(keyCounts), keyCounts)
   }
+
+  /** The table reduced to its `(conv_id, turn_idx)` keyspace, with each
+    * key's row count: one partial-aggregated shuffle.
+    */
+  private def keyspace(df: DataFrame): DataFrame =
+    df.groupBy(col("conv_id"), col("turn_idx")).agg(count(lit(1)).as("dup_count"))
+
+  /** Orphan conversations of a [[keyspace]]: the non-null `conv_id`s
+    * with no `turn_idx = 0` key (the NULL rule in the object doc).
+    */
+  private def orphanConvsOf(keyCounts: DataFrame): DataFrame =
+    keyCounts.filter(col("conv_id").isNotNull)
+      .groupBy("conv_id")
+      .agg(max(when(col("turn_idx") === 0, 1).otherwise(0)).as("has_root"))
+      .filter(col("has_root") === 0)
+      .select("conv_id")
 
   /** Row-level orphan emission from a precomputed (small) orphan set. */
   def orphanRows(df: DataFrame, orphanConvs: DataFrame): DataFrame =
     df.join(broadcast(orphanConvs), Seq("conv_id"), "left_semi")
-
-  /** Conversation registry: conversations that have a `turn_idx = 0`
-    * root (FIXTURES.md §2 table-level rule). The filter is pushed into
-    * the scan; distinct's partial aggregation handles skew as above.
-    */
-  def conversationRegistry(transcripts: DataFrame): DataFrame =
-    transcripts.filter(col("turn_idx") === 0).select("conv_id").distinct()
 
   /** Turn-index contiguity audit: conversations whose turn indices are
     * NOT exactly 0..n-1 — gaps, duplicates, a missing root, or null
@@ -128,14 +134,15 @@ object Integrity {
       .agg(countDistinct(col(depCol)).as("n_dep"), count(lit(1)).as("n_rows"))
       .filter(col("n_dep") > 1)
 
-  /** Referential violations for transcripts, as violation rows. */
-  def referentialViolations(transcripts: DataFrame): DataFrame = {
-    val reg = conversationRegistry(transcripts)
-    orphans(transcripts, reg, "conv_id")
+  /** Referential violations for transcripts, as violation rows: the
+    * rows [[orphanRows]] emits for the conversations [[integrityReport]]
+    * calls orphans (FIXTURES.md §2 table-level rule).
+    */
+  def referentialViolations(transcripts: DataFrame): DataFrame =
+    orphanRows(transcripts, orphanConvsOf(keyspace(transcripts)))
       .select(
         col("conv_id"), col("turn_idx"),
         graft.exprs.ConstraintCompiler.pointerCol(Seq("conv_id", "turn_idx"), "conv_id").as("pointer"),
         lit("ref").as("constraint"),
         col("conv_id").as("actual"))
-  }
 }

@@ -603,9 +603,8 @@ object Dedup {
     * corpus gram volume; the RESULT is the duplicated subset only. At
     * 100 TB the gram strings themselves dominate the exchange —
     * xxhash64(gram) keys (collision-checked like [[minhashPairs]]'
-    * verify stage) and a Bloom prune a la `contaminationHitsBloom` are
-    * the documented upgrade; the string form here is byte-exact and
-    * collision-free for verification.
+    * verify stage) are the documented upgrade; the string form here is
+    * byte-exact and collision-free for verification.
     */
   def dupSpans(docs: DataFrame, n: Int, minDocs: Int = 2,
                textCol: String = "text", idCol: String = "doc_id"): DataFrame = {

@@ -165,49 +165,6 @@ object TextOps {
       .agg(countDistinct(col("g")).as("n_hits"))
   }
 
-  /** [[contaminationHits]] with a Bloom prefilter — the shape for a
-    * LARGE benchmark set: a Bloom filter over the benchmark grams' *
-    * xxhash64 values is embedded in the plan as a binary literal and
-    * evaluated by Spark's codegen `BloomFilterMightContain` (the same
-    * kernel runtime row-group filtering uses), so the corpus-side
-    * explode is pruned to candidate grams BEFORE any join. The exact
-    * broadcast join then removes Bloom false positives, making the
-    * OUTPUT identical to the plain operator (same oracle) while the
-    * join's probe side shrinks from every corpus gram to ~matches +
-    * fpp * |grams|. The Bloom build itself runs one job over the
-    * (benchmark-sized, not corpus-sized) gram set at construction —
-    * inherent to Bloom construction, documented here deliberately.
-    */
-  def contaminationHitsBloom(docs: DataFrame, bench: DataFrame, n: Int = 8,
-                             textCol: String = "text", idCol: String = "doc_id",
-                             benchTextCol: String = "text",
-                             fpp: Double = 0.01): DataFrame = {
-    import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
-    val benchGrams = bench
-      .select(explode(Dedup.shingles(col(benchTextCol), n)).as("g")).distinct()
-    // the gram explode+distinct shuffle feeds THREE consumers (count,
-    // bloom aggregation, verify-join build side): cache it for the two
-    // eager build actions and release before returning — the lazy join
-    // recomputes it once at execution (bench-sized, never corpus-sized)
-    val cached = benchGrams.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val bytes = try {
-      val cnt = math.max(cached.count(), 1L)
-      val bloom = cached.select(xxhash64(col("g")).as("h")).stat.bloomFilter("h", cnt, fpp)
-      val bos = new java.io.ByteArrayOutputStream()
-      bloom.writeTo(bos)
-      bos.toByteArray
-    } finally { cached.unpersist(); () }
-    val might = org.apache.spark.sql.GraftSqlBridge.column(
-      BloomFilterMightContain(
-        Literal.create(bytes, org.apache.spark.sql.types.BinaryType),
-        org.apache.spark.sql.GraftSqlBridge.expression(xxhash64(col("g")))))
-    docs.select(col(idCol), explode(Dedup.shingles(col(textCol), n)).as("g"))
-      .filter(might)
-      .join(broadcast(benchGrams), "g")
-      .groupBy(col(idCol))
-      .agg(countDistinct(col("g")).as("n_hits"))
-  }
-
   /** Corpus vocabulary: the `topN` tokens by total frequency, with
     * document frequency alongside (the tokenizer-training / IDF
     * primitive). One explode + one hash aggregation (map-side combining
@@ -894,9 +851,8 @@ object TextOps {
     *
     * Scale shape: detection is the [[boilerplateLines]] census; removal
     * is a left-anti join of the exploded lines against the (small) hot
-    * set — Spark broadcasts it when it fits, and the
-    * [[contaminationHitsBloom]] Bloom-prune pattern is the upgrade path
-    * if a pathological corpus ever makes it large. Reassembly is ONE
+    * set — Spark broadcasts it when it fits and shuffles the anti join
+    * when a pathological corpus makes it large. Reassembly is ONE
     * groupBy(doc) with an in-group sort by line position (array_sort of
     * (pos, line) structs — never an unpartitioned window). The per-row
     * transform extracting lines from structs is an interpreted HOF,

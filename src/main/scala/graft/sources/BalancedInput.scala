@@ -76,13 +76,8 @@ object BalancedInput {
     * round-robin repartition (no-op whenever the row-group count
     * already feeds every core).
     */
-  /** Kill switch for A/B measurement (SPARK_GRAFT_BALANCE=off). */
-  private val enabled: Boolean =
-    !sys.env.get("SPARK_GRAFT_BALANCE").contains("off")
-
   def parquet(spark: SparkSession, path: String): DataFrame = {
     val df = spark.read.parquet(path)
-    if (!enabled) return df
     val (groups, rows) = footerStats(spark, path)
     val want = math.min(
       spark.sparkContext.defaultParallelism.toLong,

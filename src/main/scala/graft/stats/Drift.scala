@@ -3,94 +3,75 @@ package graft.stats
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** Distribution-drift checks (north_rule): KL divergence and PSI between
-  * a reference snapshot and the current snapshot, over role/tool
-  * histograms (low-cardinality `groupBy(col).count()`) and text-length
-  * histograms (`width_bucket` style banding then `groupBy`).
+/** Distribution-drift checks (north_rule): KL divergence, PSI and
+  * Jensen-Shannon divergence between a current and a reference
+  * population, over categorical buckets (roles, tools) or banded numeric
+  * ones (text lengths).
   *
-  * Histograms are distributed aggregations (partial combine before the
-  * shuffle, so cardinality — not row count — bounds the shuffled bytes);
-  * KL/PSI are computed driver-side on the two collected histograms,
-  * which are tiny by construction.
+  * [[histogram]] counts both sides in ONE scan (a single conditional
+  * aggregation, partial-combined before its shuffle, so cardinality —
+  * not row count — bounds the shuffled bytes) and packs the tiny result
+  * into ONE row. [[kl]], [[psi]] and [[jsd]] are array-aggregate
+  * expressions over that row: no second scan branch, no join, no
+  * collect. `array_sort` makes the float summation order
+  * deterministic, which is what lets the DuckDB oracle replay the
+  * `drift_*` gates value-exactly.
   */
 object Drift {
 
-  /** Categorical histogram (roles, tools): one small shuffle keyed by
-    * value. NULL becomes the "<null>" bucket.
+  /** Epsilon smoothing for empty buckets (standard PSI practice: both
+    * KL and PSI are undefined on a zero probability).
     */
-  def categoricalHistogram(df: DataFrame, column: String): DataFrame =
-    df.groupBy(coalesce(col(column).cast("string"), lit("<null>")).as("bucket"))
-      .agg(count(lit(1)).as("cnt"))
+  val Eps: Double = 1e-9
 
-  /** Banded numeric histogram for text lengths etc.: bucket i covers
-    * [i*width, (i+1)*width), capped at `buckets-1`.
+  /** Categorical bucket: the value as a string, NULL as "<null>". */
+  def categoricalBucket(c: Column): Column = coalesce(c.cast("string"), lit("<null>"))
+
+  /** Banded length bucket: bucket i covers lengths [i*width,
+    * (i+1)*width), capped at `buckets - 1`; NULL text has length 0.
     */
-  def bandedHistogram(df: DataFrame, value: Column, width: Int, buckets: Int): DataFrame =
-    df.groupBy(
-      least(floor(value / width), lit(buckets - 1L)).cast("long").as("bucket"))
-      .agg(count(lit(1)).as("cnt"))
+  def textLengthBucket(c: Column, width: Int = 16, buckets: Int = 64): Column =
+    least(floor(length(coalesce(c, lit(""))) / width), lit(buckets - 1L)).cast("long")
 
-  def textLengthHistogram(df: DataFrame, column: String = "text",
-                          width: Int = 16, buckets: Int = 64): DataFrame =
-    bandedHistogram(df, length(coalesce(col(column), lit(""))), width, buckets)
-
-  /** KL(p || q) = sum p_i * ln(p_i / q_i), and
-    * PSI = sum (p_i - q_i) * ln(p_i / q_i), over the union of buckets,
-    * with epsilon-smoothing for empty buckets (standard PSI practice —
-    * both measures are undefined on zero q).
+  /** Both sides' histograms over `bucket` from ONE scan, as one row:
+    * `h`, the (bucket, pc, qc) structs sorted by bucket, and the side
+    * totals `pt` and `qt`. A row counts on the current side (p) where
+    * `current` is true, on the reference side (q) where it is false,
+    * and on neither where it is NULL. [[kl]], [[psi]] and [[jsd]] read
+    * these three columns.
     */
-  def klPsi(p: Map[String, Long], q: Map[String, Long], eps: Double = 1e-9): (Double, Double) = {
-    val keys = (p.keySet ++ q.keySet).toSeq.sorted
-    val pTotal = p.values.sum.toDouble
-    val qTotal = q.values.sum.toDouble
-    require(pTotal > 0 && qTotal > 0, "empty histogram")
-    var kl = 0.0
-    var psi = 0.0
-    keys.foreach { k =>
-      val pi = math.max(p.getOrElse(k, 0L) / pTotal, eps)
-      val qi = math.max(q.getOrElse(k, 0L) / qTotal, eps)
-      val lr = math.log(pi / qi)
-      kl += pi * lr
-      psi += (pi - qi) * lr
+  def histogram(df: DataFrame, bucket: Column, current: Column): DataFrame =
+    df.groupBy(bucket.as("bucket"))
+      .agg(
+        sum(when(current, 1L).otherwise(0L)).as("pc"),
+        sum(when(!current, 1L).otherwise(0L)).as("qc"))
+      .agg(array_sort(collect_list(struct(col("bucket"), col("pc"), col("qc")))).as("h"))
+      .select(col("h"),
+        aggregate(col("h"), lit(0L), (a, x) => a + x.getField("pc")).as("pt"),
+        aggregate(col("h"), lit(0L), (a, x) => a + x.getField("qc")).as("qt"))
+
+  private def p(x: Column): Column = greatest(x.getField("pc").cast("double") / col("pt"), lit(Eps))
+  private def q(x: Column): Column = greatest(x.getField("qc").cast("double") / col("qt"), lit(Eps))
+
+  /** KL(p || q) = sum p_i * ln(p_i / q_i) over the bucket union, in nats. */
+  def kl: Column =
+    aggregate(col("h"), lit(0.0d), (a, x) => a + p(x) * log(p(x) / q(x)))
+
+  /** PSI = sum (p_i - q_i) * ln(p_i / q_i) over the bucket union. */
+  def psi: Column =
+    aggregate(col("h"), lit(0.0d), (a, x) => a + (p(x) - q(x)) * log(p(x) / q(x)))
+
+  /** Jensen-Shannon divergence in bits: symmetric and bounded [0, 1],
+    * the report-friendly companion to [[kl]]. Accumulated in nats with
+    * ONE divide by ln 2 at the end: both engines' libms round ln(2) to
+    * the same double, while a native log2 kernel (DuckDB std::log2 vs
+    * Spark's ln/ln2) could diverge past 1 ulp.
+    */
+  def jsd: Column = {
+    def term(x: Column) = {
+      val m = (p(x) + q(x)) / lit(2.0)
+      lit(0.5) * p(x) * log(p(x) / m) + lit(0.5) * q(x) * log(q(x) / m)
     }
-    (kl, psi)
+    aggregate(col("h"), lit(0.0d), (a, x) => a + term(x)) / lit(math.log(2.0))
   }
-
-  /** Jensen-Shannon divergence in bits — symmetric (`jsd(p,q) ==
-    * jsd(q,p)`) and bounded [0, 1], the report-friendly companion to
-    * [[klPsi]]; same bucket union and epsilon smoothing. Accumulated in
-    * nats with one divide by ln 2 at the end (the form the distributed
-    * gate expression and the DuckDB oracle both replay exactly).
-    */
-  def jsd(p: Map[String, Long], q: Map[String, Long], eps: Double = 1e-9): Double = {
-    val keys = (p.keySet ++ q.keySet).toSeq.sorted
-    val pTotal = p.values.sum.toDouble
-    val qTotal = q.values.sum.toDouble
-    require(pTotal > 0 && qTotal > 0, "empty histogram")
-    var acc = 0.0
-    keys.foreach { k =>
-      val pi = math.max(p.getOrElse(k, 0L) / pTotal, eps)
-      val qi = math.max(q.getOrElse(k, 0L) / qTotal, eps)
-      val m = (pi + qi) / 2.0
-      acc += 0.5 * pi * math.log(pi / m) + 0.5 * qi * math.log(qi / m)
-    }
-    acc / math.log(2.0)
-  }
-
-  def collectHistogram(h: DataFrame): Map[String, Long] =
-    // a null bucket (nulls in the histogrammed column) becomes its own
-    // "<null>" key instead of NPEing the driver
-    h.collect().map(r =>
-      Option(r.get(0)).map(_.toString).getOrElse("<null>") -> r.getLong(1)).toMap
-
-  /** End-to-end drift between two snapshots on a categorical column. */
-  def categoricalDrift(current: DataFrame, reference: DataFrame, column: String): (Double, Double) =
-    klPsi(
-      collectHistogram(categoricalHistogram(current, column)),
-      collectHistogram(categoricalHistogram(reference, column)))
-
-  def textLengthDrift(current: DataFrame, reference: DataFrame): (Double, Double) =
-    klPsi(
-      collectHistogram(textLengthHistogram(current)),
-      collectHistogram(textLengthHistogram(reference)))
 }

@@ -6,7 +6,6 @@ import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.datasketches.tdigest.TDigestDouble
-import org.apache.datasketches.memory.Memory
 
 /** Column statistics (north_rule): count / null-rate / min / max /
   * distinct (HyperLogLog++ via Spark's built-in `approx_count_distinct`)
@@ -42,37 +41,11 @@ object Stats {
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Double]]()
   }
 
-  /** t-digest aggregator returning the serialized sketch, for mergeable
-    * per-partition manifests.
-    */
-  final class TDigestSketch(k: Short = TDigestDouble.DEFAULT_K)
-      extends Aggregator[java.lang.Double, TDigestDouble, Array[Byte]] {
-    override def zero: TDigestDouble = new TDigestDouble(k)
-    override def reduce(b: TDigestDouble, a: java.lang.Double): TDigestDouble = {
-      if (a != null) b.update(a); b
-    }
-    override def merge(b1: TDigestDouble, b2: TDigestDouble): TDigestDouble = {
-      b1.merge(b2); b1
-    }
-    override def finish(r: TDigestDouble): Array[Byte] = r.toByteArray
-    override def bufferEncoder: Encoder[TDigestDouble] = Encoders.kryo[TDigestDouble]
-    override def outputEncoder: Encoder[Array[Byte]] = Encoders.BINARY
-  }
-
   /** Quantile column built from the typed aggregator. */
   def quantileAgg(c: Column, probs: Seq[Double]): Column = {
     val agg = udaf(new TDigestQuantiles(probs), Encoders.DOUBLE)
     agg(c.cast("double"))
   }
-
-  /** Serialized-sketch column (for mergeable per-partition manifests). */
-  def sketchAgg(c: Column): Column = {
-    val agg = udaf(new TDigestSketch(), Encoders.DOUBLE)
-    agg(c.cast("double"))
-  }
-
-  def deserializeTDigest(bytes: Array[Byte]): TDigestDouble =
-    TDigestDouble.heapify(Memory.wrap(bytes))
 
   val defaultProbs: Seq[Double] = Seq(0.5, 0.9, 0.99)
 

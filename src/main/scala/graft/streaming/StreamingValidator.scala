@@ -80,8 +80,8 @@ object StreamingValidator {
     * (role/tool/text-length histograms vs a reference) on the live
     * stream: per event-time window, KL(p_window || q_baseline) and PSI
     * against a FIXED baseline histogram captured from a reference
-    * snapshot (e.g. [[graft.stats.Drift.collectHistogram]] of last
-    * week's table).
+    * snapshot (e.g. last week's table's `groupBy(bucket).count()`,
+    * collected).
     *
     * The baseline's bucket set is known at plan time, so the window
     * histogram compiles to one conditional-count per bucket inside a
@@ -89,7 +89,8 @@ object StreamingValidator {
     * available in append mode; state per window = |buckets| counters),
     * and the KL/PSI sums are plain scalar column arithmetic over those
     * counts — the same epsilon-smoothed math as
-    * [[graft.stats.Drift.klPsi]], pinned against it in StreamingSpec.
+    * [[graft.stats.Drift.kl]] and [[graft.stats.Drift.psi]], pinned
+    * against them in StreamingSpec.
     * Buckets outside the baseline fold into one `<other>` bucket with
     * epsilon mass (a NEW bucket appearing in production is exactly what
     * drift monitoring must flag, not drop).

@@ -81,7 +81,7 @@ class PlanSpec extends AnyFlatSpec with Matchers {
 
   "the referential check" should "broadcast a small registry when asked" in {
     val t = graft.sources.TranscriptDerive.fromLineitem(spark, sfDir)
-    val reg = Integrity.conversationRegistry(t)
+    val reg = t.filter(col("turn_idx") === 0).select("conv_id").distinct()
     val plan = formatted(Integrity.orphans(t, reg, "conv_id", broadcastRegistry = true))
     plan should include("BroadcastHashJoin")
     plan should include("LeftAnti")

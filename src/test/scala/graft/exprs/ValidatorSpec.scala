@@ -118,4 +118,19 @@ class ValidatorSpec extends AnyFlatSpec with Matchers {
     val plan = Validator.validateTranscripts(df, schema).queryExecution.executedPlan.toString
     plan should not include "Exchange"
   }
+
+  "Validator.violationCounts" should "equal the rollup over emitted violation rows" in {
+    import org.apache.spark.sql.functions._
+    val df = TranscriptGen.generate(spark, 200, 5, TranscriptGen.all)
+    val schema = graft.compile.TableSchemaCompiler
+      .compileString(graft.compile.Fixtures.flagshipSchema).toOption.get
+    val emitted = Validator.validateTranscripts(df, schema).toDF()
+      .groupBy(col("constraint"), element_at(split(col("pointer"), "/"), -1).as("column"))
+      .agg(count(lit(1)).as("n"))
+      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    val counted = Validator.violationCounts(df, schema)
+      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    emitted.isEmpty shouldBe false
+    counted shouldBe emitted
+  }
 }

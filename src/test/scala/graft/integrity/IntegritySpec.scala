@@ -2,7 +2,7 @@ package graft.integrity
 
 import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
-import org.apache.spark.sql.functions.desc
+import org.apache.spark.sql.functions.{col, desc, lit}
 import graft.SparkTestBase
 import graft.sources.TranscriptGen
 
@@ -22,17 +22,6 @@ class IntegritySpec extends AnyFlatSpec with Matchers {
     // clean data has none
     val clean = TranscriptGen.generate(spark, 20, 10)
     Integrity.duplicateKeys(clean, Seq("conv_id", "turn_idx")).count() shouldBe 0
-  }
-
-  it should "emit uniqueness violations with key pointers" in {
-    val df = TranscriptGen.generate(spark, 20, 10, TranscriptGen.Defects(duplicates = true))
-    val v = Integrity.uniquenessViolations(df, Seq("conv_id", "turn_idx")).collect()
-    v.length should be > 0
-    val first = v.head
-    first.getAs[String]("constraint") shouldBe "uniqueItems"
-    first.getAs[String]("pointer") shouldBe
-      s"/${first.getAs[String]("conv_id")}/turn_idx"
-    first.getAs[String]("actual") shouldBe "count=2"
   }
 
   it should "find exactly the planted orphan conversations" in {
@@ -79,11 +68,90 @@ class IntegritySpec extends AnyFlatSpec with Matchers {
     } finally df.unpersist()
   }
 
+  it should "apply one NULL-key rule on the CLI path and in the ref_orphans gate" in {
+    import spark.implicits._
+    val schema = graft.compile.TableSchemaCompiler
+      .compileString(graft.compile.Fixtures.flagshipSchema).toOption.get
+    // lineitem rows (l_orderkey, l_linenumber) that derive to: c1 rooted;
+    // c2 without a root; c3 rooted plus a NULL turn_idx row; c4 with
+    // only NULL turn_idx rows; and NULL conv_id rows, once with and once
+    // without a turn-0 row among them
+    val base = Seq[(Option[Long], Option[Int])](
+      (Some(1L), Some(1)), (Some(1L), Some(2)), (Some(2L), Some(2)), (Some(2L), Some(3)),
+      (Some(3L), Some(1)), (Some(3L), None), (Some(4L), None), (Some(4L), None),
+      (None, Some(2)), (None, Some(3)))
+    for (nullConvRoot <- Seq(false, true)) withClue(s"NULL conv_id turn-0 row: $nullConvRoot. ") {
+      val dir = java.nio.file.Files.createTempDirectory("graft_null_keys").toString
+      val keys = if (nullConvRoot) base :+ ((None, Some(1))) else base
+      keys.toDF("l_orderkey", "l_linenumber")
+        .select(col("l_orderkey"), lit(1L).as("l_partkey"), lit(1L).as("l_suppkey"),
+          col("l_linenumber"), lit(java.sql.Timestamp.valueOf("2024-01-01 00:00:00")).as("l_shipdate"))
+        .write.parquet(s"$dir/lineitem.parquet")
+      graft.sources.TranscriptDerive.fromLineitem(spark, dir)
+        .repartition(2).write.parquet(s"$dir/transcripts")
+      val t = spark.read.parquet(s"$dir/transcripts")
+
+      // the rule counted in plain Scala: rows of non-null conv_ids
+      // that have no turn_idx = 0 row
+      val rows = t.select("conv_id", "turn_idx").as[(Option[String], Option[Int])].collect().toSeq
+      val roots = rows.collect { case (Some(c), Some(0)) => c }.toSet
+      val expected = rows.filter { case (c, _) => c.exists(!roots(_)) }.sorted
+      expected.map(_._1).distinct shouldBe Seq(Some("c2"), Some("c4"))
+      expected.size shouldBe 4
+
+      // the orphan-conversation set and the rows orphanRows emits for it
+      val report = Integrity.integrityReport(t)
+      try {
+        val orphanConvs = report.orphanConvs.as[Option[String]].collect().toSet
+        orphanConvs shouldBe Set(Some("c2"), Some("c4"))
+        Integrity.orphanRows(t, report.orphanConvs).count() shouldBe
+          rows.count { case (c, _) => orphanConvs(c) }.toLong
+      } finally report.unpersist()
+
+      // ValidateTableMain and the gate emit the same (conv_id, turn_idx) multiset
+      val out = s"$dir/out"
+      val verdict = graft.cli.ValidateTableMain.run(spark, schema, s"$dir/transcripts", out)
+      val cli = spark.read.parquet(s"$out/referential_violations")
+        .select("conv_id", "turn_idx").as[(Option[String], Option[Int])].collect().toSeq.sorted
+      val gate = graft.SparkEntry.queries("ref_orphans")(spark, dir)
+        .select("conv_id", "turn_idx").as[(Option[String], Option[Int])].collect().toSeq.sorted
+      cli shouldBe expected
+      gate shouldBe expected
+      verdict.orphanRows shouldBe expected.size.toLong
+
+      // NULL conv_id rows are absent references, reported by `required`
+      val nullConvRows = rows.count(_._1.isEmpty).toLong
+      spark.read.parquet(s"$out/violations")
+        .filter(col("conv_id").isNull && col("constraint") === "required" &&
+          col("pointer").endsWith("/conv_id"))
+        .count() shouldBe nullConvRows
+    }
+  }
+
   it should "verify the skew fixture actually is skewed (top conv ~20%)" in {
     val df = TranscriptGen.generate(spark, 1000, 50, skewTopConvFraction = 0.2)
     val top = df.groupBy("conv_id").count().orderBy(desc("count")).first()
     top.getAs[String]("conv_id") shouldBe "c0"
     top.getAs[Long]("count").toDouble / (1000 * 50) shouldBe 0.2 +- 0.02
+  }
+
+  "Integrity.integrityReport" should "find dups and orphans from one full-data shuffle" in {
+    val df = TranscriptGen.generate(spark, 100, 5,
+      TranscriptGen.Defects(duplicates = true, orphans = true)).cache()
+    try {
+      val report = Integrity.integrityReport(df)
+      // matches the independent operators
+      val expectedDups = Integrity.duplicateKeys(df, Seq("conv_id", "turn_idx"))
+        .collect().map(_.toString).sorted
+      report.duplicateKeys.collect().map(_.toString).sorted shouldBe expectedDups
+      val expectedOrphanConvs = Integrity.referentialViolations(df)
+        .select("conv_id").distinct().collect().map(_.getString(0)).sorted
+      report.orphanConvs.collect().map(_.getString(0)).sorted shouldBe expectedOrphanConvs
+      // row-level emission via broadcast join-back
+      Integrity.orphanRows(df, report.orphanConvs).count() shouldBe
+        Integrity.referentialViolations(df).count()
+      report.unpersist()
+    } finally df.unpersist()
   }
 
   "Integrity.turnContiguity" should "flag gaps, duplicates, and non-zero roots only" in {

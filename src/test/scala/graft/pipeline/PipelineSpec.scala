@@ -1372,17 +1372,6 @@ class PipelineSpec extends AnyFlatSpec with Matchers {
     down.select("copy_idx").distinct().collect().map(_.getLong(0)).toSeq shouldBe Seq(0L)
   }
 
-  "TextOps.contaminationHitsBloom" should "equal the exact operator (Bloom only prunes)" in {
-    val d = docs
-    val bench = d.filter(col("doc_id") % 13 === 1)
-    val exact = TextOps.contaminationHits(d, bench, n = 8)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    val bloomed = TextOps.contaminationHitsBloom(d, bench, n = 8)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
-    exact should not be empty // the planted slice contaminates itself at minimum
-    bloomed shouldBe exact
-  }
-
   "Sampling.mixWeightsMd5" should "apply per-stratum weights below and above 1 in one rule" in {
     import spark.implicits._
     val df = (1L to 300L).map(i => (i, if (i % 3 == 0) "en" else if (i % 3 == 1) "zh" else "xx"))

@@ -2,6 +2,7 @@ package graft.stats
 
 import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
 import graft.sources.TranscriptGen
@@ -57,22 +58,66 @@ class StatsSpec extends AnyFlatSpec with Matchers {
     q(2) shouldBe 9900.0 +- 50.0
   }
 
-  it should "merge serialized t-digest sketches associatively" in {
-    import spark.implicits._
-    val df = spark.range(0, 10000).select((col("id") % 100).cast("double").as("v"),
-      (col("id") % 4).as("part"))
-    val sketches = df.groupBy("part").agg(Stats.sketchAgg(col("v")).as("sk"))
-      .collect().map(_.getAs[Array[Byte]]("sk"))
-    sketches.length shouldBe 4
-    val merged = sketches.map(Stats.deserializeTDigest).reduce { (a, b) => a.merge(b); a }
-    merged.getTotalWeight shouldBe 10000L
-    merged.getQuantile(0.5) shouldBe 50.0 +- 3.0
+  // every Drift case below reads one (kl, psi, jsd) per case id, all
+  // evaluated in ONE DataFrame: histograms built by Drift.histogram from
+  // rows, and generated histograms packed in its (h, pt, qt) row form
+  private val handP = Map("a" -> 50L, "b" -> 50L)
+  private val handQ = Map("a" -> 25L, "b" -> 75L)
+
+  private lazy val randomHistograms: Seq[(Map[String, Long], Map[String, Long])] = {
+    import org.scalacheck.Gen
+    import org.scalacheck.rng.Seed
+    val hist: Gen[Map[String, Long]] = Gen.nonEmptyMap(
+      Gen.zip(Gen.stringOfN(3, Gen.alphaChar), Gen.chooseNum(1L, 1000L)))
+    Gen.listOfN(300, Gen.zip(hist, hist)).pureApply(Gen.Parameters.default, Seed(20261017L))
+  }
+
+  /** `current` rows (the p side) and `reference` rows (q), flagged `cur`. */
+  private def sides(current: DataFrame, reference: DataFrame): DataFrame =
+    current.withColumn("cur", lit(true)).unionByName(reference.withColumn("cur", lit(false)))
+
+  private lazy val drift: Map[String, (Double, Double, Double)] = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    // one row per counted value
+    def rows(h: Map[String, Long]): DataFrame = {
+      import spark.implicits._
+      h.toSeq.flatMap { case (k, n) => Seq.fill(n.toInt)(k) }.toDF("role")
+    }
+    def viaHistogram(id: String, df: DataFrame): DataFrame =
+      Drift.histogram(df, Drift.categoricalBucket(col("role")), col("cur"))
+        .select(lit(id).as("id"), col("h"), col("pt"), col("qt"))
+    // the packed row Drift.histogram builds: bucket-sorted counts over
+    // the key union, with the side totals
+    def packed(id: String, p: Map[String, Long], q: Map[String, Long]): Row =
+      Row(id, (p.keySet ++ q.keySet).toSeq.sorted.map(k =>
+        Row(k, p.getOrElse(k, 0L), q.getOrElse(k, 0L))), p.values.sum, q.values.sum)
+    val packedSchema = StructType(Seq(
+      StructField("id", StringType),
+      StructField("h", ArrayType(StructType(Seq(StructField("bucket", StringType),
+        StructField("pc", LongType), StructField("qc", LongType))))),
+      StructField("pt", LongType), StructField("qt", LongType)))
+    val generated = randomHistograms.zipWithIndex.flatMap { case ((a, b), i) =>
+      Seq(packed(s"r$i", a, b), packed(s"r$i-rev", b, a), packed(s"r$i-same", a, a))
+    } :+ packed("disjoint", Map("a" -> 1L), Map("b" -> 1L))
+    val a = TranscriptGen.generate(spark, 50, 10)
+    val b = TranscriptGen.generate(spark, 50, 10,
+      TranscriptGen.Defects(badEnumRole = true, nullRole = true))
+    Seq(
+      viaHistogram("hand", sides(rows(handP), rows(handQ))),
+      viaHistogram("hand-rev", sides(rows(handQ), rows(handP))),
+      viaHistogram("hand-same", sides(rows(handP), rows(handP))),
+      viaHistogram("snapshot-same", sides(a, a)),
+      viaHistogram("snapshot-shift", sides(b, a)),
+      spark.createDataFrame(spark.sparkContext.parallelize(generated, 4), packedSchema)
+    ).reduce(_ unionByName _)
+      .select(col("id"), Drift.kl, Drift.psi, Drift.jsd)
+      .collect().map(r => r.getString(0) -> ((r.getDouble(1), r.getDouble(2), r.getDouble(3))))
+      .toMap
   }
 
   "Drift" should "match hand-computed KL and PSI to 1e-9" in {
-    val p = Map("a" -> 50L, "b" -> 50L)
-    val q = Map("a" -> 25L, "b" -> 75L)
-    val (kl, psi) = Drift.klPsi(p, q)
+    val (kl, psi, _) = drift("hand")
     val expectedKl = 0.5 * math.log(0.5 / 0.25) + 0.5 * math.log(0.5 / 0.75)
     val expectedPsi = (0.5 - 0.25) * math.log(0.5 / 0.25) + (0.5 - 0.75) * math.log(0.5 / 0.75)
     kl shouldBe expectedKl +- 1e-9
@@ -114,54 +159,55 @@ class StatsSpec extends AnyFlatSpec with Matchers {
   }
 
   it should "match hand-computed JSD, stay symmetric and bounded" in {
-    val p = Map("a" -> 50L, "b" -> 50L)
-    val q = Map("a" -> 25L, "b" -> 75L)
     def side(x: Double, m: Double) = 0.5 * x * math.log(x / m)
     val expected = (side(0.5, 0.375) + side(0.25, 0.375) +
       side(0.5, 0.625) + side(0.75, 0.625)) / math.log(2.0)
-    Drift.jsd(p, q) shouldBe expected +- 1e-9
-    Drift.jsd(p, q) shouldBe Drift.jsd(q, p) // symmetric, unlike KL
-    Drift.jsd(p, p) shouldBe 0.0 +- 1e-12
+    val jsd = drift("hand")._3
+    jsd shouldBe expected +- 1e-9
+    jsd shouldBe drift("hand-rev")._3 // symmetric, unlike KL
+    drift("hand-same")._3 shouldBe 0.0 +- 1e-12
     // disjoint supports approach the 1-bit bound (eps keeps it finite)
-    val d = Drift.jsd(Map("a" -> 1L), Map("b" -> 1L))
+    val d = drift("disjoint")._3
     d should be > 0.99
     d should be <= 1.0 + 1e-9
   }
 
   it should "hold the JSD/KL invariants on random histograms (property)" in {
-    import org.scalacheck.{Gen, Prop, Test => ScTest}
-    val hist: Gen[Map[String, Long]] = Gen.nonEmptyMap(
-      Gen.zip(Gen.stringOfN(3, Gen.alphaChar), Gen.chooseNum(1L, 1000L)))
-    val p = Prop.forAll(hist, hist) { (a, b) =>
-      val d = Drift.jsd(a, b)
-      val (kl, _) = Drift.klPsi(a, b)
+    randomHistograms.size shouldBe 300
+    val failed = randomHistograms.indices.filterNot { i =>
+      val (kl, _, d) = drift(s"r$i")
       d >= 0.0 && d <= 1.0 + 1e-9 &&                  // bounded
-        math.abs(d - Drift.jsd(b, a)) < 1e-12 &&      // symmetric
-        Drift.jsd(a, a) < 1e-12 &&                    // identity
+        math.abs(d - drift(s"r$i-rev")._3) < 1e-12 && // symmetric
+        drift(s"r$i-same")._3 < 1e-12 &&              // identity
         kl >= -1e-9                                   // Gibbs (within smoothing)
     }
-    val r = ScTest.check(ScTest.Parameters.default.withMinSuccessfulTests(300), p)
-    withClue(r.status.toString)(r.passed shouldBe true)
+    withClue(failed.headOption.map(i => randomHistograms(i)).toString)(failed shouldBe empty)
   }
 
   it should "be ~zero for identical snapshots and positive for shifted ones" in {
-    val a = TranscriptGen.generate(spark, 50, 10)
-    val b = TranscriptGen.generate(spark, 50, 10, TranscriptGen.Defects(badEnumRole = true, nullRole = true))
-    val (klSame, psiSame) = Drift.categoricalDrift(a, a, "role")
+    val (klSame, psiSame, _) = drift("snapshot-same")
     klSame shouldBe 0.0 +- 1e-12
     psiSame shouldBe 0.0 +- 1e-12
-    val (klShift, psiShift) = Drift.categoricalDrift(b, a, "role")
+    val (klShift, psiShift, _) = drift("snapshot-shift")
     klShift should be > 0.0
     psiShift should be > 0.0
   }
 
   it should "measure text-length drift through banded histograms" in {
+    import spark.implicits._
+    // the banding rule: [i*16, (i+1)*16), capped at 63; null text is 0
+    Seq(Some("x" * 15), Some("x" * 16), Some("x" * 5000), None).toDF("text")
+      .select(Drift.textLengthBucket(col("text"))).as[Long].collect().toSeq shouldBe
+      Seq(0L, 1L, 63L, 0L)
     val a = TranscriptGen.generate(spark, 50, 10)
     val b = TranscriptGen.generate(spark, 50, 10, TranscriptGen.Defects(emptyText = true))
-    val (kl, _) = Drift.textLengthDrift(b, a)
-    kl should be > 0.0
-    val (klSame, _) = Drift.textLengthDrift(a, a)
-    klSame shouldBe 0.0 +- 1e-12
+    def klOf(id: String, current: DataFrame, reference: DataFrame) =
+      Drift.histogram(sides(current, reference), Drift.textLengthBucket(col("text")), col("cur"))
+        .select(lit(id).as("id"), Drift.kl.as("kl"))
+    val kl = klOf("shift", b, a).unionByName(klOf("same", a, a))
+      .as[(String, Double)].collect().toMap
+    kl("shift") should be > 0.0
+    kl("same") shouldBe 0.0 +- 1e-12
   }
 
   "Stats.aboveQuantileExact" should "cut at the exact interpolated quantile" in {

@@ -209,8 +209,11 @@ class StreamingSpec extends AnyFlatSpec with Matchers {
         .sortBy(_._1.getTime)
       rows.length shouldBe 2
       // window 1 matches the batch math exactly (buckets ⊆ baseline keys)
-      val (klB, psiB) = graft.stats.Drift.klPsi(
-        Map("user" -> 3L, "assistant" -> 1L, "system" -> 0L), baseline)
+      import graft.stats.Drift
+      val batch = (Seq("user", "user", "user", "assistant").map((_, true)) ++
+        baseline.toSeq.flatMap { case (k, n) => Seq.fill(n.toInt)((k, false)) }).toDF("role", "cur")
+      val Array((klB, psiB)) = Drift.histogram(batch, Drift.categoricalBucket($"role"), $"cur")
+        .select(Drift.kl, Drift.psi).as[(Double, Double)].collect()
       rows(0)._2 shouldBe 4L
       rows(0)._3 shouldBe klB +- 1e-9
       rows(0)._4 shouldBe psiB +- 1e-9
