@@ -194,12 +194,6 @@ object BenchOne {
   }
 }
 
-/** Cluster-mode scaling evidence: the same validation job on the same
-  * parquet input under `local-cluster[N,cores,mem]` — Spark forks REAL
-  * executor JVMs (own heap, own GC, own codegen cache), so N=1 vs N=4
-  * executors is the closest in-sandbox analogue of the north_rule's
-  * "N and 4N executors" criterion. Prints one JSON line.
-  */
 /** Scaffolding shared by the local-cluster scaling benches: executor
   * classpath resolution, the session recipe, and the generate-if-absent
   * input guard — in ONE place so a fix to any of them (e.g. the
@@ -250,6 +244,12 @@ private[graft] object LocalClusterBench {
   }
 }
 
+/** Cluster-mode scaling evidence: the same validation job on the same
+  * parquet input under `local-cluster[N,cores,mem]` — Spark forks REAL
+  * executor JVMs (own heap, own GC, own codegen cache), so N=1 vs N=4
+  * executors is the closest in-sandbox analogue of the north_rule's
+  * "N and 4N executors" criterion. Prints one JSON line.
+  */
 object ClusterScalingBench {
   def main(args: Array[String]): Unit = {
     import LocalClusterBench._
@@ -301,97 +301,6 @@ object ClusterScalingBench {
           "usage: ClusterScalingBench <executors> -- one measurement per JVM; " +
             "alternate `1` and `4` invocations and take best-of per level")
         sys.exit(1)
-    }
-  }
-}
-
-/** Scaling evidence (BASELINE.md): the same validation job on the same
-  * parquet input at local[N] vs local[4N] — the thread-level sandbox
-  * proxy (north_rule: efficiency >= 0.8). Prints one JSON line
-  * with both throughputs and the efficiency.
-  */
-object ScalingBench {
-  def main(args: Array[String]): Unit = {
-    val rows = sys.env.getOrElse("SPARK_GRAFT_SCALE_ROWS", "8000000").toLong
-    val input = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", s"/tmp/graft_scaling_input_$rows")
-
-    def session(threads: Int): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$threads]")
-        .config("spark.sql.shuffle.partitions", threads.toString)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
-
-    // generate the shared input once (128 files so both levels have
-    // enough splits; deterministic -> identical bytes either way).
-    // Session only when generation is needed — warm re-runs shouldn't
-    // pay a full SparkSession start/stop on a host-noise-sensitive bench
-    if (!new java.io.File(s"$input/_SUCCESS").exists()) {
-      val gen = session(32)
-      graft.sources.TranscriptGen
-        .generate(gen, rows / 8, 8, graft.sources.TranscriptGen.all)
-        .repartition(128)
-        .write.mode("overwrite").parquet(input)
-      gen.stop()
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-    }
-    val schema = graft.compile.TableSchemaCompiler
-      .compileString(SparkEntry.querySchema).toOption.get
-
-    def run(threads: Int): (Long, Double) = {
-      val s = session(threads)
-      try {
-        val df = s.read.parquet(input)
-        // warm-up pass (JIT + codegen + file listing), then timed best-of-2
-        graft.exprs.Validator.validateTranscripts(df, schema).count()
-        val times = (1 to 2).map { _ =>
-          val t0 = System.nanoTime()
-          val n = graft.exprs.Validator.validateTranscripts(df, schema).count()
-          (n, (System.nanoTime() - t0) / 1e9)
-        }
-        val nRows = df.count()
-        (nRows, times.map(_._2).min)
-      } finally {
-        s.stop()
-        SparkSession.clearActiveSession()
-        SparkSession.clearDefaultSession()
-      }
-    }
-
-    args.headOption match {
-      case Some(t) =>
-        // single-level mode: run under `taskset -c 0-(t-1)` so the WHOLE
-        // JVM (worker threads + GC + IO) sees exactly t CPUs — an honest
-        // proxy for a t-core cluster slice
-        val threads = t.toInt
-        val (n, sec) = run(threads)
-        println(s"""{"metric":"scaling_single","threads":$threads,"input_rows":$n,"sec":$sec,"turns_per_sec":${(n / sec).round}}""")
-      case None =>
-        // N vs 4N thread pairing. Default 4 vs 16 on the 32-core sandbox
-        // box: both levels leave headroom for GC/background threads, so
-        // the ratio measures the JOB's scaling, not the host's
-        // saturation behavior (override with SPARK_GRAFT_SCALE_N).
-        val n = sys.env.getOrElse("SPARK_GRAFT_SCALE_N", "4").toInt
-        // alternate the two levels and keep the best time per level: the
-        // sandbox host's throughput fluctuates ~3x over minutes, and
-        // best-vs-best pairs the levels at comparable host conditions
-        val trials = (1 to 3).map(_ => (run(n), run(4 * n)))
-        val (nr1, t1) = trials.map(_._1).minBy(_._2)
-        val (nr4, t4) = trials.map(_._2).minBy(_._2)
-        require(nr1 == nr4)
-        val thr1 = nr1 / t1
-        val thr4 = nr4 / t4
-        val efficiency = thr4 / (4.0 * thr1)
-        println(
-          s"""{"metric":"scaling","n_threads":$n,"input_rows":$nr1,"localN_sec":$t1,"local4N_sec":$t4,""" +
-            s""""localN_turns_per_sec":${thr1.round},"local4N_turns_per_sec":${thr4.round},""" +
-            s""""speedup":${(thr4 / thr1 * 1000).round / 1000.0},"efficiency":${(efficiency * 1000).round / 1000.0}}""")
     }
   }
 }

@@ -595,11 +595,11 @@ object SparkEntry {
           col("sample_rate").cast("long").as("sample_rate"),
           col("amplitude_sum"))),
 
-    // BPE tokenizer training: 8 merge rounds over the corpus word
-    // census. The oracle replays the whole cascade (census, weighted
-    // pair counts, deterministic argmax, literal-replace merge) stage
-    // by stage — one wrong tie-break or rewrite anywhere diverges
-    // every later merge
+    // BPE tokenizer training: 8 merges over the corpus word census
+    // (one census job, then the driver-side incremental trainer). The
+    // oracle replays the whole cascade (census, weighted pair counts,
+    // deterministic argmax, literal-replace merge) stage by stage — one
+    // wrong tie-break or rewrite anywhere diverges every later merge
     "bpe_merges" -> ((s, dir) => TextOps.bpeMerges(docs(s, dir), numMerges = 8)),
 
     // batched BPE training (round 6): up to 4 merges per census round —
@@ -611,13 +611,10 @@ object SparkEntry {
     "bpe_merges_batched" -> ((s, dir) =>
       TextOps.bpeMergesBatched(docs(s, dir), numMerges = 8, batch = 4)),
 
-    // exact BPE at production vocab sizes (round 6): census collected
-    // once (bounded, minFreq-truncatable — the standard trainer knob),
-    // classic incremental algorithm driver-side, zero Spark jobs per
-    // merge. Gate replays the SAME sequential cascade as bpe_merges:
-    // bit-equality with sequential semantics is the whole contract
+    // same trainer and oracle as bpe_merges: the key of the round-6
+    // driver-side trainer, kept so that no gate key is dropped
     "bpe_merges_local" -> ((s, dir) =>
-      TextOps.bpeMergesLocal(docs(s, dir), numMerges = 8)),
+      TextOps.bpeMerges(docs(s, dir), numMerges = 8)),
 
     // train-then-apply: the learned 8-merge table re-tokenizes the
     // corpus; per-doc counts under the learned vocab must match the
@@ -1499,7 +1496,7 @@ object SparkEntry {
       s"""WITH $tCte
          |SELECT conv_id, turn_idx, ${ptrSql("conv_id")} AS pointer, 'ref' AS "constraint", conv_id AS actual
          |FROM transcripts
-         |WHERE conv_id NOT IN (SELECT conv_id FROM transcripts WHERE turn_idx = 0)""".stripMargin,
+         |WHERE conv_id NOT IN (SELECT conv_id FROM transcripts WHERE turn_idx = 0 AND conv_id IS NOT NULL)""".stripMargin,
 
     "stats_profile" -> {
       def one(n: String) =

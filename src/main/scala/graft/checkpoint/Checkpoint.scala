@@ -129,9 +129,6 @@ object Checkpoint {
     f"${base}_${unit.hashCode & 0x7fffffff}%08x"
   }
 
-  /** Stable directory name for a unit. */
-  def unitDirName(unit: String): String = s"unit=${unitKey(unit)}"
-
   /** An input table opened once per run: one file listing and one schema
     * inference, shared by every batch of the run and by the steps after
     * it (integrity, stats).

@@ -253,10 +253,6 @@ object VectorFunctions {
   def floatVecDot(a: Column, b: Column): Column =
     GraftSqlBridge.column(FloatVecDot(GraftSqlBridge.expression(a), GraftSqlBridge.expression(b)))
 
-  /** L2 norm via the same kernel. */
-  def floatVecNorm(a: Column): Column =
-    org.apache.spark.sql.functions.sqrt(floatVecDot(a, a))
-
   def floatVecMaxAbs(a: Column): Column =
     GraftSqlBridge.column(FloatVecMaxAbs(GraftSqlBridge.expression(a)))
 

@@ -20,16 +20,8 @@ object SimpleType extends Enumeration {
   val jsonObject = Value("object")
 }
 
-/** Open/closed numeric bound (reference `model.scala:25-45`).
-  * `admitsAsMax(v)` is true when v satisfies this as a maximum bound
-  * (Inclusive x: v <= x; Exclusive x: v < x); `admitsAsMin` mirrors it.
-  */
-final case class Boundary(value: BigDecimal, exclusive: Boolean) {
-  /** v satisfies this as a *maximum* bound. */
-  def admitsAsMax(v: BigDecimal): Boolean = if (exclusive) v < value else v <= value
-  /** v satisfies this as a *minimum* bound. */
-  def admitsAsMin(v: BigDecimal): Boolean = if (exclusive) v > value else v >= value
-}
+/** Open/closed numeric bound (reference `model.scala:25-45`). */
+final case class Boundary(value: BigDecimal, exclusive: Boolean)
 
 /** Optional min/max pair (reference `model.scala:47`). */
 final case class Range[T](min: Option[T] = None, max: Option[T] = None)

@@ -3,12 +3,13 @@ package graft.pipeline
 import java.nio.charset.StandardCharsets
 
 /** Driver-side exact BPE trainer over a collected word census — the
-  * compute core of [[TextOps.bpeMergesLocal]]. Classic incremental
+  * compute core of [[TextOps.bpeMerges]]. Classic incremental
   * algorithm (the shape every production tokenizer trainer uses):
   *  - words as symbol arrays (code points + the `</w>` end marker,
-  *    matching [[TextOps.bpeMerges]]' seed tokenization);
+  *    matching the seed tokenization `TextOps.bpeSeedSym` gives the
+  *    batched trainer and `bpeTokenCounts`);
   *  - pair counts are RAW adjacency counts weighted by word frequency
-  *    (runs overlap-count, exactly like the distributed census'
+  *    (runs overlap-count, exactly like the batched trainer's
   *    zip_with adjacency);
   *  - a pair -> containing-words inverted index, so each merge touches
   *    only the words that contain its pair;
@@ -19,8 +20,9 @@ import java.nio.charset.StandardCharsets
   *    Spark's UTF8String and DuckDB's VARCHAR comparisons use — ties
   *    must break identically to the distributed orderBy.
   *
-  * Bit-equality with [[TextOps.bpeMerges]] is pinned by PipelineSpec
-  * and by the bpe_merges_local gate replaying the sequential cascade.
+  * Sequential BPE semantics are pinned by PipelineSpec (a plain-Scala
+  * reference trainer) and by the bpe_merges/bpe_merges_local gates
+  * replaying the sequential cascade in DuckDB.
   */
 private[pipeline] object BpeLocal {
 

@@ -515,26 +515,6 @@ object Dedup {
         if (i < 60) shiftright(col("h60"), i).bitwiseAND(lit(1L))
         else shiftright(col("h4"), i - 60).bitwiseAND(lit(1L)))
 
-  /** HOF single-pass simhash (kept for per-row use inside a scan; the
-    * bulk path is [[simhashTable]]).
-    */
-  def simhash64(textCol: Column): Column = {
-    val toks = split(trim(lower(textCol)), "\\s+")
-    val hashes = transform(toks, t => xxhash64(t))
-    val votes = aggregate(
-      hashes,
-      array_repeat(lit(0L), 64),
-      (acc, h) => zip_with(acc, bitVotes(h), (x, y) => x + y))
-    val low = aggregate(reverse(slice(votes, 1, 63)), lit(0L),
-      (acc, v) => acc * 2 + when(v > 0, lit(1L)).otherwise(lit(0L)))
-    low.bitwiseOR(when(element_at(votes, 64) > 0, lit(Long.MinValue)).otherwise(lit(0L)))
-  }
-
-  private def bitVotes(h: Column): Column =
-    array((0 until 64).map { i =>
-      when(shiftright(h, i).bitwiseAND(lit(1L)) === 1L, lit(1L)).otherwise(lit(-1L))
-    }: _*)
-
   /** SimHash near-duplicate candidates: 4 bands of 16 bits; same band
     * value -> candidate; verified by hamming distance <= maxHamming.
     *

@@ -13,11 +13,9 @@ import org.apache.spark.sql.functions._
   * (and audited) after the fact. Sampling is a narrow map-side filter —
   * no shuffle, no state, scales linearly.
   *
-  * Two hash variants, same contract as [[Dedup.simhashTable]] vs
-  * [[Dedup.simhashTableMd5]]:
-  *  - xxhash64 (production): codegen, cheap, well mixed.
-  *  - md5-derived (replayable): every stage reproducible in another SQL
-  *    engine, so an external oracle can replay membership exactly.
+  * Membership hashes are md5-derived (replayable): every stage is
+  * reproducible in another SQL engine, so an external oracle can replay
+  * membership exactly.
   *
   * Buckets are PER-MILLION: a key lands in [0, 1e6) and survives when
   * bucket < rate * 1e6 — rates are exact to 1e-6, which also makes nested
@@ -38,10 +36,6 @@ object Sampling {
     math.round(rate * Buckets)
   }
 
-  /** Per-million bucket from xxhash64(key, salt) — production path. */
-  def bucketXx(key: Column, salt: String): Column =
-    pmod(xxhash64(key.cast("string"), lit(salt)), lit(Buckets))
-
   /** Per-million bucket from the first 15 hex chars of md5(key || salt)
     * (60 bits, uniform) — replayable in any engine with md5.
     */
@@ -49,14 +43,10 @@ object Sampling {
     conv(substring(md5(concat(key.cast("string"), lit(salt))), 1, 15), 16, 10)
       .cast("long") % Buckets
 
-  /** Fixed-rate deterministic sample: keep a row iff its key's bucket
-    * falls under `rate`. Same (key, salt) -> same decision, everywhere.
+  /** Fixed-rate deterministic sample: keep a row iff its key's md5
+    * bucket falls under `rate`. Same (key, salt) -> same decision,
+    * everywhere.
     */
-  def hashSample(df: DataFrame, rate: Double, keyCol: String,
-                 salt: String = ""): DataFrame =
-    df.filter(bucketXx(col(keyCol), salt) < rateToBucket(rate))
-
-  /** [[hashSample]] with the md5 bucket (external-oracle replayable). */
   def hashSampleMd5(df: DataFrame, rate: Double, keyCol: String,
                     salt: String = ""): DataFrame =
     df.filter(bucketMd5(col(keyCol), salt) < rateToBucket(rate))
@@ -67,12 +57,6 @@ object Sampling {
     * literal CASE chain (strata maps are small by nature); membership
     * stays a per-row filter with no shuffle.
     */
-  def stratifiedSample(df: DataFrame, keyCol: String, stratumCol: String,
-                       rates: Map[String, Double], defaultRate: Double = 0.0,
-                       salt: String = ""): DataFrame =
-    df.filter(bucketXx(col(keyCol), salt) < rateCase(stratumCol, rates, defaultRate))
-
-  /** [[stratifiedSample]] with the md5 bucket (replayable). */
   def stratifiedSampleMd5(df: DataFrame, keyCol: String, stratumCol: String,
                           rates: Map[String, Double], defaultRate: Double = 0.0,
                           salt: String = ""): DataFrame =

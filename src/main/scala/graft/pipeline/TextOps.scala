@@ -420,91 +420,53 @@ object TextOps {
     * broken by (count desc, left asc, right asc), the order the merges
     * must later be APPLIED in.
     *
-    * Scale shape: the only corpus-sized job is the word census (one
-    * explode + count agg, shuffle bounded by distinct words); every
-    * merge round then runs on the census alone — pair counts weighted
-    * by word frequency, a 1-row argmax to the driver (the merge
-    * DECISION is driver-state by nature, like a quantile threshold),
-    * and a literal-`replace` rewrite. Symbol strings use a 2-space
-    * separator with 1-space padding, which makes left-to-right
-    * non-overlapping literal replacement EXACTLY the BPE merge rule
-    * (consecutive occurrences share a boundary space: 1+1 spaces
-    * remain, so the next occurrence still matches — no regex, no
-    * lookbehind, replayable on RE2-only engines like the DuckDB
-    * oracle). Each round localCheckpoints its census (leaf plan — no
-    * lineage growth) and frees the previous round's blocks.
+    * Scale shape: BPE operates on the census (distinct words x
+    * frequency), not the corpus — the engine runs ONE distributed
+    * corpus-sized job ([[wordCensus]]: map-side combined, shuffle
+    * bounded by distinct words), pulls the census to the driver, and
+    * trains with the classic incremental algorithm ([[BpeLocal.train]]:
+    * pair->words inverted index, each merge touches only the words
+    * containing the pair, lazily-invalidated max-heap argmax). Zero
+    * Spark jobs per merge: 50k merges are seconds of driver CPU.
+    *
+    * The census collect is the deliberate, BOUNDED exception to the
+    * no-data-sized-collect rule: a census larger than `maxCensusWords`
+    * fails loud with that knob named instead of training on it.
     *
     * Words containing a literal `</w>` or 2+ consecutive spaces cannot
     * occur (the census tokenizes on whitespace); a corpus whose tokens
     * embed the end-marker string itself is out of scope.
     */
-  def bpeMerges(docs: DataFrame, numMerges: Int, textCol: String = "text"): DataFrame = {
+  def bpeMerges(docs: DataFrame, numMerges: Int, textCol: String = "text",
+                maxCensusWords: Int = 10000000): DataFrame = {
     require(numMerges >= 1, s"numMerges must be >= 1, got $numMerges")
     val spark = docs.sparkSession
     import spark.implicits._
-    val words = docs
+    val censusRows = wordCensus(docs, textCol).as[(String, Long)].collect()
+    require(censusRows.length <= maxCensusWords,
+      s"census has ${censusRows.length} words > maxCensusWords=$maxCensusWords; " +
+        "raise maxCensusWords")
+    BpeLocal.train(censusRows, numMerges).toDF("step", "left_sym", "right_sym", "pair_count")
+  }
+
+  /** Corpus word census `(w, n)` BPE trains on: whitespace tokens and
+    * their counts (one explode + count agg).
+    */
+  private def wordCensus(docs: DataFrame, textCol: String): DataFrame =
+    docs
       .select(explode(split(trim(col(textCol)), "\\s+")).as("w"))
       .filter(col("w") =!= "")
       .groupBy("w").agg(count(lit(1)).as("n"))
-    val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
-    // localCheckpoint (eager), not cache: each round's census must be a
-    // LEAF plan — chained withColumns otherwise grow the logical plan
-    // linearly in merges, and plan re-rendering (AQE explain, UI)
-    // quadratically, making the driver the bottleneck long before the
-    // data does (same idiom as Dedup.connectedComponents' rounds)
-    // LAZY checkpoints: each round's pair-count collect both computes
-    // the argmax AND materializes that round's census in the same job
-    // (an eager checkpoint paid a separate persist job per round). The
-    // PREVIOUS round's blocks are freed only after the collect proves
-    // the current census is materialized — freeing earlier would drop
-    // the only copy the lazy plan still reads.
-    var census = words.select(bpeSeedSym(col("w")).as("sym"), col("n"))
-      .localCheckpoint(eager = false)
-    var toFree: DataFrame = null
-    try {
-      var step = 0
-      var exhausted = false
-      while (step < numMerges && !exhausted) {
-        val ts = split(trim(col("sym")), "  ")
-        val top = census
-          .select(col("n"), explode(zip_with(
-            slice(ts, lit(1), size(ts) - 1), slice(ts, lit(2), size(ts) - 1),
-            (a, b) => struct(a.as("l"), b.as("r")))).as("pr"))
-          .groupBy(col("pr.l").as("l"), col("pr.r").as("r"))
-          .agg(sum(col("n")).as("cnt"))
-          .orderBy(col("cnt").desc, col("l").asc, col("r").asc)
-          .limit(1).collect() // materializes this round's census
-        if (toFree != null) {
-          org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(toFree)
-          toFree = null
-        }
-        if (top.isEmpty) exhausted = true
-        else {
-          val (l, r, cnt) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-          merges += ((step.toLong, l, r, cnt))
-          val next = census.withColumn("sym", bpeMergeStep(col("sym"), l, r))
-            .localCheckpoint(eager = false)
-          toFree = census
-          census = next
-          step += 1
-        }
-      }
-    } finally {
-      if (toFree != null) org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(toFree)
-      org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(census)
-    }
-    merges.toSeq.toDF("step", "left_sym", "right_sym", "pair_count")
-  }
 
   /** Batched BPE merge training — the standard distributed-BPE batching
     * rule: per census round, greedily accept up to `batch` merges in
     * rank order (count desc, left asc, right asc), skipping any pair
     * that shares a symbol with a pair already accepted this round, then
     * apply the whole batch in ONE census rewrite (mutually disjoint
-    * symbols cannot interfere) and re-census. ~batch x fewer rounds
-    * than [[bpeMerges]] — the scale shape for production vocab sizes
-    * (16k-50k merges), where one-driver-round-per-merge makes the
-    * driver the scheduler bottleneck (~2 Spark jobs x vocab size).
+    * symbols cannot interfere) and re-census. Each round is a Spark
+    * job over the census, so the census never leaves the cluster; ~batch
+    * x fewer rounds than one merge per round (~2 Spark jobs x vocab size
+    * at 16k-50k merges).
     *
     * Relationship to sequential [[bpeMerges]] — DOCUMENTED DIVERGENCE:
     * sequential BPE frequently CHAINS (merging (l,o) immediately makes
@@ -523,7 +485,7 @@ object TextOps {
     * value-exactly; PipelineSpec pins both the batch=1 equality and the
     * tiny-fixture divergence as a contract. When bit-exact sequential
     * semantics are required at production vocab sizes, use
-    * [[bpeMergesLocal]] (zero Spark jobs per merge).
+    * [[bpeMerges]] (zero Spark jobs per merge).
     *
     * Only the top `scanWindow = 8 * batch` ranked pairs are considered
     * per round (part of the rule, replayed by the oracle): the driver
@@ -544,17 +506,17 @@ object TextOps {
     require(batch >= 1, s"batch must be >= 1, got $batch")
     val spark = docs.sparkSession
     import spark.implicits._
-    val words = docs
-      .select(explode(split(trim(col(textCol)), "\\s+")).as("w"))
-      .filter(col("w") =!= "")
-      .groupBy("w").agg(count(lit(1)).as("n"))
     val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
-    // leaf-plan census per round (see [[bpeMerges]]): at production
-    // vocab sizes the round count is numMerges/batch — lineage
-    // truncation is what keeps round cost O(census), not O(history)
-    // lazy checkpoints with deferred frees — same job-fusion rule as
-    // [[bpeMerges]]: the round's ranked-collect materializes the census
-    var census = words.select(bpeSeedSym(col("w")).as("sym"), col("n"))
+    // localCheckpoint, not cache: each round's census must be a LEAF
+    // plan — chained withColumns otherwise grow the logical plan
+    // linearly in rounds, and plan re-rendering (AQE explain, UI)
+    // quadratically (same idiom as Dedup.connectedComponents' rounds).
+    // LAZY checkpoints: the round's ranked collect both computes the
+    // ranking AND materializes that round's census in the same job. The
+    // PREVIOUS round's blocks are freed only after the collect proves
+    // the current census is materialized — freeing earlier would drop
+    // the only copy the lazy plan still reads.
+    var census = wordCensus(docs, textCol).select(bpeSeedSym(col("w")).as("sym"), col("n"))
       .localCheckpoint(eager = false)
     var toFree: DataFrame = null
     var rounds = 0
@@ -609,61 +571,19 @@ object TextOps {
     (merges.toSeq.toDF("step", "left_sym", "right_sym", "pair_count"), rounds)
   }
 
-  /** Exact BPE training at production vocab sizes: BIT-IDENTICAL to
-    * [[bpeMerges]] (same counts, same (count desc, left, right) tie
-    * order — pinned by PipelineSpec and the bpe_merges_local gate,
-    * which replays the same sequential cascade oracle), with ZERO Spark
-    * jobs per merge. This is how every production tokenizer trainer
-    * works: BPE operates on the word CENSUS (distinct words x
-    * frequency), not the corpus — so the engine runs ONE distributed
-    * corpus-sized job (the census aggregation, map-side combined,
-    * shuffle bounded by distinct words), pulls the census to the
-    * driver, and trains with the classic incremental algorithm
-    * (pair->words inverted index; each merge touches only the words
-    * containing the pair; lazily-invalidated max-heap argmax). 50k
-    * merges are seconds of driver CPU instead of ~100k sequential
-    * Spark jobs ([[bpeMerges]]) or ~12k batched rounds
-    * ([[bpeMergesBatched]]).
-    *
-    * The census collect is the deliberate, BOUNDED exception to the
-    * no-data-sized-collect rule: `minFreq` truncation (the standard
-    * tokenizer-trainer knob — hapax legomena cannot win a merge against
-    * any pair occurring in a frequent word, yet dominate census
-    * cardinality at web scale) plus the `maxCensusWords` guard make the
-    * driver footprint explicit; exceeding the guard fails loud with the
-    * knob to turn, never OOMs silently. NOTE: minFreq > 1 changes pair
-    * counts (it drops rare words' contributions), so bit-equality with
-    * [[bpeMerges]] holds at minFreq = 1; with truncation the result is
-    * the standard approximation every production trainer ships.
-    */
-  def bpeMergesLocal(docs: DataFrame, numMerges: Int, textCol: String = "text",
-                     minFreq: Long = 1L, maxCensusWords: Int = 10000000): DataFrame = {
-    require(numMerges >= 1, s"numMerges must be >= 1, got $numMerges")
-    require(minFreq >= 1L, s"minFreq must be >= 1, got $minFreq")
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val censusRows = docs
-      .select(explode(split(trim(col(textCol)), "\\s+")).as("w"))
-      .filter(col("w") =!= "")
-      .groupBy("w").agg(count(lit(1)).as("n"))
-      .filter(col("n") >= minFreq)
-      .as[(String, Long)].collect()
-    require(censusRows.length <= maxCensusWords,
-      s"census has ${censusRows.length} words > maxCensusWords=$maxCensusWords; " +
-        "raise minFreq (standard tokenizer-trainer truncation) or maxCensusWords")
-    val merges = BpeLocal.train(censusRows, numMerges)
-    merges.toDF("step", "left_sym", "right_sym", "pair_count")
-  }
-
-  /** The BPE symbol encoding train and apply MUST share byte-for-byte:
-    * seed = chars joined by the 2-space separator, 1-space padding,
-    * ` </w> ` end marker. See [[bpeMerges]] for why this makes plain
-    * literal `replace` exactly the BPE merge rule.
+  /** The BPE symbol encoding the batched trainer and apply MUST share
+    * byte-for-byte: seed = chars joined by the 2-space separator,
+    * 1-space padding, ` </w> ` end marker. This makes left-to-right
+    * non-overlapping literal replacement EXACTLY the BPE merge rule
+    * (consecutive occurrences share a boundary space: 1+1 spaces
+    * remain, so the next occurrence still matches — no regex, no
+    * lookbehind, replayable on RE2-only engines like the DuckDB
+    * oracle). [[BpeLocal]] mirrors it on symbol arrays.
     */
   private def bpeSeedSym(word: Column): Column =
     concat(lit(" "), array_join(split(word, ""), "  "), lit("  </w> "))
 
-  /** One BPE merge rewrite (train and apply share it — see [[bpeSeedSym]]). */
+  /** One BPE merge rewrite (batched train and apply share it — see [[bpeSeedSym]]). */
   private def bpeMergeStep(sym: Column, l: String, r: String): Column =
     replace(sym, lit(s" $l  $r "), lit(s" $l$r "))
 

@@ -86,18 +86,18 @@ object StreamingValidator {
     * The baseline's bucket set is known at plan time, so the window
     * histogram compiles to one conditional-count per bucket inside a
     * SINGLE watermarked aggregation (chained stateful aggs are not
-    * available in append mode; state per window = |buckets| counters),
-    * and the KL/PSI sums are plain scalar column arithmetic over those
-    * counts — the same epsilon-smoothed math as
-    * [[graft.stats.Drift.kl]] and [[graft.stats.Drift.psi]], pinned
-    * against them in StreamingSpec.
+    * available in append mode; state per window = |buckets| counters).
+    * Those counts are then packed into the `h`/`pt`/`qt` row shape of
+    * [[graft.stats.Drift.histogram]] (baseline keys in sorted order,
+    * then the novel bucket) and scored by [[graft.stats.Drift.kl]] and
+    * [[graft.stats.Drift.psi]], the batch drift math.
     * Buckets outside the baseline fold into one `<other>` bucket with
     * epsilon mass (a NEW bucket appearing in production is exactly what
     * drift monitoring must flag, not drop).
     */
   def driftRates(stream: DataFrame, baseline: Map[String, Long], bucket: Column,
                  windowLength: String = "1 minute", watermark: String = "5 minutes",
-                 tsCol: String = "ts", eps: Double = 1e-9): DataFrame = {
+                 tsCol: String = "ts"): DataFrame = {
     require(baseline.nonEmpty && baseline.values.sum > 0, "empty baseline histogram")
     // null bucket values are folded into the "<null>" sentinel below; a
     // baseline that legitimately contains that string as a key would
@@ -105,7 +105,6 @@ object StreamingValidator {
     require(!baseline.contains("<null>"),
       "baseline key \"<null>\" collides with the null-bucket sentinel; rename it")
     val keys = baseline.keySet.toSeq.sorted
-    val qTotal = baseline.values.sum.toDouble
     val b = coalesce(bucket.cast("string"), lit("<null>"))
     // INDEX-based aggregate names: a raw bucket value in a column name
     // would break col() on '.' (multipart parse) and a bucket literally
@@ -119,18 +118,15 @@ object StreamingValidator {
           sum(when(b === k, 1L).otherwise(0L)).as(s"__c_$i")
         } :+
           sum(when(!b.isin(keys.map(lit): _*), 1L).otherwise(0L)).as("__c_novel")): _*)
-    val n = col("n").cast("double")
-    val terms: Seq[(Column, Column)] =
-      keys.zipWithIndex.map { case (k, i) =>
-        (greatest(col(s"__c_$i") / n, lit(eps)),
-          lit(math.max(baseline(k) / qTotal, eps)))
-      } :+ ((greatest(col("__c_novel") / n, lit(eps)), lit(eps)))
-    def sumOf(f: (Column, Column) => Column): Column =
-      terms.map { case (p, q) => f(p, q) }.reduce(_ + _)
-    counted.select(
-      col("window"), col("n"),
-      sumOf((p, q) => p * log(p / q)).as("kl"),
-      sumOf((p, q) => (p - q) * log(p / q)).as("psi"))
+    def slot(name: String, pc: Column, qc: Long): Column =
+      struct(lit(name).as("bucket"), pc.as("pc"), lit(qc).as("qc"))
+    counted
+      .select(col("window"), col("n"),
+        array((keys.zipWithIndex.map { case (k, i) => slot(k, col(s"__c_$i"), baseline(k)) } :+
+          slot("<other>", col("__c_novel"), 0L)): _*).as("h"),
+        col("n").as("pt"), lit(baseline.values.sum).as("qt"))
+      .select(col("window"), col("n"), graft.stats.Drift.kl.as("kl"),
+        graft.stats.Drift.psi.as("psi"))
   }
 
   /** Streaming constraint-envelope drift — the LIVE companion to

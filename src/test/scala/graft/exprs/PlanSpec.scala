@@ -126,8 +126,8 @@ class PlanSpec extends AnyFlatSpec with Matchers {
   "deterministic sampling" should "be a pure scan-filter: no exchange, no join" in {
     val d = spark.read.parquet(s"$sfDir/documents.parquet")
     for (df <- Seq(
-      graft.pipeline.Sampling.hashSample(d, 0.2, "doc_id"),
-      graft.pipeline.Sampling.stratifiedSample(d, "doc_id", "lang",
+      graft.pipeline.Sampling.hashSampleMd5(d, 0.2, "doc_id"),
+      graft.pipeline.Sampling.stratifiedSampleMd5(d, "doc_id", "lang",
         Map("en" -> 0.5), defaultRate = 0.05))) {
       shuffleCount(df) shouldBe 0
       formatted(df) should not include "Join"

@@ -148,28 +148,23 @@ class PipelineSpec extends AnyFlatSpec with Matchers {
     val keys = (0L until 20000L).toDF("k")
     def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
       df.select("k").collect().map(_.getLong(0)).toSet
-    for (variant <- Seq("xx", "md5")) {
-      def sample(df: org.apache.spark.sql.DataFrame, rate: Double, salt: String = "") =
-        if (variant == "xx") Sampling.hashSample(df, rate, "k", salt)
-        else Sampling.hashSampleMd5(df, rate, "k", salt)
-      withClue(s"variant=$variant: ") {
-        val s30 = ids(sample(keys, 0.3))
-        // partition layout must not change membership
-        ids(sample(keys.repartition(7), 0.3)) shouldBe s30
-        // nested rates are monotone under the same salt
-        ids(sample(keys, 0.1)).subsetOf(s30) shouldBe true
-        // observed rate close to target (20k keys, ~3 sigma)
-        s30.size.toDouble / 20000 shouldBe 0.3 +- 0.01
-        // a different salt draws a different (but same-rate) sample
-        ids(sample(keys, 0.3, "other")) should not be s30
-      }
-    }
+    def sample(df: org.apache.spark.sql.DataFrame, rate: Double, salt: String = "") =
+      Sampling.hashSampleMd5(df, rate, "k", salt)
+    val s30 = ids(sample(keys, 0.3))
+    // partition layout must not change membership
+    ids(sample(keys.repartition(7), 0.3)) shouldBe s30
+    // nested rates are monotone under the same salt
+    ids(sample(keys, 0.1)).subsetOf(s30) shouldBe true
+    // observed rate close to target (20k keys, ~3 sigma)
+    s30.size.toDouble / 20000 shouldBe 0.3 +- 0.01
+    // a different salt draws a different (but same-rate) sample
+    ids(sample(keys, 0.3, "other")) should not be s30
   }
 
   it should "hold per-stratum rates and the default for unlisted strata" in {
     import spark.implicits._
     val rows = (0L until 30000L).map(i => (i, s"s${i % 3}")).toDF("k", "g")
-    val got = Sampling.stratifiedSample(rows, "k", "g",
+    val got = Sampling.stratifiedSampleMd5(rows, "k", "g",
       Map("s0" -> 0.5, "s1" -> 0.1), defaultRate = 0.02)
       .groupBy("g").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     got("s0").toDouble / 10000 shouldBe 0.5 +- 0.02
@@ -308,13 +303,6 @@ class PipelineSpec extends AnyFlatSpec with Matchers {
     m.length shouldBe 10003
     m.map(_._2).distinct.sorted shouldBe Array(0L, 20001L, 20003L)
     m.toMap.apply(20002L) shouldBe 20001L
-  }
-
-  "Dedup.simhash64" should "be deterministic and order-sensitive only to content" in {
-    val a = docs.select(Dedup.simhash64(col("text")).as("s")).collect().map(_.getLong(0))
-    val b = docs.orderBy(rand(7)).select(Dedup.simhash64(col("text")).as("s"))
-      .collect().map(_.getLong(0))
-    a.sorted shouldBe b.sorted
   }
 
   "Ann.ivfTopK" should "trade recall for probes monotonically vs brute force" in {
@@ -756,7 +744,37 @@ class PipelineSpec extends AnyFlatSpec with Matchers {
     counts shouldBe Map(1L -> 6L, 2L -> 15L)
   }
 
-  "TextOps.bpeMergesLocal" should "equal sequential bpeMerges bit-for-bit" in {
+  /** Plain sequential BPE, independent of the engine: rebuild the
+    * frequency-weighted pair counts every step, take the max under
+    * (count desc, left, right), merge left to right without overlap.
+    * String order is UTF-8 byte order on the ASCII fixtures used here.
+    */
+  private def referenceBpe(texts: Seq[String], numMerges: Int): List[(Long, String, String, Long)] = {
+    var words = texts.filter(_ != null).flatMap(_.trim.split("\\s+")).filter(_.nonEmpty)
+      .groupBy(identity).toList.map { case (w, ws) => (w.map(_.toString).toList :+ "</w>", ws.size.toLong) }
+    def merge(s: List[String], l: String, r: String): List[String] = s match {
+      case a :: b :: rest if a == l && b == r => (l + r) :: merge(rest, l, r)
+      case a :: rest => a :: merge(rest, l, r)
+      case Nil => Nil
+    }
+    val out = List.newBuilder[(Long, String, String, Long)]
+    var step = 0
+    var exhausted = false
+    while (step < numMerges && !exhausted) {
+      val counts = words.flatMap { case (s, n) => s.zip(s.tail).map(_ -> n) }
+        .groupMapReduce(_._1)(_._2)(_ + _)
+      if (counts.isEmpty) exhausted = true
+      else {
+        val ((l, r), c) = counts.minBy { case ((l, r), c) => (-c, l, r) }
+        out += ((step.toLong, l, r, c))
+        words = words.map { case (s, n) => (merge(s, l, r), n) }
+        step += 1
+      }
+    }
+    out.result()
+  }
+
+  "TextOps.bpeMerges" should "equal a plain-Scala sequential trainer" in {
     import spark.implicits._
     def table(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
@@ -764,24 +782,23 @@ class PipelineSpec extends AnyFlatSpec with Matchers {
 
     // hand fixture incl. ties ((l,o)/(o,w) at 4) and merge chains
     // ((l,o) -> (lo,w) -> (low,</w>)) — the cases that killed batching
-    val tiny = Seq((1L, "low low lower"), (2L, "newest newest  low")).toDF("doc_id", "text")
-    table(TextOps.bpeMergesLocal(tiny, numMerges = 3)) shouldBe
-      table(TextOps.bpeMerges(tiny, numMerges = 3))
+    val tinyTexts = Seq("low low lower", "newest newest  low")
+    val tiny = tinyTexts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
+    table(TextOps.bpeMerges(tiny, numMerges = 3)) shouldBe referenceBpe(tinyTexts, 3)
 
-    // exhaustion parity: census runs out of pairs
+    // exhaustion: the census runs out of pairs before numMerges
     val one = Seq((1L, "a")).toDF("doc_id", "text")
-    table(TextOps.bpeMergesLocal(one, numMerges = 5)) shouldBe
-      table(TextOps.bpeMerges(one, numMerges = 5))
+    table(TextOps.bpeMerges(one, numMerges = 5)) shouldBe referenceBpe(Seq("a"), 5)
 
-    // natural corpus, deep: 64 exact merges, zero Spark jobs per merge
-    table(TextOps.bpeMergesLocal(docs, numMerges = 64)) shouldBe
-      table(TextOps.bpeMerges(docs, numMerges = 64))
+    // natural corpus, deep: 64 exact merges
+    val texts = docs.select("text").as[String].collect().toSeq
+    table(TextOps.bpeMerges(docs, numMerges = 64)) shouldBe referenceBpe(texts, 64)
 
-    // the census guard fails loud with the truncation knob named
+    // the census guard fails loud with its knob named
     val e = intercept[IllegalArgumentException] {
-      TextOps.bpeMergesLocal(docs, numMerges = 1, maxCensusWords = 3)
+      TextOps.bpeMerges(docs, numMerges = 1, maxCensusWords = 3)
     }
-    e.getMessage should include("minFreq")
+    e.getMessage should include("maxCensusWords")
   }
 
   "TextOps.bpeMergesBatched" should "pin the greedy batch contract" in {
@@ -1388,7 +1405,7 @@ class PipelineSpec extends AnyFlatSpec with Matchers {
     byLang("zh")._1.toDouble shouldBe (25.0 +- 15.0)
     // default 0: stratum absent entirely
     byLang.get("xx") shouldBe None
-    // weight-1 stratum == stratifiedSample membership with same salt
+    // weight-1 stratum == stratifiedSampleMd5 membership with same salt
     val m1 = Sampling.mixWeightsMd5(df, "doc_id", "lang", Map("zh" -> 0.25), 0.0, salt = "t")
       .filter(col("lang") === "zh").select("doc_id").collect().map(_.getLong(0)).toSet
     val m2 = Sampling.stratifiedSampleMd5(df, "doc_id", "lang", Map("zh" -> 0.25), 0.0, salt = "t")
