@@ -90,6 +90,12 @@ object SparkEntry {
       when(half === 0, true).when(half === 1, false))
   }
 
+  /** Near-dup clusters of the pool's LSH pair graph, (doc_id, component). */
+  private val nearDupComponents: (SparkSession, String) => DataFrame = (s, dir) =>
+    Dedup.connectedComponents(
+      Dedup.minhashPairs(dedupPool(s, dir), k = 24, bands = 12, threshold = 0.5))
+      .select(col("id").cast("long").as("doc_id"), col("comp").cast("long").as("component"))
+
   /** Connected components of the >= 0.5 Jaccard pair graph as a
     * recursive transitive closure (component = min reachable id) —
     * replays [[graft.pipeline.Dedup.connectedComponents]].
@@ -903,24 +909,15 @@ object SparkEntry {
         .select(col("id_a"), col("id_b"), col("edit_dist"))
     }),
 
-    // near-dup CLUSTERS: LSH pairs -> connected components (min-id
-    // label propagation). Oracle replays the transitive closure with a
-    // recursive CTE over the exact all-pairs Jaccard ground truth.
-    "neardup_components" -> ((s, dir) =>
-      Dedup.connectedComponents(
-        Dedup.minhashPairs(dedupPool(s, dir), k = 24, bands = 12, threshold = 0.5))
-        .select(col("id").cast("long").as("doc_id"),
-          col("comp").cast("long").as("component"))),
+    // near-dup CLUSTERS: LSH pairs -> connected components. Oracle
+    // replays the transitive closure with a recursive CTE over the exact
+    // all-pairs Jaccard ground truth.
+    "neardup_components" -> nearDupComponents,
 
-    // the large-star/small-star O(log n)-round variant on the SAME LSH
-    // graph and the SAME recursive-CTE ground truth as
-    // neardup_components — both implementations gate-proven against
-    // DuckDB, not just against each other
-    "neardup_components_alt" -> ((s, dir) =>
-      Dedup.connectedComponentsAlternating(
-        Dedup.minhashPairs(dedupPool(s, dir), k = 24, bands = 12, threshold = 0.5))
-        .select(col("id").cast("long").as("doc_id"),
-          col("comp").cast("long").as("component"))),
+    // the same operator under a second key: gate keys are never dropped,
+    // and the deep-graph large-star/small-star tail of
+    // connectedComponents stays named in the gate list
+    "neardup_components_alt" -> nearDupComponents,
 
     // the end state of the 100-TB near-dup recipe: one canonical doc
     // per component survives, all unpaired docs pass through
@@ -1439,7 +1436,8 @@ object SparkEntry {
     "uniq_duplicates" ->
       s"""WITH $tCte
          |SELECT conv_id, turn_idx, CAST(COUNT(*) AS BIGINT) AS dup_count
-         |FROM transcripts GROUP BY conv_id, turn_idx HAVING COUNT(*) > 1""".stripMargin,
+         |FROM transcripts WHERE conv_id IS NOT NULL AND turn_idx IS NOT NULL
+         |GROUP BY conv_id, turn_idx HAVING COUNT(*) > 1""".stripMargin,
 
     // chr(1) == the Scala literal's  separator; string_agg's
     // ORDER BY replays the proven window order

@@ -4,14 +4,14 @@ import java.net.URI
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
-import scala.util.matching.Regex
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Encoder, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
-import graft.compile.TableSchema
+import org.json4s.{JBool, JInt, JLong, JNull, JObject, JString, JValue}
+import graft.compile.{Js, TableSchema}
 import graft.exprs.Validator
 
 /** Resumable validation runs (north_rule: "resumable from checkpoint
@@ -47,41 +47,24 @@ object Checkpoint {
       batchSize: Int = 1,
       nullCounts: Map[String, Long] = Map.empty)
 
-  // JSON string escaping per RFC 8259: `"`, `\` and every control
-  // character U+0000–U+001F. A raw newline in a unit path or a column
-  // name would otherwise split one manifest record across two lines.
-  private val shortEscapes = Map('b' -> '\b', 't' -> '\t', 'n' -> '\n', 'f' -> '\f', 'r' -> '\r')
-
-  private def esc(s: String): String = s.flatMap {
-    case c @ ('"' | '\\') => s"\\$c"
-    case c if c < ' ' =>
-      shortEscapes.collectFirst { case (k, `c`) => s"\\$k" }.getOrElse(f"\\u${c.toInt}%04x")
-    case c => c.toString
-  }
-
-  private val escape = """\\(u[0-9a-fA-F]{4}|.)""".r
-
-  private def unesc(s: String): String = escape.replaceAllIn(s, m => Regex.quoteReplacement {
-    val e = m.group(1)
-    if (e.length == 5) Integer.parseInt(e.tail, 16).toChar.toString
-    else shortEscapes.getOrElse(e.head, e.head).toString
-  })
-
+  /** One manifest line. The JSON codec (json4s, the schema parser's)
+    * escapes `"`, `\` and every control character U+0000–U+001F, so a
+    * raw newline in a unit path or a column name cannot split one
+    * record across two lines.
+    */
   def toJson(r: UnitResult): String = {
     val nulls =
-      if (r.nullCounts.isEmpty) ""
-      else r.nullCounts.toSeq.sortBy(_._1)
-        .map { case (c, n) => s""""${esc(c)}":$n""" }
-        .mkString(""","null_counts":{""", ",", "}")
-    s"""{"unit":"${esc(r.unit)}","snapshot_id":${r.snapshotId.map(_.toString).getOrElse("null")},""" +
-      s""""rows":${r.rows},"violations":${r.violations},"passed":${r.passed},""" +
-      s""""batch_wall_ms":${r.batchWallMs},"batch_size":${r.batchSize}$nulls}"""
-  }
-
-  def parseLine(line: String): Option[String] = {
-    // minimal parse: extract the unit field (manifest is engine-written)
-    val m = """"unit":"((?:[^"\\]|\\.)*)"""".r
-    m.findFirstMatchIn(line).map(g => unesc(g.group(1)))
+      if (r.nullCounts.isEmpty) Nil
+      else List("null_counts" ->
+        JObject(r.nullCounts.toList.sortBy(_._1).map { case (c, n) => c -> JLong(n) }))
+    Js.compact(JObject(List(
+      "unit" -> JString(r.unit),
+      "snapshot_id" -> r.snapshotId.fold[JValue](JNull)(JLong(_)),
+      "rows" -> JLong(r.rows),
+      "violations" -> JLong(r.violations),
+      "passed" -> JBool(r.passed),
+      "batch_wall_ms" -> JLong(r.batchWallMs),
+      "batch_size" -> JLong(r.batchSize)) ++ nulls))
   }
 
   // a unit counts as completed only if its manifest line parsed FULLY
@@ -89,9 +72,6 @@ object Checkpoint {
   // skip must also contribute its metrics to the verdict)
   def completedUnits(manifestPath: String): Set[String] =
     completedMetrics(manifestPath).map(_._1).toSet
-
-  private val vioField = """"violations":(\d+)""".r
-  private val rowsField = """"rows":(\d+)""".r
 
   /** Per-unit metrics of every completed unit in the manifest:
     * (unit, rows, violations). The final valid/invalid verdict of a run
@@ -101,18 +81,19 @@ object Checkpoint {
     */
   def completedMetrics(manifestPath: String): Seq[(String, Long, Long)] = {
     val p = Paths.get(manifestPath)
+    def long(j: JValue, name: String) = Js.field(j, name).collect { case JInt(n) => n.toLong }
     if (!Files.exists(p)) Nil
     else Files.readAllLines(p).asScala.toSeq.flatMap { line =>
-      parseLine(line).flatMap { unit =>
-        // a line with a unit but no metric fields is a torn write (crash
-        // mid-append): treating it as 0 violations would under-count the
-        // verdict, so treat the unit as NOT completed — resume
-        // re-validates it (idempotent via dynamic partition overwrite)
-        for {
-          rows <- rowsField.findFirstMatchIn(line).map(_.group(1).toLong)
-          vios <- vioField.findFirstMatchIn(line).map(_.group(1).toLong)
-        } yield (unit, rows, vios)
-      }
+      // a line that does not parse, or lacks a metric field, is a torn
+      // write (crash mid-append): treating it as 0 violations would
+      // under-count the verdict, so treat the unit as NOT completed —
+      // resume re-validates it (idempotent via dynamic partition overwrite)
+      for {
+        j <- Js.parse(line).toOption
+        unit <- Js.stringField(j, "unit")
+        rows <- long(j, "rows")
+        vios <- long(j, "violations")
+      } yield (unit, rows, vios)
     }
   }
 

@@ -17,20 +17,21 @@ import org.apache.spark.sql.functions._
   * existence (`ReferenceResolver.scala:44`); here both lift to
   * dataset-level operators.
   *
-  * NULL keys in the referential check follow one rule, the embedded-
-  * constraint view ("Entity Integrity, Referential Integrity, and Query
-  * Optimization with Embedded Uniqueness Constraints", ICDE 2019): a
-  * constraint binds only non-null key parts. A NULL `conv_id` is an
-  * absent reference, reported by `required` when the schema demands
-  * one, never an orphan; a NULL `turn_idx` is no root, so its row is an
-  * orphan when its conversation has no `turn_idx = 0` row. The CLI
-  * ([[integrityReport]]) and the gates ([[referentialViolations]])
-  * derive their orphan conversations from the same `orphanConvsOf`.
-  * Duplicate-key counting still groups NULL key parts as equal.
+  * NULL keys follow one rule, the embedded-constraint view ("Entity
+  * Integrity, Referential Integrity, and Query Optimization with
+  * Embedded Uniqueness Constraints", ICDE 2019): a constraint binds only
+  * non-null key parts. A uniqueness constraint binds only keys with no
+  * NULL part, so a key with a NULL part is never a duplicate
+  * (`required` reports its rows when the schema demands the column).
+  * A NULL `conv_id` is an absent reference, never an orphan; a NULL
+  * `turn_idx` is no root, so its row is an orphan when its conversation
+  * has no `turn_idx = 0` row. The CLI ([[integrityReport]]) and the
+  * gates ([[referentialViolations]]) derive their orphan conversations
+  * from the same `orphanConvsOf`.
   */
 object Integrity {
 
-  /** Duplicate composite keys.
+  /** Duplicate composite keys, over the rows whose key has no NULL part.
     *
     * Plan shape: partial hash-aggregate (map-side combine) -> exchange on
     * the key -> final aggregate -> filter count>1. Map-side combine means
@@ -41,7 +42,8 @@ object Integrity {
     * AQE (enabled in session conf) re-coalesces post-shuffle partitions.
     */
   def duplicateKeys(df: DataFrame, keyCols: Seq[String]): DataFrame =
-    df.groupBy(keyCols.map(col): _*)
+    df.filter(keyCols.map(col(_).isNotNull).reduce(_ && _))
+      .groupBy(keyCols.map(col): _*)
       .agg(count(lit(1)).as("dup_count"))
       .filter(col("dup_count") > 1)
 
@@ -81,7 +83,10 @@ object Integrity {
     // re-run — the full-table scan+shuffle once each (Spark does not
     // reuse shuffle stages across separately submitted jobs)
     val keyCounts = keyspace(df).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    IntegrityReport(keyCounts.filter(col("dup_count") > 1), orphanConvsOf(keyCounts), keyCounts)
+    // orphanConvsOf still sees NULL turn_idx keys (the NULL rule above)
+    val dups = keyCounts.filter(col("conv_id").isNotNull && col("turn_idx").isNotNull &&
+      col("dup_count") > 1)
+    IntegrityReport(dups, orphanConvsOf(keyCounts), keyCounts)
   }
 
   /** The table reduced to its `(conv_id, turn_idx)` keyspace, with each

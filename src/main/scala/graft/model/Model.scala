@@ -112,13 +112,3 @@ final case class Violation(
     pointer: String,
     constraint: String,
     actual: String)
-
-/** Per-column profile produced by the fused stats pass. */
-final case class ColumnStats(
-    column: String,
-    count: Long,
-    nullCount: Long,
-    min: Option[String],
-    max: Option[String],
-    approxDistinct: Long,
-    quantiles: Option[Array[Double]])

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Conversation-structure operators over the transcripts table
-  * (conv_id, turn_idx, role, text, tool, ts): sessionization by
+  * (conv_id, turn_idx, role, text, tool, ts): session counts by
   * event-time gap and role-alternation quality.
   *
   * Scale shape: every window here is PARTITIONED BY CONVERSATION — the
@@ -25,20 +25,6 @@ object Conversations {
   private def turnOrder: Seq[Column] = Seq(
     col("turn_idx").asc_nulls_first, col("ts").asc_nulls_first,
     col("role").asc_nulls_first, col("text").asc_nulls_first)
-
-  /** Per-turn session index (0-based): a new session starts when the
-    * event-time gap from the previous turn exceeds `maxGapSeconds`.
-    */
-  def sessionize(df: DataFrame, maxGapSeconds: Long,
-                 convCol: String = "conv_id"): DataFrame = {
-    val w = Window.partitionBy(convCol).orderBy(turnOrder: _*)
-    val prevTs = lag(unix_timestamp(col("ts")), 1).over(w)
-    val newSession =
-      when(prevTs.isNull || unix_timestamp(col("ts")) - prevTs <= maxGapSeconds, 0L)
-        .otherwise(1L)
-    df.withColumn("session_idx",
-      sum(newSession).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow)))
-  }
 
   /** Per-conversation structure profile: turn count, session count at
     * the given gap, and the role-repetition ratio (adjacent same-role

@@ -231,24 +231,25 @@ object Dedup {
     * similarity is not transitive, so a corpus-scale pipeline clusters
     * the pair graph and keeps one canonical member per component.
     *
-    * Algorithm: iterative min-label propagation. Every round each node
-    * takes the min of its own label and its neighbors' labels, until a
-    * fixpoint (bounded by `maxIters`). Each round is one join + one
-    * aggregation over (node, label) rows — O(E) through each exchange,
-    * never anything quadratic — and rounds needed equal the graph
-    * diameter. LSH dup clusters are near-cliques (every member shares a
-    * band bucket with the rest), so 2-3 rounds close them; for
-    * deep-chain graphs use [[connectedComponentsAlternating]] (same
-    * API, O(log n) rounds). localCheckpoint() truncates the growing
-    * plan each round —
+    * Algorithm: iterative min-label propagation first. Every round each
+    * node takes the min of its own label and its neighbors' labels,
+    * until a fixpoint. Each round is one join + one aggregation over
+    * (node, label) rows — O(E) through each exchange, never anything
+    * quadratic — and rounds needed equal the graph diameter. LSH dup
+    * clusters are near-cliques (every member shares a band bucket with
+    * the rest), so 2-3 rounds close them. A graph whose labels still
+    * change after [[MinLabelRounds]] rounds is deep (chains), and the
+    * operator finishes it with [[starComponents]], whose round count is
+    * logarithmic in component size instead of linear in diameter.
+    * localCheckpoint() truncates the growing plan each round —
     * otherwise lineage doubles per iteration and the DRIVER becomes the
     * bottleneck long before the data does.
     *
     * Returns (id, comp) for every node appearing in `pairs`, where comp
     * is the smallest id reachable (deterministic).
     */
-  def connectedComponents(pairs: DataFrame, aCol: String = "id_a", bCol: String = "id_b",
-                          maxIters: Int = 50): DataFrame = {
+  def connectedComponents(pairs: DataFrame, aCol: String = "id_a", bCol: String = "id_b"): DataFrame = {
+    val bridge = org.apache.spark.sql.GraftSqlBridge
     // lazy checkpoints: the next action over each frame materializes it
     // (labels init for edges, the convergence count for each round) —
     // an eager checkpoint would pay one extra job per round just to
@@ -263,7 +264,7 @@ object Dedup {
       .localCheckpoint()
     var changed = 1L
     var it = 0
-    while (changed > 0 && it < maxIters) {
+    while (changed > 0 && it < MinLabelRounds) {
       val viaNeighbor = edges
         .join(labels.select(col("id").as("v"), col("comp")), "v")
         .select(col("u").as("id"), col("comp"), lit(false).as("self"))
@@ -279,39 +280,42 @@ object Dedup {
       changed = merged.filter(col("comp") < col("prev")).count() // materializes
       // round N is materialized -> free round N-1's checkpoint blocks
       // (they otherwise accumulate in the block manager per iteration)
-      org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(labels)
+      bridge.unpersistCheckpoint(labels)
       labels = merged.select("id", "comp")
       it += 1
     }
-    // fail loud: silently-unconverged labels would split clusters and
-    // under-deduplicate with no trace (same policy as checkpoint lineage
-    // mismatches). maxIters bounds the graph DIAMETER, which for a dup
-    // graph is far below 50; hitting it means the input is not the
-    // near-clique pair graph this propagation variant is for.
-    if (changed > 0) {
-      // free internal caches on the failure path too — the documented
-      // recovery (retry with the alternating variant) would otherwise
-      // accumulate the leaked blocks per attempt
-      org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(edges)
-      org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(labels)
-      throw new IllegalStateException(
-        s"connectedComponents did not converge in $maxIters rounds " +
-          s"($changed labels still changing); use connectedComponentsAlternating for deep-chain graphs")
+    if (changed == 0) {
+      // the returned labels depend only on the LAST round's checkpoint,
+      // so the internal edge cache can be released here
+      bridge.unpersistCheckpoint(edges)
+      labels
+    } else {
+      // the symmetric, distinct edge set holds each undirected edge once
+      // as u > v (no self-loops); the labels list every node, including
+      // star centers that keep no edge, and stay persisted (the result
+      // reads them)
+      val stars = starComponents(edges.filter(col("u") > col("v"))
+        .select(col("u").as("hi"), col("v").as("lo")))
+      labels.select("id")
+        .join(stars, Seq("id"), "left")
+        .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
     }
-    // the returned labels depend only on the LAST round's checkpoint,
-    // so the internal edge cache can be released here
-    org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(edges)
-    labels
   }
 
-  /** Connected components in O(log n) rounds — the large-star/small-star
-    * alternation of Kiveris et al., "Connected Components in MapReduce
-    * and Beyond" (2014). Same contract as [[connectedComponents]]
-    * ((id, comp) for every node in `pairs`, comp = component minimum),
-    * but round count is logarithmic in component size instead of linear
-    * in graph DIAMETER, so deep chains (pathological dup graphs,
-    * citation-like link chains) converge where min-label propagation
-    * fails loud at `maxIters`.
+  /** Min-label rounds before [[connectedComponents]] switches to
+    * [[starComponents]]: well above the 2-3 rounds a near-clique needs.
+    */
+  private val MinLabelRounds = 10
+
+  /** Fail-loud bound of [[starComponents]]: its rounds grow with log2 of
+    * the component size, so only a bug can reach it.
+    */
+  private val StarRounds = 64
+
+  /** The large-star/small-star alternation of Kiveris et al.,
+    * "Connected Components in MapReduce and Beyond" (2014), over a
+    * canonical (hi, lo) edge set (hi > lo, distinct). Returns (id, comp)
+    * for every node that is not its component's minimum.
     *
     * Each half-round is one aggregation + one join over the edge set
     * (O(E) per exchange, nothing quadratic):
@@ -322,32 +326,11 @@ object Dedup {
     * The edge set converges to a star forest whose centers are the
     * component minima; convergence is detected by a (count, hash-sum)
     * fingerprint of the canonicalized edge set — one tiny agg per
-    * round, no edge-set diff join.
+    * round, no edge-set diff join. Each round unpersists the
+    * checkpoint its input reads (the first round: the caller's edges).
     */
-  def connectedComponentsAlternating(pairs: DataFrame, aCol: String = "id_a",
-                                     bCol: String = "id_b", maxIters: Int = 30): DataFrame = {
+  private def starComponents(canonical: DataFrame): DataFrame = {
     val bridge = org.apache.spark.sql.GraftSqlBridge
-    // canonical orientation (hi, lo): strictly hi > lo; self-loops drop
-    var edges = pairs
-      .select(greatest(col(aCol), col(bCol)).as("hi"), least(col(aCol), col(bCol)).as("lo"))
-      .filter(col("hi") =!= col("lo"))
-      .distinct()
-      .localCheckpoint(eager = false) // the first fingerprint materializes it
-    // every input node must appear in the output even if its edges
-    // collapse away mid-iteration (a center keeps no outgoing edge).
-    // Derived from the CHECKPOINTED canonical edge set, not from
-    // `pairs`: a node appears in `pairs` iff it appears in `edges`
-    // (pairs are self-loop-free, so canonicalization drops nothing),
-    // and a lazy plan over `pairs` re-ran the ENTIRE upstream pipeline
-    // (LSH: tokenize, signatures, band join, verify) a second time for
-    // the final join — listener-measured as half of
-    // neardup_components_alt's wall at sf0.1. Checkpointed because the
-    // loop unpersists the edge checkpoint it reads from; like the final
-    // edge checkpoint, it stays persisted (the result reads it).
-    val nodes = edges.select(col("hi").as("id")).union(edges.select(col("lo").as("id")))
-      .distinct()
-      .localCheckpoint() // EAGER: must persist before the loop frees the initial edges
-
     def fingerprint(e: DataFrame): (Long, Long) = {
       // bit_xor: order-independent and cannot overflow (ANSI sum of
       // hashes throws ARITHMETIC_OVERFLOW on real edge counts)
@@ -355,10 +338,11 @@ object Dedup {
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
 
+    var edges = canonical
     var fp = fingerprint(edges)
     var it = 0
     var converged = false
-    while (!converged && it < maxIters) {
+    while (!converged && it < StarRounds) {
       // ---- large-star: (v, m) for every neighbor v > u ----
       val nbrs = edges.select(col("hi").as("u"), col("lo").as("v"))
         .union(edges.select(col("lo").as("u"), col("hi").as("v")))
@@ -388,16 +372,12 @@ object Dedup {
       it += 1
     }
     if (!converged) {
-      org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(edges) // failure path: no leak
-      throw new IllegalStateException(
-        s"connectedComponentsAlternating did not converge in $maxIters rounds")
+      bridge.unpersistCheckpoint(edges) // failure path: no leak
+      throw new IllegalStateException(s"starComponents did not converge in $StarRounds rounds")
     }
     // star forest: every hi hangs directly off its component minimum;
     // the final edge checkpoint stays persisted (the result reads it)
-    val labels = edges.select(col("hi").as("id"), col("lo").as("comp"))
-    nodes
-      .join(labels, Seq("id"), "left")
-      .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
+    edges.select(col("hi").as("id"), col("lo").as("comp"))
   }
 
   /** Near-duplicate survivors: LSH pairs -> connected components ->

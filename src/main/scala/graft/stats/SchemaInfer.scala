@@ -22,7 +22,7 @@ import org.apache.spark.sql.types._
   * Scale shape (the 100-TB contract):
   *  - pass 1 is ONE wide map-side-combining aggregation over the scan
   *    (nulls, typed min/max, string length bounds, HyperLogLog++
-  *    distinct per column) — the [[Stats.profile]] physical shape, one
+  *    distinct per column) — the [[Stats.profileLong]] physical shape, one
   *    1-row collect;
   *  - enum candidacy is decided driver-side from the HLL estimate with
   *    a 2x safety margin (HLL++ at Spark's default rsd 0.05 is within

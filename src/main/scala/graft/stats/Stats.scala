@@ -4,7 +4,6 @@ import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders}
 import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import org.apache.datasketches.tdigest.TDigestDouble
 
 /** Column statistics (north_rule): count / null-rate / min / max /
@@ -45,43 +44,6 @@ object Stats {
   def quantileAgg(c: Column, probs: Seq[Double]): Column = {
     val agg = udaf(new TDigestQuantiles(probs), Encoders.DOUBLE)
     agg(c.cast("double"))
-  }
-
-  val defaultProbs: Seq[Double] = Seq(0.5, 0.9, 0.99)
-
-  /** One-pass profile: a single wide `agg` producing, per column,
-    * count / nullCount / min / max / approxDistinct (+ quantiles for
-    * numeric columns). Output is one row; [[profileLong]] reshapes it to
-    * one row per column for reporting and oracle checks.
-    */
-  def profileAggs(df: DataFrame, columns: Seq[String], withQuantiles: Boolean = true): Seq[Column] = {
-    val total = count(lit(1)).as("__total")
-    val perCol = columns.flatMap { name =>
-      val f = df.schema(name)
-      val c = col(name)
-      // min/max/distinct need an ordering (maps have none): such a
-      // column keeps its count and nulls, the rest stays null
-      val orderable = RowOrdering.isOrderable(f.dataType)
-      def ifOrderable(agg: => Column, nullType: String) =
-        if (orderable) agg else lit(null).cast(nullType)
-      val base = Seq(
-        sum(c.isNull.cast("long")).as(s"${name}__nulls"),
-        ifOrderable(min(c).cast("string"), "string").as(s"${name}__min"),
-        ifOrderable(max(c).cast("string"), "string").as(s"${name}__max"),
-        ifOrderable(approx_count_distinct(c), "long").as(s"${name}__distinct"))
-      val q = f.dataType match {
-        case _: NumericType if withQuantiles =>
-          Seq(quantileAgg(c, defaultProbs).as(s"${name}__quantiles"))
-        case _ => Nil
-      }
-      base ++ q
-    }
-    total +: perCol
-  }
-
-  def profile(df: DataFrame, columns: Seq[String], withQuantiles: Boolean = true): DataFrame = {
-    val aggs = profileAggs(df, columns, withQuantiles)
-    df.agg(aggs.head, aggs.tail: _*)
   }
 
   /** Rows whose `valueExpr` (any SQL expression over the row) reaches
@@ -282,10 +244,25 @@ object Stats {
   }
 
   /** Long-format profile: (column, count, null_count, min, max,
-    * approx_distinct) — one row per column, all from the single agg row.
+    * approx_distinct) — one row per column. A single wide `agg` computes
+    * every column's aggregates over one scan; the one result row is then
+    * exploded to one row per column for reporting and oracle checks.
     */
   def profileLong(df: DataFrame, columns: Seq[String]): DataFrame = {
-    val wide = profile(df, columns, withQuantiles = false)
+    val perCol = columns.flatMap { name =>
+      val c = col(name)
+      // min/max/distinct need an ordering (maps have none): such a
+      // column keeps its count and nulls, the rest stays null
+      val orderable = RowOrdering.isOrderable(df.schema(name).dataType)
+      def ifOrderable(agg: => Column, nullType: String) =
+        if (orderable) agg else lit(null).cast(nullType)
+      Seq(
+        sum(c.isNull.cast("long")).as(s"${name}__nulls"),
+        ifOrderable(min(c).cast("string"), "string").as(s"${name}__min"),
+        ifOrderable(max(c).cast("string"), "string").as(s"${name}__max"),
+        ifOrderable(approx_count_distinct(c), "long").as(s"${name}__distinct"))
+    }
+    val wide = df.agg(count(lit(1)).as("__total"), perCol: _*)
     val structs = columns.map { name =>
       struct(
         lit(name).as("column"),

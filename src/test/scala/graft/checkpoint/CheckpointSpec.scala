@@ -295,5 +295,21 @@ class CheckpointSpec extends AnyFlatSpec with Matchers {
     json.readTree(lines.head).get("null_counts").get("col\nname").asLong() shouldBe 1L
     Checkpoint.completedMetrics(m) shouldBe Seq((units(0), 10L, 0L), (units(1), 11L, 1L))
   }
-}
 
+  "Checkpoint.completedMetrics" should "resume from a manifest line with lower-case hex escapes" in {
+    // earlier manifests wrote a control character's hex digits in lower
+    // case (ESC: 001b); the JSON codec writes upper case and reads both
+    val esc = 27.toChar
+    val in = tmp() + s"/in${esc}dir"
+    writeInput(in)
+    val out = tmp()
+    val m = s"$out/manifest.jsonl"
+    val first = Checkpoint.runValidation(spark, in, schema, s"$out/v", m)
+    first.size shouldBe 4
+    val lines = Files.readAllLines(Paths.get(m)).asScala.toSeq
+    all(lines) should include("\\u001B")
+    Files.write(Paths.get(m), lines.map(_.replace("\\u001B", "\\u001b")).asJava)
+    Checkpoint.runValidation(spark, in, schema, s"$out/v", m) shouldBe empty
+    Checkpoint.completedMetrics(m) shouldBe first.map(r => (r.unit, r.rows, r.violations))
+  }
+}

@@ -119,6 +119,17 @@ class IntegritySpec extends AnyFlatSpec with Matchers {
       gate shouldBe expected
       verdict.orphanRows shouldBe expected.size.toLong
 
+      // a uniqueness constraint binds only keys with no NULL part: the
+      // two (c4, NULL) rows are no duplicate on the CLI path, in the
+      // operator or in the gate, and `required` reports them instead
+      verdict.duplicateKeys shouldBe 0L
+      Integrity.duplicateKeys(t, Seq("conv_id", "turn_idx")).count() shouldBe 0L
+      graft.SparkEntry.queries("uniq_duplicates")(spark, dir).count() shouldBe 0L
+      spark.read.parquet(s"$out/violations")
+        .filter(col("conv_id") === "c4" && col("turn_idx").isNull &&
+          col("constraint") === "required" && col("pointer").endsWith("/turn_idx"))
+        .count() shouldBe 2L
+
       // NULL conv_id rows are absent references, reported by `required`
       val nullConvRows = rows.count(_._1.isEmpty).toLong
       spark.read.parquet(s"$out/violations")

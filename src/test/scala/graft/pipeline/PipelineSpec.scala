@@ -53,39 +53,74 @@ class PipelineSpec extends AnyFlatSpec with Matchers {
       10L -> 10L, 11L -> 10L, 12L -> 10L, 13L -> 10L, 14L -> 10L,
       20L -> 20L, 21L -> 20L, 22L -> 20L)
     run() shouldBe comp
-    // the log-rounds variant must agree exactly on the same graph
-    Dedup.connectedComponentsAlternating(pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap shouldBe comp
   }
 
-  "Dedup.connectedComponentsAlternating" should "close a deep chain in logarithmic rounds" in {
+  /** (id, component minimum) for every node of `pairs`, by a plain-Scala
+    * union-find whose roots are their sets' minima.
+    */
+  private def unionFind(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
+    val parent = scala.collection.mutable.Map.empty[Long, Long]
+    def find(x: Long): Long = {
+      val p = parent.getOrElseUpdate(x, x)
+      if (p == x) x else { val r = find(p); parent(x) = r; r }
+    }
+    pairs.foreach { case (a, b) =>
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.map(x => x -> find(x)).toMap
+  }
+
+  private def components(pairs: Seq[(Long, Long)]): Map[Long, Long] = {
     import spark.implicits._
-    // a 120-node chain (diameter 119): min-label propagation needs one
-    // round per hop and would fail loud at its 50-round bound; the
-    // large-star/small-star alternation closes it in O(log n) rounds
-    val n = 120
-    val chain = (0 until n - 1).map(i => (i.toLong + 500, i.toLong + 501)).toDF("id_a", "id_b")
-    val got = Dedup.connectedComponentsAlternating(chain, maxIters = 15)
+    Dedup.connectedComponents(pairs.toDF("id_a", "id_b"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+  }
+
+  it should "match union-find on packed generated graphs" in {
+    // every graph gets its own id block, so one operator call covers all
+    // of them; the chains are deeper than the min-label round bound, so
+    // the call also runs the large-star/small-star rounds
+    val rnd = new scala.util.Random(7)
+    def chain(ids: Seq[Long]) = ids.zip(ids.tail)
+    def star(ids: Seq[Long]) = ids.tail.map(ids.head -> _)
+    def clique(ids: Seq[Long]) = ids.combinations(2).map(p => p(0) -> p(1)).toSeq
+    def sparse(ids: Seq[Long]) = Seq.fill(ids.size)(ids(rnd.nextInt(ids.size)) -> ids(rnd.nextInt(ids.size)))
+      .filter { case (a, b) => a != b }
+    val graphs: Seq[Seq[Long] => Seq[(Long, Long)]] = Seq(
+      ids => chain(ids.take(40)),
+      ids => chain(rnd.shuffle(ids.take(60))),
+      ids => star(rnd.shuffle(ids.take(30))),
+      ids => clique(rnd.shuffle(ids.take(6))),
+      ids => sparse(ids.take(80)),
+      ids => clique(ids.take(5)) ++ chain(ids.slice(5, 30)) ++ star(ids.slice(30, 40)) :+ (ids(4) -> ids(5)),
+      ids => chain(ids.take(3)) ++ chain(ids.slice(10, 13)) ++ star(ids.slice(20, 25)))
+    val pairs = graphs.zipWithIndex.flatMap { case (g, i) =>
+      g((0 until 100).map(j => i * 1000L + j)).flatMap { case (a, b) =>
+        // reversed and duplicated pairs: the graph is undirected
+        val p = if (rnd.nextBoolean()) Seq(a -> b) else Seq(b -> a)
+        if (rnd.nextInt(4) == 0) p ++ p else p
+      }
+    }
+    components(pairs) shouldBe unionFind(pairs)
+  }
+
+  it should "give a 120-node chain one component" in {
+    // diameter 119: min-label propagation needs one round per hop, so
+    // the operator finishes it with the large-star/small-star rounds
+    val n = 120
+    val got = components((0 until n - 1).map(i => (i.toLong + 500, i.toLong + 501)))
     got.size shouldBe n
     got.values.toSet shouldBe Set(500L) // one component, min id everywhere
-    // and the propagation variant really is the wrong tool here
-    an[IllegalStateException] should be thrownBy
-      Dedup.connectedComponents(chain, maxIters = 10).collect()
   }
 
-  it should "agree with the propagation variant on the LSH pair graph" in {
+  it should "match union-find on the LSH pairs" in {
     val pool = graft.SparkEntry.dedupPool(spark, sfDir).cache()
     try {
       val pairs = Dedup.minhashPairs(pool, k = 24, bands = 12, threshold = 0.5)
-        .cache()
-      try {
-        val a = Dedup.connectedComponents(pairs)
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        val b = Dedup.connectedComponentsAlternating(pairs)
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        b shouldBe a
-      } finally pairs.unpersist()
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq
+      pairs should not be empty
+      components(pairs) shouldBe unionFind(pairs)
     } finally pool.unpersist()
   }
 
@@ -1063,10 +1098,6 @@ class PipelineSpec extends AnyFlatSpec with Matchers {
       .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2), r.getDouble(3))).toMap
     got("c1") shouldBe ((3L, 2L, 0.5))
     got("c2") shouldBe ((1L, 1L, 0.0))
-    // sessionize agrees: c1 session indexes 0,0,1
-    Conversations.sessionize(df.filter(col("conv_id") === "c1"), 30L * 24 * 3600)
-      .orderBy("turn_idx").select("session_idx").collect()
-      .map(_.getLong(0)).toSeq shouldBe Seq(0L, 0L, 1L)
   }
 
   "TextOps.tfidf" should "weight tokens by tf * ln(N/df) over the top vocabulary" in {
