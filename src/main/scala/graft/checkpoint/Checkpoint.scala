@@ -18,10 +18,9 @@ import graft.exprs.Validator
   * with per-partition lineage + metrics").
   *
   * The unit of lineage is an input file (the natural parallel unit of a
-  * lake table; for Iceberg this generalizes to `(snapshotId, manifest
-  * entry)` — the manifest schema carries `snapshot_id` as an Option that
-  * is None on plain Parquet, keeping the checkpoint logic testable
-  * without an Iceberg runtime, SURVEY.md §7).
+  * lake table; for Iceberg this generalizes to `(snapshot id, manifest
+  * entry)` — each manifest line keeps a `snapshot_id` field, null on
+  * plain Parquet, SURVEY.md §7).
   *
   * The manifest is JSON-lines, one entry per *completed* unit with its
   * metrics; resume = set-difference of the input's units against the
@@ -39,7 +38,6 @@ object Checkpoint {
     */
   final case class UnitResult(
       unit: String,
-      snapshotId: Option[Long],
       rows: Long,
       violations: Long,
       passed: Boolean,
@@ -59,7 +57,7 @@ object Checkpoint {
         JObject(r.nullCounts.toList.sortBy(_._1).map { case (c, n) => c -> JLong(n) }))
     Js.compact(JObject(List(
       "unit" -> JString(r.unit),
-      "snapshot_id" -> r.snapshotId.fold[JValue](JNull)(JLong(_)),
+      "snapshot_id" -> JNull,
       "rows" -> JLong(r.rows),
       "violations" -> JLong(r.violations),
       "passed" -> JBool(r.passed),
@@ -143,10 +141,6 @@ object Checkpoint {
     Table(df, files, relation.dataSchema.fieldNames.toSeq)
   }
 
-  /** The table's units, as the manifest names them. */
-  def listUnits(spark: SparkSession, inputDir: String): Seq[String] =
-    openTable(spark, inputDir).files.map(unitName)
-
   /** `_metadata.file_path`'s form of a file URI: rebuilt from its
     * components, so an empty authority is dropped (a `file:///x` table
     * root lists its files as `file:///x/…`, but the scan reports
@@ -222,9 +216,8 @@ object Checkpoint {
 
   def runValidation(spark: SparkSession, inputDir: String, schema: TableSchema,
                     outDir: String, manifestPath: String,
-                    snapshotId: Option[Long] = None,
                     batchSize: Int = DefaultBatchSize): Seq[UnitResult] =
-    runValidation(openTable(spark, inputDir), schema, outDir, manifestPath, snapshotId, batchSize)
+    runValidation(openTable(spark, inputDir), schema, outDir, manifestPath, batchSize)
 
   /** Run validation over all pending units of an opened table in
     * BATCHES of `batchSize` files per Spark job (a sequential
@@ -251,7 +244,7 @@ object Checkpoint {
     * results for units processed in THIS run.
     */
   def runValidation(table: Table, schema: TableSchema, outDir: String, manifestPath: String,
-                    snapshotId: Option[Long], batchSize: Int): Seq[UnitResult] = {
+                    batchSize: Int): Seq[UnitResult] = {
     val spark = table.df.sparkSession
     val done = completedUnits(manifestPath)
     val pending = table.files.filterNot(f => done(unitName(f)))
@@ -305,7 +298,7 @@ object Checkpoint {
       val batchWallMs = (System.nanoTime() - t0) / 1000000
       metrics.map { case (unit, rows, nulls) =>
         val nVios = vios.get(unitKey(unit)).fold(0L)(_.head)
-        val r = UnitResult(unit, snapshotId, rows, nVios, nVios == 0, batchWallMs, batch.size, nulls)
+        val r = UnitResult(unit, rows, nVios, nVios == 0, batchWallMs, batch.size, nulls)
         appendResult(manifestPath, r)
         r
       }

@@ -1,24 +1,38 @@
 package graft.cli
 
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Paths, StandardOpenOption}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{AnalysisException, SparkSession}
+import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.streaming.Trigger
-import graft.compile.TableSchemaCompiler
-import graft.streaming.StreamingValidator
+import org.json4s.{JInt, JLong, JObject}
+import graft.compile.{Js, TableSchema, TableSchemaCompiler}
+import graft.exprs.Validator
 
 /** spark-submit entry point for INCREMENTAL validation over a growing
   * parquet directory — the streaming analogue of [[ValidateTableMain]]:
   *
   *   ValidateStreamMain <schema.json> <input-parquet-dir> <outDir>
   *
-  * Runs the SAME compiled violation plan as the batch path through
-  * Structured Streaming with `Trigger.AvailableNow`: each invocation
-  * processes exactly the files that appeared since the previous one
-  * (source progress lives in `outDir/_checkpoint` — Spark's own
-  * exactly-once file-source ledger, so a re-run after a crash neither
-  * skips nor duplicates a file) and then exits. A scheduler invoking
-  * this every N minutes gets continuous validation with batch
-  * semantics; the same binary with `.trigger(ProcessingTime)` would be
-  * the always-on form.
+  * Runs the SAME compiled violation plan as the batch path
+  * (`Validator.validateTranscripts`) through Structured Streaming with
+  * `Trigger.AvailableNow`: each invocation processes exactly the files
+  * that appeared since the previous one (source progress lives in
+  * `outDir/_checkpoint` — Spark's own exactly-once file-source ledger,
+  * so a re-run after a crash neither skips nor duplicates a file) and
+  * then exits. A scheduler invoking this every N minutes gets
+  * continuous validation with batch semantics; the same binary with
+  * `.trigger(ProcessingTime)` would be the always-on form.
+  *
+  * The pass's violation rows are counted by an `observe` on the stream
+  * itself, not by reading `outDir/violations` back. Each pass appends
+  * one line to `outDir/stream_report.jsonl` (`last_batch_id`,
+  * `input_rows`, `new_violation_rows`, `total_violation_rows`; a local
+  * file, so `outDir` is a local path or `file:` URI), and the total is
+  * the previous line's total plus this pass's count. A pass
+  * that died after the sink committed a batch but before its report
+  * line landed leaves the stream's logs ahead of the report; the next
+  * pass then recounts `outDir/violations` once and reports from that.
   *
   * Prints `stream pass: N new violation rows (M total at <dir>)` and
   * exits 0 (no violations so far) / 2 (violations exist) / 1 (usage or
@@ -76,7 +90,7 @@ object ValidateStreamMain {
     */
   def pinOrCheckSchema(spark: SparkSession, inputDir: String,
                        outDir: String): Either[String, org.apache.spark.sql.types.StructType] = {
-    val pinPath = new org.apache.hadoop.fs.Path(s"$outDir/_schema.json")
+    val pinPath = new Path(s"$outDir/_schema.json")
     val fs = pinPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(pinPath)) {
       val physical =
@@ -116,54 +130,134 @@ object ValidateStreamMain {
     }
   }
 
-  def main(args: Array[String]): Unit = args match {
-    case Array(schemaPath, inputDir, outDir) =>
-      val schema = TableSchemaCompiler
-        .compileString(java.nio.file.Files.readString(java.nio.file.Paths.get(schemaPath)))
-        .fold(e => { System.err.println(s"invalid schema at $schemaPath: $e"); sys.exit(1) }, identity)
-      val spark = CliSession.open("graft-validate-stream")
-      try {
-        // file streams need an explicit schema; the FIRST invocation
-        // pins it from the files present then, and every later one
-        // checks the directory against the pin (exit 3 on drift) so the
-        // stream never silently reads a drifted file with a stale schema
-        val physical = pinOrCheckSchema(spark, inputDir, outDir) match {
-          case Left(drift) =>
-            System.err.println(s"schema drift at $inputDir: $drift " +
-              s"(delete $outDir/_schema.json to re-pin after fixing or accepting it)")
-            sys.exit(3)
-          case Right(s) => s
-        }
+  /** One pass, as its line in `stream_report.jsonl` records it. */
+  final case class Pass(lastBatchId: Long, inputRows: Long,
+                        newViolationRows: Long, totalViolationRows: Long)
+
+  /** The CLI's exit code for a pass: 3 on schema drift, else 2 while
+    * any violation row exists, else 0.
+    */
+  def exitCode(pass: Either[String, Pass]): Int =
+    pass.fold(_ => 3, p => if (p.totalViolationRows > 0) 2 else 0)
+
+  private def toJson(p: Pass): String = Js.compact(JObject(List(
+    "last_batch_id" -> JLong(p.lastBatchId),
+    "input_rows" -> JLong(p.inputRows),
+    "new_violation_rows" -> JLong(p.newViolationRows),
+    "total_violation_rows" -> JLong(p.totalViolationRows))))
+
+  /** A report line that does not parse, or lacks a field, is a torn
+    * append (the manifest's rule) and is skipped.
+    */
+  private def fromJson(line: String): Option[Pass] = {
+    def long(j: org.json4s.JValue, name: String) = Js.field(j, name).collect { case JInt(n) => n.toLong }
+    for {
+      j <- Js.parse(line).toOption
+      batch <- long(j, "last_batch_id")
+      rows <- long(j, "input_rows")
+      added <- long(j, "new_violation_rows")
+      total <- long(j, "total_violation_rows")
+    } yield Pass(batch, rows, added, total)
+  }
+
+  private val LogEntry = """(\d+)(?:\.compact)?""".r
+
+  /** The highest batch id in a Spark metadata log directory (one file
+    * per batch, named by its id; the file sink also writes
+    * `<id>.compact`), or -1 when it holds none.
+    */
+  private def lastLogged(fs: FileSystem, dir: Path): Long =
+    if (!fs.exists(dir)) -1L
+    else fs.listStatus(dir).map(_.getPath.getName)
+      .collect { case LogEntry(id) => id.toLong }.maxOption.getOrElse(-1L)
+
+  /** One incremental pass over `inputDir` (see the object doc): prints
+    * its summary line and returns it, or Left with the drift found
+    * (exit 3 at the CLI).
+    */
+  def run(spark: SparkSession, schema: TableSchema, inputDir: String, outDir: String): Either[String, Pass] = {
+    def drift(what: String): Either[String, Pass] = {
+      System.err.println(s"schema drift at $inputDir: $what " +
+        s"(delete $outDir/_schema.json to re-pin after fixing or accepting it)")
+      Left(what)
+    }
+    // file streams need an explicit schema; the FIRST invocation pins it
+    // from the files present then, and every later one checks the
+    // directory against the pin, so the stream never silently reads a
+    // drifted file with a stale schema
+    pinOrCheckSchema(spark, inputDir, outDir) match {
+      case Left(d) => drift(d)
+      case Right(physical) =>
         val violationsDir = s"$outDir/violations"
-        def totalViolations(): Long =
-          try spark.read.parquet(violationsDir).count()
-          catch { case _: org.apache.spark.sql.AnalysisException => 0L } // first run: no output yet
-        val before = totalViolations()
-        val q = StreamingValidator
-          .violations(spark.readStream.schema(physical).parquet(inputDir), schema)
+        val commits = new Path(s"$outDir/_checkpoint/commits")
+        val sinkLog = new Path(s"$violationsDir/_spark_metadata")
+        val fs = commits.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        // a local file, as the manifest is; a `file:` URI names the same
+        // directory as the plain path, not a relative `file:` directory
+        val report = new Path(s"$outDir/stream_report.jsonl").toUri
+        require(Option(report.getScheme).forall(_ == "file"), s"the stream report needs a local outDir, got $outDir")
+        val reportPath = Paths.get(report.getPath)
+        val reported = if (Files.exists(reportPath)) Files.readString(reportPath) else ""
+        val prev = reported.linesIterator.toSeq.reverseIterator.flatMap(fromJson).nextOption()
+        // a batch the stream's logs hold but the report does not means a
+        // pass died before its report line landed; the sink log records a
+        // batch before the commit log does, so a death between the two
+        // is caught too
+        val stale = math.max(lastLogged(fs, commits), lastLogged(fs, sinkLog)) != prev.fold(-1L)(_.lastBatchId)
+
+        val q = Validator.validateTranscripts(spark.readStream.schema(physical).parquet(inputDir), schema)
+          .observe("stream_violations", count(lit(1)))
           .writeStream
           .format("parquet")
           .option("path", violationsDir)
           .option("checkpointLocation", s"$outDir/_checkpoint")
           .trigger(Trigger.AvailableNow())
           .start()
-        try q.awaitTermination()
-        catch {
-          // a drifted file the one-footer prelude didn't sample fails
-          // the batch at read time — classify it as the documented
-          // drift protocol (exit 3), not a generic crash. The stream
-          // checkpoint has NOT committed the failed batch, so the run
-          // after re-pinning reprocesses it exactly once.
-          case e: Exception if isSchemaDriftFailure(e) =>
-            System.err.println(s"schema drift at $inputDir: a file incompatible with the " +
-              s"pinned schema appeared mid-stream " +
-              s"(delete $outDir/_schema.json to re-pin after fixing or accepting it)")
-            sys.exit(3)
+        val driftedMidStream =
+          try { q.awaitTermination(); false }
+          catch {
+            // a drifted file the one-footer prelude didn't sample fails
+            // the batch at read time — classify it as the documented
+            // drift protocol (exit 3), not a generic crash. The stream
+            // checkpoint has NOT committed the failed batch, so the run
+            // after re-pinning reprocesses it exactly once.
+            case e: Exception if isSchemaDriftFailure(e) => true
+          }
+        if (driftedMidStream) drift("a file incompatible with the pinned schema appeared mid-stream")
+        else {
+          // the query thread appends each batch's progress (with its
+          // observed count) before it posts the listener event, so after
+          // awaitTermination every batch of this pass is in the buffer
+          // (AvailableNow over a file source with no read limit runs one
+          // batch per pass; the buffer keeps the last 100)
+          val batches = q.recentProgress.toSeq.filter(_.observedMetrics.containsKey("stream_violations"))
+          val added = batches.map(_.observedMetrics.get("stream_violations").getLong(0)).sum
+          val total =
+            if (stale)
+              try spark.read.parquet(violationsDir).count()
+              catch { case _: AnalysisException => 0L } // no output yet
+            else prev.fold(0L)(_.totalViolationRows) + added
+          val pass = Pass(lastLogged(fs, commits), batches.map(_.numInputRows).sum, added, total)
+          // a torn last line has no newline: start a fresh line so this
+          // record stays whole
+          val sep = if (reported.nonEmpty && !reported.endsWith("\n")) "\n" else ""
+          Option(reportPath.getParent).foreach(Files.createDirectories(_))
+          Files.writeString(reportPath, sep + toJson(pass) + "\n",
+            StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+          println(s"stream pass: $added new violation rows ($total total at $violationsDir)")
+          Right(pass)
         }
-        val after = totalViolations()
-        println(s"stream pass: ${after - before} new violation rows ($after total at $violationsDir)")
-        sys.exit(if (after > 0) 2 else 0)
-      } finally spark.stop()
+    }
+  }
+
+  def main(args: Array[String]): Unit = args match {
+    case Array(schemaPath, inputDir, outDir) =>
+      val schema = TableSchemaCompiler
+        .compileString(Files.readString(Paths.get(schemaPath)))
+        .fold(e => { System.err.println(s"invalid schema at $schemaPath: $e"); sys.exit(1) }, identity)
+      val spark = CliSession.open("graft-validate-stream")
+      val code = try exitCode(run(spark, schema, inputDir, outDir)) finally spark.stop()
+      sys.exit(code)
     case _ =>
       System.err.println("usage: ValidateStreamMain <schema.json> <input-parquet-dir> <outDir>")
       sys.exit(1)

@@ -46,7 +46,7 @@ object ValidateTableMain {
       .filterNot(_.status == "ok")
       .foreach(b => System.err.println(s"schema bind: ${b.column} ${b.status} (${b.detail})"))
     val results = Checkpoint.runValidation(table, schema, s"$outDir/violations",
-      s"$outDir/manifest.jsonl", snapshotId = None, batchSize = Checkpoint.DefaultBatchSize)
+      s"$outDir/manifest.jsonl", batchSize = Checkpoint.DefaultBatchSize)
     // both integrity checks from ONE full-data shuffle; row-level
     // orphan emission via broadcast join-back of the offending set
     val report = Integrity.integrityReport(df)

@@ -8,9 +8,7 @@ import graft.model._
   * This is the bridge between the reference's document model and the
   * engine's tabular data plane (SURVEY.md §1.2 "Spark mapping").
   */
-final case class TableSchema(columns: ListMap[String, Property], root: SchemaDoc) {
-  def requiredColumns: Seq[String] = columns.collect { case (n, p) if p.required => n }.toSeq
-}
+final case class TableSchema(columns: ListMap[String, Property], root: SchemaDoc)
 
 object TableSchemaCompiler {
 

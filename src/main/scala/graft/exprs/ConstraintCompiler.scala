@@ -827,15 +827,4 @@ object Validator {
     df.select(perRow.as("__nv"))
       .agg(coalesce(sum(col("__nv")), lit(0L)).as("n_violations"))
   }
-
-  /** Per-row pass/fail flag in one pass (no explode) — used for
-    * per-partition pass/fail accounting.
-    */
-  def validFlag(df: DataFrame, schema: TableSchema): Column = {
-    val checks = ConstraintCompiler.compile(schema, df.schema)
-      .fold(e => throw new IllegalArgumentException(e), identity)
-    // reduceOption: zero compiled checks (all-permissive schema) means
-    // every row is valid
-    checks.map(_.ok).reduceOption(_ && _).getOrElse(lit(true))
-  }
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -63,10 +63,6 @@ object JsonlTranscripts {
       .select(col("r.*"))
   }
 
-  /** Read JSONL files under `path` with the pinned schema. */
-  def readFiles(spark: SparkSession, path: String): DataFrame =
-    parse(spark.read.text(path))
-
   /** One JSONL line per row of `df`, as a column expression. Columns
     * are cast to the PINNED schema types first — notably TIMESTAMP_NTZ
     * inputs (the parquet int64 default) would otherwise serialize under
@@ -89,12 +85,6 @@ object JsonlTranscripts {
     to_json(struct(schema.fields.map(f => col(f.name).cast(f.dataType).as(f.name)): _*),
       Map("timestampFormat" -> tsFormat))
   }
-
-  /** Serialize a transcript table to JSONL lines with the same pinned
-    * timestamp format (write→[[parse]] is the identity on
-    * micros-resolution rows; null fields are omitted, the JSON idiom).
-    */
-  def toJsonl(df: DataFrame): DataFrame = df.select(jsonLine(df).as("value"))
 
   /** Split a parsed frame into (clean, quarantined). */
   def quarantine(parsed: DataFrame): (DataFrame, DataFrame) =

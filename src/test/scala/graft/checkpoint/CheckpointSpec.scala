@@ -49,14 +49,14 @@ class CheckpointSpec extends AnyFlatSpec with Matchers {
   private def metricsOf(rs: Seq[Checkpoint.UnitResult]): Map[String, (Long, Map[String, Long])] =
     rs.map(r => r.unit -> (r.rows, r.nullCounts)).toMap
 
-  "Checkpoint.listUnits" should "discover units recursively and refuse an empty unit set" in {
+  "Checkpoint.openTable" should "discover units recursively and refuse an empty unit set" in {
     // Hive-partitioned layout: parquet files live in subdirectories —
     // the old top-level listing returned ZERO units and the run printed
     // "valid table" without validating a row
     val in = tmp() + "/in"
     TranscriptGen.generate(spark, 10, 4).write.parquet(s"$in/date=a")
     TranscriptGen.generate(spark, 10, 4).write.parquet(s"$in/date=b")
-    val units = Checkpoint.listUnits(spark, in)
+    val units = Checkpoint.openTable(spark, in).files
     units should not be empty
     all(units) should endWith(".parquet")
     units.exists(_.contains("date=a")) shouldBe true
@@ -64,7 +64,7 @@ class CheckpointSpec extends AnyFlatSpec with Matchers {
     // an empty directory must be a loud error, never a clean verdict
     val emptyDir = tmp() + "/empty"
     Files.createDirectories(java.nio.file.Paths.get(emptyDir))
-    an[IllegalArgumentException] should be thrownBy Checkpoint.listUnits(spark, emptyDir)
+    an[IllegalArgumentException] should be thrownBy Checkpoint.openTable(spark, emptyDir).files
   }
 
   "Checkpoint" should "record one manifest entry per unit with metrics" in {
@@ -79,7 +79,6 @@ class CheckpointSpec extends AnyFlatSpec with Matchers {
     // wall-clock (batch-level, honest measurement) and lineage present
     all(results.map(_.batchWallMs)) should be >= 0L
     all(results.map(_.batchSize)) shouldBe 4
-    all(results.map(_.snapshotId)) shouldBe None
     // per-partition metrics: per-column null counts ride in the manifest
     results.map(_.nullCounts.keySet) foreach
       (_ shouldBe Set("conv_id", "turn_idx", "role", "text", "tool", "ts"))
@@ -257,7 +256,6 @@ class CheckpointSpec extends AnyFlatSpec with Matchers {
     writeInput(in)
     val out = tmp()
     val rs = Checkpoint.runValidation(spark, s"file://$in", schema, s"$out/v", s"$out/manifest.jsonl")
-    rs.map(_.unit) shouldBe Checkpoint.listUnits(spark, in)
     rs.map(_.unit) shouldBe dataFiles(in)
     metricsOf(rs) shouldBe perFileCounts(in)
     rs.map(_.violations).sum should be > 0L
@@ -273,7 +271,7 @@ class CheckpointSpec extends AnyFlatSpec with Matchers {
     val out = tmp()
     val ex = intercept[IllegalStateException] {
       Checkpoint.runValidation(mismatched, schema, s"$out/v", s"$out/manifest.jsonl",
-        snapshotId = None, batchSize = Checkpoint.DefaultBatchSize)
+        batchSize = Checkpoint.DefaultBatchSize)
     }
     ex.getMessage should include("the batch scan saw none of them")
     Checkpoint.completedMetrics(s"$out/manifest.jsonl") shouldBe empty
@@ -283,7 +281,7 @@ class CheckpointSpec extends AnyFlatSpec with Matchers {
     val m = tmp() + "/manifest.jsonl"
     val units = Seq("/t/a\nb.parquet", "/t/tab\there \"q\" back\\slash\u0001.parquet")
     units.zipWithIndex.foreach { case (u, i) =>
-      Checkpoint.appendResult(m, Checkpoint.UnitResult(u, None, 10L + i, i.toLong, i == 0,
+      Checkpoint.appendResult(m, Checkpoint.UnitResult(u, 10L + i, i.toLong, i == 0,
         batchWallMs = 5, batchSize = 2, nullCounts = Map("col\nname" -> 1L, "plain" -> 0L)))
     }
     val lines = Files.readAllLines(Paths.get(m)).asScala.toSeq

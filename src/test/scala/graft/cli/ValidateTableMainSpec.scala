@@ -1,7 +1,6 @@
 package graft.cli
 
 import java.nio.file.Files
-import org.apache.spark.sql.Row
 import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
 import graft.SparkTestBase
@@ -22,37 +21,11 @@ class ValidateTableMainSpec extends AnyFlatSpec with Matchers {
   private def writeTable(dir: String, defects: TranscriptGen.Defects): Unit =
     TranscriptGen.generate(spark, 100, 10, defects).repartition(4).write.parquet(dir)
 
-  // the flagship schema's checks, one predicate per (column, constraint),
-  // each true on a violating row (draft-4 semantics, as the benchmark's
-  // DuckDB recount states them)
-  private val conv = "^c[0-9]+$".r
-  private val toolName = "^[a-z][a-z0-9_]*$".r
-  private val roles = Set("system", "user", "assistant", "tool")
-  private def rowViolations(r: Row): Int = {
-    def str(c: String) = Option(r.getAs[String](c))
-    val turn = Option(r.getAs[Integer]("turn_idx")).map(_.intValue)
-    Seq(
-      str("conv_id").isEmpty,
-      str("conv_id").exists(_.isEmpty),
-      str("conv_id").exists(conv.findFirstIn(_).isEmpty),
-      turn.isEmpty,
-      turn.exists(_ < 0),
-      turn.exists(_ > 4096),
-      str("role").isEmpty,
-      str("role").exists(!roles(_)),
-      str("text").isEmpty,
-      str("text").exists(_.length > 65536),
-      str("tool").exists(toolName.findFirstIn(_).isEmpty),
-      str("tool").isDefined && str("role").isEmpty,
-      r.isNullAt(r.fieldIndex("ts"))
-    ).count(identity)
-  }
-
   private def expected(dir: String): (Long, Long, Long) = {
     val rows = spark.read.parquet(dir).collect().toSeq
     val keys = rows.groupBy(r => (r.getAs[String]("conv_id"), r.getAs[Integer]("turn_idx")))
     val rooted = rows.filter(r => r.getAs[Integer]("turn_idx") == 0).map(_.getAs[String]("conv_id")).toSet
-    (rows.map(rowViolations).sum.toLong,
+    (rows.map(FlagshipRecount.rowViolations).sum.toLong,
       keys.count(_._2.size > 1).toLong,
       rows.count(r => r.getAs[String]("conv_id") != null && !rooted(r.getAs[String]("conv_id"))).toLong)
   }

@@ -221,7 +221,7 @@ class SchemaParserSpec extends AnyFlatSpec with Matchers {
     r.isRight shouldBe (true)
     val ts = r.toOption.get
     ts.columns.keySet shouldBe Set("conv_id", "turn_idx", "role", "text", "tool", "ts")
-    ts.requiredColumns.toSet shouldBe Set("conv_id", "turn_idx", "role", "text", "ts")
+    ts.columns.collect { case (n, p) if p.required => n }.toSet shouldBe Set("conv_id", "turn_idx", "role", "text", "ts")
     ts.columns("role").schema.enums.size shouldBe 4
     ts.columns("turn_idx").schema.number.get.range.min shouldBe Some(Boundary(BigDecimal(0), exclusive = false))
     // tool resolves through $ref to #/definitions/toolName

@@ -20,9 +20,9 @@ class JsonlTranscriptsSpec extends AnyFlatSpec with Matchers {
       .withColumn("ts", col("ts") + expr("make_interval(0,0,0,0,0,0,0.123456)"))
     val dir = java.nio.file.Files.createTempDirectory("jsonl_rt").toString
     try {
-      JsonlTranscripts.toJsonl(df).coalesce(1)
+      df.select(JsonlTranscripts.jsonLine(df).as("value")).coalesce(1)
         .write.mode("overwrite").text(dir)
-      val back = JsonlTranscripts.readFiles(spark, dir)
+      val back = JsonlTranscripts.parse(spark.read.text(dir))
       back.filter(col("_corrupt").isNotNull).count() shouldBe 0L
       val key = Seq("conv_id", "turn_idx", "role", "text", "tool", "ts")
       back.drop("_corrupt").except(df.select(key.map(col): _*)).count() shouldBe 0L

@@ -6,13 +6,18 @@ import org.scalatest.matchers.should.Matchers
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.SparkTestBase
 import graft.compile.TableSchemaCompiler
-import graft.streaming.StreamingValidator.{DimUpdate, OrderViolation, StreamEvent, Turn}
+import graft.exprs.Validator
+
+object StreamingSpec {
+  final case class Turn(conv_id: String, turn_idx: Int, role: String,
+                        text: String, tool: String, ts: Timestamp)
+}
 
 /** Structured-Streaming validation: the compiled batch plan must run
-  * unchanged on a stream, and the stateful per-conversation ordering
-  * check must flag duplicates/regressions across micro-batches.
+  * unchanged on a stream, micro-batch by micro-batch.
   */
 class StreamingSpec extends AnyFlatSpec with Matchers {
+  import StreamingSpec.Turn
 
   private lazy val spark = SparkTestBase.spark
   private val schema = TableSchemaCompiler
@@ -20,11 +25,11 @@ class StreamingSpec extends AnyFlatSpec with Matchers {
 
   private def ts(min: Int) = Timestamp.valueOf(f"2024-01-01 00:$min%02d:00")
 
-  "StreamingValidator" should "emit the same violations as the batch plan, per micro-batch" in {
+  "Validator.validateTranscripts" should "emit the same violations as the batch plan, per micro-batch" in {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Turn]
-    val q = StreamingValidator.violations(input.toDF(), schema)
+    val q = Validator.validateTranscripts(input.toDF(), schema)
       .writeStream.format("memory").queryName("svio").outputMode("append").start()
     try {
       input.addData(
@@ -41,382 +46,6 @@ class StreamingSpec extends AnyFlatSpec with Matchers {
       input.addData(Turn("c1", 2, "tool", "t", "Bad-Tool", ts(3))) // pattern violation
       q.processAllAvailable()
       spark.sql("SELECT count(*) FROM svio").first().getLong(0) shouldBe 3L
-    } finally q.stop()
-  }
-
-  it should "count windowed violation rates with a watermark" in {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Turn]
-    val q = StreamingValidator.violationRates(input.toDF(), schema, "1 minute", "5 minutes")
-      .writeStream.format("memory").queryName("srates").outputMode("update").start()
-    try {
-      input.addData(
-        Turn("c1", 0, "system", "ok", null, ts(0)),
-        Turn("c1", 1, "operator", "bad", null, ts(0)),
-        Turn("c2", 0, "user", "ok", null, ts(1)))
-      q.processAllAvailable()
-      val rows = spark.sql("SELECT window.start, rows, violating_rows FROM srates").collect()
-        .map(r => (r.getTimestamp(0).toString, r.getLong(1), r.getLong(2))).toSet
-      rows shouldBe Set(
-        ("2024-01-01 00:00:00.0", 2L, 1L),
-        ("2024-01-01 00:01:00.0", 1L, 0L))
-    } finally q.stop()
-  }
-
-  it should "survive null-ts poison rows in orderingViolations, even on a fresh key" in {
-    // the round-6 verdict's top item: sortBy(t.ts.getTime) NPE'd on a
-    // null-ts row, and an all-null-ts FRESH key left maxTs at MinValue
-    // so setTimeoutTimestamp went negative (GroupStateImpl throws).
-    // Contract (the asofEnrich poison rule): never crash; if the row
-    // reaches the state function it surfaces as a TYPED `null_ts`
-    // violation. The watermark operator may drop null-ts rows outright
-    // in later batches — no-crash is the hard pin.
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Turn]
-    val q = StreamingValidator.orderingViolations(input.toDS())
-      .writeStream.format("memory").queryName("sorderpoison").outputMode("append").start()
-    try {
-      // first batch of a FRESH key is the poison row itself
-      input.addData(Turn("p1", 0, "system", "poison", null, null))
-      q.processAllAvailable()
-      // then mixed: another fresh all-null key plus normal traffic and a
-      // second null-ts row on a key with real state
-      input.addData(
-        Turn("p2", 3, "user", "poison2", null, null),
-        Turn("c8", 0, "system", "a", null, ts(0)),
-        Turn("c8", 1, "user", "b", null, ts(1)),
-        Turn("c8", 2, "user", "c", null, null))
-      q.processAllAvailable()
-      val got = spark.table("sorderpoison").as[OrderViolation].collect().toSet
-      // every emitted row for the poison turns is the typed kind
-      got.filter(v => v.conv_id == "p1" || v.conv_id == "p2" || v.turn_idx == 2)
-        .foreach(_.kind shouldBe "null_ts")
-      // the null-ts rows reached the state function in these batches
-      got should contain(OrderViolation("p1", 0, "null_ts"))
-      // and normal ordering state was undisturbed by the poison row
-      input.addData(Turn("c8", 1, "user", "dup", null, ts(2)))
-      q.processAllAvailable()
-      spark.table("sorderpoison").as[OrderViolation].collect().toSet should
-        contain(OrderViolation("c8", 1, "duplicate"))
-    } finally q.stop()
-  }
-
-  it should "survive an all-null-ts first batch for a fresh asofEnrich key" in {
-    // ADVICE r6 (medium): dims filter null ts but events do not, so a
-    // fresh key whose first micro-batch holds only null-ts events kept
-    // maxTs = MinValue and setTimeoutTimestamp(MinValue + timeout)
-    // threw IllegalArgumentException, killing the query
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val ee = MemoryStream[StreamEvent]
-    val de = MemoryStream[DimUpdate]
-    val q = StreamingValidator.asofEnrich(ee.toDS(), de.toDS())
-      .writeStream.format("memory").queryName("sasofpoison").outputMode("append").start()
-    try {
-      ee.addData(StreamEvent("fresh", 1L, null)) // poison-first key
-      q.processAllAvailable()
-      de.addData(DimUpdate("fresh", ts(1), 1L, "v1"))
-      ee.addData(StreamEvent("fresh", 2L, ts(2)))
-      q.processAllAvailable()
-      val rows = spark.sql("SELECT event_id, asof_payload FROM sasofpoison").collect()
-        .map(r => (r.getLong(0), r.getString(1))).toMap
-      rows.get(1L).foreach(_ shouldBe null) // if emitted: null payload
-      rows(2L) shouldBe "v1"                // the key keeps working after the poison
-    } finally q.stop()
-  }
-
-  it should "flag duplicate and out-of-order turns across micro-batches via state" in {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Turn]
-    val q = StreamingValidator.orderingViolations(input.toDS())
-      .writeStream.format("memory").queryName("sorder").outputMode("append").start()
-    try {
-      input.addData(
-        Turn("c1", 0, "system", "a", null, ts(0)),
-        Turn("c1", 1, "user", "b", null, ts(1)))
-      q.processAllAvailable()
-      input.addData(
-        Turn("c1", 1, "user", "dup", null, ts(2)),   // duplicate of turn 1
-        Turn("c1", 0, "user", "late", null, ts(3)),  // regression
-        Turn("c2", 0, "system", "fresh", null, ts(3)))
-      q.processAllAvailable()
-      val got = spark.table("sorder").as[OrderViolation].collect().toSet
-      got shouldBe Set(
-        OrderViolation("c1", 1, "duplicate"),
-        OrderViolation("c1", 0, "out_of_order"))
-    } finally q.stop()
-  }
-
-  it should "emit only the first-seen document per content hash across micro-batches" in {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Turn]
-    val q = StreamingValidator.firstSeenByContent(input.toDF())
-      .writeStream.format("memory").queryName("sdedup").outputMode("append").start()
-    try {
-      input.addData(
-        Turn("c1", 0, "user", "same text", null, ts(0)),
-        Turn("c1", 1, "user", "unique one", null, ts(1)))
-      q.processAllAvailable()
-      input.addData(
-        Turn("c2", 0, "user", "same text", null, ts(2)), // dup within watermark
-        Turn("c2", 1, "user", "unique two", null, ts(3)),
-        // null text has no content: must NOT collapse onto each other
-        // (md5(null)=null would keep only the first) — both pass through
-        Turn("c3", 0, "user", null, null, ts(4)),
-        Turn("c3", 1, "user", null, null, ts(5)))
-      q.processAllAvailable()
-      val got = spark.sql("SELECT conv_id, turn_idx, text FROM sdedup").collect()
-        .map(r => (r.getString(0), r.getInt(1), r.getString(2))).toSet
-      got shouldBe Set(
-        ("c1", 0, "same text"),
-        ("c1", 1, "unique one"),
-        ("c2", 1, "unique two"),
-        ("c3", 0, null),
-        ("c3", 1, null))
-    } finally q.stop()
-  }
-
-  final case class Doc(doc_id: Long, text: String, ts: Timestamp)
-
-  it should "score windowed drift against a baseline with the batch KL/PSI math" in {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val baseline = Map("user" -> 50L, "assistant" -> 40L, "system" -> 10L)
-    val input = MemoryStream[Turn]
-    val q = StreamingValidator.driftRates(input.toDF(), baseline,
-        org.apache.spark.sql.functions.col("role"), windowLength = "1 minute")
-      .writeStream.format("memory").queryName("sdrift").outputMode("append").start()
-    try {
-      // window [0,1): 3 user / 1 assistant — shifted vs baseline
-      input.addData(
-        Turn("c1", 0, "user", "a", null, ts(0)),
-        Turn("c1", 1, "user", "b", null, ts(0)),
-        Turn("c2", 0, "user", "c", null, ts(0)),
-        Turn("c2", 1, "assistant", "d", null, ts(0)))
-      // window [2,3): a bucket OUTSIDE the baseline must register drift
-      input.addData(
-        Turn("c3", 0, "tool", "x", null, ts(2)),
-        Turn("c3", 1, "user", "y", null, ts(2)))
-      // advance the watermark so both windows close
-      input.addData(Turn("c9", 0, "user", "z", null, ts(20)))
-      q.processAllAvailable()
-      val rows = spark.sql("SELECT window.start, n, kl, psi FROM sdrift").collect()
-        .map(r => (r.getTimestamp(0), r.getLong(1), r.getDouble(2), r.getDouble(3)))
-        .sortBy(_._1.getTime)
-      rows.length shouldBe 2
-      // window 1 matches the batch math exactly (buckets ⊆ baseline keys)
-      import graft.stats.Drift
-      val batch = (Seq("user", "user", "user", "assistant").map((_, true)) ++
-        baseline.toSeq.flatMap { case (k, n) => Seq.fill(n.toInt)((k, false)) }).toDF("role", "cur")
-      val Array((klB, psiB)) = Drift.histogram(batch, Drift.categoricalBucket($"role"), $"cur")
-        .select(Drift.kl, Drift.psi).as[(Double, Double)].collect()
-      rows(0)._2 shouldBe 4L
-      rows(0)._3 shouldBe klB +- 1e-9
-      rows(0)._4 shouldBe psiB +- 1e-9
-      // window 2: the novel 'tool' bucket gets epsilon baseline mass ->
-      // large positive drift, not a silent drop
-      rows(1)._2 shouldBe 2L
-      rows(1)._3 should be > 1.0
-    } finally q.stop()
-  }
-
-  it should "reject a baseline key that collides with the null-bucket sentinel" in {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val input = MemoryStream[Turn]
-    // real nulls fold into "<null>"; a baseline bucket literally named
-    // that would silently merge them — must fail loud instead
-    an[IllegalArgumentException] should be thrownBy
-      StreamingValidator.driftRates(input.toDF(),
-        Map("user" -> 1L, "<null>" -> 1L),
-        org.apache.spark.sql.functions.col("role"))
-  }
-
-  it should "find near-dup pairs within the horizon and mirror batch jaccard" in {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    val near = base + " qq zz" // 10 -> 12 tokens: J = 8/10 shared... verified vs batch below
-    val far = "completely different words about another topic entirely here now"
-    val input = MemoryStream[Doc]
-    val q = StreamingValidator.nearDupPairsWithinHorizon(
-        input.toDF(), watermark = "10 minutes", horizon = "10 minutes")
-      .writeStream.format("memory").queryName("sneardup").outputMode("append").start()
-    try {
-      input.addData(
-        Doc(1L, base, ts(0)),
-        Doc(2L, near, ts(1)),   // near-dup of 1 within horizon -> pair
-        Doc(4L, far, ts(2)))    // unrelated -> no pair
-      q.processAllAvailable()
-      input.addData(
-        Doc(3L, base, ts(40))) // identical text but beyond the horizon -> no pair
-      q.processAllAvailable()
-      // advance watermark far enough that every in-horizon pair flushed
-      input.addData(Doc(99L, "marker advancing the watermark forward", ts(55)))
-      q.processAllAvailable()
-      val got = spark.sql("SELECT id_a, id_b, jaccard FROM sneardup").collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      got.map(p => (p._1, p._2)) shouldBe Set((1L, 2L))
-      // the emitted score equals the batch operator's exact Jaccard
-      val batch = graft.pipeline.Dedup.minhashPairs(
-        Seq((1L, base), (2L, near)).toDF("doc_id", "text"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      batch.map(p => (p._1, p._2)) shouldBe Set((1L, 2L))
-      got.head._3 shouldBe batch.head._3
-    } finally q.stop()
-  }
-
-  it should "surface a hot-content storm through the neardup_candidates metric" in {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val hot = "identical spam content repeated across the whole storm window exactly"
-    val input = MemoryStream[Doc]
-    val q = StreamingValidator.nearDupPairsWithinHorizon(
-        input.toDF(), watermark = "10 minutes", horizon = "10 minutes")
-      .writeStream.format("memory").queryName("sstorm").outputMode("append").start()
-    try {
-      // 12 identical docs inside one horizon: one hot bucket ->
-      // C(12,2) = 66 candidate pairs, quadratic in the storm size
-      input.addData((1L to 12L).map(i => Doc(i, hot, ts(i.toInt % 5))): _*)
-      q.processAllAvailable()
-      input.addData(Doc(99L, "watermark marker pushing every window closed", ts(55)))
-      q.processAllAvailable()
-      val candidates = q.recentProgress.toSeq
-        .flatMap(p => Option(p.observedMetrics.get("neardup_candidates")))
-        .map(_.getAs[Long]("candidate_pairs")).sum
-      candidates shouldBe 66L // the storm is measurable, not silent
-    } finally q.stop()
-  }
-
-  it should "resolve hostile baseline column names in boundsDriftByWindow (safe frame)" in {
-    // ADVICE r6: raw names interpolated into col()/aliases broke on
-    // dots (nested-field parse) — the positional safe frame must carry
-    // a 'value.x'-named column end to end, original name in the output
-    import spark.implicits._
-    val base = Seq.tabulate(20)(i => (i.toLong % 5, ts(1))).toDF("value.x", "ts")
-    val baseline = graft.stats.SchemaInfer.inferConstraints(base).collect().toSeq
-    val live = Seq((99L, ts(2)), (1L, ts(3))).toDF("value.x", "ts")
-    val out = StreamingValidator.boundsDriftByWindow(live, baseline,
-      windowLength = "10 minutes")
-    val rows = out.collect().map(r => (r.getString(1), r.getLong(3))).toSet
-    rows should contain(("value.x", 1L)) // the 99 escapes above_bounds, name intact
-  }
-
-  it should "flag constraint-envelope escapes per window with batch parity" in {
-    import spark.implicits._
-    import StreamingValidator.Turn
-    implicit val sqlCtx = spark.sqlContext
-
-    // baseline envelope inferred from a clean corpus (turn_idx 0..4,
-    // role enum, text lengths 2..5, role required)
-    val baseTable = Seq.tabulate(50) { i =>
-      Turn(s"c${i / 5}", i % 5, Seq("user", "assistant")(i % 2), "x" * (2 + i % 4), null, ts(1))
-    }.toDF()
-    val baseline = graft.stats.SchemaInfer.inferConstraints(baseTable).collect().toSeq
-
-    // live stream: window 1 clean, window 2 carries one of each escape
-    val clean = Seq.tabulate(6)(i =>
-      Turn(s"s$i", i % 5, "user", "xx", null, ts(i % 3)))
-    val drift = Seq(
-      Turn("d1", 99, "user", "xxx", null, ts(31)),            // turn_idx above max
-      Turn("d2", 1, "operator", "xxx", null, ts(32)),         // novel role
-      Turn("d3", 2, null, "xxx", null, ts(33)),               // null in required role
-      Turn("d4", 3, "user", "x" * 40, null, ts(34)))          // text above maxLength
-    val all = clean ++ drift
-
-    def summarize(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getString(1),
-        (r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5)))).toSet
-
-    // batch application of the SAME operator (window+agg run in batch)
-    val batchOut = summarize(StreamingValidator.boundsDriftByWindow(
-      all.toDF(), baseline, windowLength = "10 minutes"))
-
-    val in = MemoryStream[Turn]
-    val q = StreamingValidator.boundsDriftByWindow(in.toDF(), baseline,
-        windowLength = "10 minutes")
-      .writeStream.format("memory").queryName("sbounds").outputMode("append").start()
-    try {
-      in.addData(all: _*)
-      q.processAllAvailable()
-      in.addData(Turn("w", 0, "user", "xx", null, ts(55))) // close the windows
-      q.processAllAvailable()
-      val got = summarize(spark.sql("SELECT * FROM sbounds"))
-      got shouldBe batchOut
-      // on this tiny baseline turn_idx/text are also enums (<=16
-      // distinct), so the out-of-bounds rows register as novel too
-      got should contain(("turn_idx", (0L, 1L, 0L, 1L))) // 99: above max + novel
-      got should contain(("role", (0L, 0L, 1L, 1L)))     // null + "operator"
-      got should contain(("text", (0L, 1L, 0L, 1L)))     // len 40 + novel value
-    } finally q.stop()
-  }
-
-  it should "enrich a live event stream as-of a dimension stream with batch parity" in {
-    import spark.implicits._
-    import StreamingValidator.{StreamEvent, DimUpdate}
-    implicit val sqlCtx = spark.sqlContext
-
-    // dimension: config versions for two keys; events interleave around
-    // the version boundaries, incl. an exact-ts tie (seq max wins) and
-    // an event before any version (null payload)
-    val dims = Seq(
-      DimUpdate("u1", ts(2), 1L, "v1"),
-      DimUpdate("u1", ts(5), 2L, "v2"),
-      DimUpdate("u1", ts(5), 3L, "v2b"), // ts tie -> greatest seq
-      DimUpdate("u2", ts(4), 1L, "w1"))
-    val events = Seq(
-      StreamEvent("u1", 10L, ts(1)), // before any version -> null
-      StreamEvent("u1", 11L, ts(2)), // exactly at v1 -> v1
-      StreamEvent("u1", 12L, ts(4)), // between -> v1
-      StreamEvent("u1", 13L, ts(5)), // tie ts -> v2b (greatest seq)
-      StreamEvent("u1", 14L, ts(9)), // after all -> v2b
-      StreamEvent("u2", 20L, ts(3)), // before u2's only version -> null
-      StreamEvent("u2", 21L, ts(8)))
-
-    // the batch oracle: AsOf.asofJoin on the same data
-    val batchOut = graft.pipeline.AsOf.asofJoin(
-        events.toDF("key", "event_id", "ts"),
-        dims.toDF("key", "ts", "seq", "payload"),
-        keyCol = "key", tsCol = "ts", payloadCols = Seq("payload"), seqCol = "seq")
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getString(3))).toSet
-
-    val de = MemoryStream[DimUpdate]
-    val ee = MemoryStream[StreamEvent]
-    val q = StreamingValidator.asofEnrich(ee.toDS(), de.toDS())
-      .writeStream.format("memory").queryName("sasof").outputMode("append").start()
-    try {
-      // micro-batch 1: dims first (the batch-parity discipline), then a
-      // first slice of events in the SAME batch — same-batch dims must
-      // be visible to same-batch events
-      de.addData(dims: _*)
-      ee.addData(events.take(4): _*)
-      q.processAllAvailable()
-      // micro-batch 2: remaining events, incl. a LATE event (ts(3) for
-      // u2 arrives after newer versions exist) — the version-list state
-      // must answer it exactly, not with the newest version
-      ee.addData(events.drop(4): _*)
-      q.processAllAvailable()
-      val got = spark.sql("SELECT key, event_id, asof_payload FROM sasof").collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSet
-      got shouldBe batchOut
-      got should contain(("u1", 13L, "v2b")) // tie resolved like batch
-      got should contain(("u1", 10L, null))  // pre-version event
-
-      // poison row: one null-ts event must not kill the whole query
-      // (batch rule: null ts sorts first, sees no dimension row). The
-      // streaming watermark operator may drop the row outright (null
-      // event time fails the late filter) — the contract pinned here is
-      // no-crash plus null-payload-if-emitted.
-      ee.addData(StreamEvent("u1", 30L, null))
-      q.processAllAvailable()
-      val after = spark.sql("SELECT key, event_id, asof_payload FROM sasof").collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getString(2))).toSet
-      after.filter(_._2 != 30L) shouldBe batchOut // earlier rows undisturbed
-      after.filter(_._2 == 30L).foreach(_._3 shouldBe null)
     } finally q.stop()
   }
 }
