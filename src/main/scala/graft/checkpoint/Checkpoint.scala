@@ -78,7 +78,7 @@ object Checkpoint {
     * otherwise report 0 row violations for the skipped units.
     */
   def completedMetrics(manifestPath: String): Seq[(String, Long, Long)] = {
-    val p = Paths.get(manifestPath)
+    val p = localFile(manifestPath)
     def long(j: JValue, name: String) = Js.field(j, name).collect { case JInt(n) => n.toLong }
     if (!Files.exists(p)) Nil
     else Files.readAllLines(p).asScala.toSeq.flatMap { line =>
@@ -96,10 +96,17 @@ object Checkpoint {
   }
 
   def appendResult(manifestPath: String, r: UnitResult): Unit = {
-    val p = Paths.get(manifestPath)
+    val p = localFile(manifestPath)
     Option(p.getParent).foreach(Files.createDirectories(_))
     Files.writeString(p, toJson(r) + "\n",
       StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+  }
+
+  /** The java.nio file a plain path or `file:` URI names; other schemes fail. */
+  def localFile(path: String): java.nio.file.Path = {
+    val u = new Path(path).toUri
+    require(Option(u.getScheme).forall(_ == "file"), s"$path must be a local path or a file: URI")
+    Paths.get(u.getPath)
   }
 
   /** Stable partition-key value for a unit (the `unit=` partition dir). */
@@ -250,6 +257,10 @@ object Checkpoint {
     val pending = table.files.filterNot(f => done(unitName(f)))
     val filePath = table.df.metadataColumn("_metadata").getField("file_path")
     val nullFlags = table.dataColumns.map(c => column(c).isNull)
+    // every batch projects the data columns plus a string `unit`: compile once, before any write
+    val checks = graft.exprs.ConstraintCompiler.compile(schema,
+        table.df.select(table.dataColumns.map(column) :+ lit(null).cast("string").as("unit"): _*).schema)
+      .fold(e => throw new IllegalArgumentException(e), identity)
     pending.grouped(batchSize).flatMap { batch =>
       val t0 = System.nanoTime()
       val keyByFile = batch.map(f => f -> unitKey(unitName(f))).toMap
@@ -262,8 +273,6 @@ object Checkpoint {
         raise_error(concat(lit("file not in batch lineage: "), filePath)).cast("string"))
       val input = table.df.filter(filePath.isin(batch: _*))
         .select(table.dataColumns.map(column) :+ keyExpr.as("unit"): _*)
-      val checks = graft.exprs.ConstraintCompiler.compile(schema, input.schema)
-        .fold(e => throw new IllegalArgumentException(e), identity)
       val (inObs, vioObs) = (Observation(), Observation())
       val violations = Validator.violationsForChecks(observeUnits(input, inObs, nullFlags), checks,
           Seq("conv_id", "turn_idx"), carryCols = Seq("unit"))

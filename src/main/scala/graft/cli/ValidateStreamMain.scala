@@ -6,6 +6,7 @@ import org.apache.spark.sql.{AnalysisException, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.streaming.Trigger
 import org.json4s.{JInt, JLong, JObject}
+import graft.checkpoint.Checkpoint
 import graft.compile.{Js, TableSchema, TableSchemaCompiler}
 import graft.exprs.Validator
 
@@ -192,11 +193,8 @@ object ValidateStreamMain {
         val commits = new Path(s"$outDir/_checkpoint/commits")
         val sinkLog = new Path(s"$violationsDir/_spark_metadata")
         val fs = commits.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // a local file, as the manifest is; a `file:` URI names the same
-        // directory as the plain path, not a relative `file:` directory
-        val report = new Path(s"$outDir/stream_report.jsonl").toUri
-        require(Option(report.getScheme).forall(_ == "file"), s"the stream report needs a local outDir, got $outDir")
-        val reportPath = Paths.get(report.getPath)
+        // a local file, as the manifest is
+        val reportPath = Checkpoint.localFile(s"$outDir/stream_report.jsonl")
         val reported = if (Files.exists(reportPath)) Files.readString(reportPath) else ""
         val prev = reported.linesIterator.toSeq.reverseIterator.flatMap(fromJson).nextOption()
         // a batch the stream's logs hold but the report does not means a

@@ -1,6 +1,6 @@
 package graft.cli
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 import graft.compile.{TableSchema, TableSchemaCompiler}
 import graft.checkpoint.Checkpoint
@@ -14,10 +14,10 @@ import graft.integrity.Integrity
   *
   * Compiles the schema, runs the resumable checkpointed validation
   * (violations parquet per unit + JSON-lines manifest with per-unit
-  * lineage/metrics), runs the shuffling integrity checks and the stats
-  * profile, prints `valid table at …` / `invalid table at …`, and exits
-  * 0 (clean) / 2 (violations) / 1 (usage or compile error) — mirroring
-  * the reference's valid/invalid/usage protocol.
+  * lineage/metrics), runs the shuffling integrity checks, observing the
+  * stats profile in their scan, prints `valid table at …` / `invalid
+  * table at …`, and exits 0 (clean) / 2 (violations) / 1 (usage or
+  * compile error) — mirroring the reference's valid/invalid/usage protocol.
   */
 object ValidateTableMain {
 
@@ -31,9 +31,9 @@ object ValidateTableMain {
 
   /** One run over `inputDir`: the table is opened (listed, schema
     * inferred) once and that relation feeds the bind report, the
-    * checkpointed validation, the integrity checks and the stats. No
-    * output is read back: the verdict's counts are observed inside the
-    * writes that produce them.
+    * checkpointed validation and the integrity checks. No output is read
+    * back: the verdict's counts and the stats are observed inside the
+    * writes that produce or precede them.
     */
   def run(spark: SparkSession, schema: TableSchema, inputDir: String, outDir: String): Verdict = {
     val table = Checkpoint.openTable(spark, inputDir)
@@ -47,13 +47,19 @@ object ValidateTableMain {
       .foreach(b => System.err.println(s"schema bind: ${b.column} ${b.status} (${b.detail})"))
     val results = Checkpoint.runValidation(table, schema, s"$outDir/violations",
       s"$outDir/manifest.jsonl", batchSize = Checkpoint.DefaultBatchSize)
-    // both integrity checks from ONE full-data shuffle; row-level
-    // orphan emission via broadcast join-back of the offending set
-    val report = Integrity.integrityReport(df)
+    // both integrity checks from ONE full-data shuffle, whose scan also
+    // observes the column profile; orphan rows by broadcast join-back
+    val (cols, statsObs) = (df.columns.toSeq, Observation())
+    val profile = Stats.profileAggs(df, cols)
+    val report = Integrity.integrityReport(df.observe(statsObs, profile.head, profile.tail: _*))
     val nDups = writeCounted(report.duplicateKeys, s"$outDir/uniqueness_violations")
     val nOrph = writeCounted(Integrity.orphanRows(df, report.orphanConvs), s"$outDir/referential_violations")
     report.unpersist() // both members materialized above
-    Stats.profileLong(df, df.columns.toSeq)
+    // the observed profile as one local row of the agg's schema (no job)
+    val wide = df.select(profile: _*).schema
+    val row = Row.fromSeq(wide.fieldNames.toSeq.map(n => statsObs.get.getOrElse(n,
+      throw new IllegalStateException(s"column profile of $inputDir was not observed"))))
+    Stats.explodeProfile(spark.createDataFrame(java.util.List.of(row), wide), cols)
       .write.mode("overwrite").parquet(s"$outDir/stats")
 
     // row violations sum over the FULL manifest (resume-safe): a re-run

@@ -248,8 +248,13 @@ object Stats {
     * every column's aggregates over one scan; the one result row is then
     * exploded to one row per column for reporting and oracle checks.
     */
-  def profileLong(df: DataFrame, columns: Seq[String]): DataFrame = {
-    val perCol = columns.flatMap { name =>
+  def profileLong(df: DataFrame, columns: Seq[String]): DataFrame =
+    explodeProfile(df.select(profileAggs(df, columns): _*), columns)
+
+  /** The profile's wide row: `__total`, then per column `__nulls`,
+    * `__min`, `__max`, `__distinct` (for an `agg` or an `observe`). */
+  def profileAggs(df: DataFrame, columns: Seq[String]): Seq[Column] =
+    count(lit(1)).as("__total") +: columns.flatMap { name =>
       val c = col(name)
       // min/max/distinct need an ordering (maps have none): such a
       // column keeps its count and nulls, the rest stays null
@@ -262,7 +267,9 @@ object Stats {
         ifOrderable(max(c).cast("string"), "string").as(s"${name}__max"),
         ifOrderable(approx_count_distinct(c), "long").as(s"${name}__distinct"))
     }
-    val wide = df.agg(count(lit(1)).as("__total"), perCol: _*)
+
+  /** One row per column from the one wide row of [[profileAggs]]. */
+  def explodeProfile(wide: DataFrame, columns: Seq[String]): DataFrame = {
     val structs = columns.map { name =>
       struct(
         lit(name).as("column"),

@@ -1,12 +1,7 @@
 package graft.cli
 
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
 import graft.SparkTestBase
@@ -71,27 +66,8 @@ class ValidateStreamMainSpec extends AnyFlatSpec with Matchers {
     * query listener saw while it ran.
     */
   private def scansUnder[T](dir: String)(body: => T): (T, Seq[String]) = {
-    val seen = new ConcurrentLinkedQueue[LogicalPlan]()
-    val listener = new QueryExecutionListener {
-      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = seen.add(qe.analyzed)
-      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = seen.add(qe.analyzed)
-    }
-    spark.listenerManager.register(listener)
-    val result =
-      try {
-        val r = body
-        // listener events are delivered in order: once this marker query
-        // is seen, every query `body` ran has been seen too
-        spark.range(1).toDF("scan_marker").collect()
-        val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-        while (!seen.asScala.exists(_.output.exists(_.name == "scan_marker")) && System.nanoTime() < deadline)
-          Thread.sleep(20)
-        seen.asScala.exists(_.output.exists(_.name == "scan_marker")) shouldBe true
-        r
-      } finally spark.listenerManager.unregister(listener)
-    val roots = seen.asScala.toSeq.flatMap(_.collect { case l: LogicalRelation => l.relation })
-      .collect { case r: HadoopFsRelation => r.location.rootPaths.map(_.toUri.getPath) }.flatten
-    (result, roots.filter(_.startsWith(dir)))
+    val (r, queries) = QueryScans.under(spark, dir)(body)
+    (r, queries.flatten)
   }
 
   "ValidateStreamMain.run" should "count two passes' new violations in-stream, reading no output back" in {
