@@ -87,8 +87,7 @@ object Bench {
     // engine; production reads parquet, as ClusterScalingBench does.
     val transcripts = graft.sources.TranscriptDerive.fromLineitem(spark, sfDir).cache()
     val nTurns = transcripts.count()
-    val schema = graft.compile.TableSchemaCompiler
-      .compileString(SparkEntry.querySchema).toOption.get
+    val schema = graft.gates.Inputs.schema
     graft.exprs.Validator.validateTranscripts(transcripts, schema).count() // warm
     val tV0 = System.nanoTime()
     graft.exprs.Validator.validateTranscripts(transcripts, schema).count()
@@ -194,41 +193,60 @@ object BenchOne {
   }
 }
 
-/** Scaffolding shared by the local-cluster scaling benches: executor
-  * classpath resolution, the session recipe, and the generate-if-absent
-  * input guard — in ONE place so a fix to any of them (e.g. the
-  * stopped-cluster starvation workaround, the relative-classpath bug)
-  * cannot silently diverge between the scan-shaped and shuffle-shaped
-  * benches.
+/** The measurement loop shared by the local-cluster scaling benches:
+  * executor classpath resolution, the session recipe, the
+  * generate-if-absent input guard and the timing — in ONE place so a
+  * fix to any of them (e.g. the stopped-cluster starvation workaround,
+  * the relative-classpath bug) cannot silently diverge between the
+  * scan-, window- and shuffle-shaped benches.
   */
 private[graft] object LocalClusterBench {
   // resolve from this class's own code source so the bench works from
   // any CWD (a relative path gave executors an empty classpath)
-  lazy val classesDir: String = Option(getClass.getProtectionDomain.getCodeSource)
+  private lazy val classesDir: String = Option(getClass.getProtectionDomain.getCodeSource)
     .map(cs => new java.io.File(cs.getLocation.toURI).getAbsolutePath)
     .getOrElse(new java.io.File("target/scala-2.13/classes").getAbsolutePath)
 
   def coresPerExec: Int = sys.env.getOrElse("SPARK_GRAFT_EXEC_CORES", "4").toInt
-  def execMemMb: Int = sys.env.getOrElse("SPARK_GRAFT_EXEC_MEM_MB", "8192").toInt
+  private def execMemMb: Int = sys.env.getOrElse("SPARK_GRAFT_EXEC_MEM_MB", "8192").toInt
 
-  def session(executors: Int, shufflePartitions: Int): SparkSession = {
-    val s = SparkSession.builder()
-      .master(s"local-cluster[$executors,$coresPerExec,$execMemMb]")
-      .config("spark.executor.extraClassPath", classesDir)
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
+  /** The generated transcripts input the scan- and window-shaped
+    * benches share: one row-count-keyed path, one generation rule, so
+    * the two never store a byte-identical multi-GB copy each (and a
+    * different default size can never silently reuse the other's
+    * input through the _SUCCESS check).
+    */
+  def transcriptsInput: (String, SparkSession => Unit) = {
+    val rows = sys.env.getOrElse("SPARK_GRAFT_SCALE_ROWS", "32000000").toLong
+    val input = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", s"/tmp/graft_scaling_input_$rows")
+    (input, gen => graft.sources.TranscriptGen
+      .generate(gen, rows / 8, 8, graft.sources.TranscriptGen.all)
+      .repartition(128).write.mode("overwrite").parquet(input))
   }
 
-  /** Generate `input` with a plain local session if absent, leaving no
-    * active/default session behind (a leftover would shadow the
-    * local-cluster session the measurement needs).
+  final case class Measurement(executors: Int, inputRows: Long, result: Long, sec: Double)
+
+  /** One measurement at the executor count in `args`: generate `input`
+    * with `write` if absent, open `local-cluster[N,cores,mem]` with
+    * `partitionsPerCore` shuffle partitions per core, run `action` once
+    * to warm up (codegen + shuffle services; its value is the
+    * measurement's `result`), then time it best of 2.
+    *
+    * One measurement per JVM, and a missing executor count is refused:
+    * a stopped local-cluster leaves master state that starves
+    * follow-up clusters in the same process, so an all-in-one run would
+    * inflate the N=4 time (BENCH.md methodology: one level per JVM,
+    * alternate 1/4 pairs, best-of per level).
     */
-  def ensureInput(input: String)(write: SparkSession => Unit): Unit =
+  def measure(bench: String, args: Array[String], input: String, partitionsPerCore: Int,
+              write: SparkSession => Unit)(action: DataFrame => Long): Measurement = {
+    val executors = args.headOption.map(_.toInt).getOrElse {
+      System.err.println(s"usage: $bench <executors> -- one measurement per JVM; " +
+        "alternate `1` and `4` invocations and take best-of per level")
+      sys.exit(1)
+    }
+    // generate with a plain local session, leaving no active/default
+    // session behind (a leftover would shadow the local-cluster session)
     if (!new java.io.File(s"$input/_SUCCESS").exists()) {
       val gen = SparkSession.builder().master("local[32]")
         .config("spark.ui.enabled", "false").getOrCreate()
@@ -237,10 +255,28 @@ private[graft] object LocalClusterBench {
       gen.stop()
       SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
     }
-
-  def teardown(s: SparkSession): Unit = {
-    s.stop()
-    SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
+    val s = SparkSession.builder()
+      .master(s"local-cluster[$executors,$coresPerExec,$execMemMb]")
+      .config("spark.executor.extraClassPath", classesDir)
+      .config("spark.sql.shuffle.partitions", (executors * coresPerExec * partitionsPerCore).toString)
+      .config("spark.sql.adaptive.enabled", "true")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    try {
+      val df = s.read.parquet(input)
+      val result = action(df)
+      val sec = (1 to 2).map { _ =>
+        val t0 = System.nanoTime()
+        action(df)
+        (System.nanoTime() - t0) / 1e9
+      }.min
+      Measurement(executors, df.count(), result, sec)
+    } finally {
+      s.stop()
+      SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
+    }
   }
 }
 
@@ -253,55 +289,12 @@ private[graft] object LocalClusterBench {
 object ClusterScalingBench {
   def main(args: Array[String]): Unit = {
     import LocalClusterBench._
-    val rows = sys.env.getOrElse("SPARK_GRAFT_SCALE_ROWS", "32000000").toLong
-    // default dir keyed by row count: the two scaling benches previously
-    // shared one dir with different default sizes, and the _SUCCESS check
-    // silently reused whichever input was generated first
-    val input = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", s"/tmp/graft_scaling_input_$rows")
-
-    def session(executors: Int): SparkSession =
-      LocalClusterBench.session(executors, executors * coresPerExec)
-
-    ensureInput(input) { gen =>
-      graft.sources.TranscriptGen
-        .generate(gen, rows / 8, 8, graft.sources.TranscriptGen.all)
-        .repartition(128).write.mode("overwrite").parquet(input)
+    val (input, write) = transcriptsInput
+    val schema = graft.gates.Inputs.schema
+    val m = measure("ClusterScalingBench", args, input, partitionsPerCore = 1, write) { df =>
+      graft.exprs.Validator.validateTranscripts(df, schema).count()
     }
-    val schema = graft.compile.TableSchemaCompiler
-      .compileString(SparkEntry.querySchema).toOption.get
-
-    def run(executors: Int): (Long, Double) = {
-      val s = session(executors)
-      try {
-        val df = s.read.parquet(input)
-        graft.exprs.Validator.validateTranscripts(df, schema).count() // warm-up
-        val times = (1 to 2).map { _ =>
-          val t0 = System.nanoTime()
-          graft.exprs.Validator.validateTranscripts(df, schema).count()
-          (System.nanoTime() - t0) / 1e9
-        }
-        (df.count(), times.min)
-      } finally teardown(s)
-    }
-
-    args.headOption match {
-      case Some(e) =>
-        // one measurement per JVM — a stopped local-cluster leaves master
-        // state that starves follow-up clusters in the same process
-        val executors = e.toInt
-        val (n, sec) = run(executors)
-        println(s"""{"metric":"cluster_scaling_single","executors":$executors,"cores_per_executor":$coresPerExec,"input_rows":$n,"sec":$sec,"turns_per_sec":${(n / sec).round}}""")
-      case None =>
-        // refuse to measure multiple local-clusters in one JVM: a stopped
-        // local-cluster leaves master state that starves follow-up
-        // clusters in-process, so an all-in-one run would produce the
-        // inflated t4 this mode exists to avoid (BENCH.md methodology:
-        // one level per JVM, alternate 1/4 pairs, best-of per level)
-        System.err.println(
-          "usage: ClusterScalingBench <executors> -- one measurement per JVM; " +
-            "alternate `1` and `4` invocations and take best-of per level")
-        sys.exit(1)
-    }
+    println(s"""{"metric":"cluster_scaling_single","executors":${m.executors},"cores_per_executor":$coresPerExec,"input_rows":${m.inputRows},"sec":${m.sec},"turns_per_sec":${(m.inputRows / m.sec).round}}""")
   }
 }
 
@@ -310,47 +303,19 @@ object ClusterScalingBench {
   * measured; the third physical family — one conversation-keyed
   * exchange feeding a partitioned window and a per-key aggregation —
   * was not). Runs [[graft.pipeline.Conversations.convDigest]] (the
-  * gated conv_digest plan, verbatim) over a generated transcripts
-  * table at N executor JVMs: one cluster per JVM, alternating N/4N
-  * best-of pairs, the same methodology as [[ClusterScalingBench]].
-  * The digest count is printed and must match across levels (the
-  * value-check that the timed work is the real work).
+  * gated conv_digest plan, verbatim) over the same generated
+  * transcripts table as [[ClusterScalingBench]], with the same
+  * methodology. The digest count is printed and must match across
+  * levels (the value-check that the timed work is the real work).
   */
 object WindowScalingBench {
   def main(args: Array[String]): Unit = {
     import LocalClusterBench._
-    val rows = sys.env.getOrElse("SPARK_GRAFT_SCALE_ROWS", "32000000").toLong
-    // same generation rule AND row-count-keyed path as ClusterScalingBench:
-    // the two benches share one on-disk input instead of storing a
-    // byte-identical multi-GB copy each
-    val input = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", s"/tmp/graft_scaling_input_$rows")
-
-    ensureInput(input) { gen =>
-      graft.sources.TranscriptGen
-        .generate(gen, rows / 8, 8, graft.sources.TranscriptGen.all)
-        .repartition(128).write.mode("overwrite").parquet(input)
+    val (input, write) = transcriptsInput
+    val m = measure("WindowScalingBench", args, input, partitionsPerCore = 1, write) { df =>
+      graft.pipeline.Conversations.convDigest(df).count()
     }
-
-    def run(executors: Int): (Long, Long, Double) = {
-      val s = LocalClusterBench.session(executors, executors * coresPerExec)
-      try {
-        val df = s.read.parquet(input)
-        def digest() = graft.pipeline.Conversations.convDigest(df).count()
-        val convs = digest() // warm-up (codegen + shuffle services)
-        val times = (1 to 2).map { _ =>
-          val t0 = System.nanoTime()
-          digest()
-          (System.nanoTime() - t0) / 1e9
-        }
-        (df.count(), convs, times.min)
-      } finally teardown(s)
-    }
-
-    // one measurement per JVM (stopped local-clusters starve follow-up
-    // clusters in-process — same constraint as ClusterScalingBench)
-    val executors = args.headOption.getOrElse("1").toInt
-    val (n, convs, sec) = run(executors)
-    println(s"""{"metric":"window_scaling_single","executors":$executors,"cores_per_executor":$coresPerExec,"input_rows":$n,"convs":$convs,"sec":$sec,"turns_per_sec":${(n / sec).round}}""")
+    println(s"""{"metric":"window_scaling_single","executors":${m.executors},"cores_per_executor":$coresPerExec,"input_rows":${m.inputRows},"convs":${m.result},"sec":${m.sec},"turns_per_sec":${(m.inputRows / m.sec).round}}""")
   }
 }
 
@@ -391,32 +356,12 @@ object ShuffleScalingBench {
       }
       s.range(n).select(col("id").as("doc_id"), concat_ws(" ", toks: _*).as("text"))
     }
-    ensureInput(input) { gen =>
-      corpus(gen, docs).repartition(128).write.mode("overwrite").parquet(input)
+    // 2x cores for the join-heavy plan: the band self-join's exchange
+    // benefits from finer partitions than the scan-shaped flagship
+    val m = measure("ShuffleScalingBench", args, input, partitionsPerCore = 2,
+        corpus(_, docs).repartition(128).write.mode("overwrite").parquet(input)) { df =>
+      graft.pipeline.Dedup.minhashPairs(df, k = 24, bands = 12, threshold = 0.5).count()
     }
-
-    def run(executors: Int): (Long, Long, Double) = {
-      // 2x cores for the join-heavy plan: the band self-join's exchange
-      // benefits from finer partitions than the scan-shaped flagship
-      val s = LocalClusterBench.session(executors, executors * coresPerExec * 2)
-      try {
-        val df = s.read.parquet(input)
-        def pairs() = graft.pipeline.Dedup
-          .minhashPairs(df, k = 24, bands = 12, threshold = 0.5).count()
-        val p = pairs() // warm-up (codegen + shuffle services)
-        val times = (1 to 2).map { _ =>
-          val t0 = System.nanoTime()
-          pairs()
-          (System.nanoTime() - t0) / 1e9
-        }
-        (df.count(), p, times.min)
-      } finally teardown(s)
-    }
-
-    // one measurement per JVM (stopped local-clusters starve follow-up
-    // clusters in-process — same constraint as ClusterScalingBench)
-    val executors = args.headOption.getOrElse("1").toInt
-    val (n, p, sec) = run(executors)
-    println(s"""{"metric":"shuffle_scaling_single","executors":$executors,"cores_per_executor":$coresPerExec,"input_docs":$n,"pairs":$p,"sec":$sec,"docs_per_sec":${(n / sec).round}}""")
+    println(s"""{"metric":"shuffle_scaling_single","executors":${m.executors},"cores_per_executor":$coresPerExec,"input_docs":${m.inputRows},"pairs":${m.result},"sec":${m.sec},"docs_per_sec":${(m.inputRows / m.sec).round}}""")
   }
 }

@@ -602,7 +602,7 @@ object TextOps {
     * over tokens of `ln(count(token) / total_tokens)`. Repetitive or
     * in-domain documents score high (close to 0); documents full of
     * rare garbage score very negative — threshold with
-    * [[graft.stats.Stats.aboveQuantileApprox]] like any quality score.
+    * [[graft.stats.Stats.aboveQuantileExact]] like any quality score.
     *
     * Scale shape: ONE tokenize aggregates to per-doc (doc, token, c)
     * counts — the LM derives from that aggregate (shuffle bounded by

@@ -54,32 +54,16 @@ object Stats {
     * broadcast cross-join of a single row, so the filter itself stays
     * a map-side scan.
     *
-    * The caller chooses the threshold estimator explicitly — there is
-    * deliberately NO default (a scale-trap flagged in round 3): the
-    * exact form buffers one entry per DISTINCT value of `valueExpr` on
-    * the final reducer — fine for low-cardinality measures (lengths,
-    * counts, bucketed scores) and for oracle replays, wrong for a
-    * continuous score over a 100-TB corpus. [[aboveQuantileApprox]] is
-    * the production form there: approx_percentile is a bounded-memory
-    * mergeable sketch with the identical plan shape.
+    * Scale note: the exact percentile buffers one entry per DISTINCT
+    * value of `valueExpr` on the final reducer — fine for
+    * low-cardinality measures (lengths, counts, bucketed scores) and
+    * for oracle replays, wrong for a continuous score over a 100-TB
+    * corpus, where `approx_percentile` (a bounded-memory mergeable
+    * sketch) in the same plan shape is the threshold to use.
     */
-  def aboveQuantileExact(df: DataFrame, valueExpr: String, q: Double): DataFrame =
-    aboveQuantileWith(df, valueExpr, s"percentile($valueExpr, $q)", q)
-
-  /** Scale-safe quantile cutoff: bounded-memory t-digest-style sketch
-    * threshold (`accuracy` trades memory for error, Spark default 10k).
-    * Same plan shape as [[aboveQuantileExact]]; the kept set can differ
-    * from exact only for rows between the true and sketched quantile
-    * (StatsSpec pins the band on a continuous score).
-    */
-  def aboveQuantileApprox(df: DataFrame, valueExpr: String, q: Double,
-                          accuracy: Int = 10000): DataFrame =
-    aboveQuantileWith(df, valueExpr, s"approx_percentile($valueExpr, $q, $accuracy)", q)
-
-  private def aboveQuantileWith(df: DataFrame, valueExpr: String,
-                                thrExpr: String, q: Double): DataFrame = {
+  def aboveQuantileExact(df: DataFrame, valueExpr: String, q: Double): DataFrame = {
     require(q >= 0.0 && q <= 1.0, s"quantile must be in [0,1], got $q")
-    val thr = df.agg(expr(thrExpr).as("__thr"))
+    val thr = df.agg(expr(s"percentile($valueExpr, $q)").as("__thr"))
     df.crossJoin(broadcast(thr))
       .filter(expr(valueExpr).cast("double") >= col("__thr").cast("double"))
       .drop("__thr")
@@ -96,31 +80,16 @@ object Stats {
     * Scale shape: thresholds come from ONE groupBy(group) percentile
     * aggregation — |groups| rows, broadcast-sized by construction —
     * attached with a broadcast null-safe equi-join; the filter stays a
-    * map-side scan. Same explicit Exact/Approx split as the global
-    * cutoffs: exact buffers one entry per DISTINCT value per group on
-    * the reducers — fine for low-cardinality measures and oracle
-    * replays; [[aboveQuantileByGroupApprox]] is the production form
-    * for a continuous score over a 100-TB corpus.
+    * map-side scan. Same scale note as the global cutoff: exact buffers
+    * one entry per DISTINCT value per group on the reducers.
     */
   def aboveQuantileByGroupExact(df: DataFrame, valueExpr: String, q: Double,
-                                groupCol: String): DataFrame =
-    aboveQuantileByGroupWith(df, valueExpr, s"percentile($valueExpr, $q)", q, groupCol)
-
-  /** Bounded-memory sketch form of [[aboveQuantileByGroupExact]]
-    * (approx_percentile partial-aggregates map-side per group).
-    */
-  def aboveQuantileByGroupApprox(df: DataFrame, valueExpr: String, q: Double,
-                                 groupCol: String, accuracy: Int = 10000): DataFrame =
-    aboveQuantileByGroupWith(df, valueExpr,
-      s"approx_percentile($valueExpr, $q, $accuracy)", q, groupCol)
-
-  private def aboveQuantileByGroupWith(df: DataFrame, valueExpr: String,
-                                       thrExpr: String, q: Double,
-                                       groupCol: String): DataFrame = {
+                                groupCol: String): DataFrame = {
     require(q >= 0.0 && q <= 1.0, s"quantile must be in [0,1], got $q")
     require(!df.columns.contains("__grp") && !df.columns.contains("__thr"),
       "input already carries a __grp/__thr column; rename it before the cutoff")
-    val thr = df.groupBy(col(groupCol).as("__grp")).agg(expr(thrExpr).as("__thr"))
+    val thr = df.groupBy(col(groupCol).as("__grp"))
+      .agg(expr(s"percentile($valueExpr, $q)").as("__thr"))
     df.join(broadcast(thr), col(groupCol) <=> col("__grp"))
       .filter(expr(valueExpr).cast("double") >= col("__thr").cast("double"))
       .drop("__grp", "__thr")
@@ -209,30 +178,16 @@ object Stats {
     * same boundary [[aboveQuantileExact]] uses; a NULL score meets no
     * threshold and lands in the lowest bucket). ONE exact-percentile
     * aggregation computes every threshold, broadcast into a map-side
-    * CASE — same plan shape as the cutoff, one extra column out.
-    *
-    * Same estimator caveat as the cutoffs: exact buffers distinct
-    * values on one reducer — use [[bucketByQuantilesApprox]] for a
-    * continuous score over a 100-TB corpus.
+    * CASE — same plan shape and scale note as the cutoff, one extra
+    * column out.
     */
   def bucketByQuantilesExact(df: DataFrame, valueExpr: String, qs: Seq[Double],
-                             labels: Seq[String]): DataFrame =
-    bucketWith(df, valueExpr,
-      s"percentile($valueExpr, array(${qs.mkString(",")}))", qs, labels)
-
-  /** Bounded-memory sketch form of [[bucketByQuantilesExact]]. */
-  def bucketByQuantilesApprox(df: DataFrame, valueExpr: String, qs: Seq[Double],
-                              labels: Seq[String], accuracy: Int = 10000): DataFrame =
-    bucketWith(df, valueExpr,
-      s"approx_percentile($valueExpr, array(${qs.mkString(",")}), $accuracy)", qs, labels)
-
-  private def bucketWith(df: DataFrame, valueExpr: String, thrExpr: String,
-                         qs: Seq[Double], labels: Seq[String]): DataFrame = {
+                             labels: Seq[String]): DataFrame = {
     require(labels.size == qs.size + 1,
       s"need ${qs.size + 1} labels for ${qs.size} thresholds, got ${labels.size}")
     require(qs == qs.sorted && qs.forall(q => q > 0.0 && q < 1.0),
       s"quantile fractions must be sorted and in (0,1), got $qs")
-    val thr = df.agg(expr(thrExpr).as("__thrs"))
+    val thr = df.agg(expr(s"percentile($valueExpr, array(${qs.mkString(",")}))").as("__thrs"))
     val v = expr(valueExpr).cast("double")
     // outermost WHEN checks the highest threshold: bucket = last label
     // whose threshold the value meets

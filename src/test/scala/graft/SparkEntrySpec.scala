@@ -39,4 +39,12 @@ class SparkEntrySpec extends AnyFlatSpec with Matchers {
     SparkEntry.queries.keySet shouldBe gateKeys
     SparkEntry.oracleSql.keySet shouldBe gateKeys
   }
+
+  it should "declare each gate once, with a plan and a non-empty oracle" in {
+    // a duplicate name would silently drop a gate when the list becomes a map
+    val names = SparkEntry.gates.map(_.name)
+    names.diff(names.distinct) shouldBe empty
+    SparkEntry.gates.filter(g => g.run == null || g.oracle == null || g.oracle.trim.isEmpty)
+      .map(_.name) shouldBe empty
+  }
 }

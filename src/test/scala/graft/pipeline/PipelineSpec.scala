@@ -19,7 +19,7 @@ class PipelineSpec extends AnyFlatSpec with Matchers {
   private def embeddings = spark.read.parquet(s"$sfDir/embeddings.parquet")
 
   "Dedup.minhashPairs" should "find every planted exact and near duplicate" in {
-    val pool = graft.SparkEntry.dedupPool(spark, sfDir).cache()
+    val pool = graft.gates.Inputs.dedupPool(spark, sfDir).cache()
     try {
       val pairs = Dedup.minhashPairs(pool, threshold = 0.5).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
@@ -115,7 +115,7 @@ class PipelineSpec extends AnyFlatSpec with Matchers {
   }
 
   it should "match union-find on the LSH pairs" in {
-    val pool = graft.SparkEntry.dedupPool(spark, sfDir).cache()
+    val pool = graft.gates.Inputs.dedupPool(spark, sfDir).cache()
     try {
       val pairs = Dedup.minhashPairs(pool, k = 24, bands = 12, threshold = 0.5)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toSeq
@@ -125,7 +125,7 @@ class PipelineSpec extends AnyFlatSpec with Matchers {
   }
 
   "Dedup.nearDupSurvivors" should "keep exactly one doc per near-dup cluster" in {
-    val pool = graft.SparkEntry.dedupPool(spark, sfDir).cache()
+    val pool = graft.gates.Inputs.dedupPool(spark, sfDir).cache()
     try {
       val pairs = Dedup.minhashPairs(pool, k = 24, bands = 12, threshold = 0.5)
       val comps = Dedup.connectedComponents(pairs).cache()
@@ -149,7 +149,7 @@ class PipelineSpec extends AnyFlatSpec with Matchers {
   }
 
   "Dedup.nearDupSurvivorsBy" should "keep the best-scoring member per cluster" in {
-    val pool = graft.SparkEntry.dedupPool(spark, sfDir).cache()
+    val pool = graft.gates.Inputs.dedupPool(spark, sfDir).cache()
     try {
       val comps = Dedup.connectedComponents(
         Dedup.minhashPairs(pool, k = 24, bands = 12, threshold = 0.5)).cache()
@@ -229,14 +229,14 @@ class PipelineSpec extends AnyFlatSpec with Matchers {
   }
 
   it should "report jaccard 1.0 for exact duplicates" in {
-    val pool = graft.SparkEntry.dedupPool(spark, sfDir)
+    val pool = graft.gates.Inputs.dedupPool(spark, sfDir)
     val exact = Dedup.minhashPairs(pool, threshold = 0.5)
       .filter(col("id_a") < 1000000L && col("id_b") - col("id_a") === 1000000L)
     exact.collect().map(_.getDouble(2)).foreach(_ shouldBe 1.0)
   }
 
   it should "run end-to-end at a non-default shingle size" in {
-    val pool = graft.SparkEntry.dedupPool(spark, sfDir)
+    val pool = graft.gates.Inputs.dedupPool(spark, sfDir)
     // exact duplicates have jaccard 1.0 at ANY n, so the planted pair set
     // must survive a bigram pipeline too
     val pairs = Dedup.minhashPairs(pool, threshold = 0.5, shingleN = 2)
@@ -249,7 +249,7 @@ class PipelineSpec extends AnyFlatSpec with Matchers {
   }
 
   "Dedup.simhashPairs" should "find exact duplicates at hamming 0 and respect the bound" in {
-    val pool = graft.SparkEntry.dedupPool(spark, sfDir)
+    val pool = graft.gates.Inputs.dedupPool(spark, sfDir)
     val pairs = Dedup.simhashPairs(pool, maxHamming = 3).collect()
     val byPair = pairs.map(r => (r.getLong(0), r.getLong(1)) -> r.getAs[Int]("hamming")).toMap
     val exactPlanted = docs.filter(col("doc_id") % 7 === 3)
@@ -280,7 +280,7 @@ class PipelineSpec extends AnyFlatSpec with Matchers {
   }
 
   "Dedup.minhashPairsDeduped" should "expand back to exactly the plain LSH pair set" in {
-    val pool = graft.SparkEntry.dedupPool(spark, sfDir).cache()
+    val pool = graft.gates.Inputs.dedupPool(spark, sfDir).cache()
     try {
       def norm(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(r => (r.getLong(0), r.getLong(1),
@@ -416,7 +416,7 @@ class PipelineSpec extends AnyFlatSpec with Matchers {
     // perturbed copy of its base (cos ~0.998 vs densest base pair
     // 0.605), so the true top-1 is known without brute force
     val e = embeddings
-    val q = graft.SparkEntry.embPool(spark, sfDir).filter(col("vec_id") >= 2000000)
+    val q = graft.gates.Inputs.embPool(spark, sfDir).filter(col("vec_id") >= 2000000)
     val cents = Ann.kmeansCentroids(e, k = 8, iters = 4)
     val ivf = Ann.ivfTopK(q, e, cents, k = 10, nprobe = 3)
     val nq = q.count()

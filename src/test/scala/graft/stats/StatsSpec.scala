@@ -221,20 +221,6 @@ class StatsSpec extends AnyFlatSpec with Matchers {
     Stats.aboveQuantileExact(df, "v * 2", 0.0).count() shouldBe 10
   }
 
-  "Stats.aboveQuantileApprox" should "keep a set within a band of exact on a continuous score" in {
-    import spark.implicits._
-    // continuous score with all-distinct values: the shape the exact
-    // form must NOT be used on at scale (one reducer entry per value)
-    val df = (1 to 5000).map(i => math.sin(i.toDouble) * 1000 + i * 0.001).toDF("score")
-    val exact = Stats.aboveQuantileExact(df, "score", 0.9).count()
-    val approx = Stats.aboveQuantileApprox(df, "score", 0.9).count()
-    // sketch error moves the cutoff only within a small rank band
-    math.abs(approx - exact).toDouble should be <= (0.01 * 5000)
-    // and at default accuracy on this size the sketch is rank-exact
-    // for the vast majority of draws; sanity: keeps roughly 10%
-    approx.toDouble shouldBe (500.0 +- 50.0)
-  }
-
   "Stats.bucketByQuantilesExact" should "assign terciles with >= boundaries, nulls lowest" in {
     import spark.implicits._
     // 1..9: terciles at quantile_cont(1/3)=11/3~3.67 and (2/3)=19/3~6.33
@@ -272,44 +258,5 @@ class StatsSpec extends AnyFlatSpec with Matchers {
     // the output keeps the input schema (threshold plumbing dropped)
     Stats.aboveQuantileByGroupExact(df, "score", 0.5, "grp").columns.toSeq shouldBe
       Seq("id", "grp", "score")
-  }
-
-  "Stats.aboveQuantileByGroupApprox" should "track exact within a rank band per group" in {
-    import spark.implicits._
-    val df = (1 to 4000).map { i =>
-      (i.toLong, s"g${i % 4}", math.sin(i.toDouble) * 1000 + i * 0.001)
-    }.toDF("id", "grp", "score")
-    val exact = Stats.aboveQuantileByGroupExact(df, "score", 0.9, "grp").count()
-    val approx = Stats.aboveQuantileByGroupApprox(df, "score", 0.9, "grp").count()
-    math.abs(approx - exact).toDouble should be <= (0.01 * 4000)
-  }
-
-  "Stats.bucketByQuantilesApprox" should "track the exact buckets within a rank band" in {
-    import spark.implicits._
-    // continuous all-distinct score: the production shape for the
-    // approx form (exact would put every value on one reducer)
-    val df = (1 to 5000).map(i => math.sin(i.toDouble) * 1000 + i * 0.001).toDF("score")
-    val labels = Seq("tail", "middle", "head")
-    def counts(out: org.apache.spark.sql.DataFrame) =
-      out.groupBy("bucket").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val exact = counts(Stats.bucketByQuantilesExact(df, "score", Seq(1.0 / 3, 2.0 / 3), labels))
-    val approx = counts(Stats.bucketByQuantilesApprox(df, "score", Seq(1.0 / 3, 2.0 / 3), labels))
-    labels.foreach { l =>
-      math.abs(approx(l) - exact(l)).toDouble should be <= (0.01 * 5000)
-    }
-    // int-typed column: approx_percentile is type-preserving (returns
-    // actual INT data values, no interpolation) — the threshold cast in
-    // bucketWith must still assign every value and respect ordering
-    val ints = ((1 to 9).map(Some(_)) :+ None).toDF("v")
-    val gotInt = Stats.bucketByQuantilesApprox(ints, "v", Seq(1.0 / 3, 2.0 / 3), labels)
-      .collect().map(r => (Option(r.get(0)), r.getString(1))).toMap
-    gotInt(None) shouldBe "tail" // null meets no threshold -> lowest
-    gotInt(Some(1)) shouldBe "tail"
-    gotInt(Some(9)) shouldBe "head"
-    // bucket assignment is monotone in v
-    val order = labels.zipWithIndex.toMap
-    (1 to 8).foreach { v =>
-      order(gotInt(Some(v))) should be <= order(gotInt(Some(v + 1)))
-    }
   }
 }
