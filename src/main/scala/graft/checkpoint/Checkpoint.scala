@@ -1,17 +1,21 @@
 package graft.checkpoint
 
 import java.net.URI
+import java.nio.ByteBuffer
+import java.nio.channels.FileChannel
+import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths, StandardOpenOption}
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
+import scala.util.Try
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Encoder, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
-import org.json4s.{JBool, JInt, JLong, JNull, JObject, JString, JValue}
+import org.json4s.{JBool, JLong, JNull, JObject, JString, JValue}
 import graft.compile.{Js, TableSchema}
+import graft.exprs.ConstraintCompiler.tableColumn
 import graft.exprs.Validator
 
 /** Resumable validation runs (north_rule: "resumable from checkpoint
@@ -77,28 +81,55 @@ object Checkpoint {
     * the current invocation — a resumed (or already-complete) run would
     * otherwise report 0 row violations for the skipped units.
     */
-  def completedMetrics(manifestPath: String): Seq[(String, Long, Long)] = {
-    val p = localFile(manifestPath)
-    def long(j: JValue, name: String) = Js.field(j, name).collect { case JInt(n) => n.toLong }
-    if (!Files.exists(p)) Nil
-    else Files.readAllLines(p).asScala.toSeq.flatMap { line =>
-      // a line that does not parse, or lacks a metric field, is a torn
-      // write (crash mid-append): treating it as 0 violations would
-      // under-count the verdict, so treat the unit as NOT completed —
-      // resume re-validates it (idempotent via dynamic partition overwrite)
+  def completedMetrics(manifestPath: String): Seq[(String, Long, Long)] =
+    // a line that lacks a metric field is torn too: treating it as 0
+    // violations would under-count the verdict, so the unit is NOT
+    // completed — resume re-validates it (idempotent via dynamic
+    // partition overwrite)
+    readLedger(localFile(manifestPath)) { j =>
       for {
-        j <- Js.parse(line).toOption
         unit <- Js.stringField(j, "unit")
-        rows <- long(j, "rows")
-        vios <- long(j, "violations")
+        rows <- Js.longField(j, "rows")
+        vios <- Js.longField(j, "violations")
       } yield (unit, rows, vios)
     }
-  }
 
-  def appendResult(manifestPath: String, r: UnitResult): Unit = {
-    val p = localFile(manifestPath)
-    Option(p.getParent).foreach(Files.createDirectories(_))
-    Files.writeString(p, toJson(r) + "\n",
+  /** Append a batch's manifest lines in one write. */
+  def appendResults(manifestPath: String, rs: Seq[UnitResult]): Unit =
+    appendLedger(localFile(manifestPath), rs.map(toJson))
+
+  /** The records of a JSON-lines ledger (the manifest, the streaming
+    * report), in file order. A line that does not decode as UTF-8 or
+    * does not parse, or that `record` rejects, is a torn write (a crash
+    * mid-append, cut anywhere — inside a multibyte character too) and is
+    * skipped.
+    */
+  def readLedger[T](path: java.nio.file.Path)(record: JValue => Option[T]): Seq[T] =
+    if (!Files.exists(path)) Nil
+    else {
+      // ISO-8859-1 maps each byte to one char, so a line's bytes survive
+      // the split intact for the strict UTF-8 decode
+      val lines = new String(Files.readAllBytes(path), StandardCharsets.ISO_8859_1).split("\n", -1).toSeq
+      val utf8 = StandardCharsets.UTF_8.newDecoder() // REPORTs malformed input
+      lines.flatMap { line =>
+        Try(utf8.decode(ByteBuffer.wrap(line.getBytes(StandardCharsets.ISO_8859_1))).toString).toOption
+          .flatMap(l => Js.parse(l).toOption).flatMap(record)
+      }
+    }
+
+  /** Append `lines` to a JSON-lines ledger in one write. A torn last
+    * line has no newline: the append starts a fresh line, so the first
+    * new record is not glued onto the fragment (and lost with it).
+    */
+  def appendLedger(path: java.nio.file.Path, lines: Seq[String]): Unit = {
+    Option(path.getParent).foreach(Files.createDirectories(_))
+    val torn = Files.exists(path) && Files.size(path) > 0 && {
+      val ch = FileChannel.open(path)
+      val last = ByteBuffer.allocate(1)
+      try ch.read(last, ch.size - 1) finally ch.close()
+      last.get(0) != '\n'
+    }
+    Files.writeString(path, (if (torn) "\n" else "") + lines.map(_ + "\n").mkString,
       StandardOpenOption.CREATE, StandardOpenOption.APPEND)
   }
 
@@ -165,8 +196,6 @@ object Checkpoint {
     val u = new URI(filePath)
     if (u.getScheme == "file") u.getPath else filePath
   }
-
-  private def column(name: String): Column = col("`" + name.replace("`", "``") + "`")
 
   private type Counts = mutable.HashMap[String, Array[Long]]
 
@@ -245,8 +274,8 @@ object Checkpoint {
     *     fails: a path-form mismatch would otherwise record a full file
     *     as 0 rows and 0 violations.
     *
-    * Manifest entries are appended only after the batch's write
-    * completes, so a kill mid-batch redoes exactly that batch and the
+    * A batch's manifest entries are appended, in one write, only after
+    * its write completes, so a kill mid-batch redoes exactly that batch and the
     * final outputs are identical to an uninterrupted run. Returns
     * results for units processed in THIS run.
     */
@@ -256,11 +285,10 @@ object Checkpoint {
     val done = completedUnits(manifestPath)
     val pending = table.files.filterNot(f => done(unitName(f)))
     val filePath = table.df.metadataColumn("_metadata").getField("file_path")
-    val nullFlags = table.dataColumns.map(c => column(c).isNull)
+    val nullFlags = table.dataColumns.map(c => tableColumn(c).isNull)
     // every batch projects the data columns plus a string `unit`: compile once, before any write
-    val checks = graft.exprs.ConstraintCompiler.compile(schema,
-        table.df.select(table.dataColumns.map(column) :+ lit(null).cast("string").as("unit"): _*).schema)
-      .fold(e => throw new IllegalArgumentException(e), identity)
+    val checks = Validator.checksOf(
+      table.df.select(table.dataColumns.map(tableColumn) :+ lit(null).cast("string").as("unit"): _*), schema)
     pending.grouped(batchSize).flatMap { batch =>
       val t0 = System.nanoTime()
       val keyByFile = batch.map(f => f -> unitKey(unitName(f))).toMap
@@ -272,7 +300,7 @@ object Checkpoint {
         try_element_at(typedLit(keyByFile), filePath),
         raise_error(concat(lit("file not in batch lineage: "), filePath)).cast("string"))
       val input = table.df.filter(filePath.isin(batch: _*))
-        .select(table.dataColumns.map(column) :+ keyExpr.as("unit"): _*)
+        .select(table.dataColumns.map(tableColumn) :+ keyExpr.as("unit"): _*)
       val (inObs, vioObs) = (Observation(), Observation())
       val violations = Validator.violationsForChecks(observeUnits(input, inObs, nullFlags), checks,
           Seq("conv_id", "turn_idx"), carryCols = Seq("unit"))
@@ -305,12 +333,12 @@ object Checkpoint {
         }
       }
       val batchWallMs = (System.nanoTime() - t0) / 1000000
-      metrics.map { case (unit, rows, nulls) =>
+      val results = metrics.map { case (unit, rows, nulls) =>
         val nVios = vios.get(unitKey(unit)).fold(0L)(_.head)
-        val r = UnitResult(unit, rows, nVios, nVios == 0, batchWallMs, batch.size, nulls)
-        appendResult(manifestPath, r)
-        r
+        UnitResult(unit, rows, nVios, nVios == 0, batchWallMs, batch.size, nulls)
       }
+      appendResults(manifestPath, results)
+      results
     }.toSeq
   }
 }

@@ -1,11 +1,11 @@
 package graft.cli
 
-import java.nio.file.{Files, Paths, StandardOpenOption}
+import java.nio.file.{Files, Paths}
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{AnalysisException, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.sql.streaming.Trigger
-import org.json4s.{JInt, JLong, JObject}
+import org.json4s.{JLong, JObject, JValue}
 import graft.checkpoint.Checkpoint
 import graft.compile.{Js, TableSchema, TableSchemaCompiler}
 import graft.exprs.Validator
@@ -147,19 +147,16 @@ object ValidateStreamMain {
     "new_violation_rows" -> JLong(p.newViolationRows),
     "total_violation_rows" -> JLong(p.totalViolationRows))))
 
-  /** A report line that does not parse, or lacks a field, is a torn
-    * append (the manifest's rule) and is skipped.
+  /** A report line that lacks a field is a torn append (the
+    * manifest's rule) and is skipped.
     */
-  private def fromJson(line: String): Option[Pass] = {
-    def long(j: org.json4s.JValue, name: String) = Js.field(j, name).collect { case JInt(n) => n.toLong }
+  private def fromJson(j: JValue): Option[Pass] =
     for {
-      j <- Js.parse(line).toOption
-      batch <- long(j, "last_batch_id")
-      rows <- long(j, "input_rows")
-      added <- long(j, "new_violation_rows")
-      total <- long(j, "total_violation_rows")
+      batch <- Js.longField(j, "last_batch_id")
+      rows <- Js.longField(j, "input_rows")
+      added <- Js.longField(j, "new_violation_rows")
+      total <- Js.longField(j, "total_violation_rows")
     } yield Pass(batch, rows, added, total)
-  }
 
   private val LogEntry = """(\d+)(?:\.compact)?""".r
 
@@ -193,10 +190,9 @@ object ValidateStreamMain {
         val commits = new Path(s"$outDir/_checkpoint/commits")
         val sinkLog = new Path(s"$violationsDir/_spark_metadata")
         val fs = commits.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // a local file, as the manifest is
+        // a local JSON-lines ledger, as the manifest is
         val reportPath = Checkpoint.localFile(s"$outDir/stream_report.jsonl")
-        val reported = if (Files.exists(reportPath)) Files.readString(reportPath) else ""
-        val prev = reported.linesIterator.toSeq.reverseIterator.flatMap(fromJson).nextOption()
+        val prev = Checkpoint.readLedger(reportPath)(fromJson).lastOption
         // a batch the stream's logs hold but the report does not means a
         // pass died before its report line landed; the sink log records a
         // batch before the commit log does, so a death between the two
@@ -236,12 +232,7 @@ object ValidateStreamMain {
               catch { case _: AnalysisException => 0L } // no output yet
             else prev.fold(0L)(_.totalViolationRows) + added
           val pass = Pass(lastLogged(fs, commits), batches.map(_.numInputRows).sum, added, total)
-          // a torn last line has no newline: start a fresh line so this
-          // record stays whole
-          val sep = if (reported.nonEmpty && !reported.endsWith("\n")) "\n" else ""
-          Option(reportPath.getParent).foreach(Files.createDirectories(_))
-          Files.writeString(reportPath, sep + toJson(pass) + "\n",
-            StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+          Checkpoint.appendLedger(reportPath, Seq(toJson(pass)))
           println(s"stream pass: $added new violation rows ($total total at $violationsDir)")
           Right(pass)
         }

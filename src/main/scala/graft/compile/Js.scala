@@ -31,6 +31,9 @@ object Js {
   def stringField(j: JValue, name: String): Option[String] =
     field(j, name).collect { case JString(s) => s }
 
+  def longField(j: JValue, name: String): Option[Long] =
+    field(j, name).collect { case JInt(n) => n.toLong }
+
   /** Replace (or append) a field in an object, preserving field order. */
   def setField(obj: JObject, name: String, value: JValue): JObject = {
     val fields = obj.obj

@@ -109,39 +109,58 @@ object ConstraintCompiler {
     */
   private[exprs] def pointerPrefixParts(keyCols: Seq[String]): Seq[Column] =
     keyCols.flatMap { k =>
-      Seq(lit("/"), coalesce(pointerEscape(col(k).cast("string")), lit("null")))
+      Seq(lit("/"), coalesce(pointerEscape(tableColumn(k).cast("string")), lit("null")))
     } :+ lit("/")
 
   def pointerCol(keyCols: Seq[String], column: String): Column =
     concat(pointerPrefixParts(keyCols) :+ lit(column): _*)
 
+  /** The `Column` of a table column by its name, quoted so that a dot or
+    * a backtick in the name is part of the name, never a field access.
+    */
+  def tableColumn(name: String): Column = col("`" + name.replace("`", "``") + "`")
+
+  /** A keyword that cannot bind to the physical type: thrown where the
+    * keyword fails, caught only at the column boundary of [[bindWalk]].
+    */
+  private final class CompileError(message: String) extends Exception(message, null, false, false)
+
+  private def fail(message: String): Nothing = throw new CompileError(message)
+
+  /** Builds the value checks of expression `c`, labelled `name`: NULL
+    * passes (nullness is `required`'s alone), and `actual` renders the
+    * offending value.
+    */
+  private final case class Checker(name: String, c: Column, actual: Column) {
+    def apply(constraint: String, pred: Column): Check = Check(name, constraint, c.isNull || pred, actual)
+  }
+
+  private def conjunction(preds: Seq[Column]): Column = preds.reduceOption(_ && _).getOrElse(lit(true))
+
   /** All checks for one column under its Property. */
-  def columnChecks(name: String, prop: Property, dt: DataType): Either[String, Seq[Check]] = {
-    val c = col(name)
-    val base: Seq[Check] =
-      if (prop.required) Seq(Check(name, "required", c.isNotNull, lit("null"))) else Nil
-    valueChecks(name, c, prop.schema, dt).map(base ++ _)
+  private def columnChecks(name: String, prop: Property, dt: DataType): Seq[Check] = {
+    val c = tableColumn(name)
+    val base = if (prop.required) Seq(Check(name, "required", c.isNotNull, lit("null"))) else Nil
+    base ++ valueChecks(name, c, prop.schema, dt)
   }
 
   /** Conjunction of all value checks of `doc` applied to an arbitrary
     * expression (array elements, map values, ...). Null values pass.
     */
-  private def predicateFor(doc: SchemaDoc, dt: DataType, x: Column): Either[String, Column] =
-    valueChecks("_element", x, doc, dt)
-      .map(cs => cs.map(_.ok).reduceOption(_ && _).getOrElse(lit(true)))
+  private def predicateFor(doc: SchemaDoc, dt: DataType, x: Column): Column =
+    conjunction(valueChecks("_element", x, doc, dt).map(_.ok))
 
   /** Value-level checks of one schema doc applied to expression `c`
-    * (labelled `name` in emitted violations).
+    * (labelled `name` in emitted violations), keyword families in a
+    * fixed order: the first that cannot bind is the column's error.
     */
-  private def valueChecks(name: String, c: Column, doc: SchemaDoc, dt: DataType): Either[String, Seq[Check]] = {
-    if (dt == NullType) return Right(Nil) // all-null column: every value check passes
-    def ok(pred: Column): Column = c.isNull || pred
-    val actualStr = coalesce(c.cast("string"), lit("null"))
-
-    for {
-      typeCheck <- typeCheck(name, c, doc, dt)
-      enumCheck <- enumCheck(name, c, doc, dt)
-      numeric <- Right(doc.number.toSeq.flatMap { nc =>
+  private def valueChecks(name: String, c: Column, doc: SchemaDoc, dt: DataType): Seq[Check] =
+    if (dt == NullType) Nil // all-null column: every value check passes
+    else {
+      val ok = Checker(name, c, coalesce(c.cast("string"), lit("null")))
+      val types = typeCheck(ok, doc, dt)
+      val enums = enumCheck(ok, doc, dt)
+      val numeric = doc.number.toSeq.flatMap { nc =>
         // keep bound literals in the column's arithmetic family so
         // Catalyst doesn't widen an integral column to double (better
         // codegen + parquet pushdown when the filter form is used)
@@ -158,20 +177,18 @@ object ConstraintCompiler {
           case _: DecimalType => lit(v.underlying())
           case _ => lit(v.toDouble)
         }
-        val boundChecks = Seq(
+        Seq(
           nc.range.min.map { b =>
-            val pred = if (b.exclusive) c > boundLit(b.value) else c >= boundLit(b.value)
-            Check(name, if (b.exclusive) "exclusiveMinimum" else "minimum", ok(pred), actualStr)
+            if (b.exclusive) ok("exclusiveMinimum", c > boundLit(b.value)) else ok("minimum", c >= boundLit(b.value))
           },
           nc.range.max.map { b =>
-            val pred = if (b.exclusive) c < boundLit(b.value) else c <= boundLit(b.value)
-            Check(name, if (b.exclusive) "exclusiveMaximum" else "maximum", ok(pred), actualStr)
+            if (b.exclusive) ok("exclusiveMaximum", c < boundLit(b.value)) else ok("maximum", c <= boundLit(b.value))
           },
           nc.multipleOf.map { k =>
             // exactness via decimal remainder (SURVEY §7 hard parts):
             // integral columns stay in integer arithmetic, fractional
             // columns go through DecimalType to avoid float remainder
-            val pred = dt match {
+            ok("multipleOf", dt match {
               case t if isIntegral(t) && k.isWhole && k.isValidLong =>
                 c % lit(k.toLong) === lit(0L)
               case _ =>
@@ -185,40 +202,32 @@ object ConstraintCompiler {
                 when(dec.isNotNull,
                   dec % lit(k.underlying()) === lit(BigDecimal(0).underlying()))
                   .otherwise(pmod(c.cast("double"), lit(k.toDouble)) === lit(0.0))
-            }
-            Check(name, "multipleOf", ok(pred), actualStr)
+            })
           }
         ).flatten
-        boundChecks
-      })
-      strings <- Right(doc.string.toSeq.flatMap { sc =>
-        val lenChecks = Seq(
-          if (sc.minLength > 0)
-            Some(Check(name, "minLength", ok(length(c) >= lit(sc.minLength)), actualStr))
-          else None,
-          sc.maxLength.map(m => Check(name, "maxLength", ok(length(c) <= lit(m)), actualStr)),
-          sc.pattern.map { p =>
-            // anchored literal/char-class patterns take the codegen'd
-            // byte-loop fast path (~45% of full-pass cost was
-            // java.util.regex); anything else falls back to rlike
-            val pred = graft.functions.SimplePatternMatch.tryColumn(c, p).getOrElse(c.rlike(p))
-            Check(name, "pattern", ok(pred), actualStr)
-          }
+      }
+      val strings = doc.string.toSeq.flatMap { sc =>
+        Seq(
+          if (sc.minLength > 0) Some(ok("minLength", length(c) >= lit(sc.minLength))) else None,
+          sc.maxLength.map(m => ok("maxLength", length(c) <= lit(m))),
+          // anchored literal/char-class patterns take the codegen'd
+          // byte-loop fast path (~45% of full-pass cost was
+          // java.util.regex); anything else falls back to rlike
+          sc.pattern.map(p => ok("pattern", graft.functions.SimplePatternMatch.tryColumn(c, p).getOrElse(c.rlike(p))))
         ).flatten
-        lenChecks
-      })
-      format <- formatCheck(name, c, doc, dt)
-      arrays <- arrayChecks(name, c, doc, dt)
-      maps <- mapChecks(name, c, doc, dt)
-      combinators <- combinatorChecks(name, c, doc, dt)
-    } yield typeCheck ++ enumCheck ++ numeric ++ strings ++ format ++ arrays ++ maps ++ combinators
-  }
+      }
+      val format = formatCheck(ok, doc, dt)
+      val arrays = arrayChecks(ok, doc, dt)
+      val maps = mapChecks(ok, doc, dt)
+      types ++ enums ++ numeric ++ strings ++ format ++ arrays ++ maps ++ combinatorChecks(ok, doc, dt)
+    }
 
   // element-level forall on the whole-stage-codegen path: Spark's HOF
   // `forall` is CodegenFallback (interpreted lambda dispatch per element),
   // which at wide-array scale becomes the scan bottleneck; ForAllExpr
   // splices the compiled element predicate into a generated loop
-  // (equivalence pinned by ForAllSpec against the HOF form)
+  // (equivalence pinned by ForAllSpec against the HOF form). It applies
+  // `f` at once, so an element schema's CompileError surfaces here.
   private def forallCg(arr: Column, elemType: DataType)(f: Column => Column): Column =
     graft.functions.ForAllFunctions.forallCodegen(arr, elemType, f)
 
@@ -227,56 +236,36 @@ object ConstraintCompiler {
     * via the codegen'd forall, tuple-form positional items,
     * additionalItems over the tail slice, uniqueItems via array_distinct.
     */
-  private def arrayChecks(name: String, c: Column, doc: SchemaDoc, dt: DataType): Either[String, Seq[Check]] =
+  private def arrayChecks(scalar: Checker, doc: SchemaDoc, dt: DataType): Seq[Check] =
     (doc.array, dt) match {
       case (Some(ac), at: ArrayType) =>
-        def ok(pred: Column): Column = c.isNull || pred
-        val actualStr = jsonActual(c, at)
+        val c = scalar.c
+        val ok = scalar.copy(actual = jsonActual(c, at))
+        val et = at.elementType
         val sizeChecks = Seq(
-          if (ac.minItems > 0) Some(Check(name, "minItems", ok(size(c) >= lit(ac.minItems)), actualStr)) else None,
-          ac.maxItems.map(m => Check(name, "maxItems", ok(size(c) <= lit(m)), actualStr)),
-          if (ac.uniqueItems)
-            Some(Check(name, "uniqueItems", ok(size(array_distinct(c)) === size(c)), actualStr))
-          else None).flatten
-        val itemChecks: Either[String, Seq[Check]] = ac.items match {
-          case Nil => Right(Nil)
+          if (ac.minItems > 0) Some(ok("minItems", size(c) >= lit(ac.minItems))) else None,
+          ac.maxItems.map(m => ok("maxItems", size(c) <= lit(m))),
+          if (ac.uniqueItems) Some(ok("uniqueItems", size(array_distinct(c)) === size(c))) else None).flatten
+        val itemChecks = ac.items match {
+          case Nil => Nil
+          // schema-form items: EVERY element must match. (A one-entry
+          // TUPLE form falls through to the positional branch below.)
           case single :: Nil if !ac.tupleItems =>
-            // schema-form items: EVERY element must match. (A one-entry
-            // TUPLE form falls through to the positional branch below.)
-            // compile the element predicate once (surfacing errors), then
-            // instantiate it inside the forall lambda
-            predicateFor(single, at.elementType, lit(null).cast(at.elementType)).map { _ =>
-              Seq(Check(name, "items",
-                ok(forallCg(c, at.elementType)(x => predicateFor(single, at.elementType, x)
-                  .fold(e => throw new IllegalArgumentException(e), identity))),
-                actualStr))
-            }
+            Seq(ok("items", forallCg(c, et)(x => predicateFor(single, et, x))))
           case tuple =>
             val positional = tuple.zipWithIndex.map { case (sub, i) =>
-              predicateFor(sub, at.elementType, element_at(c, i + 1)).map { p =>
-                Check(name, s"items[$i]", ok(size(c) <= i || p), actualStr)
-              }
+              ok(s"items[$i]", size(c) <= i || predicateFor(sub, et, element_at(c, i + 1)))
             }
-            val additional: Seq[Either[String, Check]] = ac.additionalItems match {
-              case Some(Left(false)) =>
-                Seq(Right(Check(name, "additionalItems", ok(size(c) <= tuple.size), actualStr)))
+            positional ++ (ac.additionalItems match {
+              case Some(Left(false)) => Seq(ok("additionalItems", size(c) <= tuple.size))
               case Some(Right(sub)) =>
-                Seq(predicateFor(sub, at.elementType, lit(null)).flatMap { _ =>
-                  Right(Check(name, "additionalItems",
-                    ok(forallCg(slice(c, lit(tuple.size + 1), greatest(size(c) - tuple.size, lit(0))),
-                        at.elementType)(
-                      x => predicateFor(sub, at.elementType, x)
-                        .fold(e => throw new IllegalArgumentException(e), identity))),
-                    actualStr))
-                })
+                val tail = slice(c, lit(tuple.size + 1), greatest(size(c) - tuple.size, lit(0)))
+                Seq(ok("additionalItems", forallCg(tail, et)(x => predicateFor(sub, et, x))))
               case _ => Nil
-            }
-            val all = positional ++ additional
-            all.collectFirst { case Left(e) => Left(e) }
-              .getOrElse(Right(all.collect { case Right(v) => v }))
+            })
         }
-        itemChecks.map(sizeChecks ++ _)
-      case _ => Right(Nil)
+        sizeChecks ++ itemChecks
+      case _ => Nil
     }
 
   /** Map-column constraints (SURVEY §2b properties/patternProperties/
@@ -285,34 +274,26 @@ object ConstraintCompiler {
     * additionalProperties over undeclared keys (the reference's
     * false≡absent quirk applies: only the schema form checks anything).
     */
-  private def mapChecks(name: String, c: Column, doc: SchemaDoc, dt: DataType): Either[String, Seq[Check]] =
+  private def mapChecks(scalar: Checker, doc: SchemaDoc, dt: DataType): Seq[Check] = {
+    val c = scalar.c
     (doc.obj, dt) match {
       case (Some(oc), mt: MapType) =>
-        def ok(pred: Column): Column = c.isNull || pred
-        val actualStr = jsonActual(c, mt)
+        val ok = scalar.copy(actual = jsonActual(c, mt))
+        val vt = mt.valueType
         val sizeChecks = Seq(
-          if (oc.minProperties > 0)
-            Some(Check(name, "minProperties", ok(size(map_keys(c)) >= lit(oc.minProperties)), actualStr))
-          else None,
-          oc.maxProperties.map(m => Check(name, "maxProperties", ok(size(map_keys(c)) <= lit(m)), actualStr))
+          if (oc.minProperties > 0) Some(ok("minProperties", size(map_keys(c)) >= lit(oc.minProperties))) else None,
+          oc.maxProperties.map(m => ok("maxProperties", size(map_keys(c)) <= lit(m)))
         ).flatten
         val propChecks = oc.properties.toSeq.map { case (k, prop) =>
-          predicateFor(prop.schema, mt.valueType, try_element_at(c, lit(k))).map { p =>
-            val reqPred = if (prop.required) map_contains_key(c, lit(k)) else lit(true)
-            Check(name, s"properties/$k", ok(reqPred && p), actualStr)
-          }
+          val p = predicateFor(prop.schema, vt, try_element_at(c, lit(k)))
+          val reqPred = if (prop.required) map_contains_key(c, lit(k)) else lit(true)
+          ok(s"properties/$k", reqPred && p)
         }
         val patternChecks = oc.patternProperties.map { case (pat, sub) =>
-          predicateFor(sub, mt.valueType, lit(null)).flatMap { _ =>
-            Right(Check(name, "patternProperties",
-              ok(forallCg(map_keys(c), mt.keyType)(k =>
-                !k.cast("string").rlike(pat) ||
-                  predicateFor(sub, mt.valueType, try_element_at(c, k))
-                    .fold(e => throw new IllegalArgumentException(e), identity))),
-              actualStr))
-          }
+          ok("patternProperties", forallCg(map_keys(c), mt.keyType)(k =>
+            !k.cast("string").rlike(pat) || predicateFor(sub, vt, try_element_at(c, k))))
         }
-        val additionalChecks: Seq[Either[String, Check]] = oc.additionalProperties match {
+        val additionalChecks = oc.additionalProperties match {
           // compile any constraint-carrying sub-schema (incl. combinator /
           // array / object forms — gating on scalar keywords only would
           // fail open); skip only the empty permissive schema (`true`)
@@ -326,19 +307,11 @@ object ConstraintCompiler {
               oc.patternProperties.map { case (pat, _) => k.cast("string").rlike(pat) }
                 .foldLeft(byName)(_ || _)
             }
-            Seq(predicateFor(sub, mt.valueType, lit(null)).flatMap { _ =>
-              Right(Check(name, "additionalProperties",
-                ok(forallCg(map_keys(c), mt.keyType)(k =>
-                  exempt(k) ||
-                    predicateFor(sub, mt.valueType, try_element_at(c, k))
-                      .fold(e => throw new IllegalArgumentException(e), identity))),
-                actualStr))
-            })
+            Seq(ok("additionalProperties", forallCg(map_keys(c), mt.keyType)(k =>
+              exempt(k) || predicateFor(sub, vt, try_element_at(c, k)))))
           case _ => Nil // absent, false (quirk), or permissive true
         }
-        val all = propChecks ++ patternChecks ++ additionalChecks
-        all.collectFirst { case Left(e) => Left(e) }
-          .getOrElse(Right(sizeChecks ++ all.collect { case Right(v) => v }))
+        sizeChecks ++ propChecks ++ patternChecks ++ additionalChecks
 
       // Struct-typed columns: same draft-4 object vocabulary, but the key
       // set is STATIC (the struct's fields), so everything compiles to
@@ -349,65 +322,52 @@ object ConstraintCompiler {
       // an object schema on a struct column would compile to ZERO checks
       // and fail open (silently passing violations).
       case (Some(oc), st: StructType) =>
-        def ok(pred: Column): Column = c.isNull || pred
-        val actualStr = jsonActual(c, st)
-        def present(f: String): Column = c.getField(f).isNotNull
+        val ok = scalar.copy(actual = jsonActual(c, st))
         // rlike is a regex *find* (unanchored); match that semantics when
         // deciding key-pattern membership at compile time
         def keyMatches(pat: String, field: String): Boolean =
           pat.r.findFirstIn(field).isDefined
+        // one check over the fields a keyword reaches, none when it
+        // reaches no field
+        def fieldsCheck(constraint: String, sub: SchemaDoc, fields: Seq[StructField]): Option[Check] =
+          fields.map(f => predicateFor(sub, f.dataType, c.getField(f.name))).reduceOption(_ && _)
+            .map(ok(constraint, _))
         val presentCount = structPresentCount(c, st)
         val sizeChecks = Seq(
-          if (oc.minProperties > 0)
-            Some(Check(name, "minProperties", ok(presentCount >= lit(oc.minProperties)), actualStr))
-          else None,
-          oc.maxProperties.map(m =>
-            Check(name, "maxProperties", ok(presentCount <= lit(m)), actualStr))
+          if (oc.minProperties > 0) Some(ok("minProperties", presentCount >= lit(oc.minProperties))) else None,
+          oc.maxProperties.map(m => ok("maxProperties", presentCount <= lit(m)))
         ).flatten
-        val propChecks: Seq[Either[String, Seq[Check]]] = oc.properties.toSeq.map { case (k, prop) =>
+        val propChecks = oc.properties.toSeq.flatMap { case (k, prop) =>
           st.fields.find(_.name == k) match {
+            // bind-time schema enforcement (same philosophy as type
+            // mismatches): a field the struct can never carry would
+            // violate on every row — surface it at compile time
             case None if prop.required =>
-              // bind-time schema enforcement (same philosophy as type
-              // mismatches): a field the struct can never carry would
-              // violate on every row — surface it at compile time
-              Left(s"column $name: required property $k missing from struct ${st.simpleString}")
-            case None => Right(Nil) // optional + physically absent: nothing to check
+              fail(s"column ${ok.name}: required property $k missing from struct ${st.simpleString}")
+            case None => None // optional + physically absent: nothing to check
             case Some(f) =>
-              predicateFor(prop.schema, f.dataType, c.getField(k)).map { p =>
-                val reqPred = if (prop.required) present(k) else lit(true)
-                Seq(Check(name, s"properties/$k", ok(reqPred && p), actualStr))
-              }
+              val reqPred = if (prop.required) c.getField(k).isNotNull else lit(true)
+              Some(ok(s"properties/$k", reqPred && predicateFor(prop.schema, f.dataType, c.getField(k))))
           }
         }
         // one check per pattern (not per field), mirroring the map form's
         // one-violation-per-constraint emission
-        val patternChecks: Seq[Either[String, Seq[Check]]] = oc.patternProperties.map { case (pat, sub) =>
-          val matching = st.fields.filter(f => keyMatches(pat, f.name)).toSeq
-          val preds = matching.map(f => predicateFor(sub, f.dataType, c.getField(f.name)))
-          preds.collectFirst { case Left(e) => Left(e) }.getOrElse {
-            val conj = preds.collect { case Right(p) => p }.reduceOption(_ && _)
-            Right(conj.map(p => Check(name, "patternProperties", ok(p), actualStr)).toSeq)
-          }
+        val patternChecks = oc.patternProperties.flatMap { case (pat, sub) =>
+          fieldsCheck("patternProperties", sub, st.fields.filter(f => keyMatches(pat, f.name)).toSeq)
         }
-        val additionalChecks: Seq[Either[String, Seq[Check]]] = oc.additionalProperties match {
+        val additionalChecks = oc.additionalProperties match {
           case Some(sub) if !isPermissive(sub) =>
             val declared = oc.properties.keySet
-            val extra = st.fields.filterNot(f =>
+            fieldsCheck("additionalProperties", sub, st.fields.filterNot(f =>
               declared(f.name) ||
-                oc.patternProperties.exists { case (pat, _) => keyMatches(pat, f.name) }).toSeq
-            val preds = extra.map(f => predicateFor(sub, f.dataType, c.getField(f.name)))
-            Seq(preds.collectFirst { case Left(e) => Left(e) }.getOrElse {
-              val conj = preds.collect { case Right(p) => p }.reduceOption(_ && _)
-              Right(conj.map(p => Check(name, "additionalProperties", ok(p), actualStr)).toSeq)
-            })
-          case _ => Nil // absent, false (quirk), or permissive true
+                oc.patternProperties.exists { case (pat, _) => keyMatches(pat, f.name) }).toSeq)
+          case _ => None // absent, false (quirk), or permissive true
         }
-        val all = propChecks ++ patternChecks ++ additionalChecks
-        all.collectFirst { case Left(e) => Left(e) }
-          .getOrElse(Right(sizeChecks ++ all.collect { case Right(v) => v }.flatten))
+        sizeChecks ++ propChecks ++ patternChecks ++ additionalChecks
 
-      case _ => Right(Nil)
+      case _ => Nil
     }
+  }
 
   /** Declared `type` vs the physical Spark type. Most mismatches are
     * compile errors (schema enforcement at bind time); the one runtime
@@ -427,40 +387,31 @@ object ConstraintCompiler {
       case SimpleType.jsonNull => true
     }
 
-  private def typeCheck(name: String, c: Column, doc: SchemaDoc, dt: DataType): Either[String, Seq[Check]] = {
-    if (doc.types.isEmpty) Right(Nil)
-    else {
-      if (!typesCompatible(doc, dt))
-        Left(s"column $name: declared types ${doc.types.mkString(",")} incompatible with physical type ${dt.simpleString}")
-      else if (doc.types == Set(SimpleType.jsonNull))
-        // draft-4 type:"null": the ONLY valid instance is null. Without
-        // a runtime check this compiled to zero checks — a bare
-        // {type:"null"} schema passed every value, and a oneOf branch
-        // {type:"null"} evaluated true for every non-null value,
-        // mis-counting the ubiquitous nullable idiom oneOf:[T, "null"]
-        Right(Seq(Check(name, "type:null", c.isNull,
-          coalesce(c.cast("string"), lit("null")))))
-      else if (doc.types.contains(SimpleType.integer) && !isIntegral(dt) &&
-               dt.isInstanceOf[NumericType])
-        // integer declared over a fractional physical column -> runtime integrality check
-        Right(Seq(Check(name, "type:integer", c.isNull || c === floor(c),
-          coalesce(c.cast("string"), lit("null")))))
-      else Right(Nil)
-    }
-  }
+  private def typeCheck(ok: Checker, doc: SchemaDoc, dt: DataType): Seq[Check] =
+    if (doc.types.isEmpty) Nil
+    else if (!typesCompatible(doc, dt))
+      fail(s"column ${ok.name}: declared types ${doc.types.mkString(",")} incompatible with physical type ${dt.simpleString}")
+    else if (doc.types == Set(SimpleType.jsonNull))
+      // draft-4 type:"null": the ONLY valid instance is null. Without
+      // a runtime check this compiled to zero checks — a bare
+      // {type:"null"} schema passed every value, and a oneOf branch
+      // {type:"null"} evaluated true for every non-null value,
+      // mis-counting the ubiquitous nullable idiom oneOf:[T, "null"]
+      Seq(Check(ok.name, "type:null", ok.c.isNull, ok.actual))
+    else if (doc.types.contains(SimpleType.integer) && !isIntegral(dt) && dt.isInstanceOf[NumericType])
+      // integer declared over a fractional physical column -> runtime integrality check
+      Seq(ok("type:integer", ok.c === floor(ok.c)))
+    else Nil
 
-  private def enumCheck(name: String, c: Column, doc: SchemaDoc, dt: DataType): Either[String, Seq[Check]] = {
-    if (doc.enums.isEmpty) Right(Nil)
-    else
-      enumLiterals(doc.enums, dt).map { vals =>
-        // isin -> Catalyst In/InSet (hash set at runtime for large
-        // enums). An empty set (every literal dropped as unrepresentable
-        // in this column) means no non-null value can ever match.
-        val pred = if (vals.isEmpty) lit(false) else c.isin(vals: _*)
-        Seq(Check(name, "enum", c.isNull || pred,
-          coalesce(c.cast("string"), lit("null"))))
-      }.left.map(e => s"column $name: $e")
-  }
+  private def enumCheck(ok: Checker, doc: SchemaDoc, dt: DataType): Seq[Check] =
+    if (doc.enums.isEmpty) Nil
+    else {
+      val vals = enumLiterals(ok.name, doc.enums, dt)
+      // isin -> Catalyst In/InSet (hash set at runtime for large
+      // enums). An empty set (every literal dropped as unrepresentable
+      // in this column) means no non-null value can ever match.
+      Seq(ok("enum", if (vals.isEmpty) lit(false) else ok.c.isin(vals: _*)))
+    }
 
   /** Heterogeneous `enums: Set[JValue]` restricted to the column's
     * physical type (SURVEY §7 hard parts): a literal of a DIFFERENT
@@ -470,70 +421,63 @@ object ConstraintCompiler {
     * old bd.toLong) made enum:[1.5] accept the value 1. A null literal
     * is dropped too: null values already pass every value check.
     */
-  private def enumLiterals(enums: Set[JValue], dt: DataType): Either[String, Seq[Any]] = {
-    val converted: Seq[Either[String, Option[Any]]] = enums.toSeq.map { j =>
+  private def enumLiterals(name: String, enums: Set[JValue], dt: DataType): Seq[Any] =
+    enums.toSeq.flatMap { j =>
       (j, dt) match {
-        case (org.json4s.JNull, _)    => Right(None)
-        case (JString(s), StringType) => Right(Some(s))
-        case (JBool(b), BooleanType)  => Right(Some(b))
+        case (org.json4s.JNull, _)    => None
+        case (JString(s), StringType) => Some(s)
+        case (JBool(b), BooleanType)  => Some(b)
         case (jn, _: NumericType) =>
-          graft.compile.Js.asNumber(jn).map { bd =>
-            dt match {
-              case t if isIntegral(t) =>
-                if (bd.isWhole && bd.isValidLong) Some(bd.toLong) else None
-              case FloatType       => Some(bd.toFloat)
-              case DoubleType      => Some(bd.toDouble)
-              case _: DecimalType  => Some(bd)
-              case _               => Some(bd.toDouble)
-            }
-          }.toRight(s"enum value ${graft.compile.Js.compact(jn)} is not numeric (column type ${dt.simpleString})")
+          val bd = graft.compile.Js.asNumber(jn).getOrElse(fail(
+            s"column $name: enum value ${graft.compile.Js.compact(jn)} is not numeric (column type ${dt.simpleString})"))
+          dt match {
+            case t if isIntegral(t) =>
+              if (bd.isWhole && bd.isValidLong) Some(bd.toLong) else None
+            case FloatType       => Some(bd.toFloat)
+            case DoubleType      => Some(bd.toDouble)
+            case _: DecimalType  => Some(bd)
+            case _               => Some(bd.toDouble)
+          }
         case (jv, _) =>
-          Left(s"enum value ${graft.compile.Js.compact(jv)} incompatible with column type ${dt.simpleString}")
+          fail(s"column $name: enum value ${graft.compile.Js.compact(jv)} incompatible with column type ${dt.simpleString}")
       }
     }
-    converted.collectFirst { case Left(e) => e }
-      .toLeft(converted.collect { case Right(Some(v)) => v })
-  }
 
   /** Per-format predicate library (reference stores format as a free
     * string, `JsonSchemaDecoder.scala:136`; enum of known formats
     * `model.scala:19-23`). Unknown formats are ignored per draft-4.
     */
-  private def formatCheck(name: String, c: Column, doc: SchemaDoc, dt: DataType): Either[String, Seq[Check]] = {
-    def ok(pred: Column): Column = c.isNull || pred
+  private def formatCheck(ok: Checker, doc: SchemaDoc, dt: DataType): Option[Check] = {
+    val c = ok.c
     def fm(col: Column, f: String): Column = graft.functions.FormatMatch(col, f)
-    val actualStr = coalesce(c.cast("string"), lit("null"))
-    doc.format match {
-      case None => Right(Nil)
-      case Some(f) =>
-        val pred: Option[Column] = f match {
-          case "date-time" =>
-            if (dt == TimestampType || dt == TimestampNTZType || dt == DateType)
-              None // physically guaranteed
-            // try_ variant: under ANSI mode (Spark 4 default) to_timestamp
-            // THROWS on a malformed string — a validator must classify bad
-            // values, not crash on them
-            else Some(try_to_timestamp(c).isNotNull)
-          // the string formats ride codegen byte loops PROVEN equivalent
-          // to the java-regex forms they replaced (each documented on
-          // its FormatMatchers method; FormatMatchersSpec property-
-          // fuzzes matcher == Pattern.find on adversarial inputs, and
-          // the DuckDB gate replays the regexes) — regex evaluation was
-          // the dominant per-row cost of the format family
-          case "email"    => Some(fm(c, "email"))       // ^[^@\s]+@[^@\s]+\.[^@\s]+$
-          case "hostname" => Some(fm(c, "hostname"))    // ^(?=.{1,253}$)[A-Za-z0-9]([A-Za-z0-9-]{0,61}[A-Za-z0-9])?(\.[A-Za-z0-9]([A-Za-z0-9-]{0,61}[A-Za-z0-9])?)*$
-          case "ipv4"     => Some(fm(c, "ipv4"))        // ^((25[0-5]|2[0-4][0-9]|[01]?[0-9][0-9]?)\.){3}(25[0-5]|2[0-4][0-9]|[01]?[0-9][0-9]?)$
-          case "ipv6"     => Some(fm(c, "ipv6charset") && c.contains(":")) // ^[0-9A-Fa-f:.]+$
-          case "uri"      => Some(fm(c, "uri"))         // ^[A-Za-z][A-Za-z0-9+.-]*:  (absolute URI: scheme)
-          case "regex"    =>
-            // per-value try-compile through a codegen expression with a
-            // bounded per-thread pattern cache (graft.functions.RegexCompiles)
-            Some(org.apache.spark.sql.GraftSqlBridge.column(
-              graft.functions.RegexCompiles(
-                org.apache.spark.sql.GraftSqlBridge.expression(c.cast("string")))))
-          case _          => None // unknown formats ignored (draft-4 semantics)
-        }
-        Right(pred.map(p => Check(name, s"format:$f", ok(p), actualStr)).toSeq)
+    doc.format.flatMap { f =>
+      (f match {
+        case "date-time" =>
+          if (dt == TimestampType || dt == TimestampNTZType || dt == DateType)
+            None // physically guaranteed
+          // try_ variant: under ANSI mode (Spark 4 default) to_timestamp
+          // THROWS on a malformed string — a validator must classify bad
+          // values, not crash on them
+          else Some(try_to_timestamp(c).isNotNull)
+        // the string formats ride codegen byte loops PROVEN equivalent
+        // to the java-regex forms they replaced (each documented on
+        // its FormatMatchers method; FormatMatchersSpec property-
+        // fuzzes matcher == Pattern.find on adversarial inputs, and
+        // the DuckDB gate replays the regexes) — regex evaluation was
+        // the dominant per-row cost of the format family
+        case "email"    => Some(fm(c, "email"))       // ^[^@\s]+@[^@\s]+\.[^@\s]+$
+        case "hostname" => Some(fm(c, "hostname"))    // ^(?=.{1,253}$)[A-Za-z0-9]([A-Za-z0-9-]{0,61}[A-Za-z0-9])?(\.[A-Za-z0-9]([A-Za-z0-9-]{0,61}[A-Za-z0-9])?)*$
+        case "ipv4"     => Some(fm(c, "ipv4"))        // ^((25[0-5]|2[0-4][0-9]|[01]?[0-9][0-9]?)\.){3}(25[0-5]|2[0-4][0-9]|[01]?[0-9][0-9]?)$
+        case "ipv6"     => Some(fm(c, "ipv6charset") && c.contains(":")) // ^[0-9A-Fa-f:.]+$
+        case "uri"      => Some(fm(c, "uri"))         // ^[A-Za-z][A-Za-z0-9+.-]*:  (absolute URI: scheme)
+        case "regex"    =>
+          // per-value try-compile through a codegen expression with a
+          // bounded per-thread pattern cache (graft.functions.RegexCompiles)
+          Some(org.apache.spark.sql.GraftSqlBridge.column(
+            graft.functions.RegexCompiles(
+              org.apache.spark.sql.GraftSqlBridge.expression(c.cast("string")))))
+        case _          => None // unknown formats ignored (draft-4 semantics)
+      }).map(ok(s"format:$f", _))
     }
   }
 
@@ -542,40 +486,19 @@ object ConstraintCompiler {
     * negation). Sub-schemas contribute their value checks as a single
     * conjunction each.
     */
-  private def combinatorChecks(name: String, c: Column, doc: SchemaDoc, dt: DataType): Either[String, Seq[Check]] = {
-    val actualStr = coalesce(c.cast("string"), lit("null"))
-
-    def subPred(sub: SchemaDoc): Either[String, Column] =
-      // a branch whose declared type can't hold this physical column is
-      // simply a non-matching branch (common draft-4 idiom: oneOf over
-      // heterogeneous types) — evaluate it as false, not a compile error
-      if (!typesCompatible(sub, dt)) Right(lit(false))
-      else valueChecks(name, c, sub, dt).map { checks =>
-        if (checks.isEmpty) lit(true) else checks.map(_.ok).reduce(_ && _)
-      }
-
-    def seqPreds(subs: List[SchemaDoc]): Either[String, List[Column]] =
-      subs.foldRight(Right(Nil): Either[String, List[Column]]) { (s, acc) =>
-        for (t <- acc; p <- subPred(s)) yield p :: t
-      }
-
-    for {
-      allOf <- seqPreds(doc.allOf).map(_.reduceOption(_ && _)
-        .map(p => Check(name, "allOf", c.isNull || p, actualStr)).toSeq)
-      anyOf <- seqPreds(doc.anyOf).map(_.reduceOption(_ || _)
-        .map(p => Check(name, "anyOf", c.isNull || p, actualStr)).toSeq)
-      oneOf <- seqPreds(doc.oneOf).map { ps =>
-        if (ps.isEmpty) Nil
-        else {
-          val count = ps.map(p => when(p, 1).otherwise(0)).reduce(_ + _)
-          Seq(Check(name, "oneOf", c.isNull || (count === 1), actualStr))
-        }
-      }
-      not <- doc.not match {
-        case Some(sub) => subPred(sub).map(p => Seq(Check(name, "not", c.isNull || !p, actualStr)))
-        case None      => Right(Nil)
-      }
-    } yield allOf ++ anyOf ++ oneOf ++ not
+  private def combinatorChecks(ok: Checker, doc: SchemaDoc, dt: DataType): Seq[Check] = {
+    // a branch whose declared type can't hold this physical column is
+    // simply a non-matching branch (common draft-4 idiom: oneOf over
+    // heterogeneous types) — evaluate it as false, not a compile error
+    def subPred(sub: SchemaDoc): Column =
+      if (!typesCompatible(sub, dt)) lit(false)
+      else conjunction(valueChecks(ok.name, ok.c, sub, dt).map(_.ok))
+    val allOf = doc.allOf.map(subPred).reduceOption(_ && _).map(ok("allOf", _))
+    val anyOf = doc.anyOf.map(subPred).reduceOption(_ || _).map(ok("anyOf", _))
+    val oneOf = doc.oneOf.map(p => when(subPred(p), 1).otherwise(0)).reduceOption(_ + _)
+      .map(count => ok("oneOf", count === 1))
+    val not = doc.not.map(sub => ok("not", !subPred(sub)))
+    Seq(allOf, anyOf, oneOf, not).flatten
   }
 
   /** Table-level dependency checks (reference `model.scala:87-88`):
@@ -583,57 +506,39 @@ object ConstraintCompiler {
     * schema-form: colA non-null => that schema's required/properties
     * hold for the row.
     */
-  def dependencyChecks(schema: TableSchema, dfSchema: StructType): Either[String, Seq[Check]] = {
-    val deps = schema.root.dependencies.toSeq.sortBy(_._1)
-    val results = deps.map {
+  private def dependencyChecks(schema: TableSchema, dfSchema: StructType): Seq[Check] =
+    schema.root.dependencies.toSeq.sortBy(_._1).flatMap { case (colA, dep) =>
       // the trigger column missing from the TABLE: the dependency can
       // never fire (same rule as "optional column absent"); a missing
       // dependency TARGET is a compile error (a bare col() on it would
       // otherwise surface as a raw AnalysisException at action time)
-      case (colA, _) if !dfSchema.fieldNames.contains(colA) => Right(Nil)
-      case (colA, Right(required)) =>
-        val missing = required.toSeq.sorted.filterNot(dfSchema.fieldNames.contains)
-        if (missing.nonEmpty)
-          Left(s"dependencies of $colA references columns absent from the table: ${missing.mkString(", ")}")
-        else {
-          val pred = required.toSeq.sorted.map(col(_).isNotNull).reduceOption(_ && _).getOrElse(lit(true))
-          Right(Seq(Check(colA, "dependencies",
-            when(col(colA).isNotNull, pred).otherwise(lit(true)),
-            coalesce(col(colA).cast("string"), lit("null")))))
+      if (!dfSchema.fieldNames.contains(colA)) None
+      else {
+        val pred = dep match {
+          case Right(required) =>
+            val missing = required.toSeq.sorted.filterNot(dfSchema.fieldNames.contains)
+            if (missing.nonEmpty)
+              fail(s"dependencies of $colA references columns absent from the table: ${missing.mkString(", ")}")
+            conjunction(required.toSeq.sorted.map(tableColumn(_).isNotNull))
+          case Left(depSchema) => rowPredicate(depSchema, dfSchema)
         }
-      case (colA, Left(depSchema)) =>
-        rowPredicate(depSchema, dfSchema).map { pred =>
-          Seq(Check(colA, "dependencies",
-            when(col(colA).isNotNull, pred).otherwise(lit(true)),
-            coalesce(col(colA).cast("string"), lit("null"))))
-        }
+        Some(Check(colA, "dependencies", when(tableColumn(colA).isNotNull, pred).otherwise(lit(true)),
+          coalesce(tableColumn(colA).cast("string"), lit("null"))))
+      }
     }
-    results.collectFirst { case Left(e) => Left(e) }
-      .getOrElse(Right(results.collect { case Right(v) => v }.flatten))
-  }
 
   /** Whole-row predicate of an object schema (required + per-property
     * value checks), used by schema-form dependencies.
     */
-  private def rowPredicate(doc: SchemaDoc, dfSchema: StructType): Either[String, Column] =
-    doc.obj match {
-      case None => Right(lit(true))
-      case Some(o) =>
-        val perCol = o.properties.toSeq.map { case (n, p) =>
-          dfSchema.fields.find(_.name == n) match {
-            case None => Left(s"dependency schema references unknown column $n")
-            case Some(f) =>
-              columnChecks(n, p, f.dataType).map { checks =>
-                checks.map(_.ok).reduceOption(_ && _).getOrElse(lit(true))
-              }
-          }
-        }
-        perCol.collectFirst { case Left(e) => Left(e) }
-          .getOrElse(Right(perCol.collect { case Right(c) => c }
-            .reduceOption(_ && _).getOrElse(lit(true))))
+  private def rowPredicate(doc: SchemaDoc, dfSchema: StructType): Column =
+    doc.obj.fold(lit(true)) { o =>
+      conjunction(o.properties.toSeq.map { case (n, p) =>
+        val f = dfSchema.fields.find(_.name == n)
+          .getOrElse(fail(s"dependency schema references unknown column $n"))
+        conjunction(columnChecks(n, p, f.dataType).map(_.ok))
+      })
     }
 
-  /** All compiled checks for a table. */
   /** One row per schema column AND per physical-only column: bind status
     * of the declared schema against the table's physical schema —
     * `ok` / `missing_required` / `missing_optional` / `uncompilable`
@@ -647,49 +552,46 @@ object ConstraintCompiler {
     */
   final case class ColumnBind(column: String, status: String, detail: String)
 
-  def bindReport(schema: TableSchema, dfSchema: StructType): Seq[ColumnBind] = {
-    val declared = schema.columns.toSeq.map { case (name, prop) =>
+  /** The one bind walk behind [[compile]] and [[bindReport]]: each
+    * declared column in declaration order, then `<dependencies>` when
+    * the schema has any, with its bind row and its checks (none unless
+    * the row is `ok`; an `uncompilable` row's detail is the error).
+    */
+  private def bindWalk(schema: TableSchema, dfSchema: StructType): Seq[(ColumnBind, Seq[Check])] = {
+    def bound(name: String, detail: String)(checks: => Seq[Check]) =
+      try {
+        val cs = checks
+        (ColumnBind(name, "ok", s"$detail${cs.length} checks"), cs)
+      } catch { case e: CompileError => (ColumnBind(name, "uncompilable", e.getMessage), Nil) }
+    val columns = schema.columns.toSeq.map { case (name, prop) =>
       dfSchema.fields.find(_.name == name) match {
-        case None if prop.required =>
-          ColumnBind(name, "missing_required", "declared required; absent from table")
-        case None =>
-          ColumnBind(name, "missing_optional", "declared optional; absent from table")
-        case Some(f) =>
-          columnChecks(name, prop, f.dataType) match {
-            case Left(err) => ColumnBind(name, "uncompilable", err)
-            case Right(cs) => ColumnBind(name, "ok",
-              s"${f.dataType.simpleString}; ${cs.length} checks")
-          }
+        case None if prop.required => (ColumnBind(name, "missing_required", "declared required; absent from table"), Nil)
+        case None => (ColumnBind(name, "missing_optional", "declared optional; absent from table"), Nil)
+        case Some(f) => bound(name, s"${f.dataType.simpleString}; ")(columnChecks(name, prop, f.dataType))
       }
     }
-    val declaredNames = schema.columns.keySet
-    val extra = dfSchema.fields.filterNot(f => declaredNames.contains(f.name)).map(f =>
+    if (schema.root.dependencies.isEmpty) columns
+    else columns :+ bound("<dependencies>", "")(dependencyChecks(schema, dfSchema))
+  }
+
+  def bindReport(schema: TableSchema, dfSchema: StructType): Seq[ColumnBind] = {
+    val (declared, deps) = bindWalk(schema, dfSchema).map(_._1).splitAt(schema.columns.size)
+    val extra = dfSchema.fields.toSeq.filterNot(f => schema.columns.contains(f.name)).map(f =>
       ColumnBind(f.name, "undeclared", s"physical ${f.dataType.simpleString}; no constraints"))
-    // table-level dependency binds fail compile() too — surface them here
-    val deps =
-      if (schema.root.dependencies.isEmpty) Nil
-      else dependencyChecks(schema, dfSchema) match {
-        case Left(err) => Seq(ColumnBind("<dependencies>", "uncompilable", err))
-        case Right(cs) => Seq(ColumnBind("<dependencies>", "ok", s"${cs.length} checks"))
-      }
     declared ++ extra ++ deps
   }
 
+  /** All compiled checks for a table, or the first bind error in
+    * declaration order (an optional column absent from the table has
+    * nothing to check).
+    */
   def compile(schema: TableSchema, dfSchema: StructType): Either[String, Seq[Check]] = {
-    val perColumn = schema.columns.toSeq.map { case (name, prop) =>
-      dfSchema.fields.find(_.name == name) match {
-        case None =>
-          if (prop.required) Left(s"required column $name missing from table schema ${dfSchema.simpleString}")
-          else Right(Nil) // optional column absent: nothing to check
-        case Some(f) => columnChecks(name, prop, f.dataType)
-      }
-    }
-    val colChecks = perColumn.collectFirst { case Left(e) => Left(e) }
-      .getOrElse(Right(perColumn.collect { case Right(cs) => cs }.flatten))
-    for {
-      cc <- colChecks
-      deps <- dependencyChecks(schema, dfSchema)
-    } yield cc ++ deps
+    val walked = bindWalk(schema, dfSchema)
+    walked.map(_._1).collectFirst {
+      case ColumnBind(name, "missing_required", _) =>
+        s"required column $name missing from table schema ${dfSchema.simpleString}"
+      case ColumnBind(_, "uncompilable", error) => error
+    }.toLeft(walked.flatMap(_._2))
   }
 }
 
@@ -705,11 +607,12 @@ object Validator {
     * `explode`d in the same whole-stage-codegen pass. Rows with no
     * violations never leave the scan (explode drops empty arrays).
     */
-  def violations(df: DataFrame, schema: TableSchema, keyCols: Seq[String]): DataFrame = {
-    val checks = ConstraintCompiler.compile(schema, df.schema)
-      .fold(e => throw new IllegalArgumentException(e), identity)
-    violationsForChecks(df, checks, keyCols)
-  }
+  def violations(df: DataFrame, schema: TableSchema, keyCols: Seq[String]): DataFrame =
+    violationsForChecks(df, checksOf(df, schema), keyCols)
+
+  /** The compiled checks of `schema` over `df`, or its first bind error thrown. */
+  private[graft] def checksOf(df: DataFrame, schema: TableSchema): Seq[Check] =
+    ConstraintCompiler.compile(schema, df.schema).fold(e => throw new IllegalArgumentException(e), identity)
 
   /** `carryCols` are passed through to the output unchanged (e.g. a
     * lineage/partition column) without participating in the pointer.
@@ -721,7 +624,7 @@ object Validator {
       // an all-permissive schema compiles to zero checks: nothing can
       // violate — emit the empty violations relation (same schema), not
       // an exception before any row is scanned
-      return df.filter(lit(false)).select(passthrough0.map(col) :+
+      return df.filter(lit(false)).select(passthrough0.map(tableColumn) :+
         lit("").as("pointer") :+ lit("").as("constraint") :+ lit("").as("actual"): _*)
     // The pointer's escaped key prefix ("/k1/k2/") is IDENTICAL across
     // every check of a row — computed once as a projected column, each
@@ -763,13 +666,13 @@ object Validator {
     val passthrough = keyCols ++ carryCols
     val fenced = keyCols.head
     val barrier = df.select(df.columns.toSeq.map { c =>
-      if (c == fenced) graft.functions.PushdownFence.fence(col(c)).as(c) else col(c)
+      if (c == fenced) graft.functions.PushdownFence.fence(tableColumn(c)).as(c) else tableColumn(c)
     }: _*)
     barrier.filter(anyViolation)
       .withColumn("__ptr_prefix", concat(prefixParts: _*))
-      .select(passthrough.map(col) :+ explode(array(vioStructs: _*)).as("__v"): _*)
+      .select(passthrough.map(tableColumn) :+ explode(array(vioStructs: _*)).as("__v"): _*)
       .filter(col("__v").isNotNull)
-      .select(passthrough.map(col) :+ col("__v.pointer") :+ col("__v.constraint") :+ col("__v.actual"): _*)
+      .select(passthrough.map(tableColumn) :+ col("__v.pointer") :+ col("__v.constraint") :+ col("__v.actual"): _*)
   }
 
   /** Typed transcript validation (the flagship path). */
@@ -791,8 +694,7 @@ object Validator {
     * checks are dropped to match what a rollup over emitted rows shows.
     */
   def violationCounts(df: DataFrame, schema: TableSchema): DataFrame = {
-    val checks = ConstraintCompiler.compile(schema, df.schema)
-      .fold(e => throw new IllegalArgumentException(e), identity)
+    val checks = checksOf(df, schema)
     if (checks.isEmpty)
       return df.sparkSession.emptyDataFrame
         .select(lit("").as("constraint"), lit("").as("column"), lit(0L).as("n"))
@@ -820,8 +722,7 @@ object Validator {
     * path's `when` and violationCounts' null-skipping `sum` treat it.
     */
   def violationTotal(df: DataFrame, schema: TableSchema): DataFrame = {
-    val checks = ConstraintCompiler.compile(schema, df.schema)
-      .fold(e => throw new IllegalArgumentException(e), identity)
+    val checks = checksOf(df, schema)
     val perRow = checks.map(ch => coalesce((!ch.ok).cast("long"), lit(0L)))
       .reduceOption(_ + _).getOrElse(lit(0L))
     df.select(perRow.as("__nv"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.expressions.RowOrdering
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import org.apache.datasketches.tdigest.TDigestDouble
+import graft.exprs.ConstraintCompiler.tableColumn
 
 /** Column statistics (north_rule): count / null-rate / min / max /
   * distinct (HyperLogLog++ via Spark's built-in `approx_count_distinct`)
@@ -210,7 +211,7 @@ object Stats {
     * `__min`, `__max`, `__distinct` (for an `agg` or an `observe`). */
   def profileAggs(df: DataFrame, columns: Seq[String]): Seq[Column] =
     count(lit(1)).as("__total") +: columns.flatMap { name =>
-      val c = col(name)
+      val c = tableColumn(name)
       // min/max/distinct need an ordering (maps have none): such a
       // column keeps its count and nulls, the rest stays null
       val orderable = RowOrdering.isOrderable(df.schema(name).dataType)
@@ -229,10 +230,10 @@ object Stats {
       struct(
         lit(name).as("column"),
         col("__total").as("cnt"),
-        col(s"${name}__nulls").as("null_count"),
-        col(s"${name}__min").as("min_value"),
-        col(s"${name}__max").as("max_value"),
-        col(s"${name}__distinct").as("approx_distinct"))
+        tableColumn(s"${name}__nulls").as("null_count"),
+        tableColumn(s"${name}__min").as("min_value"),
+        tableColumn(s"${name}__max").as("max_value"),
+        tableColumn(s"${name}__distinct").as("approx_distinct"))
     }
     wide.select(explode(array(structs: _*)).as("s")).select(col("s.*"))
   }

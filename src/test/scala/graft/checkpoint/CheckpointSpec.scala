@@ -277,13 +277,45 @@ class CheckpointSpec extends AnyFlatSpec with Matchers {
     Checkpoint.completedMetrics(s"$out/manifest.jsonl") shouldBe empty
   }
 
+  /** Cut the manifest's last line after `keep(line)` of its bytes, as a
+    * kill mid-append leaves it, and resume: the cut unit is validated
+    * again and its record lands whole on a line of its own.
+    */
+  private def resumeAfterTornTail(write: String => Unit)(keep: Array[Byte] => Int): Unit = {
+    val (in, out) = (tmp() + "/in", tmp())
+    write(in)
+    val m = Paths.get(s"$out/manifest.jsonl")
+    val first = Checkpoint.runValidation(spark, in, schema, s"$out/v", m.toString)
+    val bytes = Files.readAllBytes(m)
+    val lastStart = bytes.lastIndexOf('\n'.toByte, bytes.length - 2) + 1
+    Files.write(m, bytes.take(lastStart + keep(bytes.drop(lastStart))))
+    val resumed = Checkpoint.runValidation(spark, in, schema, s"$out/v", m.toString)
+    resumed.map(_.unit) shouldBe Seq(first.last.unit)
+    Checkpoint.completedMetrics(m.toString).sorted shouldBe first.map(r => (r.unit, r.rows, r.violations)).sorted
+    Checkpoint.runValidation(spark, in, schema, s"$out/v", m.toString) shouldBe empty
+  }
+
+  "Checkpoint.appendResults" should "start a fresh line after a torn last manifest line" in {
+    resumeAfterTornTail(writeInput)(_.length / 2)
+  }
+
+  "Checkpoint.completedMetrics" should "skip a last manifest line cut inside a multibyte character" in {
+    // the column name rides in the line's null_counts as raw UTF-8
+    resumeAfterTornTail { in =>
+      TranscriptGen.generate(spark, 40, 10, TranscriptGen.Defects(badEnumRole = true))
+        .withColumn("donn\u00e9es_\u00e9", col("role")).repartition(4).write.parquet(in)
+    } { line =>
+      line.indexOf(0xc3.toByte) + 1 // between the two bytes of the first é
+    }
+  }
+
   "Checkpoint.toJson" should "escape control characters so each record stays one JSON line" in {
     val m = tmp() + "/manifest.jsonl"
     val units = Seq("/t/a\nb.parquet", "/t/tab\there \"q\" back\\slash\u0001.parquet")
-    units.zipWithIndex.foreach { case (u, i) =>
-      Checkpoint.appendResult(m, Checkpoint.UnitResult(u, 10L + i, i.toLong, i == 0,
-        batchWallMs = 5, batchSize = 2, nullCounts = Map("col\nname" -> 1L, "plain" -> 0L)))
-    }
+    Checkpoint.appendResults(m, units.zipWithIndex.map { case (u, i) =>
+      Checkpoint.UnitResult(u, 10L + i, i.toLong, i == 0,
+        batchWallMs = 5, batchSize = 2, nullCounts = Map("col\nname" -> 1L, "plain" -> 0L))
+    })
     val lines = Files.readAllLines(Paths.get(m)).asScala.toSeq
     lines.size shouldBe 2
     lines.head should include("a\\nb.parquet")

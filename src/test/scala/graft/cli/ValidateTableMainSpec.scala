@@ -8,7 +8,7 @@ import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
 import graft.SparkTestBase
 import graft.checkpoint.Checkpoint
-import graft.compile.TableSchemaCompiler
+import graft.compile.{TableSchema, TableSchemaCompiler}
 import graft.sources.TranscriptGen
 import graft.stats.Stats
 
@@ -32,13 +32,13 @@ class ValidateTableMainSpec extends AnyFlatSpec with Matchers {
     * `Integrity`: a key with a NULL part is never a duplicate, a NULL
     * `conv_id` is never an orphan.
     */
-  private def expected(dir: String): (Long, Long, Long) = {
+  private def expected(dir: String, extraViolations: Row => Int = _ => 0): (Long, Long, Long) = {
     val rows = spark.read.parquet(dir).collect().toSeq
     val keys = rows.map(r => (r.getAs[String]("conv_id"), r.getAs[Integer]("turn_idx")))
       .filter { case (c, t) => c != null && t != null }
       .groupBy(identity)
     val rooted = rows.filter(r => r.getAs[Integer]("turn_idx") == 0).map(_.getAs[String]("conv_id")).toSet
-    (rows.map(FlagshipRecount.rowViolations).sum.toLong,
+    (rows.map(r => FlagshipRecount.rowViolations(r) + extraViolations(r)).sum.toLong,
       keys.count(_._2.size > 1).toLong,
       rows.count(r => r.getAs[String]("conv_id") != null && !rooted(r.getAs[String]("conv_id"))).toLong)
   }
@@ -66,12 +66,15 @@ class ValidateTableMainSpec extends AnyFlatSpec with Matchers {
   }
 
   /** Run the CLI over `df` written as a 4-file table; check its verdict
-    * and `stats/` against plain Scala and return the verdict.
+    * and `stats/` against plain Scala and return the verdict. A schema
+    * that declares columns beyond the flagship's counts their
+    * violations with `extraViolations`.
     */
-  private def runChecked(df: DataFrame): ValidateTableMain.Verdict = {
+  private def runChecked(df: DataFrame, schema: TableSchema = schema,
+                         extraViolations: Row => Int = _ => 0): ValidateTableMain.Verdict = {
     val (in, out) = (tmp() + "/in", tmp())
     df.repartition(4).write.parquet(in)
-    val (rowVios, dups, orphans) = expected(in)
+    val (rowVios, dups, orphans) = expected(in, extraViolations)
     val v = ValidateTableMain.run(spark, schema, in, out)
     (v.rowViolations, v.duplicateKeys, v.orphanRows) shouldBe ((rowVios, dups, orphans))
     checkStats(in, out)
@@ -184,5 +187,26 @@ class ValidateTableMainSpec extends AnyFlatSpec with Matchers {
     val rest = TranscriptGen.generate(spark, 50, 10, TranscriptGen.all).filter(col("conv_id") =!= "c0")
     val v = runChecked(hot.unionByName(rest))
     v.rowViolations should be > (100000L - 4097L)
+  }
+
+  it should "take dots and backticks in column names as part of the name" in {
+    // an undeclared `meta.src`, a declared `a.b` with a minimum, a
+    // declared name holding a backtick with a maxLength
+    val hostile = TableSchemaCompiler.compileString("""
+      { "type": "object", "properties": {
+          "a.b": { "type": "integer", "minimum": 0 },
+          "we`ird": { "type": "string", "maxLength": 2 } } }""").toOption.get
+    val t = TranscriptGen.generate(spark, 100, 10, TranscriptGen.all)
+      .withColumn("meta.src", when(col("turn_idx") % 3 =!= 0, concat(lit("src"), col("turn_idx").cast("string"))))
+      .withColumn("a.b", when(col("turn_idx") % 5 =!= 0, col("turn_idx") - 3))
+      .withColumn("we`ird", when(col("turn_idx") % 4 =!= 0, substring(col("conv_id"), 1, 3)))
+    def tooSmall(r: Row) = Option(r.getAs[Integer]("a.b")).exists(_ < 0)
+    def tooLong(r: Row) = Option(r.getAs[String]("we`ird")).exists(_.length > 2)
+    val v = runChecked(t, schema.copy(columns = schema.columns ++ hostile.columns),
+      r => Seq(tooSmall(r), tooLong(r)).count(identity))
+    val rows = t.collect()
+    rows.count(tooSmall) should be > 0
+    rows.count(tooLong) should be > 0
+    v.rowViolations should be > rows.map(FlagshipRecount.rowViolations).sum.toLong
   }
 }

@@ -325,4 +325,84 @@ class CompilerEdgeSpec extends AnyFlatSpec with Matchers {
     val phys2 = StructType(Seq(StructField("b", StringType)))
     ConstraintCompiler.compile(schemaVacuous, phys2).isRight shouldBe true
   }
+
+  /** One case per kind of bind error: the table schema's properties
+    * (and any other root keywords), the physical schema, the bind row
+    * that kind yields, and `compile`'s message (an uncompilable row
+    * carries it as its detail).
+    */
+  private case class BindError(kind: String, properties: String, physical: StructType,
+                               column: String, status: String, message: String, root: String = "")
+
+  private val int = StructField("x", IntegerType)
+  private val bindErrors = Seq(
+    BindError("a declared type incompatible with the physical type",
+      """"x": { "type": "string" }""", StructType(Seq(int)), "x", "uncompilable",
+      "column x: declared types string incompatible with physical type int"),
+    BindError("a non-numeric enum literal on a numeric column",
+      """"x": { "enum": ["a"] }""", StructType(Seq(int)), "x", "uncompilable",
+      """column x: enum value "a" is not numeric (column type int)"""),
+    BindError("an enum literal of the wrong kind",
+      """"x": { "enum": [1] }""", StructType(Seq(StructField("x", StringType))), "x", "uncompilable",
+      "column x: enum value 1 incompatible with column type string"),
+    BindError("a required struct property missing",
+      """"s": { "type": "object", "required": ["zz"], "properties": { "zz": {} } }""",
+      StructType(Seq(StructField("s", StructType(Seq(StructField("a", IntegerType)))))), "s", "uncompilable",
+      "column s: required property zz missing from struct struct<a:int>"),
+    BindError("a required column missing",
+      """"x": { "type": "integer" }, "gone": { "type": "string" }""", StructType(Seq(int)),
+      "gone", "missing_required", "required column gone missing from table schema struct<x:int>",
+      root = """, "required": ["gone"]"""),
+    BindError("a dependency target absent",
+      """"x": { "type": "integer" }""", StructType(Seq(int)), "<dependencies>", "uncompilable",
+      "dependencies of x references columns absent from the table: ghost",
+      root = """, "dependencies": { "x": ["ghost"] }"""),
+    BindError("a dependency schema naming an unknown column",
+      """"x": { "type": "integer" }""", StructType(Seq(int)), "<dependencies>", "uncompilable",
+      "dependency schema references unknown column ghost",
+      root = """, "dependencies": { "x": { "type": "object", "properties": { "ghost": { "type": "string" } } } }"""),
+    BindError("an error nested in items",
+      """"a": { "type": "array", "items": { "type": "string" } }""",
+      StructType(Seq(StructField("a", ArrayType(IntegerType)))), "a", "uncompilable",
+      "column _element: declared types string incompatible with physical type int"),
+    BindError("an error nested in additionalItems",
+      """"a": { "type": "array", "items": [ {} ], "additionalItems": { "type": "string" } }""",
+      StructType(Seq(StructField("a", ArrayType(IntegerType)))), "a", "uncompilable",
+      "column _element: declared types string incompatible with physical type int"),
+    BindError("an error nested in map patternProperties",
+      """"m": { "type": "object", "patternProperties": { "^k": { "enum": ["v"] } } }""",
+      StructType(Seq(StructField("m", MapType(StringType, LongType)))), "m", "uncompilable",
+      """column _element: enum value "v" is not numeric (column type bigint)"""),
+    BindError("an error nested in map additionalProperties",
+      """"m": { "type": "object", "additionalProperties": { "type": "boolean" } }""",
+      StructType(Seq(StructField("m", MapType(StringType, LongType)))), "m", "uncompilable",
+      "column _element: declared types boolean incompatible with physical type bigint"),
+    BindError("an error nested in a oneOf branch",
+      """"x": { "oneOf": [ { "type": "integer", "enum": [true] }, { "type": "string" } ] }""",
+      StructType(Seq(int)), "x", "uncompilable",
+      "column x: enum value true is not numeric (column type int)"))
+
+  "compile" should "return each kind of bind error as a Left that bindReport's row repeats" in {
+    bindErrors.foreach { e =>
+      withClue(s"${e.kind}: ") {
+        val schema = TableSchemaCompiler.compileString(
+          s"""{ "type": "object", "properties": { ${e.properties} }${e.root} }""")
+          .fold(err => fail(s"schema does not parse: $err"), identity)
+        val compiled = scala.util.Try(ConstraintCompiler.compile(schema, e.physical))
+        compiled.failed.toOption shouldBe None
+        compiled.get shouldBe Left(e.message)
+        val detail = if (e.status == "uncompilable") e.message else "declared required; absent from table"
+        ConstraintCompiler.bindReport(schema, e.physical).filter(_.column == e.column) shouldBe
+          Seq(ConstraintCompiler.ColumnBind(e.column, e.status, detail))
+      }
+    }
+  }
+
+  it should "report the first uncompilable branch of a combinator" in {
+    val schema = TableSchemaCompiler.compileString("""
+      { "type": "object",
+        "properties": { "x": { "anyOf": [ { "enum": ["first"] }, { "enum": ["second"] } ] } } }""").toOption.get
+    ConstraintCompiler.compile(schema, StructType(Seq(StructField("x", IntegerType)))) shouldBe
+      Left("""column x: enum value "first" is not numeric (column type int)""")
+  }
 }
