@@ -282,6 +282,12 @@ object Checkpoint {
   def runValidation(table: Table, schema: TableSchema, outDir: String, manifestPath: String,
                     batchSize: Int): Seq[UnitResult] = {
     val spark = table.df.sparkSession
+    // keys of every listed file, checked before the first batch: units
+    // sharing a key overwrite each other's `unit=` partition, whether
+    // they run in one batch or two, and whether one is done or pending
+    val keyOf = table.files.map(f => f -> unitKey(unitName(f))).toMap
+    val collisions = table.files.groupBy(keyOf).values.filter(_.size > 1).map(_.map(unitName).mkString(" / "))
+    require(collisions.isEmpty, s"unit keys collide: ${collisions.mkString("; ")}")
     val done = completedUnits(manifestPath)
     val pending = table.files.filterNot(f => done(unitName(f)))
     val filePath = table.df.metadataColumn("_metadata").getField("file_path")
@@ -291,9 +297,7 @@ object Checkpoint {
       table.df.select(table.dataColumns.map(tableColumn) :+ lit(null).cast("string").as("unit"): _*), schema)
     pending.grouped(batchSize).flatMap { batch =>
       val t0 = System.nanoTime()
-      val keyByFile = batch.map(f => f -> unitKey(unitName(f))).toMap
-      require(keyByFile.values.toSet.size == batch.size,
-        s"unit keys collide in batch: ${batch.take(3).map(unitName).mkString(", ")}")
+      val keyByFile = batch.map(f => f -> keyOf(f)).toMap
       // one map lookup per row; a path that matches no unit FAILS
       // LOUDLY (a silent null would record rows=0/violations=0)
       val keyExpr = coalesce(

@@ -27,11 +27,16 @@ import graft.pointer.JsonPointer
   *  - scope: root uses `id` or the parent URI; nested nodes resolve
   *    their `id` against the parent scope (`:138-139`).
   *
+  * Each keyword family (number, string, array, object) is decoded
+  * whenever the node holds one of its keywords, whatever its `type` says
+  * (the reference decodes a family only under its type, `:127-128,151`);
+  * only `decodeTypes` reads `type`. Which keyword applies to a value is
+  * decided from its physical type by [[graft.exprs.ConstraintCompiler]].
+  *
   * Documented divergences from the reference (SURVEY.md §4, pinned by
   * golden tests):
-  *  - numeric constraints are decoded when `types` contains *number or
-  *    integer* — the reference gates on `number` only (`:151`), silently
-  *    dropping `{"type":"integer","minimum":0}` bounds (a reference bug);
+  *  - a `required` name with no `properties` entry is a required
+  *    property with the permissive schema, not dropped;
   *  - `dependencies` values are decoded by JSON shape (array -> property
   *    set, anything else -> schema) instead of a left-biased either that
   *    could never produce the property form;
@@ -44,21 +49,23 @@ object SchemaDecoder {
     "http://json-schema.org/schema#",
     "http://json-schema.org/draft-04/schema#")
 
-  private val reservedFields = Set(
-    "id", "title", "$schema", "description", "default",
-    "multipleOf", "maximum", "exclusiveMaximum", "minimum", "exclusiveMinimum",
-    "maxLength", "minLength", "pattern",
-    "additionalItems", "items", "maxItems", "minItems", "uniqueItems",
-    "maxProperties", "minProperties", "required", "additionalProperties",
-    "definitions", "properties", "patternProperties", "dependencies",
+  private val numberKeywords = Set("multipleOf", "maximum", "exclusiveMaximum", "minimum", "exclusiveMinimum")
+  private val stringKeywords = Set("maxLength", "minLength", "pattern")
+  private val arrayKeywords = Set("additionalItems", "items", "maxItems", "minItems", "uniqueItems")
+  private val objectKeywords = Set("maxProperties", "minProperties", "required", "additionalProperties",
+    "properties", "patternProperties")
+  private val reservedFields = numberKeywords ++ stringKeywords ++ arrayKeywords ++ objectKeywords ++ Set(
+    "id", "title", "$schema", "description", "default", "definitions", "dependencies",
     "enum", "type", "allOf", "anyOf", "oneOf", "not", "format")
+
+  /** A keyword family's decode when `json` holds any of its keywords. */
+  private def family[A](json: JValue, keywords: Set[String])(decode: => Either[String, A]): Either[String, Option[A]] =
+    if (keywords.exists(Js.field(json, _).isDefined)) decode.map(Some(_)) else Right(None)
 
   def decode(parentId: URI, json: JValue): Either[String, SchemaDoc] =
     decodeNode(parentId, json, rootSchema = true)
 
-  private def decodeNode(parentId: URI, json: JValue, rootSchema: Boolean): Either[String, SchemaDoc] = {
-    val types = decodeTypes(json)
-
+  private def decodeNode(parentId: URI, json: JValue, rootSchema: Boolean): Either[String, SchemaDoc] =
     for {
       id <- optUri(json, "id").flatMap {
         case Some(u) if u.toString.isEmpty => Left(s"$u is not valid id")
@@ -75,14 +82,12 @@ object SchemaDecoder {
       scope = if (rootSchema) id.getOrElse(parentId)
               else id.fold(parentId)(JsonPointer.resolveAsPointer(parentId, _))
 
-      number <- if (types(SimpleType.number) || types(SimpleType.integer))
-                  decodeNumber(json).map(Some(_))
-                else Right(None)
-      string <- if (types(SimpleType.string)) decodeString(json).map(Some(_)) else Right(None)
-      array  <- if (types(SimpleType.array)) decodeArray(scope, json).map(Some(_)) else Right(None)
-      obj    <- if (types(SimpleType.jsonObject)) decodeObject(scope, json).map(Some(_)) else Right(None)
+      number <- family(json, numberKeywords)(decodeNumber(json))
+      string <- family(json, stringKeywords)(decodeString(json))
+      array  <- family(json, arrayKeywords)(decodeArray(scope, json))
+      obj    <- family(json, objectKeywords)(decodeObject(scope, json))
 
-      definitions <- mapOfSchemas(scope, json, "definitions")
+      definitions <- orderedSchemaMap(scope, json, "definitions").map(_.toMap)
       dependencies <- decodeDependencies(scope, json)
       enums <- decodeEnum(json)
       anyOf <- listOfSchemas(scope, json, "anyOf")
@@ -96,8 +101,7 @@ object SchemaDecoder {
     } yield SchemaDoc(
       scope, id, schemaVersion, number, string, array, obj,
       enums, nested, title, description, format,
-      definitions, dependencies, types, anyOf, allOf, oneOf, not)
-  }
+      definitions, dependencies, decodeTypes(json), anyOf, allOf, oneOf, not)
 
   /** Tolerant `type` decode (reference `:125` + `oneOrSetStrict`). */
   private def decodeTypes(json: JValue): Set[SimpleType.SimpleType] = {
@@ -199,19 +203,20 @@ object SchemaDecoder {
       required <- decodeRequired(json)
     } yield ObjectConstraint(
       additional,
-      props.map { case (k, s) => k -> Property(required.contains(k), s) },
+      props.map { case (k, s) => k -> Property(required.contains(k), s) } ++
+        required.filterNot(props.contains).map(_ -> Property(required = true, SchemaDoc(scope))),
       patternProps.toList,
       minProps.getOrElse(0), maxProps)
 
-  private def decodeRequired(json: JValue): Either[String, Set[String]] =
+  private def decodeRequired(json: JValue): Either[String, List[String]] =
     Js.field(json, "required") match {
-      case None => Right(Set.empty)
+      case None => Right(Nil)
       case Some(JArray(elems)) =>
         val strs = elems.collect { case JString(s) => s }
         if (strs.size != elems.size) Left("required must be an array of strings")
         else if (strs.isEmpty) Left("required must be non-empty")
         else if (strs.toSet.size != strs.size) Left("required contains duplicates")
-        else Right(strs.toSet)
+        else Right(strs)
       case Some(v) => Left(s"required must be an array: ${Js.compact(v)}")
     }
 
@@ -249,9 +254,6 @@ object SchemaDecoder {
       case Some(v)            => decodeNode(scope, v, rootSchema = false).map(List(_))
     }
 
-  private def mapOfSchemas(scope: URI, json: JValue, field: String): Either[String, Map[String, SchemaDoc]] =
-    orderedSchemaMap(scope, json, field).map(_.toMap)
-
   private def orderedSchemaMap(scope: URI, json: JValue, field: String): Either[String, ListMap[String, SchemaDoc]] =
     Js.field(json, field) match {
       case None => Right(ListMap.empty)
@@ -272,26 +274,16 @@ object SchemaDecoder {
       case _ => Right(Map.empty)
     }
 
-  private def optString(json: JValue, field: String): Either[String, Option[String]] =
-    Js.field(json, field) match {
-      case None             => Right(None)
-      case Some(JString(s)) => Right(Some(s))
-      case Some(v)          => Left(s"$field must be a string: ${Js.compact(v)}")
-    }
-
-  private def optBoolean(json: JValue, field: String): Either[String, Option[Boolean]] =
-    Js.field(json, field) match {
-      case None           => Right(None)
-      case Some(JBool(b)) => Right(Some(b))
-      case Some(v)        => Left(s"$field must be a boolean: ${Js.compact(v)}")
-    }
-
-  private def optNumber(json: JValue, field: String): Either[String, Option[BigDecimal]] =
+  /** `field`'s value read by `read`, or an error naming the expected `kind`. */
+  private def opt[A](json: JValue, field: String, kind: String)(read: PartialFunction[JValue, A]): Either[String, Option[A]] =
     Js.field(json, field) match {
       case None    => Right(None)
-      case Some(v) => Js.asNumber(v).map(n => Right(Some(n)))
-        .getOrElse(Left(s"$field must be a number: ${Js.compact(v)}"))
+      case Some(v) => read.lift(v).map(Some(_)).toRight(s"$field must be $kind: ${Js.compact(v)}")
     }
+
+  private def optString(json: JValue, field: String) = opt(json, field, "a string") { case JString(s) => s }
+  private def optBoolean(json: JValue, field: String) = opt(json, field, "a boolean") { case JBool(b) => b }
+  private def optNumber(json: JValue, field: String) = opt(json, field, "a number")(Function.unlift(Js.asNumber))
 
   private def optUri(json: JValue, field: String): Either[String, Option[URI]] =
     Js.field(json, field) match {

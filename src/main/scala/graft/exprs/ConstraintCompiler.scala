@@ -24,6 +24,13 @@ import graft.compile.TableSchema
   * NULL; nullness is reported by the `required` constraint only. This
   * matches JSON-Schema, where `required` is the only keyword that sees
   * absent values.
+  *
+  * Which keywords apply is decided here alone, from the physical type
+  * (the decoder records every keyword whatever the node's `type`), as
+  * draft-4 applies each keyword to the instances of its kind: number
+  * keywords to numeric columns, string keywords and `format` to columns
+  * that hold strings ([[holdsStrings]]), array keywords to arrays and
+  * object keywords to maps and structs. `type` and `enum` apply to all.
   */
 object ConstraintCompiler {
 
@@ -35,6 +42,14 @@ object ConstraintCompiler {
     case FloatType | DoubleType | _: DecimalType => true
     case _ => false
   }
+  private def isDateTime(dt: DataType): Boolean = dt == TimestampType || dt == TimestampNTZType || dt == DateType
+
+  /** A column that holds strings: a string column, or a timestamp or
+    * date column under `format: date-time` (its values are date-time
+    * strings).
+    */
+  private def holdsStrings(doc: SchemaDoc, dt: DataType): Boolean =
+    dt == StringType || (isDateTime(dt) && doc.format.contains("date-time"))
 
   /** True when a schema node carries no checkable constraint at all
     * (the permissive `{}` / `true` schema) — its predicate is `lit(true)`.
@@ -152,7 +167,8 @@ object ConstraintCompiler {
 
   /** Value-level checks of one schema doc applied to expression `c`
     * (labelled `name` in emitted violations), keyword families in a
-    * fixed order: the first that cannot bind is the column's error.
+    * fixed order: the first that cannot bind is the column's error. A
+    * family applies only to the physical types of its kind.
     */
   private def valueChecks(name: String, c: Column, doc: SchemaDoc, dt: DataType): Seq[Check] =
     if (dt == NullType) Nil // all-null column: every value check passes
@@ -160,7 +176,7 @@ object ConstraintCompiler {
       val ok = Checker(name, c, coalesce(c.cast("string"), lit("null")))
       val types = typeCheck(ok, doc, dt)
       val enums = enumCheck(ok, doc, dt)
-      val numeric = doc.number.toSeq.flatMap { nc =>
+      val numeric = doc.number.filter(_ => dt.isInstanceOf[NumericType]).toSeq.flatMap { nc =>
         // keep bound literals in the column's arithmetic family so
         // Catalyst doesn't widen an integral column to double (better
         // codegen + parquet pushdown when the filter form is used)
@@ -206,7 +222,7 @@ object ConstraintCompiler {
           }
         ).flatten
       }
-      val strings = doc.string.toSeq.flatMap { sc =>
+      val strings = doc.string.filter(_ => holdsStrings(doc, dt)).toSeq.flatMap { sc =>
         Seq(
           if (sc.minLength > 0) Some(ok("minLength", length(c) >= lit(sc.minLength))) else None,
           sc.maxLength.map(m => ok("maxLength", length(c) <= lit(m))),
@@ -375,10 +391,7 @@ object ConstraintCompiler {
     */
   private[exprs] def typesCompatible(doc: SchemaDoc, dt: DataType): Boolean =
     doc.types.isEmpty || doc.types.exists {
-      case SimpleType.string =>
-        dt == StringType ||
-          ((dt == TimestampType || dt == TimestampNTZType || dt == DateType) &&
-            doc.format.contains("date-time")) // ts / date column
+      case SimpleType.string  => holdsStrings(doc, dt)
       case SimpleType.integer => isIntegral(dt) || isFractional(dt)
       case SimpleType.number  => dt.isInstanceOf[NumericType]
       case SimpleType.boolean => dt == BooleanType
@@ -398,8 +411,9 @@ object ConstraintCompiler {
       // {type:"null"} evaluated true for every non-null value,
       // mis-counting the ubiquitous nullable idiom oneOf:[T, "null"]
       Seq(Check(ok.name, "type:null", ok.c.isNull, ok.actual))
-    else if (doc.types.contains(SimpleType.integer) && !isIntegral(dt) && dt.isInstanceOf[NumericType])
-      // integer declared over a fractional physical column -> runtime integrality check
+    else if (doc.types.contains(SimpleType.integer) && !doc.types.contains(SimpleType.number) &&
+             !isIntegral(dt) && dt.isInstanceOf[NumericType])
+      // integer (not number) declared over a fractional physical column -> runtime integrality check
       Seq(ok("type:integer", ok.c === floor(ok.c)))
     else Nil
 
@@ -445,16 +459,16 @@ object ConstraintCompiler {
 
   /** Per-format predicate library (reference stores format as a free
     * string, `JsonSchemaDecoder.scala:136`; enum of known formats
-    * `model.scala:19-23`). Unknown formats are ignored per draft-4.
+    * `model.scala:19-23`). Unknown formats, and any format on a column
+    * that does not hold strings, are ignored per draft-4.
     */
   private def formatCheck(ok: Checker, doc: SchemaDoc, dt: DataType): Option[Check] = {
     val c = ok.c
     def fm(col: Column, f: String): Column = graft.functions.FormatMatch(col, f)
-    doc.format.flatMap { f =>
+    doc.format.filter(_ => holdsStrings(doc, dt)).flatMap { f =>
       (f match {
         case "date-time" =>
-          if (dt == TimestampType || dt == TimestampNTZType || dt == DateType)
-            None // physically guaranteed
+          if (isDateTime(dt)) None // physically guaranteed
           // try_ variant: under ANSI mode (Spark 4 default) to_timestamp
           // THROWS on a malformed string — a validator must classify bad
           // values, not crash on them

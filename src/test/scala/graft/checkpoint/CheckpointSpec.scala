@@ -277,6 +277,28 @@ class CheckpointSpec extends AnyFlatSpec with Matchers {
     Checkpoint.completedMetrics(s"$out/manifest.jsonl") shouldBe empty
   }
 
+  it should "fail loudly before the first batch when unit keys collide across batches" in {
+    // "Aa" and "BB" have one String.hashCode, so the two paths share a
+    // unit key: batch 2's overwrite of `unit=<key>/` would delete batch 1's rows
+    "Aa".hashCode shouldBe "BB".hashCode
+    val in = tmp() + "/in"
+    Seq("Aa", "BB").foreach { x =>
+      val dir = s"$in/x=$x"
+      TranscriptGen.generate(spark, 4, 3, TranscriptGen.Defects(badEnumRole = true))
+        .coalesce(1).write.parquet(s"$dir/tmp")
+      Files.move(Paths.get(dataFiles(s"$dir/tmp").head), Paths.get(s"$dir/part.parquet"))
+      Files.walk(Paths.get(s"$dir/tmp")).iterator().asScala.toSeq.reverse.foreach(Files.delete)
+    }
+    val out = tmp()
+    val ex = intercept[IllegalArgumentException] {
+      Checkpoint.runValidation(spark, in, schema, s"$out/v", s"$out/manifest.jsonl", batchSize = 1)
+    }
+    ex.getMessage should include("unit keys collide")
+    ex.getMessage should include(s"$in/x=Aa/part.parquet / $in/x=BB/part.parquet")
+    Files.exists(Paths.get(s"$out/manifest.jsonl")) shouldBe false
+    Files.exists(Paths.get(s"$out/v")) shouldBe false
+  }
+
   /** Cut the manifest's last line after `keep(line)` of its bytes, as a
     * kill mid-append leaves it, and resume: the cut unit is validated
     * again and its record lands whole on a line of its own.

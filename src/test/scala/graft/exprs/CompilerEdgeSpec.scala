@@ -190,6 +190,22 @@ class CompilerEdgeSpec extends AnyFlatSpec with Matchers {
     validate(nullOnly, df) shouldBe Set((0, "type:null"), (2, "type:null"))
   }
 
+  """type: ["number", "integer"]""" should "accept a fractional value on a double column" in {
+    import spark.implicits._
+    val df = Seq(("c1", 0, 1.5), ("c1", 1, 2.0)).toDF("conv_id", "turn_idx", "v")
+    def schema(types: String) = s"""
+    {
+      "type": "object", "required": ["conv_id", "turn_idx"],
+      "properties": {
+        "conv_id": { "type": "string" }, "turn_idx": { "type": "integer" },
+        "v": { "type": $types }
+      }
+    }"""
+    // 1.5 is a number: only a type that names integer alone checks integrality
+    validate(schema("""["number", "integer"]"""), df) shouldBe Set.empty
+    validate(schema("\"integer\""), df) shouldBe Set((0, "type:integer"))
+  }
+
   "integral literals beyond the column's range" should "match nothing instead of truncating" in {
     import spark.implicits._
     val df = Seq(("c1", 0, 1L), ("c1", 1, 2L)).toDF("conv_id", "turn_idx", "v")
@@ -349,10 +365,18 @@ class CompilerEdgeSpec extends AnyFlatSpec with Matchers {
       """"s": { "type": "object", "required": ["zz"], "properties": { "zz": {} } }""",
       StructType(Seq(StructField("s", StructType(Seq(StructField("a", IntegerType)))))), "s", "uncompilable",
       "column s: required property zz missing from struct struct<a:int>"),
+    BindError("a required struct property with no properties entry missing",
+      """"s": { "type": "object", "required": ["zz"] }""",
+      StructType(Seq(StructField("s", StructType(Seq(StructField("a", IntegerType)))))), "s", "uncompilable",
+      "column s: required property zz missing from struct struct<a:int>"),
     BindError("a required column missing",
       """"x": { "type": "integer" }, "gone": { "type": "string" }""", StructType(Seq(int)),
       "gone", "missing_required", "required column gone missing from table schema struct<x:int>",
       root = """, "required": ["gone"]"""),
+    BindError("a required column with no properties entry missing",
+      """"x": { "type": "integer" }""", StructType(Seq(int)),
+      "gone", "missing_required", "required column gone missing from table schema struct<x:int>",
+      root = """, "required": ["x", "gone"]"""),
     BindError("a dependency target absent",
       """"x": { "type": "integer" }""", StructType(Seq(int)), "<dependencies>", "uncompilable",
       "dependencies of x references columns absent from the table: ghost",
@@ -404,5 +428,72 @@ class CompilerEdgeSpec extends AnyFlatSpec with Matchers {
         "properties": { "x": { "anyOf": [ { "enum": ["first"] }, { "enum": ["second"] } ] } } }""").toOption.get
     ConstraintCompiler.compile(schema, StructType(Seq(StructField("x", IntegerType)))) shouldBe
       Left("""column x: enum value "first" is not numeric (column type int)""")
+  }
+
+  "required" should "bind a name with no properties entry, after the declared properties" in {
+    val ts = TableSchemaCompiler.compileString("""
+      { "type": "object", "required": ["role", "conv_id", "turn_idx"],
+        "properties": { "conv_id": { "type": "string", "minLength": 1 }, "turn_idx": { "type": "integer" } } }""")
+      .fold(e => fail(e), identity)
+    ts.columns.toSeq.map { case (n, p) => (n, p.required) } shouldBe
+      Seq(("conv_id", true), ("turn_idx", true), ("role", true))
+    val physical = StructType(Seq(StructField("conv_id", StringType), StructField("turn_idx", IntegerType)))
+    ConstraintCompiler.compile(ts, physical) shouldBe
+      Left("required column role missing from table schema struct<conv_id:string,turn_idx:int>")
+    ConstraintCompiler.bindReport(ts, physical).map(b => b.column -> b.status) shouldBe
+      Seq("conv_id" -> "ok", "turn_idx" -> "ok", "role" -> "missing_required")
+  }
+
+  it should "flag the map rows without a key that has no properties entry" in {
+    import spark.implicits._
+    val df = Seq(("c1", 0, Map("k" -> "v")), ("c1", 1, Map("j" -> "v"))).toDF("conv_id", "turn_idx", "m")
+    validate("""
+      { "type": "object", "required": ["conv_id", "turn_idx"],
+        "properties": {
+          "conv_id": { "type": "string" }, "turn_idx": { "type": "integer" },
+          "m": { "type": "object", "required": ["k"] } } }""", df) shouldBe Set((1, "properties/k"))
+  }
+
+  /** One draft-4 result per keyword of a node that declares no type (or
+    * another type than the column's), and per combinator over such a
+    * node: each keyword applies exactly to the values of its kind.
+    */
+  private case class Probe(kind: String, table: Seq[(String, Int, String, Int)], properties: String,
+                           expected: Set[(String, String)], root: String = "")
+
+  private val tableA = Seq(("c1", 0, "abc", 5), ("c1", 1, "7", 50))
+  private val tableB = Seq(("c1", 0, "xyz", 3), ("c1", 1, "ab", 9))
+  private val probes = Seq(
+    Probe("a string keyword without a type", tableA, """, "s": { "maxLength": 2 }""",
+      Set(("/c1/0/s", "maxLength"))),
+    Probe("a number keyword on a string column of a string-or-number node", tableA,
+      """, "s": { "type": ["string", "number"], "minimum": 10 }""", Set.empty),
+    Probe("a string keyword on an integer column of a string-or-integer node", tableA,
+      """, "n": { "type": ["string", "integer"], "maxLength": 1 }""", Set.empty),
+    Probe("a schema-form dependency without a type", tableA, "", Set(("/c1/1/s", "dependencies")),
+      root = """, "dependencies": { "s": { "properties": { "n": { "type": "integer", "maximum": 10 } } } }"""),
+    Probe("not over an untyped number keyword", tableB, """, "n": { "type": "integer", "not": { "minimum": 5 } }""",
+      Set(("/c1/1/n", "not"))),
+    Probe("not over an untyped string keyword", tableB, """, "s": { "type": "string", "not": { "pattern": "^x" } }""",
+      Set(("/c1/0/s", "not"))),
+    Probe("anyOf over untyped string keywords", tableB,
+      """, "s": { "type": "string", "anyOf": [ { "maxLength": 1 }, { "pattern": "^q" } ] }""",
+      Set(("/c1/0/s", "anyOf"), ("/c1/1/s", "anyOf"))))
+
+  "a keyword" should "apply to the values of its kind whatever the node's type" in {
+    import spark.implicits._
+    probes.foreach { p =>
+      withClue(s"${p.kind}: ") {
+        val ts = TableSchemaCompiler.compileString(
+          s"""{ "type": "object", "required": ["conv_id", "turn_idx"],
+             |  "properties": { "conv_id": { "type": "string" }, "turn_idx": { "type": "integer" }${p.properties} }
+             |  ${p.root} }""".stripMargin).fold(e => fail(e), identity)
+        val df = p.table.toDF("conv_id", "turn_idx", "s", "n")
+        Validator.violations(df, ts, Seq("conv_id", "turn_idx"))
+          .collect().map(r => (r.getAs[String]("pointer"), r.getAs[String]("constraint"))).toSet shouldBe p.expected
+        if (p.expected.isEmpty)
+          Validator.checksOf(df, ts).map(_.column).filterNot(Set("conv_id", "turn_idx")) shouldBe empty
+      }
+    }
   }
 }
