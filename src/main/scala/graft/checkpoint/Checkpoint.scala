@@ -24,13 +24,14 @@ import graft.exprs.Validator
   * The unit of lineage is an input file (the natural parallel unit of a
   * lake table; for Iceberg this generalizes to `(snapshot id, manifest
   * entry)` — each manifest line keeps a `snapshot_id` field, null on
-  * plain Parquet, SURVEY.md §7).
+  * plain Parquet, SURVEY.md §7), named by its path under the table root.
   *
-  * The manifest is JSON-lines, one entry per *completed* unit with its
-  * metrics; resume = set-difference of the input's units against the
-  * manifest, so a killed run redoes only unfinished units and the final
-  * outputs are byte-identical to an uninterrupted run (unit outputs land
-  * in per-unit subdirectories; FIXTURES.md §4 "resume").
+  * The manifest is JSON-lines, one entry per unit with its metrics and
+  * batch id; a batch (one `batch=<id>/` violations write plus one
+  * manifest append) is the commit. Resume = set-difference of the
+  * input's units against the committed ones, so a killed run redoes only
+  * uncommitted batches and the final violation rows equal an
+  * uninterrupted run's as a multiset (FIXTURES.md §4 "resume").
   */
 object Checkpoint {
 
@@ -49,12 +50,12 @@ object Checkpoint {
       batchSize: Int = 1,
       nullCounts: Map[String, Long] = Map.empty)
 
-  /** One manifest line. The JSON codec (json4s, the schema parser's)
-    * escapes `"`, `\` and every control character U+0000–U+001F, so a
-    * raw newline in a unit path or a column name cannot split one
-    * record across two lines.
+  /** One manifest line of batch `batch`. The JSON codec (json4s, the
+    * schema parser's) escapes `"`, `\` and every control character
+    * U+0000–U+001F, so a raw newline in a unit path or a column name
+    * cannot split one record across two lines.
     */
-  def toJson(r: UnitResult): String = {
+  def toJson(batch: Long, r: UnitResult): String = {
     val nulls =
       if (r.nullCounts.isEmpty) Nil
       else List("null_counts" ->
@@ -66,37 +67,53 @@ object Checkpoint {
       "violations" -> JLong(r.violations),
       "passed" -> JBool(r.passed),
       "batch_wall_ms" -> JLong(r.batchWallMs),
+      "batch" -> JLong(batch),
       "batch_size" -> JLong(r.batchSize)) ++ nulls))
   }
 
-  // a unit counts as completed only if its manifest line parsed FULLY
-  // (same torn-write rule as completedMetrics — a unit that resume would
-  // skip must also contribute its metrics to the verdict)
+  // a unit counts as completed only if its batch is committed (same rule
+  // as completedMetrics — a unit that resume would skip must also
+  // contribute its metrics to the verdict)
   def completedUnits(manifestPath: String): Set[String] =
     completedMetrics(manifestPath).map(_._1).toSet
 
-  /** Per-unit metrics of every completed unit in the manifest:
+  /** Per-unit metrics of every committed unit in the manifest:
     * (unit, rows, violations). The final valid/invalid verdict of a run
     * must sum over the FULL manifest, not just the units processed in
     * the current invocation — a resumed (or already-complete) run would
     * otherwise report 0 row violations for the skipped units.
     */
   def completedMetrics(manifestPath: String): Seq[(String, Long, Long)] =
-    // a line that lacks a metric field is torn too: treating it as 0
-    // violations would under-count the verdict, so the unit is NOT
-    // completed — resume re-validates it (idempotent via dynamic
-    // partition overwrite)
-    readLedger(localFile(manifestPath)) { j =>
+    committed(manifestPath)._1.map(e => (e.unit, e.rows, e.violations))
+
+  private final case class Entry(unit: String, rows: Long, violations: Long, batch: Long, batchSize: Long)
+
+  /** The entries of the manifest's committed batches, and the highest
+    * batch id it names. A batch is committed when all its `batch_size`
+    * lines parse fully: a torn line (a crash mid-append; a missing
+    * metric field too) uncommits its whole batch, so resume redoes every
+    * unit of it and none is counted twice. A line without `batch` is from
+    * the per-unit layout of earlier versions and fails.
+    */
+  private def committed(manifestPath: String): (Seq[Entry], Long) = {
+    val entries = readLedger(localFile(manifestPath)) { j =>
       for {
         unit <- Js.stringField(j, "unit")
         rows <- Js.longField(j, "rows")
         vios <- Js.longField(j, "violations")
-      } yield (unit, rows, vios)
+        size <- Js.longField(j, "batch_size")
+      } yield Js.longField(j, "batch").map(Entry(unit, rows, vios, _, size)).getOrElse(
+        throw new IllegalArgumentException(s"$manifestPath has a line without a batch id (the per-unit " +
+          "layout of earlier versions); validate into a fresh output directory"))
     }
+    val batches = entries.groupBy(_.batch)
+    val whole = batches.collect { case (id, es) if es.forall(_.batchSize == es.size) => id }.toSet
+    (entries.filter(e => whole(e.batch)), batches.keys.maxOption.getOrElse(-1L))
+  }
 
-  /** Append a batch's manifest lines in one write. */
-  def appendResults(manifestPath: String, rs: Seq[UnitResult]): Unit =
-    appendLedger(localFile(manifestPath), rs.map(toJson))
+  /** Append batch `batch`'s manifest lines in one write. */
+  def appendResults(manifestPath: String, batch: Long, rs: Seq[UnitResult]): Unit =
+    appendLedger(localFile(manifestPath), rs.map(toJson(batch, _)))
 
   /** The records of a JSON-lines ledger (the manifest, the streaming
     * report), in file order. A line that does not decode as UTF-8 or
@@ -140,23 +157,29 @@ object Checkpoint {
     Paths.get(u.getPath)
   }
 
-  /** Stable partition-key value for a unit (the `unit=` partition dir). */
-  def unitKey(unit: String): String = {
-    val base = new java.io.File(unit).getName.replaceAll("[^A-Za-z0-9._-]", "_")
-    f"${base}_${unit.hashCode & 0x7fffffff}%08x"
-  }
-
   /** An input table opened once per run: one file listing and one schema
     * inference, shared by every batch of the run and by the steps after
     * it (integrity, stats).
     *
     * `files` holds the table's data files in ONE path form, the one
-    * Spark reports as `_metadata.file_path` (see [[filePathForm]]); the
-    * unit list, each batch's file filter and its lineage map are all
-    * derived from it. `dataColumns` are the columns stored in the files
-    * (partition-directory columns are not part of a unit's metrics).
+    * Spark reports as `_metadata.file_path` (see [[filePathForm]]), and
+    * `root` the table directory in that form; the unit list, each batch's
+    * file filter and its lineage map are all derived from them.
+    * `dataColumns` are the columns stored in the files (partition-directory
+    * columns are not part of a unit's metrics).
     */
-  final case class Table(df: DataFrame, files: Seq[String], dataColumns: Seq[String])
+  final case class Table(df: DataFrame, root: String, files: Seq[String], dataColumns: Seq[String]) {
+
+    /** The manifest's name for a unit: its decoded path under the table
+      * root (`date=a/part-0.parquet`), wherever the table lives. A file
+      * outside the root fails.
+      */
+    def unitName(filePath: String): String = {
+      val (dir, path) = (new URI(root).getPath.stripSuffix("/") + "/", new URI(filePath).getPath)
+      require(path.startsWith(dir), s"$filePath is not under the table root $root")
+      path.substring(dir.length)
+    }
+  }
 
   /** Open a parquet table directory (any Hadoop URI or local path). A
     * Hive-partitioned layout lists recursively; zero data files is a
@@ -173,10 +196,13 @@ object Checkpoint {
     val relation = df.queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.relation }
       .collect { case r: HadoopFsRelation => r }
       .getOrElse(throw new IllegalStateException(s"$inputDir did not open as a file relation"))
-    val files = relation.location.inputFiles.toSeq
-      .map(f => filePathForm(new URI(f))).sortBy(unitName)
+    val files = relation.location.inputFiles.toSeq.map(f => filePathForm(new URI(f)))
     require(files.nonEmpty, noUnits)
-    Table(df, files, relation.dataSchema.fieldNames.toSeq)
+    // one root (a glob listing several fails in unitName); a one-file table's is its directory
+    val root = filePathForm(relation.location.rootPaths.head.toUri)
+    val table = Table(df, if (files == Seq(root)) root.substring(0, root.lastIndexOf('/')) else root,
+      files, relation.dataSchema.fieldNames.toSeq)
+    table.copy(files = files.sortBy(table.unitName))
   }
 
   /** `_metadata.file_path`'s form of a file URI: rebuilt from its
@@ -188,19 +214,10 @@ object Checkpoint {
   private def filePathForm(u: URI): String =
     new URI(u.getScheme, u.getAuthority, u.getPath, null, null).toString
 
-  /** The manifest's name for a unit: the local path for `file:` URIs
-    * (what manifests have always recorded, so they still resume), the
-    * URI itself for any other file system.
-    */
-  private def unitName(filePath: String): String = {
-    val u = new URI(filePath)
-    if (u.getScheme == "file") u.getPath else filePath
-  }
-
   private type Counts = mutable.HashMap[String, Array[Long]]
 
-  /** Per-unit counts as one typed aggregate over (unit key, flags):
-    * unit key -> [rows, rows with flag 0 set, rows with flag 1 set, …].
+  /** Per-unit counts as one typed aggregate over (unit name, flags):
+    * unit name -> [rows, rows with flag 0 set, rows with flag 1 set, …].
     */
   private object UnitCounts extends Aggregator[(String, Array[Boolean]), Counts, Map[String, Array[Long]]] {
     override def zero: Counts = mutable.HashMap.empty
@@ -255,18 +272,31 @@ object Checkpoint {
                     batchSize: Int = DefaultBatchSize): Seq[UnitResult] =
     runValidation(openTable(spark, inputDir), schema, outDir, manifestPath, batchSize)
 
+  /** Delete every uncommitted `batch=<id>/` under the violations
+    * directory `outDir` (rows written by a batch whose append never
+    * landed whole). A `unit=` directory is the per-unit layout of earlier
+    * versions and fails before anything is deleted.
+    */
+  private def dropUncommitted(spark: SparkSession, outDir: String, committed: Set[Long]): Unit = {
+    val dir = new Path(outDir)
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val names = if (fs.exists(dir)) fs.listStatus(dir).filter(_.isDirectory).map(_.getPath.getName).toSeq else Nil
+    require(!names.exists(_.startsWith("unit=")), s"$outDir holds per-unit violations (unit=…/) " +
+      "of an earlier layout; validate into a fresh output directory")
+    val keep = committed.map(id => s"batch=$id")
+    names.filter(n => n.startsWith("batch=") && !keep(n)).foreach(n => fs.delete(new Path(dir, n), true))
+  }
+
   /** Run validation over all pending units of an opened table in
     * BATCHES of `batchSize` files per Spark job (a sequential
     * one-job-per-unit loop is driver-bound at 100k+ lake files: each
     * submission costs scheduler round-trips regardless of data volume).
-    * Per batch ONE job, the violations write:
+    * Per batch ONE job, the violations write to `outDir/batch=<id>/`:
     *
     *  1. the batch is the table's relation filtered on
     *     `_metadata.file_path`, which Spark prunes at file listing — no
     *     per-batch listing or schema inference; lineage is the same
-    *     column, mapped to the stable `unit` key, and violations are
-    *     written partitioned by it (`unit=<key>/`; dynamic partition
-    *     overwrite keeps a re-run of a half-finished batch idempotent);
+    *     column, mapped to the unit name in a plain `unit` column;
     *  2. the manifest's per-unit metrics are observed inside that write:
     *     rows and per-column null counts on the input, violation counts
     *     on the emitted rows — nothing is read back. A unit the input
@@ -275,46 +305,39 @@ object Checkpoint {
     *     as 0 rows and 0 violations.
     *
     * A batch's manifest entries are appended, in one write, only after
-    * its write completes, so a kill mid-batch redoes exactly that batch and the
-    * final outputs are identical to an uninterrupted run. Returns
-    * results for units processed in THIS run.
+    * its write completes. Ids continue past every id the manifest names
+    * and uncommitted `batch=` directories are deleted first, so a kill
+    * mid-batch redoes exactly that batch. Returns results for units
+    * processed in THIS run.
     */
   def runValidation(table: Table, schema: TableSchema, outDir: String, manifestPath: String,
                     batchSize: Int): Seq[UnitResult] = {
     val spark = table.df.sparkSession
-    // keys of every listed file, checked before the first batch: units
-    // sharing a key overwrite each other's `unit=` partition, whether
-    // they run in one batch or two, and whether one is done or pending
-    val keyOf = table.files.map(f => f -> unitKey(unitName(f))).toMap
-    val collisions = table.files.groupBy(keyOf).values.filter(_.size > 1).map(_.map(unitName).mkString(" / "))
-    require(collisions.isEmpty, s"unit keys collide: ${collisions.mkString("; ")}")
-    val done = completedUnits(manifestPath)
-    val pending = table.files.filterNot(f => done(unitName(f)))
+    val (done, lastId) = committed(manifestPath)
+    dropUncommitted(spark, outDir, done.map(_.batch).toSet)
+    val doneUnits = done.map(_.unit).toSet
+    val pending = table.files.filterNot(f => doneUnits(table.unitName(f)))
     val filePath = table.df.metadataColumn("_metadata").getField("file_path")
     val nullFlags = table.dataColumns.map(c => tableColumn(c).isNull)
     // every batch projects the data columns plus a string `unit`: compile once, before any write
     val checks = Validator.checksOf(
       table.df.select(table.dataColumns.map(tableColumn) :+ lit(null).cast("string").as("unit"): _*), schema)
-    pending.grouped(batchSize).flatMap { batch =>
+    pending.grouped(batchSize).zipWithIndex.flatMap { case (batch, i) =>
       val t0 = System.nanoTime()
-      val keyByFile = batch.map(f => f -> keyOf(f)).toMap
+      val id = lastId + 1 + i
       // one map lookup per row; a path that matches no unit FAILS
       // LOUDLY (a silent null would record rows=0/violations=0)
-      val keyExpr = coalesce(
-        try_element_at(typedLit(keyByFile), filePath),
+      val unitExpr = coalesce(
+        try_element_at(typedLit(batch.map(f => f -> table.unitName(f)).toMap), filePath),
         raise_error(concat(lit("file not in batch lineage: "), filePath)).cast("string"))
       val input = table.df.filter(filePath.isin(batch: _*))
-        .select(table.dataColumns.map(tableColumn) :+ keyExpr.as("unit"): _*)
+        .select(table.dataColumns.map(tableColumn) :+ unitExpr.as("unit"): _*)
       val (inObs, vioObs) = (Observation(), Observation())
       val violations = Validator.violationsForChecks(observeUnits(input, inObs, nullFlags), checks,
           Seq("conv_id", "turn_idx"), carryCols = Seq("unit"))
         .select(col("conv_id"), col("turn_idx").cast("int").as("turn_idx"),
           col("pointer"), col("constraint"), col("actual"), col("unit"))
-      observeUnits(violations, vioObs, Nil)
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("unit")
-        .parquet(outDir)
+      observeUnits(violations, vioObs, Nil).write.mode("overwrite").parquet(s"$outDir/batch=$id")
 
       val seen = countsOf(inObs).getOrElse {
         // no checks (or checks that fold to true): the validator plan is
@@ -326,8 +349,8 @@ object Checkpoint {
       val vios = countsOf(vioObs)
         .getOrElse(throw new IllegalStateException("batch violation counts were not observed"))
       val metrics = batch.map { f =>
-        val unit = unitName(f)
-        seen.get(keyByFile(f)) match {
+        val unit = table.unitName(f)
+        seen.get(unit) match {
           case Some(c) => (unit, c.head, table.dataColumns.zip(c.tail).toMap)
           case None =>
             val n = footerRows(spark, f)
@@ -338,10 +361,10 @@ object Checkpoint {
       }
       val batchWallMs = (System.nanoTime() - t0) / 1000000
       val results = metrics.map { case (unit, rows, nulls) =>
-        val nVios = vios.get(unitKey(unit)).fold(0L)(_.head)
+        val nVios = vios.get(unit).fold(0L)(_.head)
         UnitResult(unit, rows, nVios, nVios == 0, batchWallMs, batch.size, nulls)
       }
-      appendResults(manifestPath, results)
+      appendResults(manifestPath, id, results)
       results
     }.toSeq
   }

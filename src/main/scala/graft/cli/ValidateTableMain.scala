@@ -1,5 +1,6 @@
 package graft.cli
 
+import java.nio.charset.Charset
 import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 import graft.compile.{TableSchema, TableSchemaCompiler}
@@ -13,8 +14,9 @@ import graft.integrity.Integrity
   *   ValidateTableMain <schema.json> <transcripts-parquet-dir> <outDir>
   *
   * Compiles the schema, runs the resumable checkpointed validation
-  * (violations parquet per unit + JSON-lines manifest with per-unit
-  * lineage/metrics), runs the shuffling integrity checks, observing the
+  * (violations parquet per batch of input files, `violations/batch=<id>/`,
+  * + JSON-lines manifest with per-unit lineage/metrics, committed batch by
+  * batch), runs the shuffling integrity checks, observing the
   * stats profile in their scan, prints `valid table at …` / `invalid
   * table at …`, and exits 0 (clean) / 2 (violations) / 1 (usage or
   * compile error) — mirroring the reference's valid/invalid/usage protocol.
@@ -33,9 +35,13 @@ object ValidateTableMain {
     * inferred) once and that relation feeds the bind report, the
     * checkpointed validation and the integrity checks. No output is read
     * back: the verdict's counts and the stats are observed inside the
-    * writes that produce or precede them.
+    * writes that produce or precede them. A path the JVM cannot encode
+    * as a file name fails first (Hadoop would fail mid-run on it).
     */
   def run(spark: SparkSession, schema: TableSchema, inputDir: String, outDir: String): Verdict = {
+    val jnu = Charset.forName(sys.props("sun.jnu.encoding"))
+    Seq(inputDir, outDir).foreach(p => require(jnu.newEncoder().canEncode(p), s"path $p cannot be encoded " +
+      s"in the JVM's file name encoding ${jnu.name}; run under a UTF-8 locale (e.g. LANG=C.UTF-8)"))
     val table = Checkpoint.openTable(spark, inputDir)
     val df = table.df
     // the diagnostic bind view BEFORE the run: one line per schema/

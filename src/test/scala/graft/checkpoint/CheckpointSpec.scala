@@ -10,7 +10,7 @@ import graft.sources.TranscriptGen
 import org.apache.spark.sql.functions._
 
 /** FIXTURES.md §4 "resume": run with manifest, drop completed entries,
-  * re-run -> identical outputs; manifest records lineage + metrics.
+  * re-run -> the same violation rows; manifest records lineage + metrics.
   */
 class CheckpointSpec extends AnyFlatSpec with Matchers {
 
@@ -36,13 +36,14 @@ class CheckpointSpec extends AnyFlatSpec with Matchers {
       .map(_.toAbsolutePath.toString).sorted
 
   /** Rows and per-column null counts of every data file, counted in
-    * plain Scala over the rows of that file alone.
+    * plain Scala over the rows of that file alone, keyed by the file's
+    * path relative to `dir`.
     */
   private def perFileCounts(dir: String): Map[String, (Long, Map[String, Long])] =
     dataFiles(dir).map { f =>
       val df = spark.read.parquet(f)
       val rows = df.collect()
-      f -> (rows.length.toLong,
+      f.stripPrefix(dir + "/") -> (rows.length.toLong,
         df.columns.zipWithIndex.map { case (c, i) => c -> rows.count(_.isNullAt(i)).toLong }.toMap)
     }.toMap
 
@@ -56,11 +57,16 @@ class CheckpointSpec extends AnyFlatSpec with Matchers {
     val in = tmp() + "/in"
     TranscriptGen.generate(spark, 10, 4).write.parquet(s"$in/date=a")
     TranscriptGen.generate(spark, 10, 4).write.parquet(s"$in/date=b")
-    val units = Checkpoint.openTable(spark, in).files
+    val table = Checkpoint.openTable(spark, in)
+    val units = table.files
     units should not be empty
     all(units) should endWith(".parquet")
     units.exists(_.contains("date=a")) shouldBe true
     units.exists(_.contains("date=b")) shouldBe true
+    all(units.map(table.unitName)) should fullyMatch regex "date=[ab]/part-[^/]*\\.parquet"
+    // a single file is a one-unit table named by its file name
+    val one = Checkpoint.openTable(spark, units.head)
+    one.files.map(one.unitName) shouldBe Seq(units.head.substring(units.head.lastIndexOf('/') + 1))
     // an empty directory must be a loud error, never a clean verdict
     val emptyDir = tmp() + "/empty"
     Files.createDirectories(java.nio.file.Paths.get(emptyDir))
@@ -121,7 +127,7 @@ class CheckpointSpec extends AnyFlatSpec with Matchers {
     val lines = Files.readAllLines(manifest).asScala.toList
     Files.write(manifest, lines.take(2).asJava)
     val resumed = Checkpoint.runValidation(spark, in, schema, s"$outPart/v", s"$outPart/manifest.jsonl")
-    resumed.size shouldBe 2 // only the 2 un-checkpointed units re-ran
+    resumed.size shouldBe 4 // the cut batch (all 4 units) re-ran whole
 
     readAllViolations(s"$outPart/v") shouldBe expected
     Checkpoint.completedUnits(manifest.toString).size shouldBe 4
@@ -192,8 +198,9 @@ class CheckpointSpec extends AnyFlatSpec with Matchers {
     val expected = readAllViolations(s"$outFull/v")
 
     // small batches + a kill that lands mid-"batch plan" (keep 2 of 7
-    // entries, not a multiple of batchSize): resume must redo exactly
-    // the 5 missing units and converge to identical outputs and metrics
+    // entries, not a multiple of batchSize): the cut first batch is
+    // uncommitted, so resume redoes all 7 units and converges to the
+    // same violation rows and metrics
     val outPart = tmp()
     Checkpoint.runValidation(spark, in, schema, s"$outPart/v", s"$outPart/manifest.jsonl",
       batchSize = 3)
@@ -203,14 +210,68 @@ class CheckpointSpec extends AnyFlatSpec with Matchers {
     Files.write(manifest, lines.take(2).asJava)
     val resumed = Checkpoint.runValidation(spark, in, schema, s"$outPart/v", s"$outPart/manifest.jsonl",
       batchSize = 3)
-    resumed.size shouldBe 5
+    resumed.size shouldBe 7
 
     readAllViolations(s"$outPart/v") shouldBe expected
     val fullMetrics = Checkpoint.completedMetrics(s"$outFull/manifest.jsonl")
-      .map { case (u, r, v) => (u.substring(u.lastIndexOf('/')), r, v) }.sorted
+      .map { case (u, r, v) => (u.substring(u.lastIndexOf('/') + 1), r, v) }.sorted
     val partMetrics = Checkpoint.completedMetrics(s"$outPart/manifest.jsonl")
-      .map { case (u, r, v) => (u.substring(u.lastIndexOf('/')), r, v) }.sorted
+      .map { case (u, r, v) => (u.substring(u.lastIndexOf('/') + 1), r, v) }.sorted
     partMetrics shouldBe fullMetrics
+  }
+
+  /** A 7-file dirty table, a reference run of it in one batch and a
+    * run in batches of 3, whose manifest `cut` keeps a prefix of and
+    * whose violations directory `crash` may then change; resuming that
+    * run must reach the reference's violation rows and metrics with no
+    * unit counted twice. Returns the resumed units and the `batch=`
+    * directories left.
+    */
+  private def resumeAfterCut(cut: Seq[String] => Seq[String],
+                             crash: String => Unit = _ => ()): (Seq[String], Seq[String]) = {
+    val in = tmp() + "/in"
+    TranscriptGen.generate(spark, 70, 10,
+      TranscriptGen.Defects(badEnumRole = true, negativeTurnIdx = true))
+      .repartition(7).write.mode("overwrite").parquet(in)
+    val (outFull, out) = (tmp(), tmp())
+    Checkpoint.runValidation(spark, in, schema, s"$outFull/v", s"$outFull/manifest.jsonl", batchSize = 64)
+    val m = Paths.get(s"$out/manifest.jsonl")
+    Checkpoint.runValidation(spark, in, schema, s"$out/v", m.toString, batchSize = 3)
+    Files.write(m, cut(Files.readAllLines(m).asScala.toList).asJava)
+    crash(s"$out/v")
+    val resumed = Checkpoint.runValidation(spark, in, schema, s"$out/v", m.toString, batchSize = 3)
+    readAllViolations(s"$out/v") shouldBe readAllViolations(s"$outFull/v")
+    val metrics = Checkpoint.completedMetrics(m.toString)
+    metrics.map(_._1).distinct.size shouldBe 7
+    metrics.sorted shouldBe Checkpoint.completedMetrics(s"$outFull/manifest.jsonl").sorted
+    (resumed.map(_.unit), batchDirs(s"$out/v"))
+  }
+
+  private def copyTree(from: java.nio.file.Path, to: java.nio.file.Path): Unit =
+    Files.walk(from).iterator().asScala.toList.foreach(p => Files.copy(p, to.resolve(from.relativize(p))))
+
+  private def batchDirs(dir: String): Seq[String] =
+    Files.list(Paths.get(dir)).iterator().asScala.map(_.getFileName.toString).filter(_.startsWith("batch=")).toSeq.sorted
+
+  it should "re-run a whole batch whose manifest lines were cut inside it" in {
+    // batches of 3, 3 and 1 units: keep batch 0 and 2 of batch 1's 3 lines
+    val (resumed, dirs) = resumeAfterCut(_.take(5))
+    resumed.size shouldBe 4 // batch 1's 3 units and batch 2's 1
+    dirs shouldBe Seq("batch=0", "batch=2", "batch=3") // ids continue past the cut batch's
+  }
+
+  it should "re-run only the later batches when the manifest is cut at a batch boundary" in {
+    val (resumed, dirs) = resumeAfterCut(_.take(6))
+    resumed.size shouldBe 1
+    dirs shouldBe Seq("batch=0", "batch=1", "batch=2")
+  }
+
+  it should "delete a batch directory no manifest line names, without duplicating its rows" in {
+    // a crash between a batch's write and its manifest append leaves its
+    // rows under an id the manifest never names
+    val (resumed, dirs) = resumeAfterCut(_.take(6), v => copyTree(Paths.get(v, "batch=1"), Paths.get(v, "batch=9")))
+    resumed.size shouldBe 1
+    dirs shouldBe Seq("batch=0", "batch=1", "batch=2")
   }
 
   it should "count rows and nulls of a table with a struct column" in {
@@ -235,8 +296,8 @@ class CheckpointSpec extends AnyFlatSpec with Matchers {
     val rs = Checkpoint.runValidation(spark, in, schema, s"$out/v", s"$out/manifest.jsonl")
     rs.size shouldBe 5
     val counts = perFileCounts(in)
-    counts(s"$in/empty.parquet")._1 shouldBe 0L
-    all(counts(s"$in/empty.parquet")._2.values) shouldBe 0L
+    counts("empty.parquet")._1 shouldBe 0L
+    all(counts("empty.parquet")._2.values) shouldBe 0L
     metricsOf(rs) shouldBe counts
   }
 
@@ -256,7 +317,7 @@ class CheckpointSpec extends AnyFlatSpec with Matchers {
     writeInput(in)
     val out = tmp()
     val rs = Checkpoint.runValidation(spark, s"file://$in", schema, s"$out/v", s"$out/manifest.jsonl")
-    rs.map(_.unit) shouldBe dataFiles(in)
+    rs.map(_.unit) shouldBe dataFiles(in).map(_.stripPrefix(in + "/"))
     metricsOf(rs) shouldBe perFileCounts(in)
     rs.map(_.violations).sum should be > 0L
   }
@@ -277,31 +338,62 @@ class CheckpointSpec extends AnyFlatSpec with Matchers {
     Checkpoint.completedMetrics(s"$out/manifest.jsonl") shouldBe empty
   }
 
-  it should "fail loudly before the first batch when unit keys collide across batches" in {
-    // "Aa" and "BB" have one String.hashCode, so the two paths share a
-    // unit key: batch 2's overwrite of `unit=<key>/` would delete batch 1's rows
-    "Aa".hashCode shouldBe "BB".hashCode
+  /** Every path under `dir` with its size (-1 for a directory). */
+  private def tree(dir: String): Map[String, Long] =
+    Files.walk(Paths.get(dir)).iterator().asScala
+      .map(p => p.toString -> (if (Files.isDirectory(p)) -1L else Files.size(p))).toMap
+
+  it should "refuse an outDir in the per-unit layout before writing anything" in {
     val in = tmp() + "/in"
-    Seq("Aa", "BB").foreach { x =>
-      val dir = s"$in/x=$x"
-      TranscriptGen.generate(spark, 4, 3, TranscriptGen.Defects(badEnumRole = true))
-        .coalesce(1).write.parquet(s"$dir/tmp")
-      Files.move(Paths.get(dataFiles(s"$dir/tmp").head), Paths.get(s"$dir/part.parquet"))
-      Files.walk(Paths.get(s"$dir/tmp")).iterator().asScala.toSeq.reverse.foreach(Files.delete)
-    }
+    writeInput(in)
     val out = tmp()
-    val ex = intercept[IllegalArgumentException] {
-      Checkpoint.runValidation(spark, in, schema, s"$out/v", s"$out/manifest.jsonl", batchSize = 1)
+    // a `unit=` directory of the per-unit layout, next to a batch
+    // directory that the cleanup would delete if it ran first
+    Seq("unit=part-0_1a2b3c4d", "batch=3").foreach(d => Files.createDirectories(Paths.get(out, "v", d)))
+    val before = tree(out)
+    val e = the[IllegalArgumentException] thrownBy
+      Checkpoint.runValidation(spark, in, schema, s"$out/v", s"$out/manifest.jsonl")
+    e.getMessage should include(s"$out/v")
+    e.getMessage should include("fresh output directory")
+    tree(out) shouldBe before
+
+    // a manifest line without a batch id, from the same layout
+    val out2 = tmp()
+    Checkpoint.runValidation(spark, in, schema, s"$out2/v", s"$out2/manifest.jsonl")
+    val m = Paths.get(s"$out2/manifest.jsonl")
+    Files.write(m, Files.readAllLines(m).asScala.map(_.replace(""""batch":0,""", "")).asJava)
+    Files.createDirectories(Paths.get(out2, "v", "batch=3"))
+    val before2 = tree(out2)
+    val e2 = the[IllegalArgumentException] thrownBy
+      Checkpoint.runValidation(spark, in, schema, s"$out2/v", m.toString)
+    e2.getMessage should include(m.toString)
+    e2.getMessage should include("fresh output directory")
+    tree(out2) shouldBe before2
+  }
+
+  it should "emit the plain validator's violation rows at batch sizes 1, 3 and 64" in {
+    val in = tmp() + "/in"
+    TranscriptGen.generate(spark, 70, 10, TranscriptGen.all).repartition(7).write.parquet(in)
+    val table = spark.read.parquet(in)
+    val cols = Seq(col("conv_id"), col("turn_idx").cast("int"), col("pointer"), col("constraint"), col("actual"))
+    def multiset(df: org.apache.spark.sql.DataFrame): Seq[String] = df.select(cols: _*).collect().map(_.toString).sorted.toSeq
+    val expected = multiset(graft.exprs.Validator.violations(table, schema, Seq("conv_id", "turn_idx")))
+    val total = graft.exprs.Validator.violationTotal(table, schema).head.getLong(0)
+    expected should not be empty
+    expected.size.toLong shouldBe total
+    Seq(1, 3, 64).foreach { n =>
+      val out = tmp()
+      Checkpoint.runValidation(spark, in, schema, s"$out/v", s"$out/manifest.jsonl", batchSize = n)
+      multiset(spark.read.parquet(s"$out/v")) shouldBe expected
+      Checkpoint.completedMetrics(s"$out/manifest.jsonl").map(_._3).sum shouldBe total
+      batchDirs(s"$out/v").size shouldBe (7 + n - 1) / n
     }
-    ex.getMessage should include("unit keys collide")
-    ex.getMessage should include(s"$in/x=Aa/part.parquet / $in/x=BB/part.parquet")
-    Files.exists(Paths.get(s"$out/manifest.jsonl")) shouldBe false
-    Files.exists(Paths.get(s"$out/v")) shouldBe false
   }
 
   /** Cut the manifest's last line after `keep(line)` of its bytes, as a
-    * kill mid-append leaves it, and resume: the cut unit is validated
-    * again and its record lands whole on a line of its own.
+    * kill mid-append leaves it, and resume: the cut unit's batch (all
+    * of the run's units) is validated again and its records land whole
+    * on lines of their own.
     */
   private def resumeAfterTornTail(write: String => Unit)(keep: Array[Byte] => Int): Unit = {
     val (in, out) = (tmp() + "/in", tmp())
@@ -312,7 +404,7 @@ class CheckpointSpec extends AnyFlatSpec with Matchers {
     val lastStart = bytes.lastIndexOf('\n'.toByte, bytes.length - 2) + 1
     Files.write(m, bytes.take(lastStart + keep(bytes.drop(lastStart))))
     val resumed = Checkpoint.runValidation(spark, in, schema, s"$out/v", m.toString)
-    resumed.map(_.unit) shouldBe Seq(first.last.unit)
+    resumed.map(_.unit) shouldBe first.map(_.unit)
     Checkpoint.completedMetrics(m.toString).sorted shouldBe first.map(r => (r.unit, r.rows, r.violations)).sorted
     Checkpoint.runValidation(spark, in, schema, s"$out/v", m.toString) shouldBe empty
   }
@@ -334,7 +426,7 @@ class CheckpointSpec extends AnyFlatSpec with Matchers {
   "Checkpoint.toJson" should "escape control characters so each record stays one JSON line" in {
     val m = tmp() + "/manifest.jsonl"
     val units = Seq("/t/a\nb.parquet", "/t/tab\there \"q\" back\\slash\u0001.parquet")
-    Checkpoint.appendResults(m, units.zipWithIndex.map { case (u, i) =>
+    Checkpoint.appendResults(m, 0L, units.zipWithIndex.map { case (u, i) =>
       Checkpoint.UnitResult(u, 10L + i, i.toLong, i == 0,
         batchWallMs = 5, batchSize = 2, nullCounts = Map("col\nname" -> 1L, "plain" -> 0L))
     })
@@ -352,8 +444,9 @@ class CheckpointSpec extends AnyFlatSpec with Matchers {
     // earlier manifests wrote a control character's hex digits in lower
     // case (ESC: 001b); the JSON codec writes upper case and reads both
     val esc = 27.toChar
-    val in = tmp() + s"/in${esc}dir"
+    val in = tmp() + "/in"
     writeInput(in)
+    dataFiles(in).foreach(f => Files.move(Paths.get(f), Paths.get(f.replace("part-", s"part${esc}-"))))
     val out = tmp()
     val m = s"$out/manifest.jsonl"
     val first = Checkpoint.runValidation(spark, in, schema, s"$out/v", m)
