@@ -13,6 +13,7 @@ import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.json4s.{JBool, JLong, JNull, JObject, JString, JValue}
 import graft.compile.{Js, TableSchema}
 import graft.exprs.ConstraintCompiler.tableColumn
@@ -71,12 +72,6 @@ object Checkpoint {
       "batch_size" -> JLong(r.batchSize)) ++ nulls))
   }
 
-  // a unit counts as completed only if its batch is committed (same rule
-  // as completedMetrics — a unit that resume would skip must also
-  // contribute its metrics to the verdict)
-  def completedUnits(manifestPath: String): Set[String] =
-    completedMetrics(manifestPath).map(_._1).toSet
-
   /** Per-unit metrics of every committed unit in the manifest:
     * (unit, rows, violations). The final valid/invalid verdict of a run
     * must sum over the FULL manifest, not just the units processed in
@@ -115,13 +110,12 @@ object Checkpoint {
   def appendResults(manifestPath: String, batch: Long, rs: Seq[UnitResult]): Unit =
     appendLedger(localFile(manifestPath), rs.map(toJson(batch, _)))
 
-  /** The records of a JSON-lines ledger (the manifest, the streaming
-    * report), in file order. A line that does not decode as UTF-8 or
-    * does not parse, or that `record` rejects, is a torn write (a crash
-    * mid-append, cut anywhere — inside a multibyte character too) and is
-    * skipped.
+  /** The records of a JSON-lines ledger, in file order. A line that does
+    * not decode as UTF-8 or does not parse, or that `record` rejects, is
+    * a torn write (a crash mid-append, cut anywhere — inside a multibyte
+    * character too) and is skipped.
     */
-  def readLedger[T](path: java.nio.file.Path)(record: JValue => Option[T]): Seq[T] =
+  private def readLedger[T](path: java.nio.file.Path)(record: JValue => Option[T]): Seq[T] =
     if (!Files.exists(path)) Nil
     else {
       // ISO-8859-1 maps each byte to one char, so a line's bytes survive
@@ -138,7 +132,7 @@ object Checkpoint {
     * line has no newline: the append starts a fresh line, so the first
     * new record is not glued onto the fragment (and lost with it).
     */
-  def appendLedger(path: java.nio.file.Path, lines: Seq[String]): Unit = {
+  private def appendLedger(path: java.nio.file.Path, lines: Seq[String]): Unit = {
     Option(path.getParent).foreach(Files.createDirectories(_))
     val torn = Files.exists(path) && Files.size(path) > 0 && {
       val ch = FileChannel.open(path)
@@ -151,7 +145,7 @@ object Checkpoint {
   }
 
   /** The java.nio file a plain path or `file:` URI names; other schemes fail. */
-  def localFile(path: String): java.nio.file.Path = {
+  private def localFile(path: String): java.nio.file.Path = {
     val u = new Path(path).toUri
     require(Option(u.getScheme).forall(_ == "file"), s"$path must be a local path or a file: URI")
     Paths.get(u.getPath)
@@ -181,14 +175,16 @@ object Checkpoint {
     }
   }
 
-  /** Open a parquet table directory (any Hadoop URI or local path). A
-    * Hive-partitioned layout lists recursively; zero data files is a
-    * hard error — an empty unit set must never read as a clean verdict.
+  /** Open a parquet table directory (any Hadoop URI or local path),
+    * read with `schema` when given, else with the schema inferred from
+    * one footer. A Hive-partitioned layout lists recursively; zero data
+    * files is a hard error — an empty unit set must never read as a
+    * clean verdict.
     */
-  def openTable(spark: SparkSession, inputDir: String): Table = {
+  def openTable(spark: SparkSession, inputDir: String, schema: Option[StructType] = None): Table = {
     def noUnits = s"no parquet units found under $inputDir — refusing to treat an empty unit set as a valid table"
     val df =
-      try spark.read.parquet(inputDir)
+      try schema.fold(spark.read)(spark.read.schema(_)).parquet(inputDir)
       catch {
         case e: AnalysisException if e.getCondition == "UNABLE_TO_INFER_SCHEMA" =>
           throw new IllegalArgumentException(noUnits, e)
@@ -272,19 +268,25 @@ object Checkpoint {
                     batchSize: Int = DefaultBatchSize): Seq[UnitResult] =
     runValidation(openTable(spark, inputDir), schema, outDir, manifestPath, batchSize)
 
+  private val BatchDir = """batch=(\d+)""".r
+
   /** Delete every uncommitted `batch=<id>/` under the violations
     * directory `outDir` (rows written by a batch whose append never
-    * landed whole). A `unit=` directory is the per-unit layout of earlier
-    * versions and fails before anything is deleted.
+    * landed whole). Any other entry there (the per-unit `unit=…/`
+    * directories or the stream sink's part files and `_spark_metadata/`
+    * of earlier versions) fails before anything is deleted.
     */
   private def dropUncommitted(spark: SparkSession, outDir: String, committed: Set[Long]): Unit = {
     val dir = new Path(outDir)
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val names = if (fs.exists(dir)) fs.listStatus(dir).filter(_.isDirectory).map(_.getPath.getName).toSeq else Nil
-    require(!names.exists(_.startsWith("unit=")), s"$outDir holds per-unit violations (unit=…/) " +
-      "of an earlier layout; validate into a fresh output directory")
-    val keep = committed.map(id => s"batch=$id")
-    names.filter(n => n.startsWith("batch=") && !keep(n)).foreach(n => fs.delete(new Path(dir, n), true))
+    val batches = (if (fs.exists(dir)) fs.listStatus(dir).toSeq else Nil).map { e =>
+      e.getPath.getName match {
+        case BatchDir(id) if e.isDirectory => e.getPath -> id.toLong
+        case n => throw new IllegalArgumentException(s"$outDir holds $n, which is not a batch=<id> " +
+          "directory of this layout (an earlier version wrote it); validate into a fresh output directory")
+      }
+    }
+    batches.collect { case (p, id) if !committed(id) => p }.foreach(fs.delete(_, true))
   }
 
   /** Run validation over all pending units of an opened table in

@@ -1,56 +1,43 @@
 package graft.cli
 
 import java.nio.file.{Files, Paths}
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{AnalysisException, SparkSession}
-import org.apache.spark.sql.functions.{count, lit}
-import org.apache.spark.sql.streaming.Trigger
-import org.json4s.{JLong, JObject, JValue}
-import graft.checkpoint.Checkpoint
-import graft.compile.{Js, TableSchema, TableSchemaCompiler}
-import graft.exprs.Validator
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.SparkSession
+import graft.compile.{TableSchema, TableSchemaCompiler}
 
 /** spark-submit entry point for INCREMENTAL validation over a growing
-  * parquet directory — the streaming analogue of [[ValidateTableMain]]:
+  * parquet directory:
   *
   *   ValidateStreamMain <schema.json> <input-parquet-dir> <outDir>
   *
-  * Runs the SAME compiled violation plan as the batch path
-  * (`Validator.validateTranscripts`) through Structured Streaming with
-  * `Trigger.AvailableNow`: each invocation processes exactly the files
-  * that appeared since the previous one (source progress lives in
-  * `outDir/_checkpoint` — Spark's own exactly-once file-source ledger,
-  * so a re-run after a crash neither skips nor duplicates a file) and
-  * then exits. A scheduler invoking this every N minutes gets
-  * continuous validation with batch semantics; the same binary with
-  * `.trigger(ProcessingTime)` would be the always-on form.
+  * Each invocation validates exactly the files that the manifest does
+  * not yet hold, with the table CLI's validation half
+  * ([[ValidateTableMain]]'s checkpointed batches: `violations/batch=<id>/`
+  * plus `manifest.jsonl`, committed batch by batch), and then exits. A
+  * file is new by its name under the table root, whatever its mtime, so
+  * a file copied in with an old timestamp is validated too. A scheduler
+  * invoking this every N minutes gets continuous validation; a pass
+  * killed mid-run redoes only its uncommitted batch. It runs no
+  * integrity or stats step.
   *
-  * The pass's violation rows are counted by an `observe` on the stream
-  * itself, not by reading `outDir/violations` back. Each pass appends
-  * one line to `outDir/stream_report.jsonl` (`last_batch_id`,
-  * `input_rows`, `new_violation_rows`, `total_violation_rows`; a local
-  * file, so `outDir` is a local path or `file:` URI), and the total is
-  * the previous line's total plus this pass's count. A pass
-  * that died after the sink committed a batch but before its report
-  * line landed leaves the stream's logs ahead of the report; the next
-  * pass then recounts `outDir/violations` once and reports from that.
-  *
-  * Prints `stream pass: N new violation rows (M total at <dir>)` and
-  * exits 0 (no violations so far) / 2 (violations exist) / 1 (usage or
-  * compile error) — same protocol as the batch CLI — plus 3 for
+  * Prints `stream pass: N new violation rows (M total at <dir>)`, N
+  * counted in this pass's batch writes and M summed over the manifest,
+  * and exits 0 (no violations so far) / 2 (violations exist) / 1 (usage
+  * or compile error) — same protocol as the batch CLI — plus 3 for
   * SCHEMA DRIFT: the first invocation pins the directory's MERGED
   * physical parquet schema at `outDir/_schema.json` (one full footer
-  * scan; conflicts among the initial files are drift too). Later
-  * invocations stay O(new files): a single-footer sample is checked
-  * against the pin before starting (catches wholesale drift), and a
-  * drifted file the sample missed fails its batch at read time, where
-  * it is classified by Spark's stable error class and mapped to the
-  * same exit-3 protocol — never a silent garbage validation, never an
-  * unexplained crash. Added columns are tolerated (the compiled checks
-  * bind by name; new columns stay invisible until re-pinned). An
-  * operator re-pins by deleting `_schema.json` after fixing or
-  * accepting the change; the failed batch was never committed to the
-  * stream checkpoint, so the re-pinned run reprocesses it exactly once.
+  * scan; conflicts among the initial files are drift too), and every
+  * pass reads the table with the pin. Later invocations stay O(new
+  * files): a single-footer sample is checked against the pin before
+  * starting (catches wholesale drift), and a drifted file the sample
+  * missed fails its batch at read time, where it is classified by
+  * Spark's stable error class and mapped to the same exit-3 protocol —
+  * never a silent garbage validation, never an unexplained crash. Added
+  * columns are tolerated (the compiled checks bind by name; new columns
+  * stay invisible until re-pinned). An operator re-pins by deleting
+  * `_schema.json` after fixing or accepting the change; the failed
+  * batch was never committed to the manifest, so the re-pinned run
+  * redoes it exactly once.
   */
 object ValidateStreamMain {
 
@@ -68,7 +55,7 @@ object ValidateStreamMain {
   private def isMergeConflict(e: Throwable): Boolean =
     causeChain(e).exists(c => errorCondition(c).contains("CANNOT_MERGE"))
 
-  /** A streaming batch failing because a file's physical type cannot be
+  /** A validation batch failing because a file's physical type cannot be
     * read with the pinned schema — the runtime face of schema drift
     * (the per-invocation prelude samples only one footer, so a drifted
     * file can first surface here, mid-batch).
@@ -131,43 +118,16 @@ object ValidateStreamMain {
     }
   }
 
-  /** One pass, as its line in `stream_report.jsonl` records it. */
-  final case class Pass(lastBatchId: Long, inputRows: Long,
-                        newViolationRows: Long, totalViolationRows: Long)
+  /** One pass: the units and rows it validated, the violation rows
+    * found in them, and the manifest's total.
+    */
+  final case class Pass(units: Int, inputRows: Long, newViolationRows: Long, totalViolationRows: Long)
 
   /** The CLI's exit code for a pass: 3 on schema drift, else 2 while
     * any violation row exists, else 0.
     */
   def exitCode(pass: Either[String, Pass]): Int =
     pass.fold(_ => 3, p => if (p.totalViolationRows > 0) 2 else 0)
-
-  private def toJson(p: Pass): String = Js.compact(JObject(List(
-    "last_batch_id" -> JLong(p.lastBatchId),
-    "input_rows" -> JLong(p.inputRows),
-    "new_violation_rows" -> JLong(p.newViolationRows),
-    "total_violation_rows" -> JLong(p.totalViolationRows))))
-
-  /** A report line that lacks a field is a torn append (the
-    * manifest's rule) and is skipped.
-    */
-  private def fromJson(j: JValue): Option[Pass] =
-    for {
-      batch <- Js.longField(j, "last_batch_id")
-      rows <- Js.longField(j, "input_rows")
-      added <- Js.longField(j, "new_violation_rows")
-      total <- Js.longField(j, "total_violation_rows")
-    } yield Pass(batch, rows, added, total)
-
-  private val LogEntry = """(\d+)(?:\.compact)?""".r
-
-  /** The highest batch id in a Spark metadata log directory (one file
-    * per batch, named by its id; the file sink also writes
-    * `<id>.compact`), or -1 when it holds none.
-    */
-  private def lastLogged(fs: FileSystem, dir: Path): Long =
-    if (!fs.exists(dir)) -1L
-    else fs.listStatus(dir).map(_.getPath.getName)
-      .collect { case LogEntry(id) => id.toLong }.maxOption.getOrElse(-1L)
 
   /** One incremental pass over `inputDir` (see the object doc): prints
     * its summary line and returns it, or Left with the drift found
@@ -179,62 +139,24 @@ object ValidateStreamMain {
         s"(delete $outDir/_schema.json to re-pin after fixing or accepting it)")
       Left(what)
     }
-    // file streams need an explicit schema; the FIRST invocation pins it
-    // from the files present then, and every later one checks the
-    // directory against the pin, so the stream never silently reads a
-    // drifted file with a stale schema
+    ValidateTableMain.requireEncodable(inputDir, outDir)
     pinOrCheckSchema(spark, inputDir, outDir) match {
       case Left(d) => drift(d)
       case Right(physical) =>
-        val violationsDir = s"$outDir/violations"
-        val commits = new Path(s"$outDir/_checkpoint/commits")
-        val sinkLog = new Path(s"$violationsDir/_spark_metadata")
-        val fs = commits.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        // a local JSON-lines ledger, as the manifest is
-        val reportPath = Checkpoint.localFile(s"$outDir/stream_report.jsonl")
-        val prev = Checkpoint.readLedger(reportPath)(fromJson).lastOption
-        // a batch the stream's logs hold but the report does not means a
-        // pass died before its report line landed; the sink log records a
-        // batch before the commit log does, so a death between the two
-        // is caught too
-        val stale = math.max(lastLogged(fs, commits), lastLogged(fs, sinkLog)) != prev.fold(-1L)(_.lastBatchId)
-
-        val q = Validator.validateTranscripts(spark.readStream.schema(physical).parquet(inputDir), schema)
-          .observe("stream_violations", count(lit(1)))
-          .writeStream
-          .format("parquet")
-          .option("path", violationsDir)
-          .option("checkpointLocation", s"$outDir/_checkpoint")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        val driftedMidStream =
-          try { q.awaitTermination(); false }
-          catch {
-            // a drifted file the one-footer prelude didn't sample fails
-            // the batch at read time — classify it as the documented
-            // drift protocol (exit 3), not a generic crash. The stream
-            // checkpoint has NOT committed the failed batch, so the run
-            // after re-pinning reprocesses it exactly once.
-            case e: Exception if isSchemaDriftFailure(e) => true
-          }
-        if (driftedMidStream) drift("a file incompatible with the pinned schema appeared mid-stream")
-        else {
-          // the query thread appends each batch's progress (with its
-          // observed count) before it posts the listener event, so after
-          // awaitTermination every batch of this pass is in the buffer
-          // (AvailableNow over a file source with no read limit runs one
-          // batch per pass; the buffer keeps the last 100)
-          val batches = q.recentProgress.toSeq.filter(_.observedMetrics.containsKey("stream_violations"))
-          val added = batches.map(_.observedMetrics.get("stream_violations").getLong(0)).sum
-          val total =
-            if (stale)
-              try spark.read.parquet(violationsDir).count()
-              catch { case _: AnalysisException => 0L } // no output yet
-            else prev.fold(0L)(_.totalViolationRows) + added
-          val pass = Pass(lastLogged(fs, commits), batches.map(_.numInputRows).sum, added, total)
-          Checkpoint.appendLedger(reportPath, Seq(toJson(pass)))
-          println(s"stream pass: $added new violation rows ($total total at $violationsDir)")
+        // read with the PIN, not the sampled footer: a pinned column a
+        // file lacks reads as NULL and is checked, never dropped
+        try {
+          val (_, results, all) = ValidateTableMain.validate(spark, schema, inputDir, outDir, Some(physical))
+          val pass = Pass(results.size, results.map(_.rows).sum, results.map(_.violations).sum, all.map(_._3).sum)
+          println(s"stream pass: ${pass.newViolationRows} new violation rows " +
+            s"(${pass.totalViolationRows} total at $outDir/violations)")
           Right(pass)
+        } catch {
+          // a drifted file the one-footer prelude didn't sample fails its
+          // batch at read time; that batch is uncommitted, so the pass
+          // after re-pinning deletes its directory and redoes it once
+          case e: Exception if isSchemaDriftFailure(e) =>
+            drift("a file incompatible with the pinned schema failed its batch")
         }
     }
   }

@@ -3,6 +3,7 @@ package graft.cli
 import java.nio.charset.Charset
 import org.apache.spark.sql.{DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.types.StructType
 import graft.compile.{TableSchema, TableSchemaCompiler}
 import graft.checkpoint.Checkpoint
 import graft.stats.Stats
@@ -31,28 +32,49 @@ object ValidateTableMain {
     def total: Long = rowViolations + duplicateKeys + orphanRows
   }
 
-  /** One run over `inputDir`: the table is opened (listed, schema
-    * inferred) once and that relation feeds the bind report, the
-    * checkpointed validation and the integrity checks. No output is read
-    * back: the verdict's counts and the stats are observed inside the
-    * writes that produce or precede them. A path the JVM cannot encode
-    * as a file name fails first (Hadoop would fail mid-run on it).
+  /** A path the JVM cannot encode as a file name fails here, before
+    * anything is read or written (Hadoop would fail mid-run on it).
     */
-  def run(spark: SparkSession, schema: TableSchema, inputDir: String, outDir: String): Verdict = {
+  private[cli] def requireEncodable(paths: String*): Unit = {
     val jnu = Charset.forName(sys.props("sun.jnu.encoding"))
-    Seq(inputDir, outDir).foreach(p => require(jnu.newEncoder().canEncode(p), s"path $p cannot be encoded " +
+    paths.foreach(p => require(jnu.newEncoder().canEncode(p), s"path $p cannot be encoded " +
       s"in the JVM's file name encoding ${jnu.name}; run under a UTF-8 locale (e.g. LANG=C.UTF-8)"))
-    val table = Checkpoint.openTable(spark, inputDir)
-    val df = table.df
+  }
+
+  /** The validation half both CLIs run: open the table (read with
+    * `physical` when given), print the bind report, validate every
+    * pending unit into `violations/batch=<id>/` and `manifest.jsonl`.
+    * Returns the opened table, the units this run validated and every
+    * committed unit's (unit, rows, violations).
+    */
+  private[cli] def validate(spark: SparkSession, schema: TableSchema, inputDir: String, outDir: String,
+                            physical: Option[StructType] = None)
+      : (Checkpoint.Table, Seq[Checkpoint.UnitResult], Seq[(String, Long, Long)]) = {
+    val table = Checkpoint.openTable(spark, inputDir, physical)
     // the diagnostic bind view BEFORE the run: one line per schema/
     // physical column mismatch (a compile failure inside the run
     // reports only the first problem; this shows all of them)
     graft.exprs.ConstraintCompiler
-      .bindReport(schema, df.schema)
+      .bindReport(schema, table.df.schema)
       .filterNot(_.status == "ok")
       .foreach(b => System.err.println(s"schema bind: ${b.column} ${b.status} (${b.detail})"))
     val results = Checkpoint.runValidation(table, schema, s"$outDir/violations",
       s"$outDir/manifest.jsonl", batchSize = Checkpoint.DefaultBatchSize)
+    // totals over the FULL manifest (resume-safe): a re-run or resumed
+    // run must still see violations found by earlier runs
+    (table, results, Checkpoint.completedMetrics(s"$outDir/manifest.jsonl"))
+  }
+
+  /** One run over `inputDir`: the table is opened (listed, schema
+    * inferred) once and that relation feeds the bind report, the
+    * checkpointed validation and the integrity checks. No output is read
+    * back: the verdict's counts and the stats are observed inside the
+    * writes that produce or precede them.
+    */
+  def run(spark: SparkSession, schema: TableSchema, inputDir: String, outDir: String): Verdict = {
+    requireEncodable(inputDir, outDir)
+    val (table, results, all) = validate(spark, schema, inputDir, outDir)
+    val df = table.df
     // both integrity checks from ONE full-data shuffle, whose scan also
     // observes the column profile; orphan rows by broadcast join-back
     val (cols, statsObs) = (df.columns.toSeq, Observation())
@@ -67,10 +89,6 @@ object ValidateTableMain {
       throw new IllegalStateException(s"column profile of $inputDir was not observed"))))
     Stats.explodeProfile(spark.createDataFrame(java.util.List.of(row), wide), cols)
       .write.mode("overwrite").parquet(s"$outDir/stats")
-
-    // row violations sum over the FULL manifest (resume-safe): a re-run
-    // or resumed run must still see violations found by earlier runs
-    val all = Checkpoint.completedMetrics(s"$outDir/manifest.jsonl")
     Verdict(results.size, all.size, all.map(_._3).sum, nDups, nOrph)
   }
 

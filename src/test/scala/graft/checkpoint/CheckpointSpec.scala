@@ -81,7 +81,7 @@ class CheckpointSpec extends AnyFlatSpec with Matchers {
     results.map(_.rows).sum shouldBe 400L
     results.map(_.violations).sum should be > 0L
     results.count(_.passed == false) should be >= 1
-    Checkpoint.completedUnits(s"$out/manifest.jsonl").size shouldBe 4
+    Checkpoint.completedMetrics(s"$out/manifest.jsonl").size shouldBe 4
     // wall-clock (batch-level, honest measurement) and lineage present
     all(results.map(_.batchWallMs)) should be >= 0L
     all(results.map(_.batchSize)) shouldBe 4
@@ -130,7 +130,7 @@ class CheckpointSpec extends AnyFlatSpec with Matchers {
     resumed.size shouldBe 4 // the cut batch (all 4 units) re-ran whole
 
     readAllViolations(s"$outPart/v") shouldBe expected
-    Checkpoint.completedUnits(manifest.toString).size shouldBe 4
+    Checkpoint.completedMetrics(manifest.toString).size shouldBe 4
   }
 
   it should "keep lineage correct for paths input_file_name URI-encodes" in {
@@ -346,16 +346,26 @@ class CheckpointSpec extends AnyFlatSpec with Matchers {
   it should "refuse an outDir in the per-unit layout before writing anything" in {
     val in = tmp() + "/in"
     writeInput(in)
-    val out = tmp()
-    // a `unit=` directory of the per-unit layout, next to a batch
-    // directory that the cleanup would delete if it ran first
-    Seq("unit=part-0_1a2b3c4d", "batch=3").foreach(d => Files.createDirectories(Paths.get(out, "v", d)))
-    val before = tree(out)
-    val e = the[IllegalArgumentException] thrownBy
-      Checkpoint.runValidation(spark, in, schema, s"$out/v", s"$out/manifest.jsonl")
-    e.getMessage should include(s"$out/v")
-    e.getMessage should include("fresh output directory")
-    tree(out) shouldBe before
+    // a `unit=` directory of the per-unit layout, or the part files and
+    // `_spark_metadata/` a Structured Streaming file sink wrote, each next
+    // to a batch directory that the cleanup would delete if it ran first
+    val layouts: Seq[String => Unit] = Seq(
+      out => Seq("unit=part-0_1a2b3c4d", "batch=3").foreach(d => Files.createDirectories(Paths.get(out, "v", d))),
+      { out =>
+        Seq("_spark_metadata", "batch=3").foreach(d => Files.createDirectories(Paths.get(out, "v", d)))
+        Files.writeString(Paths.get(out, "v", "_spark_metadata", "0"), "v1\n")
+        Files.writeString(Paths.get(out, "v", "part-00000-0a1b.snappy.parquet"), "PAR1")
+      })
+    layouts.foreach { layout =>
+      val out = tmp()
+      layout(out)
+      val before = tree(out)
+      val e = the[IllegalArgumentException] thrownBy
+        Checkpoint.runValidation(spark, in, schema, s"$out/v", s"$out/manifest.jsonl")
+      e.getMessage should include(s"$out/v")
+      e.getMessage should include("fresh output directory")
+      tree(out) shouldBe before
+    }
 
     // a manifest line without a batch id, from the same layout
     val out2 = tmp()

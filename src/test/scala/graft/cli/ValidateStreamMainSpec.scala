@@ -1,6 +1,8 @@
 package graft.cli
 
 import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.FileTime
+import java.time.temporal.ChronoUnit
 import scala.jdk.CollectionConverters._
 import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
@@ -8,9 +10,9 @@ import graft.SparkTestBase
 import graft.compile.TableSchemaCompiler
 import graft.sources.TranscriptGen
 
-/** The streaming CLI pass by pass: each pass's counts against a
-  * plain-Scala recount of the files it added, its report line, its exit
-  * code, and the recovery when the report lags the stream's logs.
+/** The incremental CLI pass by pass: each pass's counts against a
+  * plain-Scala recount of the files it added, its exit code, the files
+  * it reads, and its resume from a manifest cut inside a batch.
   */
 class ValidateStreamMainSpec extends AnyFlatSpec with Matchers {
 
@@ -22,17 +24,18 @@ class ValidateStreamMainSpec extends AnyFlatSpec with Matchers {
 
   private case class Added(rows: Long, violations: Long)
 
-  /** Move `convs` dirty conversations into `in` as new parquet files and
-    * return their row count and the violations a plain-Scala recount
-    * finds in them.
+  /** Move `convs` dirty conversations into `in` as `files` new parquet
+    * files, their mtime set `ageDays` before now, and return their row
+    * count and the violations a plain-Scala recount finds in them.
     */
-  private def addFiles(in: String, convs: Int): Added = {
+  private def addFiles(in: String, convs: Int, files: Int = 2, ageDays: Int = 0): Added = {
     val staging = tmp() + "/t"
-    TranscriptGen.generate(spark, convs, 10, TranscriptGen.all).repartition(2).write.parquet(staging)
+    TranscriptGen.generate(spark, convs, 10, TranscriptGen.all).repartition(files).write.parquet(staging)
     val rows = spark.read.parquet(staging).collect()
     Files.createDirectories(Paths.get(in))
+    val mtime = FileTime.from(java.time.Instant.now().minus(ageDays.toLong, ChronoUnit.DAYS))
     Files.list(Paths.get(staging)).iterator.asScala.filter(_.toString.endsWith(".parquet")).toList
-      .foreach(f => Files.move(f, Paths.get(in, f.getFileName.toString)))
+      .foreach(f => Files.setLastModifiedTime(Files.move(f, Paths.get(in, f.getFileName.toString)), mtime))
     Added(rows.length.toLong, rows.map(FlagshipRecount.rowViolations(_).toLong).sum)
   }
 
@@ -56,11 +59,8 @@ class ValidateStreamMainSpec extends AnyFlatSpec with Matchers {
 
   private def storedViolations(out: String): Long = spark.read.parquet(s"$out/violations").count()
 
-  private def reportLines(out: String): Seq[String] =
-    Files.readAllLines(Paths.get(out, "stream_report.jsonl")).asScala.toSeq
-
-  private def writeReport(out: String, text: String): Unit =
-    Files.writeString(Paths.get(out, "stream_report.jsonl"), text)
+  private def manifestLines(out: String): Seq[String] =
+    Files.readAllLines(Paths.get(out, "manifest.jsonl")).asScala.toSeq
 
   /** Run `body`; return the root paths under `dir` of every file scan the
     * query listener saw while it ran.
@@ -70,7 +70,7 @@ class ValidateStreamMainSpec extends AnyFlatSpec with Matchers {
     (r, queries.flatten)
   }
 
-  "ValidateStreamMain.run" should "count two passes' new violations in-stream, reading no output back" in {
+  "ValidateStreamMain.run" should "count two passes' new violations from their batch writes, reading no output back" in {
     val (in, out) = (tmp() + "/in", tmp())
     val first = addFiles(in, 40)
     val ((p1, printed1), scans1) = scansUnder(s"$out/violations")(passOk(in, out))
@@ -82,17 +82,15 @@ class ValidateStreamMainSpec extends AnyFlatSpec with Matchers {
     (p1.newViolationRows, printed1.added) shouldBe ((first.violations, first.violations))
     (p2.newViolationRows, printed2.added) shouldBe ((second.violations, second.violations))
     (p1.inputRows, p2.inputRows) shouldBe ((first.rows, second.rows))
-    p2.lastBatchId shouldBe p1.lastBatchId + 1
+    (p1.units, p2.units) shouldBe ((2, 2))
     p1.totalViolationRows shouldBe first.violations
     p2.totalViolationRows shouldBe storedViolations(out)
     printed2.total shouldBe p2.totalViolationRows
     ValidateStreamMain.exitCode(Right(p2)) shouldBe 2
-
-    val lines = reportLines(out)
-    lines.size shouldBe 2
-    lines(1) shouldBe s"""{"last_batch_id":${p2.lastBatchId},"input_rows":${second.rows},""" +
-      s""""new_violation_rows":${second.violations},""" +
-      s""""total_violation_rows":${first.violations + second.violations}}"""
+    // one manifest line per file, in one batch per pass
+    manifestLines(out).size shouldBe 4
+    Files.list(Paths.get(out, "violations")).iterator.asScala.map(_.getFileName.toString).toSeq.sorted shouldBe
+      Seq("batch=0", "batch=1")
   }
 
   it should "report 0 new rows, the same total and exit 2 on a pass with no new files" in {
@@ -100,59 +98,61 @@ class ValidateStreamMainSpec extends AnyFlatSpec with Matchers {
     addFiles(in, 30)
     addFiles(in, 20)
     val (p1, _) = passOk(in, out)
-    // the same outDir as a file: URI: the pass continues the same report
+    // the same outDir as a file: URI: the pass continues the same manifest
     val ((p2, printed), scans) = scansUnder(s"$out/violations")(passOk(in, s"file://$out"))
     scans shouldBe empty
-    reportLines(out).size shouldBe 2
-    (p2.newViolationRows, printed.added, p2.inputRows) shouldBe ((0L, 0L, 0L))
+    manifestLines(out).size shouldBe 4
+    (p2.units, p2.newViolationRows, printed.added, p2.inputRows) shouldBe ((0, 0L, 0L, 0L))
     (p2.totalViolationRows, printed.total) shouldBe ((p1.totalViolationRows, p1.totalViolationRows))
-    p2.lastBatchId shouldBe p1.lastBatchId
     ValidateStreamMain.exitCode(Right(p2)) shouldBe 2
   }
 
-  it should "recount once when the report's last line was dropped or torn, and never exit 0 over violations" in {
+  it should "read only the appended file on the next pass, and no data file on an idle pass" in {
+    val (in, out) = (tmp() + "/in", tmp())
+    addFiles(in, 40, files = 4)
+    passOk(in, out)
+    val added = addFiles(in, 10, files = 1)
+    val ((p2, _), read2) = QueryScans.filesReadUnder(spark, in)(passOk(in, out))
+    read2 shouldBe Seq(1L) // one batch write, reading the one new file
+    (p2.units, p2.inputRows, p2.newViolationRows) shouldBe ((1, added.rows, added.violations))
+    val ((p3, _), read3) = QueryScans.filesReadUnder(spark, in)(passOk(in, out))
+    read3 shouldBe empty
+    p3.units shouldBe 0
+  }
+
+  it should "validate an appended file whose mtime is 30 days older than the others'" in {
+    // a file copied in with its timestamp kept (cp -p, rsync -a) is new
+    // by name, whatever its age
+    val (in, out) = (tmp() + "/in", tmp())
+    val first = addFiles(in, 30)
+    passOk(in, out)
+    val old = addFiles(in, 20, files = 1, ageDays = 30)
+    val fresh = addFiles(in, 20, files = 1)
+    val (p2, _) = passOk(in, out)
+    old.violations should be > 0L
+    (p2.inputRows, p2.newViolationRows) shouldBe ((old.rows + fresh.rows, old.violations + fresh.violations))
+    p2.totalViolationRows shouldBe first.violations + old.violations + fresh.violations
+  }
+
+  it should "redo a batch whose manifest lines were cut, keeping the total and exit 2" in {
     val (in, out) = (tmp() + "/in", tmp())
     val first = addFiles(in, 30)
     passOk(in, out)
     val second = addFiles(in, 20)
     passOk(in, out)
-    val total = storedViolations(out)
-    total shouldBe first.violations + second.violations
+    val total = first.violations + second.violations
+    storedViolations(out) shouldBe total
 
-    // dropped: the stream committed batch 1 but its report line is gone
-    writeReport(out, reportLines(out).head + "\n")
-    val ((dropped, printed), recount) = scansUnder(s"$out/violations")(passOk(in, out))
-    recount should not be empty // the one read-back recovery makes
-    (dropped.newViolationRows, dropped.totalViolationRows, printed.total) shouldBe ((0L, total, total))
-    ValidateStreamMain.exitCode(Right(dropped)) shouldBe 2
-
-    // torn: a crash mid-append left half a line with no newline
-    val lines = reportLines(out)
-    writeReport(out, lines.init.mkString("", "\n", "\n") + lines.last.take(lines.last.length / 2))
-    val torn = passOk(in, out)._1
-    (torn.newViolationRows, torn.totalViolationRows) shouldBe ((0L, total))
-    ValidateStreamMain.exitCode(Right(torn)) shouldBe 2
-
-    // the recovered line was appended whole, so the next pass trusts it
-    val (after, scans) = scansUnder(s"$out/violations")(passOk(in, out)._1)
-    scans shouldBe empty
-    after.totalViolationRows shouldBe total
-  }
-
-  it should "recount when the sink committed a batch the checkpoint's commit log lacks" in {
-    val (in, out) = (tmp() + "/in", tmp())
-    val first = addFiles(in, 30)
-    val (p1, _) = passOk(in, out)
-    // a pass died after the sink wrote batch 0 and before the commit log
-    // and the report recorded it: the next pass re-runs the batch, and
-    // the sink skips it as already written
-    Files.delete(Paths.get(out, "_checkpoint", "commits", p1.lastBatchId.toString))
-    Files.deleteIfExists(Paths.get(out, "_checkpoint", "commits", s".${p1.lastBatchId}.crc"))
-    writeReport(out, "")
-    val (p2, _) = passOk(in, out)
-    p2.totalViolationRows shouldBe first.violations
-    storedViolations(out) shouldBe first.violations
-    ValidateStreamMain.exitCode(Right(p2)) shouldBe 2
+    // a kill mid-append: the second pass's batch keeps half its last line
+    val m = Paths.get(out, "manifest.jsonl")
+    val bytes = Files.readAllBytes(m)
+    Files.write(m, bytes.take(bytes.lastIndexOf('\n'.toByte, bytes.length - 2) + 40))
+    val (redone, printed) = passOk(in, out)
+    (redone.units, redone.newViolationRows) shouldBe ((2, second.violations))
+    (redone.totalViolationRows, printed.total) shouldBe ((total, total))
+    storedViolations(out) shouldBe total
+    ValidateStreamMain.exitCode(Right(redone)) shouldBe 2
+    passOk(in, out)._1.units shouldBe 0
   }
 
   it should "end in exit 3 when a pinned column vanished" in {

@@ -156,24 +156,28 @@ class ValidateTableMainSpec extends AnyFlatSpec with Matchers {
     // a JVM started with no LANG/LC_* has an ASCII file name encoding
     // (sun.jnu.encoding) and gets a non-ASCII argument as U+FFFD; a
     // shell script passes the path's UTF-8 bytes as a user's shell would
-    val dir = tmp()
-    val schemaFile = Paths.get(dir, "schema.json")
-    Files.writeString(schemaFile, graft.compile.Fixtures.flagshipSchema)
-    val out = s"$dir/out"
-    val script = Paths.get(dir, "run.sh")
-    Files.writeString(script, s"""exec "$$@" '$dir/donn\u00e9es_\u00e9/in' '$out'\n""", StandardCharsets.UTF_8)
-    val javaBin = Paths.get(sys.props("java.home"), "bin", "java").toString
-    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments.asScala.toSeq
-    val pb = new ProcessBuilder((Seq("sh", script.toString, javaBin) ++ jvmArgs ++
-      Seq("-Xmx1g", "-cp", sys.props("java.class.path"), "graft.cli.ValidateTableMain", schemaFile.toString)).asJava)
-    Seq("LANG", "LC_ALL", "LC_CTYPE").foreach(pb.environment().remove)
-    val proc = pb.redirectErrorStream(true).start()
-    val log = new String(proc.getInputStream.readAllBytes(), StandardCharsets.UTF_8)
-    proc.waitFor() should not be 0
-    // the path as the ASCII encoding prints it, the encoding and the fix
-    log should include regex (java.util.regex.Pattern.quote(s"path $dir/donn") + "\\?+es_\\?+/in cannot be encoded")
-    log should include regex "file name encoding [A-Za-z0-9_.-]+; run under a UTF-8 locale \\(e\\.g\\. LANG=C\\.UTF-8\\)"
-    Files.exists(Paths.get(out)) shouldBe false
+    Seq("graft.cli.ValidateTableMain", "graft.cli.ValidateStreamMain").foreach { main =>
+      val dir = tmp()
+      val schemaFile = Paths.get(dir, "schema.json")
+      Files.writeString(schemaFile, graft.compile.Fixtures.flagshipSchema)
+      val out = s"$dir/out"
+      val script = Paths.get(dir, "run.sh")
+      Files.writeString(script, s"""exec "$$@" '$dir/donn\u00e9es_\u00e9/in' '$out'\n""", StandardCharsets.UTF_8)
+      val javaBin = Paths.get(sys.props("java.home"), "bin", "java").toString
+      val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean.getInputArguments.asScala.toSeq
+      val pb = new ProcessBuilder((Seq("sh", script.toString, javaBin) ++ jvmArgs ++
+        Seq("-Xmx1g", "-cp", sys.props("java.class.path"), main, schemaFile.toString)).asJava)
+      Seq("LANG", "LC_ALL", "LC_CTYPE").foreach(pb.environment().remove)
+      val proc = pb.redirectErrorStream(true).start()
+      val log = new String(proc.getInputStream.readAllBytes(), StandardCharsets.UTF_8)
+      withClue(s"$main: $log") {
+        proc.waitFor() should not be 0
+        // the path as the ASCII encoding prints it, the encoding and the fix
+        log should include regex (java.util.regex.Pattern.quote(s"path $dir/donn") + "\\?+es_\\?+/in cannot be encoded")
+        log should include regex "file name encoding [A-Za-z0-9_.-]+; run under a UTF-8 locale \\(e\\.g\\. LANG=C\\.UTF-8\\)"
+        Files.exists(Paths.get(out)) shouldBe false
+      }
+    }
   }
 
   it should "call every row of a table with no roots an orphan" in {
