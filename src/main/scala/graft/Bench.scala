@@ -88,9 +88,9 @@ object Bench {
     val transcripts = graft.sources.TranscriptDerive.fromLineitem(spark, sfDir).cache()
     val nTurns = transcripts.count()
     val schema = graft.gates.Inputs.schema
-    graft.exprs.Validator.validateTranscripts(transcripts, schema).count() // warm
+    graft.exprs.Validator.violations(transcripts, schema, Seq("conv_id", "turn_idx")).count() // warm
     val tV0 = System.nanoTime()
-    graft.exprs.Validator.validateTranscripts(transcripts, schema).count()
+    graft.exprs.Validator.violations(transcripts, schema, Seq("conv_id", "turn_idx")).count()
     val vSec = (System.nanoTime() - tV0) / 1e9
     val turnsPerSec = nTurns / vSec
     transcripts.unpersist()
@@ -292,7 +292,7 @@ object ClusterScalingBench {
     val (input, write) = transcriptsInput
     val schema = graft.gates.Inputs.schema
     val m = measure("ClusterScalingBench", args, input, partitionsPerCore = 1, write) { df =>
-      graft.exprs.Validator.validateTranscripts(df, schema).count()
+      graft.exprs.Validator.violations(df, schema, Seq("conv_id", "turn_idx")).count()
     }
     println(s"""{"metric":"cluster_scaling_single","executors":${m.executors},"cores_per_executor":$coresPerExec,"input_rows":${m.inputRows},"sec":${m.sec},"turns_per_sec":${(m.inputRows / m.sec).round}}""")
   }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.compile.TableSchema
 import graft.exprs.Validator
 import graft.gates._
 import graft.gates.Inputs.schema
@@ -17,7 +18,7 @@ object SparkEntry {
 
   /** Flagship query on sf=0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    Validator.validateTranscripts(
+    (Validator.violations(_: DataFrame, _: TableSchema, Seq("conv_id", "turn_idx")))(
       TranscriptDerive.fromLineitem(spark, "/root/testdata/sf0.001"), schema).toDF()
 
   val gates: Seq[Gate] = ValidationGates.all ++ ConversationGates.all ++ StatsGates.all ++

@@ -8,7 +8,7 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
 import scala.collection.mutable
 import scala.util.Try
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Encoder, Encoders, Observation, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, DataFrameReader, Encoder, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.expressions.Aggregator
@@ -145,7 +145,7 @@ object Checkpoint {
   }
 
   /** The java.nio file a plain path or `file:` URI names; other schemes fail. */
-  private def localFile(path: String): java.nio.file.Path = {
+  private[graft] def localFile(path: String): java.nio.file.Path = {
     val u = new Path(path).toUri
     require(Option(u.getScheme).forall(_ == "file"), s"$path must be a local path or a file: URI")
     Paths.get(u.getPath)
@@ -175,25 +175,33 @@ object Checkpoint {
     }
   }
 
+  /** `read` of the parquet table at `inputDir`; a directory with no data
+    * files fails — an empty unit set must never read as a clean verdict.
+    */
+  private[graft] def readParquet(read: DataFrameReader, inputDir: String): DataFrame =
+    try read.parquet(inputDir)
+    catch {
+      case e: AnalysisException if e.getCondition == "UNABLE_TO_INFER_SCHEMA" =>
+        throw new IllegalArgumentException(noUnits(inputDir), e)
+    }
+
+  private def noUnits(inputDir: String): String =
+    s"no parquet units found under $inputDir — refusing to treat an empty unit set as a valid table"
+
   /** Open a parquet table directory (any Hadoop URI or local path),
     * read with `schema` when given, else with the schema inferred from
-    * one footer. A Hive-partitioned layout lists recursively; zero data
-    * files is a hard error — an empty unit set must never read as a
-    * clean verdict.
+    * one footer. The convenience `runValidation(spark, inputDir, …)`
+    * overload infers from one footer; `ValidateTableMain` passes its
+    * pinned schema. A Hive-partitioned layout lists recursively; zero
+    * data files is a hard error.
     */
   def openTable(spark: SparkSession, inputDir: String, schema: Option[StructType] = None): Table = {
-    def noUnits = s"no parquet units found under $inputDir — refusing to treat an empty unit set as a valid table"
-    val df =
-      try schema.fold(spark.read)(spark.read.schema(_)).parquet(inputDir)
-      catch {
-        case e: AnalysisException if e.getCondition == "UNABLE_TO_INFER_SCHEMA" =>
-          throw new IllegalArgumentException(noUnits, e)
-      }
+    val df = readParquet(schema.fold(spark.read)(spark.read.schema(_)), inputDir)
     val relation = df.queryExecution.analyzed.collectFirst { case l: LogicalRelation => l.relation }
       .collect { case r: HadoopFsRelation => r }
       .getOrElse(throw new IllegalStateException(s"$inputDir did not open as a file relation"))
     val files = relation.location.inputFiles.toSeq.map(f => filePathForm(new URI(f)))
-    require(files.nonEmpty, noUnits)
+    require(files.nonEmpty, noUnits(inputDir))
     // one root (a glob listing several fails in unitName); a one-file table's is its directory
     val root = filePathForm(relation.location.rootPaths.head.toUri)
     val table = Table(df, if (files == Seq(root)) root.substring(0, root.lastIndexOf('/')) else root,

@@ -1,6 +1,6 @@
 package graft.exprs
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.json4s._
@@ -687,16 +687,6 @@ object Validator {
       .select(passthrough.map(tableColumn) :+ explode(array(vioStructs: _*)).as("__v"): _*)
       .filter(col("__v").isNotNull)
       .select(passthrough.map(tableColumn) :+ col("__v.pointer") :+ col("__v.constraint") :+ col("__v.actual"): _*)
-  }
-
-  /** Typed transcript validation (the flagship path). */
-  def validateTranscripts(df: DataFrame, schema: TableSchema): Dataset[Violation] = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    violations(df, schema, Seq("conv_id", "turn_idx"))
-      .select(col("conv_id"), col("turn_idx").cast("int").as("turn_idx"),
-        col("pointer"), col("constraint"), col("actual"))
-      .as[Violation]
   }
 
   /** Violation COUNTS by (constraint, column) without emitting a single

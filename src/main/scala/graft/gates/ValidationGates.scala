@@ -24,7 +24,7 @@ object ValidationGates {
 
   private val violations =
     Gate("v_violations", (s, dir) =>
-      Validator.validateTranscripts(TranscriptDerive.fromLineitem(s, dir), schema).toDF(),
+      Validator.violations(TranscriptDerive.fromLineitem(s, dir), schema, Seq("conv_id", "turn_idx")),
       s"""WITH $tCte
          |SELECT conv_id, turn_idx, ${ptrSql("role")} AS pointer, 'required' AS "constraint", 'null' AS actual
          |FROM transcripts WHERE role IS NULL

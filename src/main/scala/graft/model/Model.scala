@@ -101,14 +101,3 @@ final case class SchemaDoc(
     not: Option[SchemaDoc] = None) {
   override def toString: String = s"SchemaDoc(${id.getOrElse(scope)})"
 }
-
-/** One emitted violation row (the engine's data-plane output).
-  * `pointer` is an RFC-6901 json-pointer to the offending field with
-  * `~`/`/` escaped per `JsonPointer.scala:36-42` semantics.
-  */
-final case class Violation(
-    conv_id: String,
-    turn_idx: Int,
-    pointer: String,
-    constraint: String,
-    actual: String)

@@ -34,7 +34,7 @@ class PlanSpec extends AnyFlatSpec with Matchers {
   "the fused validator plan" should "contain no exchange and one scan" in {
     val df = spark.read.parquet(s"$sfDir/lineitem.parquet")
     val t = graft.sources.TranscriptDerive.fromLineitem(spark, sfDir)
-    val plan = formatted(Validator.validateTranscripts(t, schema).toDF())
+    val plan = formatted(Validator.violations(t, schema, Seq("conv_id", "turn_idx")))
     plan should not include "Exchange"
     // derivation unions two scans of lineitem; both are scans, no joins
     plan should not include "Join"
@@ -238,7 +238,7 @@ class PlanSpec extends AnyFlatSpec with Matchers {
 
   "whole-stage codegen" should "cover the validator projection" in {
     val t = graft.sources.TranscriptDerive.fromLineitem(spark, sfDir)
-    val exec = Validator.validateTranscripts(t, schema).toDF().queryExecution.executedPlan
+    val exec = Validator.violations(t, schema, Seq("conv_id", "turn_idx")).queryExecution.executedPlan
     exec.toString should include("*(") // WholeStageCodegen spans present
     // no interpreted higher-order functions in the hot path
     exec.toString.toLowerCase should not include "arrayfilter"

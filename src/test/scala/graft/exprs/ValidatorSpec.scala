@@ -2,11 +2,16 @@ package graft.exprs
 
 import org.scalatest.flatspec.AnyFlatSpec
 import org.scalatest.matchers.should.Matchers
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import graft.SparkTestBase
-import graft.compile.TableSchemaCompiler
-import graft.model.Violation
+import graft.compile.{TableSchema, TableSchemaCompiler}
 import graft.sources.TranscriptGen
+
+object ValidatorSpec {
+  /** One emitted violation row of a transcripts table. */
+  final case class Vio(conv_id: String, turn_idx: Int, pointer: String, constraint: String, actual: String)
+}
 
 /** Execution golden tests (FIXTURES.md §4 clean-100 / dirty-100): the
   * fused single-scan validator must emit exactly the planted violations,
@@ -20,9 +25,15 @@ class ValidatorSpec extends AnyFlatSpec with Matchers {
     .compileString(graft.compile.Fixtures.flagshipSchema)
     .fold(e => throw new IllegalArgumentException(e), identity)
 
+  /** The transcripts table's violation rows, keyed by (conv_id, turn_idx). */
+  private def violations(df: DataFrame, schema: TableSchema): Dataset[ValidatorSpec.Vio] = {
+    import spark.implicits._
+    Validator.violations(df, schema, Seq("conv_id", "turn_idx")).as[ValidatorSpec.Vio]
+  }
+
   "Validator" should "emit zero violations on the clean fixture" in {
     val df = TranscriptGen.generate(spark, 10, 10, TranscriptGen.clean)
-    Validator.validateTranscripts(df, schema).count() shouldBe 0L
+    violations(df, schema).count() shouldBe 0L
   }
 
   it should "emit exactly the planted violations on the dirty fixture" in {
@@ -30,7 +41,7 @@ class ValidatorSpec extends AnyFlatSpec with Matchers {
       negativeTurnIdx = true, toolOnNonTool = true, badConvPattern = true)
     val df = TranscriptGen.generate(spark, 10, 10, defects).cache()
     try {
-      val vios = Validator.validateTranscripts(df, schema)
+      val vios = violations(df, schema)
         .orderBy("conv_id", "turn_idx", "constraint")
         .collect().toSeq
 
@@ -74,7 +85,7 @@ class ValidatorSpec extends AnyFlatSpec with Matchers {
       ("c1", 0, Option("system"), "t", None: Option[String], java.sql.Timestamp.valueOf("2024-01-01 00:00:00")),
       ("c1", 1, None: Option[String], "t", Option("search"), java.sql.Timestamp.valueOf("2024-01-01 00:00:01")))
       .toDF("conv_id", "turn_idx", "role", "text", "tool", "ts")
-    val vios = Validator.validateTranscripts(rows, schema).collect()
+    val vios = violations(rows, schema).collect()
     vios.map(_.constraint).toSet shouldBe Set("required", "dependencies")
     vios.filter(_.constraint == "dependencies").head.pointer shouldBe "/c1/1/tool"
   }
@@ -84,7 +95,7 @@ class ValidatorSpec extends AnyFlatSpec with Matchers {
     val rows = Seq(
       ("a/b~c", -1, "user", "t", None: Option[String], java.sql.Timestamp.valueOf("2024-01-01 00:00:00")))
       .toDF("conv_id", "turn_idx", "role", "text", "tool", "ts")
-    val vios = Validator.validateTranscripts(rows, schema).collect()
+    val vios = violations(rows, schema).collect()
     val minV = vios.filter(_.constraint == "minimum").head
     minV.pointer shouldBe "/a~1b~0c/-1/turn_idx"
     // conv_id also violates the ^c[0-9]+$ pattern
@@ -101,21 +112,21 @@ class ValidatorSpec extends AnyFlatSpec with Matchers {
       ("c1", 1, "user", "this text is far too long", None: Option[String], java.sql.Timestamp.valueOf("2024-01-01 00:00:01")),
       ("c1", 2, "user", "short", None: Option[String], java.sql.Timestamp.valueOf("2024-01-01 00:00:02")))
       .toDF("conv_id", "turn_idx", "role", "text", "tool", "ts")
-    val vios = Validator.validateTranscripts(rows, strictSchema).collect()
+    val vios = violations(rows, strictSchema).collect()
     vios.map(v => (v.turn_idx, v.constraint)).toSet shouldBe Set((0, "minLength"), (1, "maxLength"))
   }
 
   it should "count violations invariantly under row permutation (single-pass, order-free)" in {
     val defects = TranscriptGen.all
     val df = TranscriptGen.generate(spark, 20, 5, defects)
-    val n1 = Validator.validateTranscripts(df, schema).count()
-    val n2 = Validator.validateTranscripts(df.orderBy(rand(42)), schema).count()
+    val n1 = violations(df, schema).count()
+    val n2 = violations(df.orderBy(rand(42)), schema).count()
     n1 shouldBe n2
   }
 
   it should "keep the fused plan shuffle-free (one scan, no exchange)" in {
     val df = TranscriptGen.generate(spark, 10, 10)
-    val plan = Validator.validateTranscripts(df, schema).queryExecution.executedPlan.toString
+    val plan = violations(df, schema).queryExecution.executedPlan.toString
     plan should not include "Exchange"
   }
 
@@ -124,7 +135,7 @@ class ValidatorSpec extends AnyFlatSpec with Matchers {
     val df = TranscriptGen.generate(spark, 200, 5, TranscriptGen.all)
     val schema = graft.compile.TableSchemaCompiler
       .compileString(graft.compile.Fixtures.flagshipSchema).toOption.get
-    val emitted = Validator.validateTranscripts(df, schema).toDF()
+    val emitted = violations(df, schema).toDF()
       .groupBy(col("constraint"), element_at(split(col("pointer"), "/"), -1).as("column"))
       .agg(count(lit(1)).as("n"))
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap

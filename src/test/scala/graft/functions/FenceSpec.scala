@@ -55,7 +55,7 @@ class FenceSpec extends AnyFlatSpec with Matchers {
       graft.SparkEntry.querySchema).toOption.get
     val t = graft.sources.TranscriptGen.generate(spark, 50, 4,
       graft.sources.TranscriptGen.all)
-    val v = graft.exprs.Validator.validateTranscripts(t, schema)
+    val v = graft.exprs.Validator.violations(t, schema, Seq("conv_id", "turn_idx"))
     v.count() should be > 0L
   }
 }

@@ -111,6 +111,7 @@ class IntegritySpec extends AnyFlatSpec with Matchers {
       // ValidateTableMain and the gate emit the same (conv_id, turn_idx) multiset
       val out = s"$dir/out"
       val verdict = graft.cli.ValidateTableMain.run(spark, schema, s"$dir/transcripts", out)
+        .fold(d => fail(s"run reported drift: $d"), identity)
       val cli = spark.read.parquet(s"$out/referential_violations")
         .select("conv_id", "turn_idx").as[(Option[String], Option[Int])].collect().toSeq.sorted
       val gate = graft.SparkEntry.queries("ref_orphans")(spark, dir)

@@ -73,14 +73,14 @@ class SchemaInferSpec extends AnyFlatSpec with Matchers {
       val json = SchemaInfer.inferSchemaJson(df)
       val schema = TableSchemaCompiler.compileString(json)
         .fold(e => fail(s"inferred schema failed to compile: $e\n$json"), identity)
-      Validator.validateTranscripts(df, schema).count() shouldBe 0L
+      Validator.violations(df, schema, Seq("conv_id", "turn_idx")).count() shouldBe 0L
 
       // a row outside the observed envelope is flagged by the same schema
       val maxIdx = df.agg(max("turn_idx")).collect()(0).getInt(0)
       val bad = df.limit(1).select(
         col("conv_id"), lit(maxIdx + 100).as("turn_idx"),
         lit("intruder_role").as("role"), col("text"), col("tool"), col("ts"))
-      val vios = Validator.validateTranscripts(df.unionByName(bad), schema)
+      val vios = Validator.violations(df.unionByName(bad), schema, Seq("conv_id", "turn_idx"))
       vios.count() should be >= 2L // turn_idx above maximum + role outside enum
       val constraints = vios.select("constraint").distinct().as[String].collect().toSet
       constraints.exists(_.contains("maximum")) shouldBe true

@@ -25,11 +25,11 @@ class StreamingSpec extends AnyFlatSpec with Matchers {
 
   private def ts(min: Int) = Timestamp.valueOf(f"2024-01-01 00:$min%02d:00")
 
-  "Validator.validateTranscripts" should "emit the same violations as the batch plan, per micro-batch" in {
+  "Validator.violations" should "emit the same violations as the batch plan, per micro-batch" in {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     val input = MemoryStream[Turn]
-    val q = Validator.validateTranscripts(input.toDF(), schema)
+    val q = Validator.violations(input.toDF(), schema, Seq("conv_id", "turn_idx"))
       .writeStream.format("memory").queryName("svio").outputMode("append").start()
     try {
       input.addData(
