@@ -6,8 +6,11 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Registers the engine's custom Catalyst expressions as SQL functions,
-  * so `spark.sql` users get the same codegen kernels the DataFrame API
-  * uses:
+  * so `spark.sql` users get the same kernels the DataFrame API uses.
+  * Each kernel is one Scala function: `nullSafeEval` runs it, and the
+  * expression's generated code only calls it, so interpreted eval and
+  * whole-stage codegen compute the same result (`GraftExtensionsSpec`
+  * runs every function below both ways).
   *
   *   spark.sql.extensions=graft.GraftExtensions    (config route), or
   *   GraftExtensions.install(spark)                 (live session route)

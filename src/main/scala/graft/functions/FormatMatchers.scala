@@ -201,9 +201,10 @@ object FormatMatchers {
     "ipv6charset" -> ipv6Charset)
 }
 
-/** Codegen wrapper: `format_match(str, 'email')` — evaluates the
-  * matching [[FormatMatchers]] byte loop via a static call inside
-  * whole-stage codegen (null in -> null out, like `rlike`).
+/** Codegen wrapper: `format_match(str, 'email')` — the matching
+  * [[FormatMatchers.methods]] function is handed to the generated code
+  * by reference, so eval and whole-stage codegen call the same byte
+  * loop (null in -> null out, like `rlike`).
   */
 case class FormatMatch(child: Expression, fmt: String) extends UnaryExpression {
   require(FormatMatchers.methods.contains(fmt), s"unknown format matcher: $fmt")
@@ -220,14 +221,10 @@ case class FormatMatch(child: Expression, fmt: String) extends UnaryExpression {
   private val fn = FormatMatchers.methods(fmt)
   override def nullSafeEval(input: Any): Any = fn(input.asInstanceOf[UTF8String])
 
-  private val javaMethod = fmt match {
-    case "ipv6charset" => "ipv6Charset"
-    case other => other
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val f = ctx.addReferenceObj("formatMatcher", fn, "scala.Function1")
+    nullSafeCodeGen(ctx, ev, s => s"${ev.value} = ((java.lang.Boolean) $f.apply($s)).booleanValue();")
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = graft.functions.FormatMatchers.$javaMethod($s);")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)

@@ -17,141 +17,106 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   *   ^ (literal-char | [class] [+*]?)+ $
   *
-  * with ASCII-only literals/classes (ranges + chars, no negation), and
-  * greedy quantifiers ONLY where greedy matching cannot require
-  * backtracking (the quantified class is last, or disjoint from the
-  * next token's first-char set). Anything else returns None and the
-  * caller uses `rlike` — so the fast path can never change semantics.
-  * ASCII-only patterns make byte-wise UTF8String matching exact: any
-  * multi-byte character has its high bit set and matches no ASCII
-  * literal/class, exactly like java.util.regex.
+  * with ASCII-only literals/classes (ranges + chars, no negation, no
+  * escapes, no `&&` intersection or nested `[`), and greedy quantifiers
+  * ONLY where greedy matching cannot require backtracking. Anything else
+  * returns None and the caller uses `rlike` — so the fast path can never
+  * change semantics. ASCII-only patterns make byte-wise UTF8String
+  * matching exact: any multi-byte character has its high bit set and
+  * matches no ASCII literal/class, exactly like java.util.regex.
+  *
+  * A compiled pattern is one token table (a 128-entry membership set
+  * and a quantifier per token; a literal is a one-char set). Interpreted
+  * eval and generated code both call [[SimplePattern.matches]] on it.
   */
+final class SimplePattern private (sets: Array[Array[Boolean]], quants: Array[Char])
+    extends Serializable {
+
+  /** Greedy match of the token table over the string's bytes, read in
+    * place; `$` is java's rule ([[FormatMatchers.stripFinalTerminator]]).
+    */
+  def matches(s: UTF8String): Boolean = {
+    val n = s.numBytes()
+    var pos = 0
+    var t = 0
+    while (t < quants.length) {
+      val set = sets(t)
+      if (quants(t) != '*') { // '1' or '+': one byte required
+        if (pos >= n || !SimplePattern.in(set, s.getByte(pos))) return false
+        pos += 1
+      }
+      if (quants(t) != '1') while (pos < n && SimplePattern.in(set, s.getByte(pos))) pos += 1
+      t += 1
+    }
+    pos == n || pos == FormatMatchers.stripFinalTerminator(s)
+  }
+}
+
 object SimplePattern {
 
-  sealed trait Tok
-  final case class Lit(c: Char) extends Tok
-  /** ASCII membership bitmap + quantifier: 1 = exactly once, '+', '*'. */
-  final case class Cls(bits: Array[Boolean], quant: Char) extends Tok
+  private def in(set: Array[Boolean], b: Byte): Boolean = b >= 0 && set(b)
 
-  def compile(pattern: String): Option[List[Tok]] = {
+  def compile(pattern: String): Option[SimplePattern] = {
     if (!pattern.startsWith("^") || !pattern.endsWith("$") || pattern.length < 2) return None
     val body = pattern.substring(1, pattern.length - 1)
     if (body.contains("$") || body.isEmpty) return None
-    val toks = scala.collection.mutable.ListBuffer.empty[Tok]
+    val sets = scala.collection.mutable.ArrayBuffer.empty[Array[Boolean]]
+    val quants = scala.collection.mutable.ArrayBuffer.empty[Char]
     var i = 0
     while (i < body.length) {
+      val set = new Array[Boolean](128)
       body.charAt(i) match {
         case '[' =>
           val close = body.indexOf(']', i + 1)
           if (close < 0) return None
           val inner = body.substring(i + 1, close)
-          if (inner.isEmpty || inner.startsWith("^")) return None
-          val bits = new Array[Boolean](128)
+          // java.util.regex reads `&&` in a class as an intersection and
+          // `[` as a nested class
+          if (inner.isEmpty || inner.startsWith("^") || inner.contains("&&") ||
+            inner.exists(c => c >= 128 || c == '\\' || c == '[')) return None
           var j = 0
           while (j < inner.length) {
             val c = inner.charAt(j)
-            if (c >= 128 || c == '\\') return None
             if (j + 2 < inner.length && inner.charAt(j + 1) == '-') {
               val hi = inner.charAt(j + 2)
-              if (hi >= 128 || hi < c) return None
-              (c to hi).foreach(ch => bits(ch) = true)
+              if (hi < c) return None
+              (c to hi).foreach(ch => set(ch) = true)
               j += 3
-            } else { bits(c) = true; j += 1 }
+            } else { set(c) = true; j += 1 }
           }
           i = close + 1
-          val quant = if (i < body.length && (body.charAt(i) == '+' || body.charAt(i) == '*')) {
-            val q = body.charAt(i); i += 1; q
-          } else '1'
-          toks += Cls(bits, quant)
         case c if "\\.*+?()|{}^".contains(c) => return None // meta outside class
-        case c if c < 128 =>
-          i += 1
-          if (i < body.length && (body.charAt(i) == '+' || body.charAt(i) == '*')) {
-            val q = body.charAt(i); i += 1
-            val bits = new Array[Boolean](128); bits(c) = true
-            toks += Cls(bits, q)
-          } else toks += Lit(c)
+        case c if c < 128 => set(c) = true; i += 1
         case _ => return None
       }
+      val quant = if (i < body.length && (body.charAt(i) == '+' || body.charAt(i) == '*')) {
+        i += 1; body.charAt(i - 1)
+      } else '1'
+      sets += set
+      quants += quant
     }
-    val list = toks.toList
-    // greedy-without-backtracking safety: a quantified class must be the
-    // last token, or disjoint from the next token's possible first chars
-    def firstChars(t: Tok): Set[Char] = t match {
-      case Lit(c)       => Set(c)
-      case Cls(bits, _) => bits.zipWithIndex.collect { case (true, i) => i.toChar }.toSet
+    // greedy matching needs no backtracking when every quantified token
+    // is last or a '+' disjoint from the next token's set ('*' is
+    // skippable, so only allowed last), and holds no '\r': java's `$`
+    // could take a '\r' back from a run to match before a final "\r\n"
+    val last = sets.length - 1
+    val greedyExact = (0 to last).forall { t =>
+      quants(t) == '1' || (!sets(t)('\r') &&
+        (t == last || (quants(t) == '+' && (0 until 128).forall(c => !(sets(t)(c) && sets(t + 1)(c))))))
     }
-    val safe = list.zipWithIndex.forall {
-      case (Cls(bits, q), idx) if q != '1' && idx + 1 < list.length =>
-        firstChars(list(idx + 1)).forall(c => c >= 128 || !bits(c))
-      case _ => true
-    }
-    // a '*'-quantified token that is also skippable complicates "first
-    // char" analysis of ITS successor chain — only allow '*' at the end
-    val starSafe = list.zipWithIndex.forall {
-      case (Cls(_, '*'), idx) => idx == list.length - 1
-      case _                  => true
-    }
-    if (safe && starSafe && list.nonEmpty) Some(list) else None
-  }
-
-  /** Interpreted matcher over UTF8String bytes (also the semantics the
-    * codegen mirrors).
-    */
-  def matches(s: UTF8String, toks: List[Tok]): Boolean = {
-    val bytes = s.getBytes
-    var pos = 0
-    val n = bytes.length
-    def at(i: Int): Int = bytes(i) & 0xff
-    var rest = toks
-    while (rest.nonEmpty) {
-      rest.head match {
-        case Lit(c) =>
-          if (pos >= n || at(pos) != c.toInt) return false
-          pos += 1
-        case Cls(bits, '1') =>
-          if (pos >= n || at(pos) >= 128 || !bits(at(pos))) return false
-          pos += 1
-        case Cls(bits, '+') =>
-          if (pos >= n || at(pos) >= 128 || !bits(at(pos))) return false
-          pos += 1
-          while (pos < n && at(pos) < 128 && bits(at(pos))) pos += 1
-        case Cls(bits, '*') =>
-          while (pos < n && at(pos) < 128 && bits(at(pos))) pos += 1
-      }
-      rest = rest.tail
-    }
-    endsAtInput(bytes, pos, n)
-  }
-
-  /** java.util.regex `$` (no MULTILINE) matches at the end of input OR
-    * just before a single FINAL line terminator (LF, CR, CRLF,
-    * NEL U+0085, LS U+2028, PS U+2029). The rlike fallback inherits that, so the fast path
-    * must too or "c1\n" would flip between paths. UTF-8 bytes:
-    * 0A | 0D | 0D 0A | C2 85 | E2 80 A8 | E2 80 A9.
-    */
-  def endsAtInput(bytes: Array[Byte], pos: Int, n: Int): Boolean = (n - pos) match {
-    case 0 => true
-    case 1 =>
-      val b = bytes(pos) & 0xff; b == 0x0A || b == 0x0D
-    case 2 =>
-      val b0 = bytes(pos) & 0xff; val b1 = bytes(pos + 1) & 0xff
-      (b0 == 0x0D && b1 == 0x0A) || (b0 == 0xC2 && b1 == 0x85)
-    case 3 =>
-      val b0 = bytes(pos) & 0xff; val b1 = bytes(pos + 1) & 0xff
-      val b2 = bytes(pos + 2) & 0xff
-      b0 == 0xE2 && b1 == 0x80 && (b2 == 0xA8 || b2 == 0xA9)
-    case _ => false
+    if (greedyExact) Some(new SimplePattern(sets.toArray, quants.toArray)) else None
   }
 }
 
-/** Codegen'd anchored simple-pattern match: byte loop over the
-  * UTF8String, no String copy, no java.util.regex.
+/** Anchored simple-pattern match inside whole-stage codegen: the
+  * compiled [[SimplePattern]] is built once per expression and handed
+  * to the generated code by reference, so both eval paths run the same
+  * matcher — no String copy, no java.util.regex.
   */
 case class SimplePatternMatch(child: Expression, pattern: String)
     extends UnaryExpression {
 
-  @transient private lazy val toks: List[SimplePattern.Tok] =
+  @transient private lazy val matcher: SimplePattern =
     SimplePattern.compile(pattern)
       .getOrElse(throw new IllegalArgumentException(s"unsupported simple pattern: $pattern"))
 
@@ -163,66 +128,11 @@ case class SimplePatternMatch(child: Expression, pattern: String)
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "simple_pattern"
 
-  override def nullSafeEval(v: Any): Any =
-    SimplePattern.matches(v.asInstanceOf[UTF8String], toks)
+  override def nullSafeEval(v: Any): Any = matcher.matches(v.asInstanceOf[UTF8String])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    // ship the token table as class fields: membership bitmaps as
-    // boolean[128], token kinds/chars as parallel arrays
-    val kinds = toks.map {
-      case SimplePattern.Lit(_)        => 'L'
-      case SimplePattern.Cls(_, quant) => quant
-    }.mkString // e.g. "L+" -> literal then plus-class
-    val litChars = toks.map { case SimplePattern.Lit(c) => c.toInt; case _ => -1 }
-    val bitmapsName = ctx.addMutableState("boolean[][]", "spBitmaps",
-      v => {
-        val rows = toks.map {
-          case SimplePattern.Cls(bits, _) =>
-            bits.map(b => if (b) "true" else "false").mkString("{", ",", "}")
-          case _ => "null"
-        }.mkString("{", ",", "}")
-        s"$v = new boolean[][] $rows;"
-      }, forceInline = false, useFreshName = true)
-    val litsName = ctx.addMutableState("int[]", "spLits",
-      v => s"$v = new int[] ${litChars.mkString("{", ",", "}")};",
-      forceInline = false, useFreshName = true)
-    val kindsName = ctx.addMutableState("String", "spKinds",
-      v => s"""$v = "$kinds";""", forceInline = false, useFreshName = true)
-
-    nullSafeCodeGen(ctx, ev, s => {
-      val bytes = ctx.freshName("bytes")
-      val pos = ctx.freshName("pos")
-      val nb = ctx.freshName("nb")
-      val ok = ctx.freshName("ok")
-      val t = ctx.freshName("t")
-      val b = ctx.freshName("b")
-      s"""
-         |byte[] $bytes = $s.getBytes();
-         |int $pos = 0;
-         |int $nb = $bytes.length;
-         |boolean $ok = true;
-         |for (int $t = 0; $ok && $t < $kindsName.length(); $t++) {
-         |  char k = $kindsName.charAt($t);
-         |  if (k == 'L') {
-         |    if ($pos >= $nb || ($bytes[$pos] & 0xff) != $litsName[$t]) { $ok = false; }
-         |    else { $pos++; }
-         |  } else if (k == '1') {
-         |    int $b = $pos < $nb ? ($bytes[$pos] & 0xff) : 999;
-         |    if ($b >= 128 || !$bitmapsName[$t][$b]) { $ok = false; } else { $pos++; }
-         |  } else if (k == '+') {
-         |    int $b = $pos < $nb ? ($bytes[$pos] & 0xff) : 999;
-         |    if ($b >= 128 || !$bitmapsName[$t][$b]) { $ok = false; }
-         |    else {
-         |      $pos++;
-         |      while ($pos < $nb && ($bytes[$pos] & 0xff) < 128 && $bitmapsName[$t][$bytes[$pos] & 0xff]) $pos++;
-         |    }
-         |  } else { // '*'
-         |    while ($pos < $nb && ($bytes[$pos] & 0xff) < 128 && $bitmapsName[$t][$bytes[$pos] & 0xff]) $pos++;
-         |  }
-         |}
-         |${ev.value} = $ok && graft.functions.SimplePattern.endsAtInput($bytes, $pos, $nb);
-       """.stripMargin
-    })
+    val m = ctx.addReferenceObj("simplePattern", matcher)
+    nullSafeCodeGen(ctx, ev, s => s"${ev.value} = $m.matches($s);")
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =

@@ -12,9 +12,10 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * A rolling fingerprint is the classic cheap document identity for
   * dedup pipelines (reference point: content-defined chunking uses the
-  * same hash family). Implemented as a custom Catalyst expression with
-  * `doGenCode` — a tight byte loop over the UTF8String, no string copy,
-  * no UDF — so it stays inside whole-stage codegen at scan throughput.
+  * same hash family). The kernel is one Scala function,
+  * [[RollingHash.hash]] (a byte loop over the UTF8String, no string
+  * copy): `nullSafeEval` runs it and the generated code calls it, so the
+  * expression stays inside whole-stage codegen at scan throughput.
   * All arithmetic stays below 2^63 (h < 1e9+7, 31*h + 255 < 2^35), so
   * the value is reproducible in any engine with 64-bit integers.
   */
@@ -29,8 +30,17 @@ case class RollingHash(child: Expression) extends UnaryExpression {
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "rolling_hash"
 
-  override def nullSafeEval(input: Any): Any = {
-    val s = input.asInstanceOf[UTF8String]
+  override def nullSafeEval(input: Any): Any = RollingHash.hash(input.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, s => s"${ev.value} = graft.functions.RollingHash.hash($s);")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object RollingHash {
+  def hash(s: UTF8String): Long = {
     val n = s.numBytes()
     var h = 0L
     var i = 0
@@ -40,24 +50,6 @@ case class RollingHash(child: Expression) extends UnaryExpression {
     }
     h
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val h = ctx.freshName("h")
-      s"""
-         |int $n = $s.numBytes();
-         |long $h = 0L;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  $h = ($h * 31L + (((long) $s.getByte($i)) & 0xffL)) % 1000000007L;
-         |}
-         |${ev.value} = $h;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 object TextFunctions {

@@ -14,9 +14,10 @@ import org.apache.spark.sql.types._
   * Why a custom Expression (SURVEY.md §4 / design-brief preference
   * order): Spark's higher-order array functions (`zip_with` +
   * `aggregate`) express this but are CodegenFallback — every pair of
-  * vectors pays interpreted lambda dispatch per element. This expression
-  * generates a tight primitive loop via `doGenCode`, keeping the
-  * crossJoin scoring stage inside whole-stage codegen. Semantics are
+  * vectors pays interpreted lambda dispatch per element. This expression's
+  * kernel is one primitive loop, [[FloatVecDot.dot]], which `nullSafeEval`
+  * runs and the generated code calls, keeping the crossJoin scoring
+  * stage inside whole-stage codegen. Semantics are
   * identical to the HOF form (sequential left-to-right double
   * accumulation — bit-for-bit the same sums, pinned by tests), so the
   * DuckDB oracle for `ann_cosine_topk` is unaffected.
@@ -40,9 +41,18 @@ case class FloatVecDot(left: Expression, right: Expression)
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "float_vec_dot"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any, b: Any): Any =
+    FloatVecDot.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (x, y) => s"${ev.value} = graft.functions.FloatVecDot.dot($x, $y);")
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object FloatVecDot {
+  def dot(x: ArrayData, y: ArrayData): Double = {
     val n = math.min(x.numElements(), y.numElements())
     var acc = 0.0
     var i = 0
@@ -53,26 +63,6 @@ case class FloatVecDot(left: Expression, right: Expression)
     }
     acc
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val acc = ctx.freshName("acc")
-      s"""
-         |int $n = Math.min($x.numElements(), $y.numElements());
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$x.isNullAt($i) && !$y.isNullAt($i)) {
-         |    $acc += ((double) $x.getFloat($i)) * ((double) $y.getFloat($i));
-         |  }
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }
 
 /** max(|x_i|) over the non-null elements of an `array<float>`, null when
@@ -95,50 +85,42 @@ case class FloatVecMaxAbs(child: Expression) extends UnaryExpression {
   override def prettyName: String = "float_vec_max_abs"
 
   override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val n = x.numElements()
-    var best = 0.0f
-    var found = false
-    var i = 0
-    while (i < n) {
-      if (!x.isNullAt(i)) {
-        val v = Math.abs(x.getFloat(i))
-        if (!found || java.lang.Float.compare(v, best) > 0) { best = v; found = true }
-      }
-      i += 1
-    }
-    if (found) best else null
+    val m = FloatVecMaxAbs.maxAbs(a.asInstanceOf[ArrayData])
+    if (m < 0) null else m
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val best = ctx.freshName("best")
-      val found = ctx.freshName("found")
-      val v = ctx.freshName("v")
-      s"""
-         |int $n = $x.numElements();
-         |float $best = 0.0f;
-         |boolean $found = false;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$x.isNullAt($i)) {
-         |    float $v = Math.abs($x.getFloat($i));
-         |    if (!$found || java.lang.Float.compare($v, $best) > 0) { $best = $v; $found = true; }
-         |  }
-         |}
-         |if ($found) { ${ev.value} = $best; } else { ${ev.isNull} = true; }
-       """.stripMargin
-    })
+    nullSafeCodeGen(ctx, ev, x =>
+      s"${ev.value} = graft.functions.FloatVecMaxAbs.maxAbs($x); ${ev.isNull} = ${ev.value} < 0;")
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
 }
 
+object FloatVecMaxAbs {
+  /** max(|x_i|) over the non-null elements, or -1 when there are none
+    * (every |x_i| is >= 0 or NaN, and NaN compares above -1 too).
+    */
+  def maxAbs(x: ArrayData): Float = {
+    val n = x.numElements()
+    var best = -1.0f
+    var i = 0
+    while (i < n) {
+      if (!x.isNullAt(i)) {
+        val v = Math.abs(x.getFloat(i))
+        if (java.lang.Float.compare(v, best) > 0) best = v
+      }
+      i += 1
+    }
+    best
+  }
+}
+
 /** Codegen int8 quantization codes for an `array<float>` embedding:
   * `scale = maxAbs/127`, `q_i = clamp(round(x_i/scale), -127, 127)` as
-  * tinyint — one primitive loop pair (max scan + code emit) instead of
-  * four interpreted HOF passes. Exactly mirrors the HOF reference form
+  * tinyint — one primitive loop pair ([[FloatVecMaxAbs.maxAbs]], then
+  * the code emit in [[QuantizeInt8Codes.codes]]) instead of four
+  * interpreted HOF passes. Exactly mirrors the HOF reference form
   * ([[graft.pipeline.Ann.quantizeInt8Hof]], parity-pinned by spec):
   * null elements stay NULL in every branch (a missing dimension stays
   * missing); an absent, zero, or NON-FINITE maxAbs (empty/all-null/
@@ -168,21 +150,21 @@ case class QuantizeInt8Codes(child: Expression) extends UnaryExpression {
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "quantize_int8_codes"
 
-  override def nullSafeEval(a: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
+  override def nullSafeEval(a: Any): Any = QuantizeInt8Codes.codes(a.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, x => s"${ev.value} = graft.functions.QuantizeInt8Codes.codes($x);")
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object QuantizeInt8Codes {
+  def codes(x: ArrayData): ArrayData = {
     val n = x.numElements()
-    var best = 0.0f
-    var found = false
-    var j = 0
-    while (j < n) {
-      if (!x.isNullAt(j)) {
-        val v = Math.abs(x.getFloat(j))
-        if (!found || java.lang.Float.compare(v, best) > 0) { best = v; found = true }
-      }
-      j += 1
-    }
+    val best = FloatVecMaxAbs.maxAbs(x)
     val out = new Array[Any](n)
-    if (!found || best == 0.0f || !java.lang.Float.isFinite(best)) {
+    if (best <= 0.0f || !java.lang.Float.isFinite(best)) {
       // degenerate scale (empty/all-null/zero vector, or any non-finite
       // element poisoning maxAbs): all-zero codes, null elements STAY
       // null — a missing dimension must stay missing in every branch
@@ -202,50 +184,6 @@ case class QuantizeInt8Codes(child: Expression) extends UnaryExpression {
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, x => {
-      val n = ctx.freshName("n")
-      val i = ctx.freshName("i")
-      val best = ctx.freshName("best")
-      val found = ctx.freshName("found")
-      val v = ctx.freshName("v")
-      val out = ctx.freshName("out")
-      val scale = ctx.freshName("scale")
-      val r = ctx.freshName("r")
-      val m = ctx.freshName("m")
-      s"""
-         |int $n = $x.numElements();
-         |float $best = 0.0f;
-         |boolean $found = false;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if (!$x.isNullAt($i)) {
-         |    float $v = Math.abs($x.getFloat($i));
-         |    if (!$found || java.lang.Float.compare($v, $best) > 0) { $best = $v; $found = true; }
-         |  }
-         |}
-         |Object[] $out = new Object[$n];
-         |if (!$found || $best == 0.0f || !java.lang.Float.isFinite($best)) {
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if (!$x.isNullAt($i)) { $out[$i] = java.lang.Byte.valueOf((byte) 0); }
-         |  }
-         |} else {
-         |  float $scale = (float) (((double) $best) / 127.0d);
-         |  for (int $i = 0; $i < $n; $i++) {
-         |    if (!$x.isNullAt($i)) {
-         |      double $r = ((double) $x.getFloat($i)) / ((double) $scale);
-         |      double $m = Math.floor(Math.abs($r) + 0.5d);
-         |      if ($r < 0) { $m = -$m; }
-         |      $out[$i] = java.lang.Byte.valueOf((byte) Math.max(-127.0d, Math.min(127.0d, $m)));
-         |    }
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 object VectorFunctions {

@@ -77,6 +77,60 @@ class GraftExtensionsSpec extends AnyFlatSpec with Matchers {
     r(2).isNullAt(1) shouldBe true
   }
 
+  it should "give the same result from interpreted eval and generated code for every function" in {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    // NULL, empty, multibyte and 4-byte text, every raw line terminator
+    val strings = Seq(null, "", "c42", "c1\n", "c1\r\n", "x42", "a_b9", "é", "日本語c1",
+      "\uD834\uDD1E", "c9\uD83D\uDE00", "\n", "\r", "\r\n", "\u0085", "\u2028", "\u2029",
+      "a+b", "*dangling", "[")
+    val nan = Float.NaN
+    val inf = Float.PositiveInfinity
+    val arrays: Seq[Seq[Any]] = Seq(null, Seq(), Seq(0f, 0f, 0f), Seq(null, 1.5f), Seq(null, null),
+      Seq(nan, 1f), Seq(inf, -2f), Seq(-inf, 0.25f), Seq(-0f, 3f, -7.75f), Seq(1e-30f, -1e30f, 127f))
+    val schema = StructType(Seq(StructField("id", IntegerType), StructField("s", StringType),
+      StructField("v", ArrayType(FloatType)), StructField("w", ArrayType(FloatType))))
+    val rows = for (i <- strings.indices; j <- arrays.indices)
+      yield Row(i * arrays.size + j, strings(i), arrays(j), arrays((j + 3) % arrays.size))
+    // localCheckpoint: a literal table would fold each call into a
+    // LocalRelation, and the inputs would be constants
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema).localCheckpoint()
+      .createOrReplaceTempView("kernel_inputs")
+    val calls = Map(
+      "rolling_hash" -> "rolling_hash(s)",
+      "float_vec_dot" -> "float_vec_dot(v, w)",
+      "simple_pattern" -> "simple_pattern(s, '^c[0-9]+$'), simple_pattern(s, '^[a-z][a-z0-9_]*$')",
+      "regex_compiles" -> "regex_compiles(s)",
+      "json_render" -> "json_render(named_struct('s', s, 'v', v))",
+      "float_vec_max_abs" -> "float_vec_max_abs(v)",
+      "quantize_int8" -> "quantize_int8(v)")
+    calls.keySet shouldBe GraftExtensions.registrations.map(_._1.funcName).toSet
+    def run(call: String, wholeStage: String, factoryMode: String): (String, Seq[String]) = {
+      val prev = spark.conf.get("spark.sql.codegen.wholeStage", "true")
+      val prevFactory = spark.conf.get("spark.sql.codegen.factoryMode", "FALLBACK")
+      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      spark.conf.set("spark.sql.codegen.factoryMode", factoryMode)
+      try {
+        val df = spark.sql(s"SELECT id, $call FROM kernel_inputs")
+        // Row.toString renders NaN as NaN, so NaN results compare equal
+        (df.queryExecution.executedPlan.toString, df.collect().sortBy(_.getInt(0)).map(_.toString).toSeq)
+      } finally {
+        spark.conf.set("spark.sql.codegen.wholeStage", prev)
+        spark.conf.set("spark.sql.codegen.factoryMode", prevFactory)
+      }
+    }
+    calls.foreach { case (name, call) =>
+      withClue(s"$name: ") {
+        val (interpretedPlan, interpreted) = run(call, "false", "NO_CODEGEN")
+        val (generatedPlan, generated) = run(call, "true", "CODEGEN_ONLY")
+        interpretedPlan should not include "*("
+        generatedPlan should include("*(")
+        generated.size shouldBe rows.size
+        generated.zip(interpreted).filter { case (g, i) => g != i } shouldBe empty
+      }
+    }
+  }
+
   it should "apply the same registrations through the extensions class" in {
     // the config route (spark.sql.extensions) drives this same instance;
     // verify the injector enumerates every registration without error
