@@ -26,6 +26,11 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *  - `json_render(value)`           -> string  ([[graft.functions.JsonRender]])
   *  - `float_vec_max_abs(a)`         -> float   ([[graft.functions.FloatVecMaxAbs]])
   *  - `quantize_int8(a)`             -> array<tinyint> ([[graft.functions.QuantizeInt8Codes]])
+  *  - `word_grams(tokens, n)`        -> array<string> ([[graft.functions.WordGrams]])
+  *  - `minhash_signature(tokens, n, k)` -> array<bigint> ([[graft.functions.MinHashSignature]])
+  *    (`n` and `k` must be integer literals, as `simple_pattern`'s
+  *    pattern must be; the tokens are usually `split(trim(lower(text)), '\\s+')`,
+  *    the dedup tokenization)
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
@@ -45,6 +50,12 @@ object GraftExtensions {
     (new FunctionIdentifier(name),
       new ExpressionInfo("graft", name, usage),
       builder)
+  }
+
+  private def intLiteral(name: String, arg: String, e: Expression): Int = e match {
+    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
+    case other => throw new IllegalArgumentException(
+      s"$name requires a literal integer $arg, got $other")
   }
 
   private[graft] val registrations = Seq(
@@ -70,7 +81,12 @@ object GraftExtensions {
     one("float_vec_max_abs", "float_vec_max_abs(a) - max |x_i| over a float array's non-null elements (null if none)", 1,
       args => graft.functions.FloatVecMaxAbs(args.head)),
     one("quantize_int8", "quantize_int8(a) - symmetric int8 codes (scale = max_abs/127); pair with float_vec_max_abs for the scale", 1,
-      args => graft.functions.QuantizeInt8Codes(args.head)))
+      args => graft.functions.QuantizeInt8Codes(args.head)),
+    one("word_grams", "word_grams(tokens, n) - the space-joined runs of n consecutive tokens (the whole array joined if shorter than n)", 2,
+      args => graft.functions.WordGrams(args(0), intLiteral("word_grams", "n", args(1)))),
+    one("minhash_signature", "minhash_signature(tokens, n, k) - k MinHash slots: slot s is min(xxhash64(gram, s)) over word_grams(tokens, n)", 3,
+      args => graft.functions.MinHashSignature(args(0),
+        intLiteral("minhash_signature", "n", args(1)), intLiteral("minhash_signature", "k", args(2)))))
 
   /** Register into an already-running session (extensions configs only
     * apply at session construction).

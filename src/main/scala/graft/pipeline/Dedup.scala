@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.TextFunctions
 
 /** Deduplication operators for a training-data pipeline, each scaling by
   * a different mechanism:
@@ -10,14 +11,12 @@ import org.apache.spark.sql.functions._
   *    combine bounds hot-hash skew.
   *  - MinHash+LSH: shingle -> k minhashes -> b bands; only rows sharing
   *    a band bucket become candidate pairs (candidates << n^2), then
-  *    exact Jaccard verifies. Signatures are computed on the CODEGEN
-  *    path — explode(shingles) + hash-aggregate of k min(xxhash64) —
-  *    because Spark's higher-order array functions are CodegenFallback
-  *    (interpreted): the exploded form measured ~20x faster. The
-  *    aggregation partial-combines map-side, so the shuffle carries one
-  *    k-wide row per document, not one row per shingle.
-  *  - SimHash: 64-bit fingerprint via token-hash bit voting — same
-  *    explode + wide codegen'd conditional-sum aggregation.
+  *    exact Jaccard verifies. Shingles and signatures are codegen
+  *    kernels ([[graft.functions.WordGrams]],
+  *    [[graft.functions.MinHashSignature]]): one pass per document, no
+  *    explode and no shuffle before the band join.
+  *  - SimHash: 64-bit fingerprint via token-hash bit voting — explode
+  *    + wide codegen'd conditional-sum aggregation.
   *  - n-gram Jaccard: exact verification metric for candidate pairs.
   */
 object Dedup {
@@ -36,39 +35,34 @@ object Dedup {
     df.groupBy(md5(col(textCol)).as("content_hash"))
       .agg(min(col(idCol)).as("keep_id"))
 
-  /** Word n-gram shingles as an array column, for arbitrary n >= 1.
-    * O(tokens) per document: the token array is zipped with its own
-    * i-shifted slices, one zip per extra gram position (the naive
-    * transform+slice form is O(tokens^2) per document and interpreted).
-    * zip_with pads the shorter (shifted) side with nulls, which mark the
-    * incomplete tail grams; the final filter drops them. Documents with
-    * fewer than n tokens yield their whole text as the single shingle
-    * (so short docs still participate in Jaccard instead of vanishing).
+  /** The dedup tokenization: lowercased, space-trimmed, split on
+    * whitespace runs (Spark's own `split`, so a leading tab or newline
+    * yields an empty first token).
     */
-  def shingles(textCol: Column, n: Int = 3): Column = {
-    require(n >= 1, s"shingle size must be >= 1, got $n")
-    val toks = split(trim(lower(textCol)), "\\s+")
-    val grams = (1 until n).foldLeft(toks) { (acc, i) =>
-      val shifted = slice(toks, lit(i + 1), greatest(size(toks) - i, lit(0)))
-      zip_with(acc, shifted, (a, b) =>
-        when(a.isNull || b.isNull, lit(null)).otherwise(concat(a, lit(" "), b)))
-    }
-    when(size(toks) < n, array(concat_ws(" ", toks)))
-      .otherwise(filter(grams, g => g.isNotNull))
-  }
+  private def tokens(textCol: Column): Column = split(trim(lower(textCol)), "\\s+")
 
-  /** k MinHash signatures as one row per id with columns m0..m(k-1):
-    * explode shingles, then k codegen'd min(xxhash64(shingle, seed))
-    * aggregations (seeds are baked literals — deterministic across runs
-    * and cluster sizes).
+  /** Word n-gram shingles as an array column, for arbitrary n >= 1: the
+    * codegen [[graft.functions.WordGrams]] kernel over [[tokens]], one
+    * O(tokens) pass per document. Documents with fewer than n tokens
+    * yield their whole (normalized) text as the single shingle, so short
+    * docs still participate in Jaccard instead of vanishing.
+    */
+  def shingles(textCol: Column, n: Int = 3): Column = TextFunctions.wordGrams(tokens(textCol), n)
+
+  /** k MinHash signatures as columns m0..m(k-1), one row `(id, m0..)`
+    * per input row with non-null text: a map-only projection of the
+    * codegen [[graft.functions.MinHashSignature]] kernel, whose slot `s`
+    * is `min(xxhash64(shingle, s))` over the row's [[shingles]] (seeds
+    * are baked literals — deterministic across runs and cluster sizes).
+    * Ids are taken as keys, as every caller passes them: rows sharing an
+    * id are not merged.
     */
   def minhashSigTable(df: DataFrame, textCol: String, idCol: String, k: Int,
                       shingleN: Int = 3): DataFrame =
-    df.select(col(idCol).as("id"), explode(shingles(col(textCol), shingleN)).as("s"))
-      .groupBy("id")
-      .agg(
-        min(xxhash64(col("s"), lit(0))).as("m0"),
-        (1 until k).map(seed => min(xxhash64(col("s"), lit(seed))).as(s"m$seed")): _*)
+    df.filter(col(textCol).isNotNull)
+      .select(col(idCol).as("id"),
+        TextFunctions.minhashSignature(tokens(col(textCol)), shingleN, k).as("sig"))
+      .select(col("id") +: (0 until k).map(i => col("sig")(i).as(s"m$i")): _*)
 
   /** Guard against quadratic blowup in a band self-join: a bucket of n
     * rows yields n^2/2 candidate pairs, and a corpus with thousands of
@@ -114,11 +108,10 @@ object Dedup {
     // longs, ~200 B/doc — guide §8 "decide with small rows"), and three
     // downstream subtrees consume it (bucket counts, both self-join
     // sides) whose exchanges differ in projection, so exchange reuse
-    // cannot deduplicate them: left lazy, the tokenize+shingle+explode+
-    // k-min-agg pass ran ~3x per call (listener-measured as the
-    // dominant stage cost at sf0.1). Materialize it once; like the
-    // connected-components result checkpoint, it stays persisted
-    // because the returned pairs read it.
+    // cannot deduplicate them: left lazy, the scan and signature pass
+    // ran 3x per call. Materialize it once; like the connected-components
+    // result checkpoint, it stays persisted because the returned pairs
+    // read it.
     val sig = minhashSigTable(df, textCol, idCol, k, shingleN)
       .localCheckpoint(eager = false) // first consumer materializes it
 
@@ -137,25 +130,16 @@ object Dedup {
       .select("id_a", "id_b").distinct()
 
     // exact-Jaccard verification, computed only for surviving candidates.
-    // The distinct shingle set is materialized ONCE PER DOC in the
-    // projection BELOW the join (guide §2.3: project before the
-    // exchange): the shingle builder rides interpreted higher-order
-    // functions, and inlining it into the pair-level jaccard expression
-    // re-evaluated it up to 3x per pair side (each appearance in the
-    // intersect/union/guard subtrees is a separate interpreted eval —
-    // measured ~2s of minhash_pairs' 3.2s at sf0.1). After the join the
-    // arrays are plain attributes, so the per-pair work is one
-    // array_intersect plus two size() reads.
-    // ONE shingle table feeds BOTH join sides (lazy checkpoint — the
-    // verify join's first side materializes it inline, the second side
-    // reads the cached blocks): the interpreted tokenize+shingle pass
-    // drops from 2x to 1x here (3x to 2x per call incl. the signature
-    // build). Independent of the sig checkpoint — no lazy-on-lazy chain.
-    val shing = df.select(col(idCol).as("id"),
-      array_distinct(shingles(col(textCol), shingleN)).as("sh"))
-      .localCheckpoint(eager = false)
-    val docsA = shing.select(col("id").as("id_a"), col("sh").as("sh_a"))
-    val docsB = shing.select(col("id").as("id_b"), col("sh").as("sh_b"))
+    // Each join side projects the distinct shingle set once per doc
+    // BELOW the join (guide §2.3: project before the exchange), in the
+    // same codegen stage as its scan; after the join the arrays are
+    // plain attributes, so the per-pair work is one array_intersect plus
+    // two size() reads. Nothing is cached: each side's shingle pass is
+    // one kernel call per doc, cheaper than holding corpus-sized arrays
+    // in the block manager.
+    val sh = array_distinct(shingles(col(textCol), shingleN))
+    val docsA = df.select(col(idCol).as("id_a"), sh.as("sh_a"))
+    val docsB = df.select(col(idCol).as("id_b"), sh.as("sh_b"))
     candidates.join(docsA, "id_a").join(docsB, "id_b")
       .withColumn("jaccard", jaccardDistinct(col("sh_a"), col("sh_b")))
       .filter(col("jaccard") >= threshold)
@@ -425,11 +409,10 @@ object Dedup {
     df.join(losers, Seq(idCol), "left_anti")
   }
 
-  /** Exact n-gram Jaccard similarity of two shingle arrays. (Expression
-    * evaluation has no common-subexpression elimination on the
-    * interpreted HOF path, so every textual appearance of `a`/`b` here
-    * is a real re-eval — pass cheap inputs, or precompute the distinct
-    * arrays and use [[jaccardDistinct]] as the LSH verify stage does.)
+  /** Exact n-gram Jaccard similarity of two shingle arrays. (`a` and
+    * `b` each appear twice below; pass cheap inputs, or precompute the
+    * distinct arrays and use [[jaccardDistinct]] as the LSH verify stage
+    * does.)
     */
   def jaccard(a: Column, b: Column): Column = {
     val inter = size(array_intersect(array_distinct(a), array_distinct(b))).cast("double")
@@ -439,7 +422,7 @@ object Dedup {
 
   /** [[jaccard]] over inputs that are ALREADY distinct arrays (attribute
     * references after a join — each appearance is then a free read, not
-    * an interpreted re-computation). `|A ∪ B|` by inclusion-exclusion:
+    * a re-computation). `|A ∪ B|` by inclusion-exclusion:
     * the same integer `array_union` would produce, without building the
     * union array.
     */
@@ -450,7 +433,7 @@ object Dedup {
   }
 
   private def tokenRows(df: DataFrame, textCol: String, idCol: String): DataFrame =
-    df.select(col(idCol).as("id"), explode(split(trim(lower(col(textCol))), "\\s+")).as("t"))
+    df.select(col(idCol).as("id"), explode(tokens(col(textCol))).as("t"))
 
   /** Shared vote-and-assemble stage: 64 conditional-sum vote
     * aggregations over per-token bit expressions, assembled into one

@@ -215,19 +215,17 @@ object TextOps {
     * counting primitive of BPE/WordPiece-style tokenizer training
     * (rank merge candidates by corpus pair frequency) and of
     * collocation statistics. Pairs are built per row in O(tokens) with
-    * one zip_with against the 1-shifted token array (same technique as
-    * [[Dedup.shingles]]), then ONE explode + count aggregation with
-    * map-side partial combine; the top-N is TakeOrdered over
-    * (n desc, pair asc) — deterministic ties, no global sort
-    * materialized. Scales like vocabulary(): shuffle bounded by
+    * one zip_with against the 1-shifted token array, then ONE explode +
+    * count aggregation with map-side partial combine; the top-N is
+    * TakeOrdered over (n desc, pair asc) — deterministic ties, no
+    * global sort materialized. Scales like vocabulary(): shuffle bounded by
     * #distinct pairs, not #tokens.
     */
   /** Adjacent-token pairs of a token array in O(tokens): one zip_with
-    * against the 1-shifted array (same technique as [[Dedup.shingles]]),
-    * null-padded tail and null elements filtered out. `combine` builds
-    * the pair representation (a concat for counting, a struct for
-    * joins) — the shared pair rule for [[tokenPairCounts]],
-    * [[pmiCollocations]] and [[bigramLogProb]].
+    * against the 1-shifted array, null-padded tail and null elements
+    * filtered out. `combine` builds the pair representation (a concat
+    * for counting, a struct for joins) — the shared pair rule for
+    * [[tokenPairCounts]], [[pmiCollocations]] and [[bigramLogProb]].
     */
   private def adjacentPairs(toks: Column)(combine: (Column, Column) => Column): Column =
     filter(
@@ -776,7 +774,7 @@ object TextOps {
     * groupBy(doc) with an in-group sort by line position (array_sort of
     * (pos, line) structs — never an unpartitioned window). The per-row
     * transform extracting lines from structs is an interpreted HOF,
-    * once per document — the same accepted trade as Dedup.shingles.
+    * once per document.
     */
   def removeBoilerplate(docs: DataFrame, minDocs: Long, textCol: String = "text",
                         idCol: String = "doc_id"): DataFrame = {
@@ -795,8 +793,7 @@ object TextOps {
     * documents whose every piece was removed keep their row with empty
     * text (auditable removal; downstream length filters decide their
     * fate explicitly). The per-row transform extracting pieces from
-    * structs is an interpreted HOF, once per document — the same
-    * accepted trade as Dedup.shingles.
+    * structs is an interpreted HOF, once per document.
     */
   private[pipeline] def reassembleInOrder(docs: DataFrame, kept: DataFrame,
                                           pieceCol: String, sep: String,

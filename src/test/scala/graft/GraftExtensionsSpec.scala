@@ -77,6 +77,29 @@ class GraftExtensionsSpec extends AnyFlatSpec with Matchers {
     r(2).isNullAt(1) shouldBe true
   }
 
+  it should "expose word_grams and minhash_signature to spark.sql (literal n and k only)" in {
+    val r = spark.sql(
+      """SELECT word_grams(t, 2), word_grams(t, 4), minhash_signature(t, 2, 3)
+        |FROM VALUES (array('a', 'b', 'c')), (array('x')), (CAST(NULL AS ARRAY<STRING>)) AS v(t)""".stripMargin)
+      .collect()
+    r(0).getSeq[String](0) shouldBe Seq("a b", "b c")
+    r(0).getSeq[String](1) shouldBe Seq("a b c") // fewer tokens than n: one gram
+    r(1).getSeq[String](0) shouldBe Seq("x")
+    // slot s is min over the grams of Spark's xxhash64(gram, s)
+    val expect = spark.sql(
+      "SELECT array(min(xxhash64(g, 0)), min(xxhash64(g, 1)), min(xxhash64(g, 2))) FROM VALUES ('a b'), ('b c') AS v(g)")
+      .collect().head.getSeq[Long](0)
+    r(0).getSeq[Long](2) shouldBe expect
+    (0 until 3).foreach(i => r(2).isNullAt(i) shouldBe true)
+    val e1 = intercept[Exception](spark.sql("SELECT word_grams(array('a'), 1 + length('x'))").collect())
+    e1.getMessage should include("literal")
+    val e2 = intercept[Exception](
+      spark.sql("SELECT minhash_signature(array('a'), 2, CAST(length('x') AS INT))").collect())
+    e2.getMessage should include("literal")
+    val e3 = intercept[Exception](spark.sql("SELECT word_grams(array('a'), 0)").collect())
+    e3.getMessage should include(">= 1")
+  }
+
   it should "give the same result from interpreted eval and generated code for every function" in {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
@@ -84,6 +107,8 @@ class GraftExtensionsSpec extends AnyFlatSpec with Matchers {
     val strings = Seq(null, "", "c42", "c1\n", "c1\r\n", "x42", "a_b9", "é", "日本語c1",
       "\uD834\uDD1E", "c9\uD83D\uDE00", "\n", "\r", "\r\n", "\u0085", "\u2028", "\u2029",
       "a+b", "*dangling", "[")
+    // the dedup tokenization (SQL text: '\\s+' is the regex \s+)
+    val tokens = "split(trim(lower(s)), '\\\\s+')"
     val nan = Float.NaN
     val inf = Float.PositiveInfinity
     val arrays: Seq[Seq[Any]] = Seq(null, Seq(), Seq(0f, 0f, 0f), Seq(null, 1.5f), Seq(null, null),
@@ -103,7 +128,9 @@ class GraftExtensionsSpec extends AnyFlatSpec with Matchers {
       "regex_compiles" -> "regex_compiles(s)",
       "json_render" -> "json_render(named_struct('s', s, 'v', v))",
       "float_vec_max_abs" -> "float_vec_max_abs(v)",
-      "quantize_int8" -> "quantize_int8(v)")
+      "quantize_int8" -> "quantize_int8(v)",
+      "word_grams" -> s"word_grams($tokens, 1), word_grams($tokens, 2), word_grams($tokens, 5)",
+      "minhash_signature" -> s"minhash_signature($tokens, 1, 1), minhash_signature($tokens, 3, 24)")
     calls.keySet shouldBe GraftExtensions.registrations.map(_._1.funcName).toSet
     def run(call: String, wholeStage: String, factoryMode: String): (String, Seq[String]) = {
       val prev = spark.conf.get("spark.sql.codegen.wholeStage", "true")

@@ -317,4 +317,24 @@ class PlanSpec extends AnyFlatSpec with Matchers {
       plan should include("partial_count")                                // map-side combine before the pair shuffle
     }
   }
+
+  "the LSH signature pass" should "be one map-only projection: no Generate, Exchange or HashAggregate" in {
+    val pool = graft.gates.Inputs.dedupPool(spark, sfDir)
+    val sig = graft.pipeline.Dedup.minhashSigTable(pool, "text", "doc_id", 24)
+    val nodes = sig.queryExecution.sparkPlan.collect { case p => p.nodeName }
+    withClue(s"nodes: ${nodes.distinct}: ") {
+      nodes.filter(n => n.contains("Generate") || n.contains("Exchange") || n.contains("HashAggregate")) shouldBe empty
+    }
+    shuffleCount(sig) shouldBe 0
+  }
+
+  it should "leave no CodegenFallback in the minhash_pairs, ngram_jaccard and text_repetition plans" in {
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
+    for (q <- Seq("minhash_pairs", "ngram_jaccard", "text_repetition")) {
+      // sparkPlan, not executedPlan: see the v_arrays case above
+      val fallbacks = graft.SparkEntry.queries(q)(spark, sfDir).queryExecution.sparkPlan
+        .flatMap(_.expressions).flatMap(_.collect { case e: CodegenFallback => e })
+      withClue(s"$q fallbacks: ${fallbacks.map(_.prettyName).distinct}: ")(fallbacks shouldBe empty)
+    }
+  }
 }

@@ -248,6 +248,73 @@ class PipelineSpec extends AnyFlatSpec with Matchers {
     exactPlanted.diff(pairs) shouldBe empty
   }
 
+  /** The column formulation `Dedup.shingles` had before the word-gram
+    * kernel, kept verbatim as the reference it must equal (`size` is
+    * Spark's, named through `F`: the matchers' `size` shadows it here).
+    */
+  private def refShingles(textCol: org.apache.spark.sql.Column, n: Int = 3): org.apache.spark.sql.Column = {
+    val F = org.apache.spark.sql.functions
+    require(n >= 1, s"shingle size must be >= 1, got $n")
+    val toks = split(trim(lower(textCol)), "\\s+")
+    val grams = (1 until n).foldLeft(toks) { (acc, i) =>
+      val shifted = slice(toks, lit(i + 1), greatest(F.size(toks) - i, lit(0)))
+      zip_with(acc, shifted, (a, b) =>
+        when(a.isNull || b.isNull, lit(null)).otherwise(concat(a, lit(" "), b)))
+    }
+    when(F.size(toks) < n, array(concat_ws(" ", toks)))
+      .otherwise(filter(grams, g => g.isNotNull))
+  }
+
+  /** The explode + k-way `min(xxhash64)` aggregation `Dedup.minhashSigTable`
+    * had before the signature kernel, kept verbatim as the reference.
+    */
+  private def refSigTable(df: org.apache.spark.sql.DataFrame, textCol: String, idCol: String, k: Int,
+                          shingleN: Int = 3): org.apache.spark.sql.DataFrame =
+    df.select(col(idCol).as("id"), explode(refShingles(col(textCol), shingleN)).as("s"))
+      .groupBy("id")
+      .agg(
+        min(xxhash64(col("s"), lit(0))).as("m0"),
+        (1 until k).map(seed => min(xxhash64(col("s"), lit(seed))).as(s"m$seed")): _*)
+
+  /** The dedup pool plus edge texts: NULL, empty, a leading tab, CR/LF,
+    * U+0085 and U+2028 (not whitespace to `\s`), 4-byte characters, and
+    * letters whose case mapping changes their length or is titlecase.
+    * Read through `localCheckpoint` so the kernels run in generated code.
+    */
+  private def kernelInputs = {
+    import spark.implicits._
+    val edges = Seq[(Long, String)](
+      (-1L, null), (-2L, ""), (-3L, "\tleading tab then words"), (-4L, "cr\rand\r\nlf\nlines here"),
+      (-5L, "next\u0085line and\u2028separator"), (-6L, "\uD834\uDD1E clef \uD83D\uDE00 smile \uD834\uDD1E"),
+      (-7L, "\u0130stanbul \u01C5 stra\u00DFe \u0130 \u01C5 \u00DF"), (-8L, "   "), (-9L, "one"),
+      (-10L, " \t\n "), (-11L, "A b A b A b A b"))
+      .toDF("doc_id", "text")
+    graft.gates.Inputs.dedupPool(spark, sfDir).unionByName(edges).localCheckpoint()
+  }
+
+  private def sameRows(got: org.apache.spark.sql.DataFrame, ref: org.apache.spark.sql.DataFrame): Unit = {
+    got.exceptAll(ref).count() shouldBe 0
+    ref.exceptAll(got).count() shouldBe 0
+  }
+
+  "Dedup.shingles and Dedup.minhashSigTable" should "equal the zip_with shingles they replace, on the pool and edge texts" in {
+    val in = kernelInputs
+    try for (n <- Seq(1, 2, 3, 5)) withClue(s"n=$n: ") {
+      val got = in.select(col("doc_id"), Dedup.shingles(col("text"), n).as("sh"))
+      got.queryExecution.executedPlan.toString should include("*(")
+      sameRows(got, in.select(col("doc_id"), refShingles(col("text"), n).as("sh")))
+    } finally org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(in)
+  }
+
+  it should "equal the explode + min(xxhash64) signature table they replace" in {
+    val in = kernelInputs
+    try for (n <- Seq(1, 2, 3, 5); k <- Seq(1, 24)) withClue(s"n=$n k=$k: ") {
+      val got = Dedup.minhashSigTable(in, "text", "doc_id", k, n)
+      got.columns.toSeq shouldBe "id" +: (0 until k).map(i => s"m$i")
+      sameRows(got, refSigTable(in, "text", "doc_id", k, n))
+    } finally org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(in)
+  }
+
   "Dedup.simhashPairs" should "find exact duplicates at hamming 0 and respect the bound" in {
     val pool = graft.gates.Inputs.dedupPool(spark, sfDir)
     val pairs = Dedup.simhashPairs(pool, maxHamming = 3).collect()
