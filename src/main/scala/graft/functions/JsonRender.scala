@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, MapData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -23,9 +23,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * .supports]] (timestamps, decimals, binary, non-string map keys)
   * keep using `to_json` — the compiler chooses per column type.
   *
-  * The generated code is type-directed: the DataType tree is static at
-  * codegen time, so each nesting level emits one helper method (no
-  * runtime type dispatch, no Jackson, one shared StringBuilder).
+  * The renderer is one Scala function, [[JsonRender.render]], walking
+  * the value along its DataType: `nullSafeEval` runs it and the
+  * generated code calls it, with the DataType passed by reference, so
+  * the interpreted and generated paths cannot drift apart.
   */
 case class JsonRender(child: Expression) extends UnaryExpression {
 
@@ -38,23 +39,12 @@ case class JsonRender(child: Expression) extends UnaryExpression {
   override def nullIntolerant: Boolean = true
   override def prettyName: String = "json_render"
 
-  override def nullSafeEval(input: Any): Any = {
-    val sb = new java.lang.StringBuilder(64)
-    JsonRender.renderValue(sb, input, child.dataType)
-    UTF8String.fromString(sb.toString)
-  }
+  override def nullSafeEval(input: Any): Any = JsonRender.render(input, child.dataType)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, v => {
-      val sb = ctx.freshName("sb")
-      val render = JsonRender.genRender(ctx, child.dataType,
-        scala.collection.mutable.Map.empty)
-      s"""
-         |java.lang.StringBuilder $sb = new java.lang.StringBuilder(64);
-         |$render($sb, $v);
-         |${ev.value} = UTF8String.fromString($sb.toString());
-       """.stripMargin
-    })
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val dt = ctx.addReferenceObj("dataType", child.dataType, classOf[DataType].getName)
+    nullSafeCodeGen(ctx, ev, v => s"${ev.value} = graft.functions.JsonRender.render($v, $dt);")
+  }
 
   override protected def withNewChildInternal(newChild: Expression): Expression =
     copy(child = newChild)
@@ -72,9 +62,14 @@ object JsonRender {
     case _ => false
   }
 
-  // ---------------- interpreted path ----------------
+  /** The JSON text of a non-null value of type `dt`. */
+  def render(v: Any, dt: DataType): UTF8String = {
+    val sb = new java.lang.StringBuilder(64)
+    renderValue(sb, v, dt)
+    UTF8String.fromString(sb.toString)
+  }
 
-  private[functions] def renderValue(sb: java.lang.StringBuilder, v: Any, dt: DataType): Unit =
+  private def renderValue(sb: java.lang.StringBuilder, v: Any, dt: DataType): Unit =
     dt match {
       case StringType => appendEscaped(sb, v.asInstanceOf[UTF8String])
       case BooleanType | ByteType | ShortType | IntegerType | LongType =>
@@ -168,82 +163,5 @@ object JsonRender {
       i += 1
     }
     sb.append('"'); ()
-  }
-
-  // ---------------- codegen path ----------------
-
-  /** Emit a helper method rendering one value of `dt` into the shared
-    * StringBuilder; returns its name. `memo` dedups per type WITHIN one
-    * expression instance (a wide struct of N same-typed fields gets one
-    * helper, not N — keeps generated code clear of Janino size limits).
-    */
-  private[functions] def genRender(ctx: CodegenContext, dt: DataType,
-      memo: scala.collection.mutable.Map[DataType, String]): String = memo.get(dt) match {
-    case Some(existing) => existing
-    case None => genRenderUncached(ctx, dt, memo)
-  }
-
-  // explicit get-then-put (NOT getOrElseUpdate): the body recursively
-  // inserts child types into the same map, and mutable.HashMap's
-  // getOrElseUpdate is not reentrancy-safe under resize
-  private def genRenderUncached(ctx: CodegenContext, dt: DataType,
-      memo: scala.collection.mutable.Map[DataType, String]): String = {
-    val jt = CodeGenerator.javaType(dt)
-    val body = dt match {
-      case StringType =>
-        "graft.functions.JsonRender.appendEscaped(sb, v);"
-      case BooleanType | ByteType | ShortType | IntegerType | LongType =>
-        "sb.append(v);"
-      case FloatType => "graft.functions.JsonRender.appendFloat(sb, v);"
-      case DoubleType => "graft.functions.JsonRender.appendDouble(sb, v);"
-      case ArrayType(et, _) =>
-        val elemFn = genRender(ctx, et, memo)
-        s"""sb.append('[');
-           |for (int i = 0; i < v.numElements(); i++) {
-           |  if (i > 0) sb.append(',');
-           |  if (v.isNullAt(i)) sb.append("null");
-           |  else $elemFn(sb, ${CodeGenerator.getValue("v", et, "i")});
-           |}
-           |sb.append(']');""".stripMargin
-      case MapType(StringType, vt, _) =>
-        val valFn = genRender(ctx, vt, memo)
-        s"""sb.append('{');
-           |org.apache.spark.sql.catalyst.util.ArrayData ks = v.keyArray();
-           |org.apache.spark.sql.catalyst.util.ArrayData vs = v.valueArray();
-           |for (int i = 0; i < v.numElements(); i++) {
-           |  if (i > 0) sb.append(',');
-           |  graft.functions.JsonRender.appendEscaped(sb, ks.getUTF8String(i));
-           |  sb.append(':');
-           |  if (vs.isNullAt(i)) sb.append("null");
-           |  else $valFn(sb, ${CodeGenerator.getValue("vs", vt, "i")});
-           |}
-           |sb.append('}');""".stripMargin
-      case st: StructType =>
-        val fields = st.fields.zipWithIndex.map { case (f, i) =>
-          val fn = genRender(ctx, f.dataType, memo)
-          // field name escaped once at codegen time (it is static)
-          val nameSb = new java.lang.StringBuilder
-          appendEscaped(nameSb, UTF8String.fromString(f.name))
-          val quoted = nameSb.toString.replace("\\", "\\\\").replace("\"", "\\\"")
-          s"""if (!v.isNullAt($i)) {
-             |  if (!first) sb.append(',');
-             |  first = false;
-             |  sb.append("$quoted").append(':');
-             |  $fn(sb, ${CodeGenerator.getValue("v", f.dataType, i.toString)});
-             |}""".stripMargin
-        }.mkString("\n")
-        s"""sb.append('{');
-           |boolean first = true;
-           |$fields
-           |sb.append('}');""".stripMargin
-      case other => throw new IllegalStateException(s"unsupported: $other")
-    }
-    val fn = ctx.freshName("jsonRender")
-    val added = ctx.addNewFunction(fn,
-      s"""private void $fn(java.lang.StringBuilder sb, $jt v) {
-         |  $body
-         |}""".stripMargin)
-    memo(dt) = added
-    added
   }
 }

@@ -121,7 +121,7 @@ object FloatVecMaxAbs {
   * tinyint — one primitive loop pair ([[FloatVecMaxAbs.maxAbs]], then
   * the code emit in [[QuantizeInt8Codes.codes]]) instead of four
   * interpreted HOF passes. Exactly mirrors the HOF reference form
-  * ([[graft.pipeline.Ann.quantizeInt8Hof]], parity-pinned by spec):
+  * (kept in `PipelineSpec`, which pins the parity):
   * null elements stay NULL in every branch (a missing dimension stays
   * missing); an absent, zero, or NON-FINITE maxAbs (empty/all-null/
   * zero vector, or any NaN/Inf element poisoning the max) degenerates

@@ -7,7 +7,7 @@ import graft.functions.TopK.topK
 /** Approximate-nearest-neighbor search over an embedding column
   * (`array<float>`).
   *
-  *  - [[cosine]] / [[l2Norm]]: double-precision arithmetic via the custom
+  *  - [[dot]] / [[l2Norm]]: double-precision arithmetic via the custom
   *    codegen'd kernel (no UDF, no interpreted HOF on the hot path).
   *  - [[bruteForceTopK]]: the exactness baseline — broadcast the (small)
   *    query set, crossJoin against candidates (narrow, no shuffle of the
@@ -27,21 +27,13 @@ object Ann {
   /** Sequential double-precision dot product of two float arrays —
     * the custom codegen'd kernel ([[graft.functions.FloatVecDot]]);
     * Spark's HOF form is CodegenFallback and pays interpreted lambda
-    * dispatch per element per pair. [[dotHof]] keeps the HOF form for
-    * equivalence tests.
+    * dispatch per element per pair. `VectorExpressionsSpec` keeps the
+    * HOF form as the reference the kernel must equal bit for bit.
     */
   def dot(a: Column, b: Column): Column =
     graft.functions.VectorFunctions.floatVecDot(a, b)
 
-  /** HOF reference implementation (same sequential double accumulation). */
-  def dotHof(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-
   def l2Norm(a: Column): Column = sqrt(dot(a, a))
-
-  def cosine(a: Column, b: Column): Column =
-    try_divide(dot(a, b), l2Norm(a) * l2Norm(b))
 
   /** The bounded-heap aggregator carries ids as long; reject id columns
     * that a long cast would silently null/corrupt (plan-time error
@@ -106,8 +98,8 @@ object Ann {
     * [[graft.functions.QuantizeInt8Codes]], the FloatVecDot pattern) —
     * measured 46.9x faster than the interpreted-HOF formulation this
     * replaced (BENCH.md round-5 A/B: 12.35 s -> 0.26 s, 2M x 64-dim).
-    * The HOF form survives as [[quantizeInt8Hof]], the executable
-    * reference semantics the parity spec pins the kernel against
+    * The HOF form survives in `PipelineSpec` as the executable
+    * reference semantics the kernel is pinned against
     * element-for-element (incl. NaN/Inf-poisoned and null-element
     * vectors).
     */
@@ -118,39 +110,6 @@ object Ann {
       col(idCol),
       (floatVecMaxAbs(col(embCol)) / lit(127.0f)).cast("float").as("scale"),
       quantizeInt8Codes(col(embCol)).as("q"))
-  }
-
-  /** The original higher-order-function formulation of [[quantizeInt8]]
-    * — interpreted (HOFs are CodegenFallback) but expressed entirely in
-    * built-ins, kept as the REFERENCE implementation: PipelineSpec
-    * asserts the codegen kernel reproduces it element-for-element
-    * (nulls, zero/empty vectors, rounding ties, clamping) on randomized
-    * input. The null-element case is made EXPLICIT here: the earlier
-    * formulation ran the clamp as `greatest(-127, least(127, round))`
-    * and least/greatest SKIP null arguments, so a null element silently
-    * quantized to code 127 (max positive!) instead of staying null — a
-    * missing dimension must stay missing.
-    */
-  private[graft] def quantizeInt8Hof(df: DataFrame, idCol: String = "vec_id",
-                                     embCol: String = "embedding"): DataFrame = {
-    val maxAbs = array_max(transform(col(embCol), x => abs(x)))
-    val scale = (maxAbs / lit(127.0f)).cast("float")
-    // degenerate branch also covers NON-FINITE maxAbs: one NaN/Inf
-    // element poisons the scale, so every ratio is NaN and least/
-    // greatest (which order NaN greatest) would fabricate code 127 —
-    // all-zero codes with the NaN/Inf kept visible in `scale` instead
-    val degenerate = coalesce(maxAbs, lit(0.0f)) === 0.0f ||
-      isnan(maxAbs) || maxAbs === lit(Float.PositiveInfinity)
-    df.select(
-      col(idCol),
-      scale.as("scale"),
-      when(degenerate,
-        transform(col(embCol), x =>
-          when(x.isNull, lit(null).cast("tinyint")).otherwise(lit(0).cast("tinyint"))))
-        .otherwise(transform(col(embCol), x =>
-          when(x.isNull, lit(null).cast("tinyint"))
-            .otherwise(greatest(lit(-127), least(lit(127), round(x / scale))).cast("tinyint"))))
-        .as("q"))
   }
 
   /** Inverse of [[quantizeInt8]]: per-element `q_i * scale` (float32). */
@@ -291,9 +250,9 @@ object Ann {
       // re-execution could even train DIFFERENT centroids
       val prev = cents
       cents = means.groupBy("centroid_id")
-        .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
-        .select(col("centroid_id").as(idCol),
-          transform(col("pm"), p => p.getField("m").cast("float")).as(embCol))
+        .agg(sort_array(collect_list(struct(col("pos"), col("m")))).getField("m")
+          .cast("array<float>").as(embCol))
+        .select(col("centroid_id").as(idCol), col(embCol))
         .localCheckpoint()
       // round's checkpoint is materialized -> free the previous round's
       // blocks (k rows each, but they'd otherwise accumulate per iter)

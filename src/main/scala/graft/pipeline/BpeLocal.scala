@@ -9,8 +9,7 @@ import java.nio.charset.StandardCharsets
   *    matching the seed tokenization `TextOps.bpeSeedSym` gives the
   *    batched trainer and `bpeTokenCounts`);
   *  - pair counts are RAW adjacency counts weighted by word frequency
-  *    (runs overlap-count, exactly like the batched trainer's
-  *    zip_with adjacency);
+  *    (runs overlap-count);
   *  - a pair -> containing-words inverted index, so each merge touches
   *    only the words that contain its pair;
   *  - merge application is the non-overlapping left-to-right walk —

@@ -134,8 +134,8 @@ object Conversations {
       .groupBy(col("conv_id"))
       .agg(count(lit(1)).as("n_turns"),
         md5(concat_ws("\u0001",
-          transform(array_sort(collect_list(struct(col("__rn"), col("__text")))),
-            t => t.getField("__text")))).as("digest"))
+          sort_array(collect_list(struct(col("__rn"), col("__text")))).getField("__text")))
+          .as("digest"))
   }
 
   /** Cohort retention matrix: users bucketed by the period of their

@@ -522,18 +522,16 @@ object Dedup {
   /** Positional token n-grams: (id, start, gram) with `start` the
     * 0-based token offset and `gram` the space-joined, case-preserving
     * n tokens (unlike [[shingles]], which lowercases and drops
-    * positions — span REMOVAL must address exact tokens). Docs with
+    * positions — span REMOVAL must address exact tokens): the codegen
+    * [[graft.functions.WordGrams]] kernel in position order. Docs with
     * fewer than n tokens yield no grams.
     */
   private def spanGrams(docs: DataFrame, n: Int, textCol: String,
                         idCol: String): DataFrame = {
     require(n >= 2, s"span gram size must be >= 2, got $n")
     val toks = split(trim(col(textCol)), "\\s+")
-    val grams = when(size(toks) >= n,
-      transform(sequence(lit(0), size(toks) - n),
-        i => array_join(slice(toks, i + 1, lit(n)), " ")))
-      .otherwise(array().cast("array<string>"))
-    docs.select(col(idCol), posexplode(grams).as(Seq("start", "gram")))
+    docs.select(col(idCol),
+      posexplode(when(size(toks) >= n, TextFunctions.wordGrams(toks, n))).as(Seq("start", "gram")))
   }
 
   /** Token n-gram spans duplicated ACROSS documents (the substring-dedup
@@ -569,7 +567,7 @@ object Dedup {
     * Scale shape: gram census as [[dupSpans]]; coverage = grams join
     * the (duplicated-subset) hot set -> explode to n positions ->
     * distinct; removal is a left-anti join on (doc, pos); reassembly is
-    * ONE groupBy(doc) with in-group array_sort by position — the
+    * ONE groupBy(doc) with in-group sort_array by position — the
     * [[graft.pipeline.TextOps.removeBoilerplate]] shape, never a
     * window.
     */

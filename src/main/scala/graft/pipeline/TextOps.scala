@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.functions.TextFunctions
 
 /** Text-analysis operators for a training-data pipeline: token counting,
   * quality scoring, language-ID scoring, and document fingerprinting,
@@ -211,37 +212,36 @@ object TextOps {
         round(col("tf") * log(col("__n") / col("df")), 6).as("weight"))
   }
 
+  private def normalizedTokens(textCol: String): Column =
+    array_remove(split(trim(lower(col(textCol))), "\\s+"), "")
+
+  /** Adjacent pairs of a token array as `(l, r)` structs: the array
+    * without its last token zipped with the array without its first.
+    * The shared pair rule of [[pmiCollocations]], [[bigramLogProb]] and
+    * the batched BPE census, all codegen.
+    */
+  private def tokenPairs(toks: Column): Column = {
+    val n = greatest(size(toks) - 1, lit(0))
+    arrays_zip(slice(toks, lit(1), n).as("l"), slice(toks, lit(2), n).as("r"))
+  }
+
   /** Adjacent-token-pair (bigram) frequencies over the corpus — the
     * counting primitive of BPE/WordPiece-style tokenizer training
     * (rank merge candidates by corpus pair frequency) and of
-    * collocation statistics. Pairs are built per row in O(tokens) with
-    * one zip_with against the 1-shifted token array, then ONE explode +
-    * count aggregation with map-side partial combine; the top-N is
-    * TakeOrdered over (n desc, pair asc) — deterministic ties, no
-    * global sort materialized. Scales like vocabulary(): shuffle bounded by
-    * #distinct pairs, not #tokens.
+    * collocation statistics. Pairs are the codegen
+    * [[graft.functions.WordGrams]] bigrams of each row's tokens, then
+    * ONE explode + count aggregation with map-side partial combine; the
+    * top-N is TakeOrdered over (n desc, pair asc) — deterministic ties,
+    * no global sort materialized. Scales like vocabulary(): shuffle
+    * bounded by #distinct pairs, not #tokens.
     */
-  /** Adjacent-token pairs of a token array in O(tokens): one zip_with
-    * against the 1-shifted array, null-padded tail and null elements
-    * filtered out. `combine` builds the pair representation (a concat
-    * for counting, a struct for joins) — the shared pair rule for
-    * [[tokenPairCounts]], [[pmiCollocations]] and [[bigramLogProb]].
-    */
-  private def adjacentPairs(toks: Column)(combine: (Column, Column) => Column): Column =
-    filter(
-      zip_with(toks, slice(toks, lit(2), greatest(size(toks) - 1, lit(0))),
-        (a, b) => when(a.isNull || b.isNull, lit(null)).otherwise(combine(a, b))),
-      p => p.isNotNull)
-
-  private def normalizedTokens(textCol: String): Column =
-    filter(split(trim(lower(col(textCol))), "\\s+"), t => t =!= "")
-
-  def tokenPairCounts(df: DataFrame, topN: Int, textCol: String = "text"): DataFrame =
-    df.select(explode(adjacentPairs(normalizedTokens(textCol))(
-        (a, b) => concat(a, lit(" "), b))).as("pair"))
+  def tokenPairCounts(df: DataFrame, topN: Int, textCol: String = "text"): DataFrame = {
+    val toks = normalizedTokens(textCol)
+    df.select(explode(when(size(toks) >= 2, TextFunctions.wordGrams(toks, 2))).as("pair"))
       .groupBy("pair").agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("pair").asc)
       .limit(topN)
+  }
 
   /** Per-group heavy hitters: the top-`k` tokens by frequency within
     * EACH group (per-domain/per-language vocabulary skew — the signal
@@ -287,8 +287,7 @@ object TextOps {
     val uni = df.select(explode(normalizedTokens(textCol)).as("t"))
       .groupBy("t").agg(count(lit(1)).as("c1"))
     val total = uni.agg(sum(col("c1")).cast("double").as("__t"))
-    val bi = df.select(explode(adjacentPairs(normalizedTokens(textCol))(
-        (a, b) => struct(a.as("l"), b.as("r")))).as("p"))
+    val bi = df.select(explode(tokenPairs(normalizedTokens(textCol))).as("p"))
       .select(col("p.l").as("l"), col("p.r").as("r"))
       .groupBy("l", "r").agg(count(lit(1)).as("n"))
       .filter(col("n") >= minCount)
@@ -523,11 +522,8 @@ object TextOps {
       while (merges.length < numMerges && !exhausted) {
         val m = math.min(batch, numMerges - merges.length)
         val scanWindow = 8 * batch // part of the rule — the oracle replays it
-        val ts = split(trim(col("sym")), "  ")
         val ranked = census
-          .select(col("n"), explode(zip_with(
-            slice(ts, lit(1), size(ts) - 1), slice(ts, lit(2), size(ts) - 1),
-            (a, b) => struct(a.as("l"), b.as("r")))).as("pr"))
+          .select(col("n"), explode(tokenPairs(split(trim(col("sym")), "  "))).as("pr"))
           .groupBy(col("pr.l").as("l"), col("pr.r").as("r"))
           .agg(sum(col("n")).as("cnt"))
           .orderBy(col("cnt").desc, col("l").asc, col("r").asc)
@@ -650,8 +646,7 @@ object TextOps {
                     textCol: String = "text", idCol: String = "doc_id"): DataFrame = {
     require(lambda > 0.0 && lambda <= 1.0, s"lambda must be in (0,1], got $lambda")
     val g = docs
-      .select(col(idCol), explode(adjacentPairs(normalizedTokens(textCol))(
-        (a, b) => struct(a.as("l"), b.as("r")))).as("p"))
+      .select(col(idCol), explode(tokenPairs(normalizedTokens(textCol))).as("p"))
       .select(col(idCol), col("p.l").as("l"), col("p.r").as("r"))
       .groupBy(col(idCol), col("l"), col("r")).agg(count(lit(1)).as("c"))
     val bi = g.groupBy("l", "r").agg(sum(col("c")).as("cb"))
@@ -771,10 +766,8 @@ object TextOps {
     * is a left-anti join of the exploded lines against the (small) hot
     * set — Spark broadcasts it when it fits and shuffles the anti join
     * when a pathological corpus makes it large. Reassembly is ONE
-    * groupBy(doc) with an in-group sort by line position (array_sort of
-    * (pos, line) structs — never an unpartitioned window). The per-row
-    * transform extracting lines from structs is an interpreted HOF,
-    * once per document.
+    * groupBy(doc) with an in-group sort by line position (sort_array of
+    * (pos, line) structs — never an unpartitioned window).
     */
   def removeBoilerplate(docs: DataFrame, minDocs: Long, textCol: String = "text",
                         idCol: String = "doc_id"): DataFrame = {
@@ -788,12 +781,11 @@ object TextOps {
   /** Row-preserving ordered reassembly shared by [[removeBoilerplate]]
     * and [[graft.pipeline.Dedup.removeDupSpans]]: group the surviving
     * (id, pos, piece) rows back into one text per document, sorted by
-    * position IN-group (array_sort of (pos, piece) structs — never an
+    * position IN-group (sort_array of (pos, piece) structs — never an
     * unpartitioned window), then left-join against the full id set so
     * documents whose every piece was removed keep their row with empty
     * text (auditable removal; downstream length filters decide their
-    * fate explicitly). The per-row transform extracting pieces from
-    * structs is an interpreted HOF, once per document.
+    * fate explicitly).
     */
   private[pipeline] def reassembleInOrder(docs: DataFrame, kept: DataFrame,
                                           pieceCol: String, sep: String,
@@ -802,8 +794,8 @@ object TextOps {
       .join(
         kept.groupBy(col(idCol))
           .agg(array_join(
-            transform(array_sort(collect_list(struct(col("pos"), col(pieceCol)))),
-              x => x.getField(pieceCol)), sep).as(textCol)),
+            sort_array(collect_list(struct(col("pos"), col(pieceCol)))).getField(pieceCol),
+            sep).as(textCol)),
         Seq(idCol), "left")
       .select(col(idCol), coalesce(col(textCol), lit("")).as(textCol))
 }

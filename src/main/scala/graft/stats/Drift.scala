@@ -13,9 +13,8 @@ import org.apache.spark.sql.functions._
   * not row count — bounds the shuffled bytes) and packs the tiny result
   * into ONE row. [[kl]], [[psi]] and [[jsd]] are array-aggregate
   * expressions over that row: no second scan branch, no join, no
-  * collect. `array_sort` makes the float summation order
-  * deterministic, which is what lets the DuckDB oracle replay the
-  * `drift_*` gates value-exactly.
+  * collect. They fold the buckets in bucket order, the float summation
+  * order the DuckDB oracle replays in the `drift_*` gates.
   */
 object Drift {
 
@@ -35,7 +34,8 @@ object Drift {
 
   /** Both sides' histograms over `bucket` from ONE scan, as one row:
     * `h`, the (bucket, pc, qc) structs sorted by bucket, and the side
-    * totals `pt` and `qt`. A row counts on the current side (p) where
+    * totals `pt` and `qt` (NULL on an empty input, where `h` is empty
+    * and every divergence 0). A row counts on the current side (p) where
     * `current` is true, on the reference side (q) where it is false,
     * and on neither where it is NULL. [[kl]], [[psi]] and [[jsd]] read
     * these three columns.
@@ -45,10 +45,8 @@ object Drift {
       .agg(
         sum(when(current, 1L).otherwise(0L)).as("pc"),
         sum(when(!current, 1L).otherwise(0L)).as("qc"))
-      .agg(array_sort(collect_list(struct(col("bucket"), col("pc"), col("qc")))).as("h"))
-      .select(col("h"),
-        aggregate(col("h"), lit(0L), (a, x) => a + x.getField("pc")).as("pt"),
-        aggregate(col("h"), lit(0L), (a, x) => a + x.getField("qc")).as("qt"))
+      .agg(sort_array(collect_list(struct(col("bucket"), col("pc"), col("qc")))).as("h"),
+        sum(col("pc")).as("pt"), sum(col("qc")).as("qt"))
 
   private def p(x: Column): Column = greatest(x.getField("pc").cast("double") / col("pt"), lit(Eps))
   private def q(x: Column): Column = greatest(x.getField("qc").cast("double") / col("qt"), lit(Eps))

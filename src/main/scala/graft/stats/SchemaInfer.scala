@@ -558,7 +558,7 @@ object SchemaInfer {
     def widened(lo: String, hi: String) =
       (col(s"c_$lo").isNotNull && col(s"b_$lo").isNotNull && col(s"c_$lo") < col(s"b_$lo")) ||
       (col(s"c_$hi").isNotNull && col(s"b_$hi").isNotNull && col(s"c_$hi") > col(s"b_$hi"))
-    val newEnum = array_join(array_sort(array_except(
+    val newEnum = array_join(sort_array(array_except(
       split(col("c_enum"), EnumSep), split(col("b_enum"), EnumSep))), EnumSep)
     j.select(
       col("column"),

@@ -14,10 +14,17 @@ class VectorExpressionsSpec extends AnyFlatSpec with Matchers {
   private lazy val spark = SparkTestBase.spark
   private def embeddings = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
 
+  /** The higher-order-function dot product the kernel replaced (same
+    * sequential double accumulation), kept as its reference.
+    */
+  private def dotHof(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
+    aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
+      lit(0.0), (acc, v) => acc + v)
+
   "FloatVecDot" should "be bit-identical to the HOF dot on real embeddings" in {
     val e = embeddings.limit(200)
     val a = e.select(col("vec_id"), graft.pipeline.Ann.dot(col("embedding"), col("embedding")).as("d"))
-    val b = e.select(col("vec_id"), graft.pipeline.Ann.dotHof(col("embedding"), col("embedding")).as("d"))
+    val b = e.select(col("vec_id"), dotHof(col("embedding"), col("embedding")).as("d"))
     val am = a.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val bm = b.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     am shouldBe bm // exact doubles, not approx

@@ -315,6 +315,291 @@ class PipelineSpec extends AnyFlatSpec with Matchers {
     } finally org.apache.spark.sql.GraftSqlBridge.unpersistCheckpoint(in)
   }
 
+  // ---- the lambda formulations the operators had before their kernels,
+  // kept verbatim as the references the operators must equal ----
+
+  private type DF = org.apache.spark.sql.DataFrame
+  private type Col = org.apache.spark.sql.Column
+  private val F = org.apache.spark.sql.functions
+
+  /** The sf0.001 documents plus edge texts: NULL, empty, whitespace-only,
+    * a leading tab, a leading newline, one token and two tokens. Read
+    * through `localCheckpoint` so the operators run in generated code.
+    */
+  private def opDocs: DF = {
+    import spark.implicits._
+    val edges = Seq[(Long, String)]((-1L, null), (-2L, ""), (-3L, " \t\n "),
+      (-4L, "\tleading tab then words"), (-5L, "\nleading newline\nthen words"),
+      (-6L, "one"), (-7L, "two tokens")).toDF("doc_id", "text")
+    docs.select("doc_id", "text").unionByName(edges).localCheckpoint()
+  }
+
+  /** The sf0.001 transcripts plus two conversations of the edge texts. */
+  private def opTranscripts: DF = {
+    import spark.implicits._
+    val t = graft.sources.TranscriptDerive.fromLineitem(spark, sfDir)
+    val texts = Seq[String](null, "", " \t\n ", "\tleading tab", "\nleading newline", "one", "two tokens")
+    val edges = texts.zipWithIndex.toDF("text", "i").select(
+      concat(lit("e"), (col("i") % 2).cast("string")).as("conv_id"),
+      col("i").cast(t.schema("turn_idx").dataType).as("turn_idx"),
+      when(col("i") % 3 === 1, lit("zz_new")).when(col("i") % 3 === 2, lit("aa_new")).as("role"), col("text"),
+      lit("Mid-Tool").as("tool"), lit(null).cast(t.schema("ts").dataType).as("ts"))
+    t.unionByName(edges).localCheckpoint()
+  }
+
+  /** `normalizedTokens` before `array_remove`. */
+  private def refTokens(textCol: String): Col =
+    filter(split(trim(lower(col(textCol))), "\\s+"), t => t =!= "")
+
+  /** `adjacentPairs`, the zip_with pair rule of the token-pair operators. */
+  private def refPairs(toks: Col)(combine: (Col, Col) => Col): Col =
+    filter(
+      zip_with(toks, slice(toks, lit(2), greatest(F.size(toks) - 1, lit(0))),
+        (a, b) => when(a.isNull || b.isNull, lit(null)).otherwise(combine(a, b))),
+      p => p.isNotNull)
+
+  /** `reassembleInOrder` before `sort_array(...).getField`. */
+  private def refReassemble(docs: DF, kept: DF, pieceCol: String, sep: String): DF =
+    docs.select(col("doc_id"))
+      .join(
+        kept.groupBy(col("doc_id"))
+          .agg(array_join(
+            transform(array_sort(collect_list(struct(col("pos"), col(pieceCol)))),
+              x => x.getField(pieceCol)), sep).as("text")),
+        Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("text"), lit("")).as("text"))
+
+  /** `Dedup.spanGrams` before `WordGrams`. */
+  private def refSpanGrams(docs: DF, n: Int): DF = {
+    val toks = split(trim(col("text")), "\\s+")
+    val grams = when(F.size(toks) >= n,
+      transform(sequence(lit(0), F.size(toks) - n),
+        i => array_join(slice(toks, i + 1, lit(n)), " ")))
+      .otherwise(array().cast("array<string>"))
+    docs.select(col("doc_id"), posexplode(grams).as(Seq("start", "gram")))
+  }
+
+  private def refDupSpans(docs: DF, n: Int): DF =
+    refSpanGrams(docs, n).groupBy("gram").agg(countDistinct(col("doc_id")).as("n_docs"))
+      .filter(col("n_docs") >= 2)
+
+  "TextOps.tokenPairCounts" should "equal its zip_with formulation on the documents and edge texts" in {
+    val in = opDocs
+    val ref = in.select(explode(refPairs(refTokens("text"))((a, b) => concat(a, lit(" "), b))).as("pair"))
+      .groupBy("pair").agg(count(lit(1)).as("n"))
+      .orderBy(col("n").desc, col("pair").asc).limit(100000)
+    sameRows(TextOps.tokenPairCounts(in, topN = 100000), ref)
+  }
+
+  "TextOps.pmiCollocations" should "equal its zip_with formulation on the documents and edge texts" in {
+    val in = opDocs
+    val uni = in.select(explode(refTokens("text")).as("t")).groupBy("t").agg(count(lit(1)).as("c1"))
+    val total = uni.agg(sum(col("c1")).cast("double").as("__t"))
+    val bi = in.select(explode(refPairs(refTokens("text"))((a, b) => struct(a.as("l"), b.as("r")))).as("p"))
+      .select(col("p.l").as("l"), col("p.r").as("r"))
+      .groupBy("l", "r").agg(count(lit(1)).as("n"))
+      .filter(col("n") >= 2)
+    val ref = bi.join(uni.select(col("t").as("l"), col("c1").as("cl")), "l")
+      .join(uni.select(col("t").as("r"), col("c1").as("cr")), "r")
+      .crossJoin(broadcast(total))
+      .select(col("l"), col("r"), col("n"),
+        round(log(col("n").cast("double") * col("__t") /
+          (col("cl").cast("double") * col("cr").cast("double"))), 6).as("pmi"))
+      .orderBy(col("pmi").desc, col("l").asc, col("r").asc)
+      .limit(100000)
+    sameRows(TextOps.pmiCollocations(in, topN = 100000, minCount = 2), ref)
+  }
+
+  "TextOps.bigramLogProb" should "equal its zip_with formulation on the documents and edge texts" in {
+    val in = opDocs
+    val g = in.select(col("doc_id"),
+        explode(refPairs(refTokens("text"))((a, b) => struct(a.as("l"), b.as("r")))).as("p"))
+      .select(col("doc_id"), col("p.l").as("l"), col("p.r").as("r"))
+      .groupBy(col("doc_id"), col("l"), col("r")).agg(count(lit(1)).as("c"))
+    val bi = g.groupBy("l", "r").agg(sum(col("c")).as("cb"))
+    val lt = bi.groupBy("l").agg(sum(col("cb")).as("cl"))
+    val rt = bi.groupBy("r").agg(count(lit(1)).as("cr"))
+    val tot = bi.agg(count(lit(1)).cast("double").as("__tt"))
+    val ref = g.join(bi, Seq("l", "r")).join(lt, "l").join(rt, "r")
+      .crossJoin(broadcast(tot))
+      .groupBy(col("doc_id"))
+      .agg(round(
+        sum(col("c").cast("double") *
+          log(lit(0.8) * (col("cb").cast("double") / col("cl")) +
+            lit(0.2) * (col("cr").cast("double") / col("__tt"))))
+          / sum(col("c")).cast("double"), 6).as("bigram_logprob"))
+    sameRows(TextOps.bigramLogProb(in, lambda = 0.8), ref)
+  }
+
+  "TextOps.bm25" should "equal its filter-lambda tokenization on the documents and edge texts" in {
+    // bm25Multi scores through the same bm25TermScores, and its own case
+    // pins it to the single-query form
+    val in = opDocs
+    val terms = Seq("merge", "window", "one", "two", "leading")
+    val base = in.select(col("doc_id"), refTokens("text").as("__toks"))
+    val stats = base.agg(count(lit(1)).cast("double").as("__n"), avg(F.size(col("__toks"))).as("__avgdl"))
+    val tf = base
+      .select(col("doc_id"), F.size(col("__toks")).as("dl"), explode(col("__toks")).as("t"))
+      .filter(col("t").isin(terms: _*))
+      .groupBy(col("doc_id"), col("dl"), col("t")).agg(count(lit(1)).as("tf"))
+    val dfreq = tf.groupBy(col("t")).agg(count(lit(1)).as("df"))
+    val (k1, b) = (1.2, 0.75)
+    val ref = tf.join(broadcast(dfreq), "t")
+      .crossJoin(broadcast(stats))
+      .select(col("doc_id"), col("t"), (log(lit(1.0) +
+          (col("__n") - col("df") + lit(0.5)) / (col("df") + lit(0.5))) *
+        col("tf") * lit(k1 + 1.0) /
+          (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("__avgdl"))))
+        .as("s"))
+      .groupBy(col("doc_id")).agg(round(sum(col("s")), 6).as("bm25"))
+      .orderBy(col("bm25").desc, col("doc_id").asc).limit(100000)
+    sameRows(TextOps.bm25(in, terms, topN = 100000), ref)
+  }
+
+  "TextOps.bpeMergesBatchedWithRounds" should "equal its zip_with pair census on the documents and edge texts" in {
+    import spark.implicits._
+    val in = opDocs
+    // the batched trainer's loop with the zip_with pair census
+    def ref(numMerges: Int, batch: Int): DF = {
+      val merges = scala.collection.mutable.ArrayBuffer.empty[(Long, String, String, Long)]
+      var census = in.select(explode(split(trim(col("text")), "\\s+")).as("w"))
+        .filter(col("w") =!= "")
+        .groupBy("w").agg(count(lit(1)).as("n"))
+        .select(concat(lit(" "), array_join(split(col("w"), ""), "  "), lit("  </w> ")).as("sym"), col("n"))
+        .localCheckpoint()
+      var exhausted = false
+      while (merges.length < numMerges && !exhausted) {
+        val m = math.min(batch, numMerges - merges.length)
+        val ts = split(trim(col("sym")), "  ")
+        val ranked = census
+          .select(col("n"), explode(zip_with(
+            slice(ts, lit(1), F.size(ts) - 1), slice(ts, lit(2), F.size(ts) - 1),
+            (a, b) => struct(a.as("l"), b.as("r")))).as("pr"))
+          .groupBy(col("pr.l").as("l"), col("pr.r").as("r"))
+          .agg(sum(col("n")).as("cnt"))
+          .orderBy(col("cnt").desc, col("l").asc, col("r").asc)
+          .limit(8 * batch).collect()
+          .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+        if (ranked.isEmpty) exhausted = true
+        else {
+          val used = scala.collection.mutable.Set.empty[String]
+          val accepted = ranked.foldLeft(Vector.empty[(String, String, Long)]) {
+            case (acc, (l, r, c)) if acc.length < m && !used(l) && !used(r) =>
+              used += l; used += r; acc :+ ((l, r, c))
+            case (acc, _) => acc
+          }
+          accepted.foreach { case (l, r, c) => merges += ((merges.length.toLong, l, r, c)) }
+          census = census.withColumn("sym", accepted.foldLeft(col("sym")) { case (s, (l, r, _)) =>
+            replace(s, lit(s" $l  $r "), lit(s" $l$r "))
+          }).localCheckpoint()
+        }
+      }
+      merges.toSeq.toDF("step", "left_sym", "right_sym", "pair_count")
+    }
+    for ((numMerges, batch) <- Seq((8, 4), (12, 3))) withClue(s"$numMerges/$batch: ")(
+      sameRows(TextOps.bpeMergesBatchedWithRounds(in, numMerges, batch)._1, ref(numMerges, batch)))
+  }
+
+  "Dedup.dupSpans and Dedup.removeDupSpans" should "equal their transform span grams on the documents and edge texts" in {
+    val in = opDocs
+    for (n <- Seq(2, 3)) withClue(s"n=$n: ") {
+      sameRows(Dedup.dupSpans(in, n), refDupSpans(in, n))
+      val covered = refSpanGrams(in, n).join(refDupSpans(in, n).select("gram"), "gram")
+        .select(col("doc_id"), explode(sequence(col("start"), col("start") + lit(n - 1))).as("pos"))
+        .distinct()
+      val toks = in.select(col("doc_id"),
+        posexplode(split(trim(col("text")), "\\s+")).as(Seq("pos", "tok")))
+      sameRows(Dedup.removeDupSpans(in, n),
+        refReassemble(in, toks.join(covered, Seq("doc_id", "pos"), "left_anti"), "tok", " "))
+    }
+  }
+
+  "TextOps.removeBoilerplate" should "equal its array_sort/transform reassembly on the documents and edge texts" in {
+    val raw = opDocs
+    // the boilerplate_removal gate's staging (a shared header, a footer
+    // per doc_id % 7) plus the raw edge texts
+    val in = raw.select(col("doc_id"),
+        concat_ws("\n", lit("=== COMMON HEADER ==="), coalesce(col("text"), lit("")),
+          concat(lit("footer "), (col("doc_id") % 7).cast("string"))).as("text"))
+      .unionByName(raw.filter(col("doc_id") < 0).select((col("doc_id") - 100).as("doc_id"), col("text")))
+    val lines = in.select(col("doc_id"), posexplode(split(col("text"), "\n")).as(Seq("pos", "line")))
+    val hot = TextOps.boilerplateLines(in, 25).select("line")
+    sameRows(TextOps.removeBoilerplate(in, 25),
+      refReassemble(in, lines.join(hot, Seq("line"), "left_anti"), "line", "\n"))
+  }
+
+  "Conversations.convDigest" should "equal its array_sort/transform digest on the transcripts and edge texts" in {
+    val in = opTranscripts
+    val w = org.apache.spark.sql.expressions.Window.partitionBy("conv_id").orderBy(
+      col("turn_idx").asc_nulls_first, col("ts").asc_nulls_first,
+      col("role").asc_nulls_first, col("text").asc_nulls_first)
+    val ref = in.select(col("conv_id"), row_number().over(w).as("__rn"),
+        coalesce(col("text"), lit("<null>")).as("__text"))
+      .groupBy(col("conv_id"))
+      .agg(count(lit(1)).as("n_turns"),
+        md5(concat_ws("\u0001",
+          transform(array_sort(collect_list(struct(col("__rn"), col("__text")))),
+            t => t.getField("__text")))).as("digest"))
+    sameRows(Conversations.convDigest(in), ref)
+  }
+
+  "Ann.kmeansCentroids" should "equal its array_sort/transform centroid assembly" in {
+    val in = embeddings.localCheckpoint()
+    var ref = in.select(col("vec_id"), col("embedding")).orderBy(col("vec_id")).limit(8)
+      .localCheckpoint()
+    for (_ <- 1 to 4) {
+      val means = Ann.assignToCentroids(in, ref)
+        .select(col("centroid_id"), posexplode(col("embedding")).as(Seq("pos", "v")))
+        .groupBy("centroid_id", "pos")
+        .agg(avg(col("v")).as("m"))
+      ref = means.groupBy("centroid_id")
+        .agg(array_sort(collect_list(struct(col("pos"), col("m")))).as("pm"))
+        .select(col("centroid_id").as("vec_id"),
+          transform(col("pm"), p => p.getField("m").cast("float")).as("embedding"))
+        .localCheckpoint()
+    }
+    sameRows(Ann.kmeansCentroids(in, k = 8, iters = 4), ref)
+  }
+
+  "graft.stats.Drift" should "equal its array_sort histogram and aggregate totals, through kl, psi and jsd" in {
+    import graft.stats.Drift
+    val in = opTranscripts
+    val half = substring(col("conv_id"), 2, 30).cast("long") % 2
+    val current = when(half === 0, true).when(half === 1, false)
+    for (bucket <- Seq(Drift.categoricalBucket(col("role")), Drift.textLengthBucket(col("text")))) {
+      val ref = in.groupBy(bucket.as("bucket"))
+        .agg(
+          sum(when(current, 1L).otherwise(0L)).as("pc"),
+          sum(when(!current, 1L).otherwise(0L)).as("qc"))
+        .agg(array_sort(collect_list(struct(col("bucket"), col("pc"), col("qc")))).as("h"))
+        .select(col("h"),
+          aggregate(col("h"), lit(0L), (a, x) => a + x.getField("pc")).as("pt"),
+          aggregate(col("h"), lit(0L), (a, x) => a + x.getField("qc")).as("qt"))
+      def divergences(h: DF) = h.select(col("h"), col("pt"), col("qt"), Drift.kl.as("kl"),
+        Drift.psi.as("psi"), Drift.jsd.as("jsd"))
+      sameRows(divergences(Drift.histogram(in, bucket, current)), divergences(ref))
+    }
+  }
+
+  "graft.stats.SchemaInfer.constraintDrift" should "equal its array_sort new-enum rule" in {
+    import graft.stats.SchemaInfer
+    val in = opTranscripts
+    val half = substring(col("conv_id"), 2, 30).cast("long") % 2
+    // the edge conversations (new role and tool values) join the current side only
+    val edge = col("conv_id").startsWith("e")
+    val (base, cur) = (in.filter(half === 0 && !edge), in.filter(half === 1 || edge))
+    def side(df: DF, p: String) = SchemaInfer.inferConstraints(df, 16)
+      .select(col("column"), col("json_type").as(s"${p}_type"), col("enum_vals").as(s"${p}_enum"))
+    val newEnum = array_join(array_sort(array_except(
+      split(col("c_enum"), SchemaInfer.EnumSep), split(col("b_enum"), SchemaInfer.EnumSep))), SchemaInfer.EnumSep)
+    val ref = side(base, "b").join(side(cur, "c"), Seq("column"), "full_outer")
+      .select(col("column"), when(col("b_type").isNotNull && col("c_type").isNotNull &&
+        col("b_enum").isNotNull && col("c_enum").isNotNull && newEnum =!= "", newEnum).as("new_enum_vals"))
+    val got = SchemaInfer.constraintDrift(base, cur).select("column", "new_enum_vals")
+    got.filter(col("new_enum_vals").isNotNull).count() should be > 0L
+    sameRows(got, ref)
+  }
+
   "Dedup.simhashPairs" should "find exact duplicates at hamming 0 and respect the bound" in {
     val pool = graft.gates.Inputs.dedupPool(spark, sfDir)
     val pairs = Dedup.simhashPairs(pool, maxHamming = 3).collect()
@@ -455,7 +740,8 @@ class PipelineSpec extends AnyFlatSpec with Matchers {
         Ann.assignToCentroids(vecs, cents)
           .join(cents.select(col("vec_id").as("centroid_id"), col("embedding").as("ce")),
             "centroid_id")
-          .select(Ann.cosine(col("embedding"), col("ce")).as("c"))
+          .select(try_divide(Ann.dot(col("embedding"), col("ce")),
+            Ann.l2Norm(col("embedding")) * Ann.l2Norm(col("ce"))).as("c"))
           .agg(avg("c")).collect()(0).getDouble(0)
       val init = vecs.orderBy("vec_id").limit(8)
       val trained = Ann.kmeansCentroids(vecs, k = 8, iters = 4).cache()
@@ -526,6 +812,39 @@ class PipelineSpec extends AnyFlatSpec with Matchers {
     (exact intersect approx).size.toDouble / exact.size should be >= 0.6
   }
 
+  /** The original higher-order-function formulation of `Ann.quantizeInt8`
+    * — interpreted (HOFs are CodegenFallback) but expressed entirely in
+    * built-ins, kept as the REFERENCE implementation: the parity case
+    * asserts the codegen kernel reproduces it element-for-element
+    * (nulls, zero/empty vectors, rounding ties, clamping) on randomized
+    * input. The null-element case is made EXPLICIT here: the earlier
+    * formulation ran the clamp as `greatest(-127, least(127, round))`
+    * and least/greatest SKIP null arguments, so a null element silently
+    * quantized to code 127 (max positive!) instead of staying null — a
+    * missing dimension must stay missing.
+    */
+  private def quantizeInt8Hof(df: org.apache.spark.sql.DataFrame, idCol: String = "vec_id",
+                              embCol: String = "embedding"): org.apache.spark.sql.DataFrame = {
+    val maxAbs = array_max(transform(col(embCol), x => abs(x)))
+    val scale = (maxAbs / lit(127.0f)).cast("float")
+    // degenerate branch also covers NON-FINITE maxAbs: one NaN/Inf
+    // element poisons the scale, so every ratio is NaN and least/
+    // greatest (which order NaN greatest) would fabricate code 127 —
+    // all-zero codes with the NaN/Inf kept visible in `scale` instead
+    val degenerate = coalesce(maxAbs, lit(0.0f)) === 0.0f ||
+      isnan(maxAbs) || maxAbs === lit(Float.PositiveInfinity)
+    df.select(
+      col(idCol),
+      scale.as("scale"),
+      when(degenerate,
+        transform(col(embCol), x =>
+          when(x.isNull, lit(null).cast("tinyint")).otherwise(lit(0).cast("tinyint"))))
+        .otherwise(transform(col(embCol), x =>
+          when(x.isNull, lit(null).cast("tinyint"))
+            .otherwise(greatest(lit(-127), least(lit(127), round(x / scale))).cast("tinyint"))))
+        .as("q"))
+  }
+
   it should "reproduce the HOF reference element-for-element (codegen kernel parity)" in {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
@@ -565,7 +884,7 @@ class PipelineSpec extends AnyFlatSpec with Matchers {
           if (r.isNullAt(1)) null else java.lang.Float.floatToIntBits(r.getFloat(1)),
           if (r.isNullAt(2)) null else r.getSeq[Any](2))
       }.toSeq
-    dump(Ann.quantizeInt8(df)) shouldBe dump(Ann.quantizeInt8Hof(df))
+    dump(Ann.quantizeInt8(df)) shouldBe dump(quantizeInt8Hof(df))
   }
 
   "Ann.bruteForceTopK" should "return k deterministic rows per query" in {
