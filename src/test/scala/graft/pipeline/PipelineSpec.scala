@@ -18,6 +18,10 @@ class PipelineSpec extends AnyFlatSpec with Matchers {
   private def docs = spark.read.parquet(s"$sfDir/documents.parquet")
   private def embeddings = spark.read.parquet(s"$sfDir/embeddings.parquet")
 
+  private type DF = org.apache.spark.sql.DataFrame
+  private type Col = org.apache.spark.sql.Column
+  private val F = org.apache.spark.sql.functions
+
   "Dedup.minhashPairs" should "find every planted exact and near duplicate" in {
     val pool = graft.gates.Inputs.dedupPool(spark, sfDir).cache()
     try {
@@ -253,7 +257,6 @@ class PipelineSpec extends AnyFlatSpec with Matchers {
     * Spark's, named through `F`: the matchers' `size` shadows it here).
     */
   private def refShingles(textCol: org.apache.spark.sql.Column, n: Int = 3): org.apache.spark.sql.Column = {
-    val F = org.apache.spark.sql.functions
     require(n >= 1, s"shingle size must be >= 1, got $n")
     val toks = split(trim(lower(textCol)), "\\s+")
     val grams = (1 until n).foldLeft(toks) { (acc, i) =>
@@ -317,10 +320,6 @@ class PipelineSpec extends AnyFlatSpec with Matchers {
 
   // ---- the lambda formulations the operators had before their kernels,
   // kept verbatim as the references the operators must equal ----
-
-  private type DF = org.apache.spark.sql.DataFrame
-  private type Col = org.apache.spark.sql.Column
-  private val F = org.apache.spark.sql.functions
 
   /** The sf0.001 documents plus edge texts: NULL, empty, whitespace-only,
     * a leading tab, a leading newline, one token and two tokens. Read
